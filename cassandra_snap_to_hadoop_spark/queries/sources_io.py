@@ -210,7 +210,8 @@ def a5_incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 def a6_snapshot_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Post-copy verification summary: the tag-001 manifest must account for
     exactly 2 SSTables covering every source row (per-file content checksums
-    are engine-hash-based and covered by unit tests + verify_export)."""
+    are engine-hash-based and covered by unit tests + the export pair
+    export_parquet_observed/verify_export_observed)."""
     root = _stage_snapshots(spark, sf_dir)
     m = snapshot_manifest(snapshot_scan(spark, str(root), "harness", "events", "tag-001"))
     return m.agg(

@@ -10,7 +10,7 @@ NameNode (the classic failure mode of file-copy ETL at scale).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -37,26 +37,23 @@ def export_parquet(
     writer.parquet(path)
 
 
+def _fingerprint(cols: list[str]) -> list[Column]:
+    """Row count + order-insensitive content checksum over ``cols``.  The
+    per-row hash is reduced mod 2^31 before summing: commutative, and the
+    long accumulator cannot overflow under ANSI arithmetic at any row count
+    that fits a cluster.  An empty frame checksums to 0."""
+    h = F.pmod(F.xxhash64(*[F.col(c).cast("string") for c in sorted(cols)]), F.lit(2_147_483_647))
+    return [F.count(F.lit(1)).alias("n"), F.coalesce(F.sum(h), F.lit(0)).alias("checksum")]
+
+
 def verify_export(spark: SparkSession, df: DataFrame, path: str, key_cols: list[str]) -> bool:
-    """A6 post-copy verification: re-scan the sink and compare row count +
-    order-insensitive content checksum against the source (the reference
-    verifies transfers by listing; content hashing is the stronger check
-    and still one distributed pass per side)."""
-    back = spark.read.parquet(path)
-    cols = sorted(df.columns)
-
-    def fingerprint(d: DataFrame):
-        # per-row hash reduced mod 2^31 before summing: commutative,
-        # order-insensitive, and cannot overflow the long accumulator
-        # under ANSI arithmetic at any row count that fits a cluster.
-        h = F.pmod(F.xxhash64(*[F.col(c).cast("string") for c in cols]), F.lit(2_147_483_647))
-        row = d.select(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(h).alias("checksum"),
-        ).collect()[0]
-        return (row.n, row.checksum)
-
-    return fingerprint(df.select(*cols)) == fingerprint(back.select(*cols))
+    """Two-pass A6 verification for a caller that holds only the source
+    frame: evaluates ``df``'s whole plan again for its fingerprint, then
+    checks the sink like ``verify_export_observed``.  The export job never
+    pays that second source pass; it writes through
+    ``export_parquet_observed`` instead."""
+    row = df.select(*_fingerprint(df.columns)).collect()[0]
+    return verify_export_observed(spark, path, (row.n, row.checksum), df.columns)
 
 
 def read_csv(spark: SparkSession, path: str, schema_ddl: str, **options) -> DataFrame:
@@ -83,13 +80,14 @@ def export_parquet_observed(
     extra action), so post-copy verification drops from three distributed
     passes (write + source re-scan + sink re-scan) to two.  At 100 TB the
     saved pass is hours.  Returns (n_rows, checksum) as observed in-flight.
-    """
-    from pyspark.sql import Observation
 
-    cols = sorted(df.columns)
-    h = F.pmod(F.xxhash64(*[F.col(c).cast("string") for c in cols]), F.lit(2_147_483_647))
+    Failure direction: if the in-flight metrics over-count (a retried
+    stage can report its rows twice), ``verify_export_observed`` fails.
+    It can never make a bad sink pass: the sink side is an independent
+    scan of what was written.
+    """
     obs = Observation("export_metrics")
-    observed = df.observe(obs, F.count(F.lit(1)).alias("n"), F.sum(h).alias("checksum"))
+    observed = df.observe(obs, *_fingerprint(df.columns))
     export_parquet(observed, path, partition_by, mode, max_files_per_partition)
     got = obs.get
     return int(got["n"]), int(got["checksum"])
@@ -100,8 +98,5 @@ def verify_export_observed(
 ) -> bool:
     """Sink-side half of the observed verification: one scan of the export,
     same commutative fingerprint, compared to the in-flight metrics."""
-    back = spark.read.parquet(path)
-    cols = sorted(cols)
-    h = F.pmod(F.xxhash64(*[F.col(c).cast("string") for c in cols]), F.lit(2_147_483_647))
-    row = back.select(F.count(F.lit(1)).alias("n"), F.sum(h).alias("checksum")).collect()[0]
-    return (int(row.n), int(row.checksum)) == expected
+    row = spark.read.parquet(path).select(*_fingerprint(cols)).collect()[0]
+    return (row.n, row.checksum) == tuple(expected)

@@ -38,6 +38,9 @@ CREATE TABLE ks1.events_wide (
 ) WITH CLUSTERING ORDER BY (ck ASC);
 """
 
+# export_snapshot's in-flight checksum of the fixture's tag-001 LWW state
+MERGED_CHECKSUM = 2987404010
+
 CELLS_DDL = (
     "pk long, ck long, v1 string, v2 double, tags array<string>, "
     "_writetime long, _ttl int, _tombstone boolean, _seq long"
@@ -137,28 +140,66 @@ def test_export_and_verify_roundtrip(spark, sf_dir, tmp_path):
 
 def test_export_job_raw_and_merged(spark, snapshot_fixture, tmp_path):
     """The reference's whole CLI job through export_snapshot: raw mode
-    preserves all generations + lineage; merged mode lands LWW state."""
+    preserves all generations + lineage; merged mode lands LWW state.  The
+    summary carries the write job's in-flight checksum."""
     from cassandra_snap_to_hadoop_spark.export import export_snapshot
+    from cassandra_snap_to_hadoop_spark.sources.sinks import _fingerprint
 
     raw = export_snapshot(
         spark, snapshot_fixture, "ks1", "events_wide", "tag-001",
         str(tmp_path / "raw"), merge=False,
     )
-    assert raw == {"mode": "raw", "rows_exported": 6, "verified": True, "out": str(tmp_path / "raw")}
+    # raw rows carry _sstable paths under tmp_path, so the raw checksum is
+    # pinned to a second, independent evaluation of the source scan
+    scan = snapshot_scan(spark, snapshot_fixture, "ks1", "events_wide", "tag-001")
+    want = scan.select(*_fingerprint(scan.columns)).collect()[0]
+    assert raw == {
+        "mode": "raw",
+        "rows_exported": 6,
+        "verified": True,
+        "out": str(tmp_path / "raw"),
+        "observed_checksum": want.checksum,
+    }
+    assert want.n == 6
     merged = export_snapshot(
         spark, snapshot_fixture, "ks1", "events_wide", "tag-001",
         str(tmp_path / "merged"), merge=True, key_cols=["pk", "ck"],
     )
-    assert merged["mode"] == "merged" and merged["verified"] is True
+    assert merged == {
+        "mode": "merged",
+        "rows_exported": 3,
+        "verified": True,
+        "out": str(tmp_path / "merged"),
+        "observed_checksum": MERGED_CHECKSUM,
+    }
     back = {(r.pk, r.ck): r.v1 for r in spark.read.parquet(str(tmp_path / "merged")).collect()}
     assert back == {(1, 1): "a2", (1, 2): "b", (3, 1): "d"}
-    # observed tier: same merged answer, verification from in-flight metrics
-    observed = export_snapshot(
-        spark, snapshot_fixture, "ks1", "events_wide", "tag-001",
-        str(tmp_path / "obs"), merge=True, key_cols=["pk", "ck"], observed=True,
-    )
-    assert observed["mode"] == "merged" and observed["verified"] is True
-    assert observed["rows_exported"] == 3 and "observed_checksum" in observed
+
+
+def test_export_cli_main(spark, snapshot_fixture, tmp_path, capsys, monkeypatch):
+    """``python -m ...export`` end to end: one JSON summary line on stdout,
+    exit 0; ``--no-verify`` reports ``verified: null``."""
+    import json
+
+    from cassandra_snap_to_hadoop_spark import export
+
+    # get_spark reuses the live session; pin the core count it re-applies
+    # to the test session's own
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "8")
+    base = ["--data-dir", snapshot_fixture, "--keyspace", "ks1", "--table", "events_wide",
+            "--tag", "tag-001", "--merge", "--key-cols", "pk", "ck"]
+    for extra, verified in (([], True), (["--no-verify"], None)):
+        out = str(tmp_path / f"cli{len(extra)}")
+        assert export.main([*base, "--out", out, *extra]) == 0
+        lines = capsys.readouterr().out.splitlines()
+        assert len(lines) == 1
+        assert json.loads(lines[0]) == {
+            "mode": "merged",
+            "rows_exported": 3,
+            "verified": verified,
+            "out": out,
+            "observed_checksum": MERGED_CHECKSUM,
+        }
 
 
 def test_csv_json_roundtrip(spark, tmp_path):
@@ -175,8 +216,14 @@ def test_csv_json_roundtrip(spark, tmp_path):
 
 def test_export_observed_metrics_roundtrip(spark, sf_dir, tmp_path):
     """Observed export: in-flight count+checksum from df.observe must match
-    a fresh scan of the written data (and detect corruption: a different
-    frame's fingerprint must NOT verify)."""
+    a fresh scan of the written data, and verification must fail closed on
+    a tampered expectation and on a tampered sink (one cell changed, one
+    part file lost)."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     from cassandra_snap_to_hadoop_spark.io import load
     from cassandra_snap_to_hadoop_spark.sources.sinks import (
         export_parquet_observed,
@@ -188,5 +235,42 @@ def test_export_observed_metrics_roundtrip(spark, sf_dir, tmp_path):
     metrics = export_parquet_observed(o, out, partition_by=["order_year"], max_files_per_partition=2)
     assert metrics[0] == o.count()
     assert verify_export_observed(spark, out, metrics, o.columns)
+    # partition pruning layout exists
+    years = [d for d in os.listdir(out) if d.startswith("order_year=")]
+    assert len(years) >= 5
     # tampered expectation fails closed
     assert not verify_export_observed(spark, out, (metrics[0] - 1, metrics[1]), o.columns)
+
+    part_dir = os.path.join(out, sorted(years)[0])
+    part = os.path.join(part_dir, next(f for f in os.listdir(part_dir) if f.endswith(".parquet")))
+    saved = str(tmp_path / "saved.parquet")
+    shutil.copyfile(part, saved)
+    # one cell changed: same row count, different content.  The rewrite
+    # drops the local filesystem's .crc sidecar, as a foreign writer would;
+    # a stale one makes the scan raise instead of reporting a mismatch.
+    os.remove(os.path.join(part_dir, f".{os.path.basename(part)}.crc"))
+    table = pq.read_table(part)
+    i = table.schema.get_field_index("o_orderpriority")
+    cells = table.column(i).to_pylist()
+    cells[0] += "!"
+    pq.write_table(table.set_column(i, "o_orderpriority", pa.array(cells, pa.string())), part)
+    assert not verify_export_observed(spark, out, metrics, o.columns)
+    shutil.copyfile(saved, part)
+    assert verify_export_observed(spark, out, metrics, o.columns)
+    # one part file lost
+    os.remove(part)
+    assert not verify_export_observed(spark, out, metrics, o.columns)
+
+
+def test_export_observed_empty_frame(spark, tmp_path):
+    """An export with no rows (e.g. every key tombstoned) reports (0, 0)
+    in flight and still verifies against its empty sink."""
+    from cassandra_snap_to_hadoop_spark.sources.sinks import (
+        export_parquet_observed,
+        verify_export_observed,
+    )
+
+    empty = spark.createDataFrame([], "pk long, v string")
+    out = str(tmp_path / "empty")
+    assert export_parquet_observed(empty, out) == (0, 0)
+    assert verify_export_observed(spark, out, (0, 0), empty.columns)
