@@ -18,7 +18,7 @@ import os
 import time
 
 from cassandra_snap_to_hadoop_spark.registry import load_all
-from cassandra_snap_to_hadoop_spark.session import get_spark
+from cassandra_snap_to_hadoop_spark.session import drop_persisted, get_spark
 
 # Headline set: the flagship + the heaviest representative per operator
 # family (scan+agg, fact join, window, sessionization, dedup, similarity,
@@ -111,24 +111,26 @@ FAST_KEY_SEC = 0.5
 N_RUNS_FAST = 7
 
 
-def _drop_persisted(spark) -> None:
-    """Unpersist dead RDD blocks between queries.
+def _median(runs: list[float]) -> float:
+    return sorted(runs)[len(runs) // 2]
 
-    The engine's lazy ``localCheckpoint`` lineage cuts persist their
-    relation on first use; every timed run builds FRESH DataFrames, so
-    the previous run's persisted blocks are unreachable dead weight
-    that otherwise waits on the JVM ContextCleaner.  Dropping them at
-    each query boundary keeps session memory flat across the sweep and
-    guarantees no persisted state crosses query boundaries (the
-    no-cross-run-caching contract).  Timing methodology is unchanged:
-    count-timed median of N_RUNS after one warm run, cleanup OUTSIDE
-    the timed region."""
-    try:
-        jmap = spark.sparkContext._jsc.getPersistentRDDs()
-        for jrdd in list(jmap.values()):
-            jrdd.unpersist()
-    except Exception:
-        pass  # introspection API drift must never fail the bench
+
+def _timed_runs(q, spark, sf_dir: str, extend_fast: bool) -> list[float]:
+    """One warm run, then N_RUNS count-timed runs of ``q``; with
+    ``extend_fast`` a key whose median lands under FAST_KEY_SEC gets
+    N_RUNS_FAST runs in total, so the median sits on more samples
+    (the noise floor on a shared box is ~0.1 s per run)."""
+
+    def timed() -> float:
+        t0 = time.perf_counter()
+        q.fn(spark, sf_dir).count()
+        return time.perf_counter() - t0
+
+    q.fn(spark, sf_dir).count()  # warm (JIT, code cache, FS cache)
+    runs = [timed() for _ in range(N_RUNS)]
+    if extend_fast and _median(runs) < FAST_KEY_SEC:
+        runs += [timed() for _ in range(N_RUNS_FAST - N_RUNS)]
+    return runs
 
 
 def _guard_limits() -> tuple[dict[str, float], float, float]:
@@ -154,23 +156,10 @@ def main() -> None:
     timings: dict[str, float] = {}
     spread: dict[str, list[float]] = {}
     for name in HEADLINE:
-        q = registry[name]
-        q.fn(spark, sf_dir).count()  # warm (JIT, code cache, FS cache)
-        runs = []
-        for _ in range(N_RUNS):
-            t0 = time.perf_counter()
-            q.fn(spark, sf_dir).count()
-            runs.append(time.perf_counter() - t0)
-        # sub-second keys: extend to N_RUNS_FAST total so the median sits
-        # on more samples (noise floor on this box is ~0.1 s per run)
-        if sorted(runs)[len(runs) // 2] < FAST_KEY_SEC:
-            for _ in range(N_RUNS_FAST - N_RUNS):
-                t0 = time.perf_counter()
-                q.fn(spark, sf_dir).count()
-                runs.append(time.perf_counter() - t0)
-        timings[name] = round(sorted(runs)[len(runs) // 2], 3)
+        runs = _timed_runs(registry[name], spark, sf_dir, extend_fast=True)
+        timings[name] = round(_median(runs), 3)
         spread[name] = [round(min(runs), 3), round(max(runs), 3)]
-        _drop_persisted(spark)
+        drop_persisted(spark)  # outside the timed region
 
     # Contention re-check (VERDICT r9 item 7): three rounds of guard
     # adjudication (r7/r8/r9) traced every sweep flag to shared-box /
@@ -192,17 +181,10 @@ def main() -> None:
         and sec - baselines[n] > abs_slack
     ]
     for name in flagged:
-        q = registry[name]
-        q.fn(spark, sf_dir).count()
-        runs = []
-        for _ in range(N_RUNS):
-            t0 = time.perf_counter()
-            q.fn(spark, sf_dir).count()
-            runs.append(time.perf_counter() - t0)
-        iso = round(sorted(runs)[len(runs) // 2], 3)
+        iso = round(_median(_timed_runs(registry[name], spark, sf_dir, extend_fast=False)), 3)
         reruns[name] = [timings[name], iso]
         timings[name] = iso
-        _drop_persisted(spark)
+        drop_persisted(spark)
 
     total = round(sum(timings.values()), 3)
     out = {

@@ -19,6 +19,7 @@ from pyspark.sql import SparkSession
 
 from cassandra_snap_to_hadoop_spark.io import TABLES
 from cassandra_snap_to_hadoop_spark.registry import REGISTRY, load_all
+from cassandra_snap_to_hadoop_spark.session import drop_persisted
 
 
 def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -173,15 +174,8 @@ def check_all(spark: SparkSession, sf_dir: str, names: list[str] | None = None) 
             results.append(check_query(spark, name, sf_dir, con))
         except Exception as exc:  # surface, don't abort the sweep
             results.append(ParityResult(name, False, "error", issues=[f"{type(exc).__name__}: {exc}"]))
-        # r11: unpersist dead lazy-localCheckpoint blocks between queries
-        # so the 525-query sweep's memory stays flat (bench.py's
-        # _drop_persisted rationale; results are unaffected).
-        try:
-            jmap = spark.sparkContext._jsc.getPersistentRDDs()
-            for jrdd in list(jmap.values()):
-                jrdd.unpersist()
-        except Exception:
-            pass
+        # keeps the 525-query sweep's memory flat; results are unaffected
+        drop_persisted(spark)
     return results
 
 

@@ -5,24 +5,24 @@ matching DuckDB oracle unless genuinely non-SQL-expressible (then the driver
 records a rows-only check).
 
 REGISTRY ORDER IS LOAD-BEARING.  The driver's correctness sweep walks the
-registry in insertion order with a bounded entry budget (~50 observed in
-rounds 1-2), so rows that lack driver-green evidence must occupy the first
-~50 positions.  Round 1 certified cassandra_sem/flagship/funcs/joins/llm;
-round 2 certified relational/windows/streaming_sem/sources_io/udf plus
-multimodal's two SQL rows; round 3 certified i7 + tpch(21) + layout(7) +
-governance(12) + the extended head (49 hash-green + e12 rows-only by
-contract).  Round 4 front-loads, via the explicit ``_ROUND4_PRIORITY``
-reorder below, the 50 SQL-oracled heads of the round-3 continuation
-batches (round3d 18, round3b 17, round3c 15) — the block VERDICT.md
-round-3 item 1 names.
+registry in insertion order with a bounded entry budget (~50 entries
+observed), so the keys that most need driver evidence must occupy the
+first ~50 positions.  That window is the single ``_ROUND11_PRIORITY``
+tuple below, which ``_reorder`` moves to the front; every other query
+follows in module import order.  To change the window, edit that tuple
+in place.
 
-Positions 51+ (``_ROUND4_TAIL``) are insurance: every remaining query that
-has never had a driver-green row, SQL-oracled first, so a longer-than-
-expected driver budget certifies new rows instead of re-certifying green
-families.  Already-driver-green families follow in original insertion
-order and re-verify every round via the local oracle mirror (python -m
-cassandra_snap_to_hadoop_spark.oracle), so being behind the budget loses
-no coverage.  Round 5 rotates the tail block into the front window.
+Do not add a per-round copy of the tuple (a new ``_ROUNDn_PRIORITY``
+beside the old one): only the tuple passed to ``_reorder`` takes effect,
+so a superseded copy is dead code that still reads as authoritative.
+Earlier rounds added one copy per round and never removed the old ones,
+which left seven unused windows and ~880 dead lines in this module.
+
+The order is a literal rather than derived from the CORRECTNESS_r*.json
+artifacts at import time, so importing the package reads no repo-root
+files and works from any cwd.  tests/test_docs_consistency.py checks the
+tuple against those artifacts and pins the resulting full order by
+digest.
 """
 
 from cassandra_snap_to_hadoop_spark.queries import (  # noqa: F401
@@ -158,893 +158,6 @@ _ROUND11_PRIORITY: tuple[str, ...] = (
     "j68_bpe_encode_stats",
 )
 
-# No overflow this round: the backlog (27) plus all 19 rows-only
-# re-checks fit the observed ~50-entry budget with slots to spare;
-# session additions consume the spare slots first (rows-only re-checks
-# yield — all have fresh round-10 lines).
-_ROUND11_TAIL: tuple[str, ...] = ()
-
-# Round-10 driver window (50 insertion-ordered entries), recomputed
-# programmatically at round-10 start from
-# REGISTRY − (hash-certified ∪ CORRECTNESS_r{1..9}) per VERDICT.md
-# round-9 item 1.  The never-certified backlog is exactly 31 SQL keys:
-# the 8 `_ROUND9_TAIL` overflow keys (j124 … j126), the 21 round-9
-# session additions (e116_cronbach_alpha … f54_hurst_rs), and the two
-# in-place conversions f21_lttb_downsample / j56_cdc_chunking whose
-# round-9 SQL oracles upgrade their old rows-only driver lines to hash
-# evidence.  All 31 are judge-mirror-green (478/478 this round) and
-# mirror-green locally at sf0.001/0.01/0.1.  Positions 32-33 are
-# f15_cusum_drift / f24_holt_forecast (round-10 conversion targets —
-# a hash line if the conversions land, a clean `spark_rows>0` line
-# otherwise); the remaining window slots re-check rows-only keys whose
-# last driver line predates several engine revisions.  ONE window
-# clears the whole backlog; rounds 11+ certify at parity with
-# additions.
-_ROUND10_PRIORITY: tuple[str, ...] = (
-    # ── 31 SQL-oracled, never hash-certified by the driver ──
-    "j124_corpus_diversity",
-    "e113_nelson_aalen",
-    "j125_dedup_threshold_curve",
-    "d26_temporal_anti_join",
-    "e114_newcombe_risk_diff",
-    "i25_higher_order_array_funcs",
-    "e115_rank_stability_footrule",
-    "j126_hapax_ratio",
-    "e116_cronbach_alpha",
-    "e117_anderson_darling",
-    "e118_krippendorff_alpha",
-    "e119_icc_oneway",
-    "j127_ngram_decontamination",
-    "b19_hinted_handoff",
-    "d27_bitemporal_asof",
-    "f51_sax_symbolization",
-    "j128_repetition_signals",
-    "f52_cross_correlation",
-    "e120_tukey_hsd",
-    "k16_pane_merged_sliding",
-    "j129_hard_negative_mining",
-    "j130_knn_label_noise",
-    "sql_api_group_by_all",
-    "b20_consistency_level_freshness",
-    "f53_seasonal_strength",
-    "j131_semdedup",
-    "e121_weighted_kappa",
-    "b21_ring_rebalance_plan",
-    "f54_hurst_rs",
-    "f21_lttb_downsample",
-    "j56_cdc_chunking",
-    # ── round-10 conversion targets (SQL twins planned this round) ──
-    "f15_cusum_drift",
-    "f24_holt_forecast",
-    # ── rows-only re-checks (fresh `spark_rows>0` lines) ──
-    "j3_knn_bruteforce_arrow",
-    "j3_knn_pq",
-    "j10_multimodal_decode",
-    "e12_hll_sketch_merge",
-    "llm_curation_funnel_lsh",
-    "j20_compression_ratio",
-    "b1_murmur3_placement",
-    "j2_minhash_lsh_pairs",
-    "j2_simhash",
-    "j3_knn_ivf",
-    "j3_knn_ivf_kmeans",
-    "j3_similarity_join_lsh",
-    "j9_fingerprint",
-    "j48_media_embedding_knn",
-    "j66_bpe_merges",
-    "j68_bpe_encode_stats",
-    "j72_rouge_l",
-)
-
-# Overflow past the 50-entry window: the two `pyspark.ml` estimator
-# tiers (law-tested against the hand-rolled tiers; model hash seeds are
-# JVM-internal so they stay rows-only by design).
-_ROUND10_TAIL: tuple[str, ...] = (
-    "j2_minhash_lsh_ml",
-    "j3_knn_brp_lsh_ml",
-)
-
-# Round-9 driver window kept for the record (driver r9 certified 50/50
-# hash-level), recomputed at round-9 start from
-# REGISTRY − ∪ CORRECTNESS_r{1..8} (VERDICT.md round-8 item 1): the
-# backlog was exactly the 58 round-8 session additions registered AFTER
-# the r8 window rotated — all SQL-oracled, all judge-mirror-green
-# (457/457) and mirror-green locally at sf0.001/0.01/0.1.  The first 50
-# (insertion order) filled the window; the 8 overflow keys were
-# `_ROUND9_TAIL` and clear in round 10.
-_ROUND9_PRIORITY: tuple[str, ...] = (
-    "a36_sstable_ma_roundtrip",
-    "a37_sstable_ma_clustering_scan",
-    "b15_quorum_read_repair",
-    "j111_t_closeness",
-    "j112_hits_scores",
-    "e96_fleiss_kappa",
-    "f42_ewma_control",
-    "f43_runs_test",
-    "f44_turning_points",
-    "e97_grubbs_outlier",
-    "e95_mantel_haenszel",
-    "j113_good_turing",
-    "j114_textrank_keywords",
-    "j115_stratified_split",
-    "e98_somers_d",
-    "e99_negbin_moments",
-    "j116_source_containment",
-    "i24_bitwise_funcs",
-    "e100_effect_size",
-    "e101_kruskal_wallis",
-    "e102_wilcoxon_signed_rank",
-    "e103_friedman_test",
-    "e104_cochran_q",
-    "f45_ljung_box",
-    "f46_durbin_watson",
-    "e105_g_test",
-    "e106_odds_ratio_woolf",
-    "j117_heaps_law",
-    "j118_flesch_kincaid",
-    "f47_page_hinkley",
-    "j119_term_burstiness",
-    "b16_secondary_index_scan",
-    "b17_lwt_cas_replay",
-    "a38_partition_size_histogram",
-    "e107_benford_law",
-    "j120_sttr_lexical_diversity",
-    "f48_theil_u2",
-    "j121_mmr_rerank",
-    "e108_brown_forsythe",
-    "j122_token_budget_apportion",
-    "f49_permutation_entropy",
-    "e109_cramers_v",
-    "j123_rouge_bigram",
-    "a39_incremental_backup_bytes",
-    "f50_effective_sample_size",
-    "d24_nearest_event_join",
-    "b18_tombstone_scan_audit",
-    "e110_hill_tail_index",
-    "e111_power_sample_size",
-    "e112_deming_regression",
-)
-
-# Positions 51+: the 8 overflow keys from the same backlog (all
-# SQL-oracled, insertion order) — a generous driver budget certifies
-# them this round; otherwise they lead the round-10 window and the
-# never-certified backlog is then EMPTY.  f21 and j56 follow them:
-# their round-8 driver lines were rows-only (`spark_rows>0`) and the
-# round-9 in-place conversions gave them SQL oracles, so a long budget
-# upgrades them to hash-level evidence.
-_ROUND9_TAIL: tuple[str, ...] = (
-    "j124_corpus_diversity",
-    "e113_nelson_aalen",
-    "j125_dedup_threshold_curve",
-    "d26_temporal_anti_join",
-    "e114_newcombe_risk_diff",
-    "i25_higher_order_array_funcs",
-    "e115_rank_stability_footrule",
-    "j126_hapax_ratio",
-    "f21_lttb_downsample",
-    "j56_cdc_chunking",
-)
-
-# Round-8 driver window kept for the record (driver r8 certified 37 SQL
-# keys hash-level + 13 rows-only `spark_rows>0` lines = 50/50);
-# originally recomputed at round-8 start from REGISTRY − ∪ CORRECTNESS_r{1..7}
-# (VERDICT.md round-7 item 3): all 37 remaining never-driver-certified
-# SQL-oracled keys first — the `_ROUND7_TAIL` SQL head (j49 …
-# j89_label_propagation), the nineteen round-7 additions (a33 … j110) and
-# the six round-7 rows-only→SQL conversions (e4/e6/j64/e27/e24/f27) —
-# then the thirteen never-attempted rows-only keys so each finally gets
-# its driver `spark_rows>0` line.  All 37 SQL keys are judge-mirror-green
-# (399/399) and mirror-green locally at sf0.001/0.01/0.1.
-_ROUND8_PRIORITY: tuple[str, ...] = (
-    # ── 37 SQL-oracled, never inside a driver window ──
-    "j49_unicode_nfc_normalize",
-    "a22_snapshot_retention",
-    "a23_nested_schema_pruning",
-    "j2_minhash_lsh_md5",
-    "f31_holt_recursive",
-    "f30_savgol_smooth",
-    "j85_fellegi_sunter",
-    "j88_rake_keywords",
-    "a28_zonemap_skipping",
-    "i22_soundex_phonetic",
-    "f32_kalman_recursive",
-    "j89_label_propagation",
-    "a33_sstable_binary_roundtrip",
-    "a34_sstable_clustering_scan",
-    "e81_cvm_two_sample",
-    "f38_acf_lags",
-    "e83_lift_gain_deciles",
-    "e82_logrank_test",
-    "e84_delong_auc_compare",
-    "j107_ktruss_peel",
-    "e86_gini_split_stump",
-    "e88_partial_correlation",
-    "a35_bloom_file_skip_audit",
-    "e89_cochran_armitage_trend",
-    "e91_capture_recapture",
-    "f39_overdispersion_index",
-    "j109_greedy_maxcover",
-    "b14_merkle_repair_ranges",
-    "f41_markov_stationary",
-    "e93_srm_check",
-    "j110_embedding_centroid_drift",
-    "e4_approx_count_distinct",
-    "e6_percentile_approx",
-    "j64_simhash_hamming_pairs",
-    "e27_hll_distinct_to_date",
-    "e24_hll_overlap",
-    "f27_holt_winters",
-    # ── 13 rows-only, never attempted (driver records rows>0) ──
-    "j3_knn_bruteforce_arrow",
-    "f15_cusum_drift",
-    "j48_media_embedding_knn",
-    "j10_multimodal_decode",
-    "llm_curation_funnel_lsh",
-    "j20_compression_ratio",
-    "j56_cdc_chunking",
-    "j3_knn_pq",
-    "f21_lttb_downsample",
-    "f24_holt_forecast",
-    "j66_bpe_merges",
-    "j68_bpe_encode_stats",
-    "j72_rouge_l",
-)
-
-# Positions 51+: the only keys left without a clean driver line are the
-# ten rows-only names whose sole driver record is a round-1/3
-# `err:"no_oracle"` artifact (attempted-not-failed; they predate the
-# rows-only-last rule).  A generous driver budget gives each its
-# `spark_rows>0` line; round 9 covers any remainder and the backlog is
-# then empty.
-_ROUND8_TAIL: tuple[str, ...] = (
-    "e12_hll_sketch_merge",
-    "b1_murmur3_placement",
-    "j2_minhash_lsh_pairs",
-    "j2_minhash_lsh_ml",
-    "j3_knn_brp_lsh_ml",
-    "j2_simhash",
-    "j3_knn_ivf",
-    "j3_knn_ivf_kmeans",
-    "j3_similarity_join_lsh",
-    "j9_fingerprint",
-)
-
-# Round-7 driver window kept for the record (certified 50/50 in round 7);
-# originally recomputed at round-7 start from REGISTRY − ∪ CORRECTNESS_r{1..6}
-# (VERDICT.md round-6 item 1): the two never-certified bench-headline
-# members lead (j101/j100), then the remaining 21 round-6 additions in
-# registration order (e24_overlap … e80), then the two round-6 rows-only→
-# SQL conversions (e44/e21), then the `_ROUND6_TAIL` SQL head
-# (d14 … sql_api_parameterized).  All 50 carry SQL oracles and are
-# mirror-green at sf0.001/0.01 (round-6 additions also at sf0.1).
-_ROUND7_PRIORITY: tuple[str, ...] = (
-    "j101_dsir_importance",
-    "j100_kcore_decomposition",
-    "e24_overlap_incl_excl",
-    "e72_log_loss_binned",
-    "e73_join_cardinality_audit",
-    "sql_api_unpivot",
-    "j102_l_diversity",
-    "e74_sprt_sequential",
-    "e75_isotonic_calibration",
-    "a31_stcs_tier_audit",
-    "d23_allen_interval_histogram",
-    "j103_kneser_ney_bigram",
-    "j104_ipf_raking",
-    "k15_lateness_histogram",
-    "e76_poisson_surprise",
-    "a32_partition_skew_audit",
-    "j105_cluster_contamination",
-    "e77_conformal_intervals",
-    "e78_mcnemar_paired",
-    "j106_token_entropy",
-    "f36_ma_crossover",
-    "e79_ratio_metric_delta",
-    "e80_quantile_treatment_effect",
-    "e44_mergeable_quantiles",
-    "e21_cms_heavy_hitters",
-    "d14_asof_tolerance",
-    "d15_null_skew_join",
-    "a17_xml_roundtrip",
-    "j40_dedup_best_rep",
-    "d16_interval_overlap_join",
-    "i14_url_funcs",
-    "a18_json_malformed_rows",
-    "j41_bigram_lm_score",
-    "f13_ratio_windows",
-    "j42_url_canonical_dedup",
-    "j43_fixed_k_sample",
-    "j44_oov_rate",
-    "j46_tokenizer_fertility",
-    "i15_collation_funcs",
-    "a19_csv_multiline",
-    "k12_stream_topk",
-    "sql_api_priority_share",
-    "j47_containment_pairs",
-    "a20_binaryfile_ingest",
-    "k13_stream_stream_left_join",
-    "e19_bitmap_distinct",
-    "e20_pareto_cut",
-    "i16_map_hof_funcs",
-    "a21_dynamic_partition_overwrite",
-    "sql_api_parameterized",
-)
-
-# Positions 51+ are INSURANCE: if the driver budget runs past 50, every
-# extra slot certifies a query that has never had a driver-green row.
-# The 12 remaining SQL-oracled keys first (these plus the window above
-# FINISH the SQL backlog), then the 19 never-attempted rows-only keys so
-# each finally gets a driver `spark_rows>0` line, then the rows-only
-# names whose only driver line is a round-1/3 `err:"no_oracle"` artifact
-# (attempted-not-failed; they predate the rows-only-last rule).
-_ROUND7_TAIL: tuple[str, ...] = (
-    "j49_unicode_nfc_normalize",
-    "a22_snapshot_retention",
-    "a23_nested_schema_pruning",
-    "j2_minhash_lsh_md5",
-    "f31_holt_recursive",
-    "f30_savgol_smooth",
-    "j85_fellegi_sunter",
-    "j88_rake_keywords",
-    "a28_zonemap_skipping",
-    "i22_soundex_phonetic",
-    "f32_kalman_recursive",
-    "j89_label_propagation",
-    # round-7 additions (never-certified by construction, SQL-oracled)
-    "a33_sstable_binary_roundtrip",
-    "a34_sstable_clustering_scan",
-    "e81_cvm_two_sample",
-    "f38_acf_lags",
-    "e83_lift_gain_deciles",
-    "e82_logrank_test",
-    "e84_delong_auc_compare",
-    "j107_ktruss_peel",
-    "e86_gini_split_stump",
-    "e88_partial_correlation",
-    "a35_bloom_file_skip_audit",
-    "e89_cochran_armitage_trend",
-    "e91_capture_recapture",
-    "f39_overdispersion_index",
-    "j109_greedy_maxcover",
-    "b14_merkle_repair_ranges",
-    "f41_markov_stationary",
-    "e93_srm_check",
-    "j110_embedding_centroid_drift",
-    # converted from rows-only to SQL-certified in round 7 (VERDICT r6
-    # item 3): e4/e6 via exact aggregates + oracle-asserted error-contract
-    # flags, j64 via the md5 60-bit fingerprint at a second pigeonhole
-    # operating point (distance <= 5, 6 x 10-bit bands).
-    "e4_approx_count_distinct",
-    "e6_percentile_approx",
-    "j64_simhash_hamming_pairs",
-    "e27_hll_distinct_to_date",
-    "e24_hll_overlap",
-    "f27_holt_winters",
-    # rows-only (weaker driver evidence by design) — never attempted
-    "j3_knn_bruteforce_arrow",
-    "f15_cusum_drift",
-    "j48_media_embedding_knn",
-    "j10_multimodal_decode",
-    "llm_curation_funnel_lsh",
-    "j20_compression_ratio",
-    "j56_cdc_chunking",
-    "j3_knn_pq",
-    "f21_lttb_downsample",
-    "f24_holt_forecast",
-    "j66_bpe_merges",
-    "j68_bpe_encode_stats",
-    "j72_rouge_l",
-    # rows-only with prior `err:"no_oracle"` attempt lines (see note)
-    "e12_hll_sketch_merge",
-    "b1_murmur3_placement",
-    "j2_minhash_lsh_pairs",
-    "j2_minhash_lsh_ml",
-    "j3_knn_brp_lsh_ml",
-    "j2_simhash",
-    "j3_knn_ivf",
-    "j3_knn_ivf_kmeans",
-    "j3_similarity_join_lsh",
-    "j9_fingerprint",
-)
-
-# Round-6 driver window kept for the record (certified 50/50 in round 6);
-# originally recomputed at round-6 start from REGISTRY − ∪ CORRECTNESS_r{1..5}
-# (VERDICT.md round-5 item 1): the seven never-certified bench-headline
-# members first (j90/j91 lead, then llm_curation_funnel, e18, f14, j86,
-# j87), then the remaining 23 round-5 additions in registration order
-# (e62–e71, f33/f34, a29/a30, b13, i23, j92–j99, j3_knn_srp_md5), then
-# the `_ROUND5_TAIL` SQL head (k10 … b10).  All 50 carry SQL oracles and
-# are mirror-green at sf0.001/0.01 (heads also at sf0.1).
-_ROUND6_PRIORITY: tuple[str, ...] = (
-    "j90_connected_components",
-    "j91_winnowing_fingerprints",
-    "llm_curation_funnel",
-    "e18_width_bucket_histogram",
-    "f14_rolling_zscore",
-    "j86_kmeans_lloyd",
-    "j87_dbscan_core",
-    "e62_roc_auc",
-    "e63_brier_calibration",
-    "j3_knn_srp_md5",
-    "e67_kendall_tau",
-    "f33_changepoint_binseg",
-    "j92_ngram_novelty",
-    "e64_benjamini_hochberg",
-    "f34_periodogram",
-    "j93_cluster_purity_nmi",
-    "e65_js_divergence",
-    "a29_compaction_planner",
-    "e66_tost_equivalence",
-    "j94_golden_record",
-    "a30_zorder_layout",
-    "e68_pr_auc",
-    "e69_mcc_operating_points",
-    "j96_term_burstiness",
-    "j97_lsh_s_curve",
-    "e70_hurst_exponent",
-    "b13_token_ring_balance",
-    "e71_cramers_v",
-    "i23_masking_funcs",
-    "j99_dedup_savings",
-    "k10_disorder_profile",
-    "g4_global_rank_scalable",
-    "f12_decay_weighted_sum",
-    "k11_session_patterns",
-    "i13_binary_encode_funcs",
-    "j17_repetition_signals",
-    "j18_mixture_weights",
-    "j19_quality_percentile_cut",
-    "d11_salted_skew_join",
-    "e15_salted_agg",
-    "a9_bucketed_join",
-    "j21_pii_redaction",
-    "j22_stratified_sample",
-    "j23_unigram_lm_score",
-    "j24_event_transitions",
-    "j25_upsample_epochs",
-    "e17_weighted_stats",
-    "j31_context_chunking",
-    "sql_api_revenue_by_nation",
-    "b10_replica_divergence",
-)
-
-# Positions 51+ are INSURANCE: if the driver budget runs past 50, every
-# extra slot certifies a query that has never had a driver-green row.
-# SQL-oracled first (hard value evidence — these 37 plus the window
-# above finish the SQL backlog in round 7), rows-only last; within each
-# block, the round-5 tail order then registry insertion order.  The ten
-# final rows-only names carry `err:"no_oracle"` rows from round 1's
-# window (they predate the rows-only-last rule) — those r1 lines are
-# attempted-not-failed, not red.
-_ROUND6_TAIL: tuple[str, ...] = (
-    "d14_asof_tolerance",
-    "d15_null_skew_join",
-    "a17_xml_roundtrip",
-    "j40_dedup_best_rep",
-    "d16_interval_overlap_join",
-    "i14_url_funcs",
-    "a18_json_malformed_rows",
-    "j41_bigram_lm_score",
-    "f13_ratio_windows",
-    "j42_url_canonical_dedup",
-    "j43_fixed_k_sample",
-    "j44_oov_rate",
-    "j46_tokenizer_fertility",
-    "i15_collation_funcs",
-    "a19_csv_multiline",
-    "k12_stream_topk",
-    "sql_api_priority_share",
-    "j47_containment_pairs",
-    "a20_binaryfile_ingest",
-    "k13_stream_stream_left_join",
-    "e19_bitmap_distinct",
-    "e20_pareto_cut",
-    "i16_map_hof_funcs",
-    "a21_dynamic_partition_overwrite",
-    "sql_api_parameterized",
-    "j49_unicode_nfc_normalize",
-    "a22_snapshot_retention",
-    "a23_nested_schema_pruning",
-    "j2_minhash_lsh_md5",
-    "f31_holt_recursive",
-    "f30_savgol_smooth",
-    "j85_fellegi_sunter",
-    "j88_rake_keywords",
-    "a28_zonemap_skipping",
-    "i22_soundex_phonetic",
-    "f32_kalman_recursive",
-    "j89_label_propagation",
-    # converted from rows-only to SQL-certified in round 6 (VERDICT r5
-    # item 4): e44 via the md5-keyed integer fold, e21 via the relational
-    # md5-CMS counter table.
-    "e44_mergeable_quantiles",
-    "e21_cms_heavy_hitters",
-    # round-6 additions (never-certified by construction, SQL-oracled)
-    "e24_overlap_incl_excl",
-    "j100_kcore_decomposition",
-    "e72_log_loss_binned",
-    "e73_join_cardinality_audit",
-    "j101_dsir_importance",
-    "sql_api_unpivot",
-    "j102_l_diversity",
-    "e74_sprt_sequential",
-    "e75_isotonic_calibration",
-    "a31_stcs_tier_audit",
-    "d23_allen_interval_histogram",
-    "j103_kneser_ney_bigram",
-    "j104_ipf_raking",
-    "k15_lateness_histogram",
-    "e76_poisson_surprise",
-    "a32_partition_skew_audit",
-    "j105_cluster_contamination",
-    "e77_conformal_intervals",
-    "e78_mcnemar_paired",
-    "j106_token_entropy",
-    "f36_ma_crossover",
-    "e79_ratio_metric_delta",
-    "e80_quantile_treatment_effect",
-    # rows-only (weaker driver evidence by design)
-    "j3_knn_bruteforce_arrow",
-    "f15_cusum_drift",
-    "j48_media_embedding_knn",
-    "j10_multimodal_decode",
-    "llm_curation_funnel_lsh",
-    "j20_compression_ratio",
-    "e4_approx_count_distinct",
-    "e6_percentile_approx",
-    "e24_hll_overlap",
-    "j56_cdc_chunking",
-    "j3_knn_pq",
-    "f21_lttb_downsample",
-    "f24_holt_forecast",
-    "j64_simhash_hamming_pairs",
-    "j66_bpe_merges",
-    "j68_bpe_encode_stats",
-    "j72_rouge_l",
-    # rows-only with round-1 `err:"no_oracle"` attempt lines (see note)
-    "e12_hll_sketch_merge",
-    "b1_murmur3_placement",
-    "j2_minhash_lsh_pairs",
-    "j2_minhash_lsh_ml",
-    "j3_knn_brp_lsh_ml",
-    "j2_simhash",
-    "j3_knn_ivf",
-    "j3_knn_ivf_kmeans",
-    "j3_similarity_join_lsh",
-    "j9_fingerprint",
-)
-
-# Round-5 window kept for the record (the docs-consistency test asserts it
-# against rounds 1–4 evidence only; it was certified 50/50 in round 5).
-_ROUND5_PRIORITY: tuple[str, ...] = (
-    "e30_equidepth_scalable",
-    "j70_jaro_winkler_pairs",
-    "j71_pagerank",
-    "j64_simhash_pairs_md5",
-    "e45_mann_whitney",
-    "e46_spearman_corr",
-    "f26_autocorrelation",
-    "j76_label_centroids",
-    "j77_perplexity_buckets",
-    "e47_mann_kendall",
-    "e48_market_basket",
-    "j78_nearest_centroid_eval",
-    "j79_triangle_count",
-    "sql_api_recursive_cte",
-    "d21_lateral_topk",
-    "e49_anova_f",
-    "e50_quantile_normalize",
-    "e51_theil_sen_slope",
-    "e52_welch_t",
-    "e53_cohen_kappa",
-    "f28_seasonal_decompose",
-    "j82_bloom_prefilter_dedup",
-    "e54_silhouette",
-    "f29_cusum_recursive",
-    "e55_calinski_harabasz",
-    "e56_mase_forecast_eval",
-    "j83_feature_hashing",
-    "e58_psi_drift",
-    "j84_k_anonymity",
-    "i21_builtin_levenshtein",
-    "a25_tar_shard_ingest",
-    "l9_polymorphic_udtf",
-    "j10_frame_sampling",
-    "j14_fuzzy_match",
-    "f9_running_distinct",
-    "l6_map_in_arrow",
-    "a7_text_roundtrip",
-    "b9_scd2_history",
-    "j15_contamination",
-    "j16_source_balancing",
-    "d10_nullsafe_join",
-    "h4_union_schema_evolution",
-    "a8_csv_malformed_rows",
-    "k9_stream_static_enrich",
-    "e14_conversion_funnel",
-    "e16_higher_moments",
-    "f10_monotone_runs",
-    "h5_multiset_setops",
-    "l7_udtf_table_partition",
-    "i12_variant_explode",
-)
-
-# Positions 51+ are INSURANCE: if the driver budget runs past 50, every
-# extra slot certifies a query that has never had a driver-green row.
-# SQL-oracled first (hard value evidence), rows-only last; within each
-# block, the round-4 tail order then registry insertion order.
-_ROUND5_TAIL: tuple[str, ...] = (
-    "k10_disorder_profile",
-    "g4_global_rank_scalable",
-    "f12_decay_weighted_sum",
-    "k11_session_patterns",
-    "i13_binary_encode_funcs",
-    "j17_repetition_signals",
-    "j18_mixture_weights",
-    "j19_quality_percentile_cut",
-    "d11_salted_skew_join",
-    "e15_salted_agg",
-    "a9_bucketed_join",
-    "j21_pii_redaction",
-    "j22_stratified_sample",
-    "j23_unigram_lm_score",
-    "j24_event_transitions",
-    "j25_upsample_epochs",
-    "e17_weighted_stats",
-    "j31_context_chunking",
-    "sql_api_revenue_by_nation",
-    "b10_replica_divergence",
-    "d14_asof_tolerance",
-    "d15_null_skew_join",
-    "llm_curation_funnel",
-    "a17_xml_roundtrip",
-    "j40_dedup_best_rep",
-    "d16_interval_overlap_join",
-    "i14_url_funcs",
-    "a18_json_malformed_rows",
-    "j41_bigram_lm_score",
-    "f13_ratio_windows",
-    "j42_url_canonical_dedup",
-    "j43_fixed_k_sample",
-    "j44_oov_rate",
-    "j46_tokenizer_fertility",
-    "i15_collation_funcs",
-    "e18_width_bucket_histogram",
-    "a19_csv_multiline",
-    "k12_stream_topk",
-    "f14_rolling_zscore",
-    "sql_api_priority_share",
-    "j47_containment_pairs",
-    "a20_binaryfile_ingest",
-    "k13_stream_stream_left_join",
-    "e19_bitmap_distinct",
-    "e20_pareto_cut",
-    "i16_map_hof_funcs",
-    "a21_dynamic_partition_overwrite",
-    "sql_api_parameterized",
-    "j49_unicode_nfc_normalize",
-    "a22_snapshot_retention",
-    "a23_nested_schema_pruning",
-    "j2_minhash_lsh_md5",
-    "f31_holt_recursive",
-    "f30_savgol_smooth",
-    "j85_fellegi_sunter",
-    "j86_kmeans_lloyd",
-    "j87_dbscan_core",
-    "j88_rake_keywords",
-    "a28_zonemap_skipping",
-    "i22_soundex_phonetic",
-    "f32_kalman_recursive",
-    "j89_label_propagation",
-    # rows-only (weaker driver evidence by design)
-    "j3_knn_bruteforce_arrow",
-    "f15_cusum_drift",
-    "j48_media_embedding_knn",
-    "j10_multimodal_decode",
-    "llm_curation_funnel_lsh",
-    "j20_compression_ratio",
-    "e4_approx_count_distinct",
-    "e6_percentile_approx",
-    "e21_cms_heavy_hitters",
-    "e24_hll_overlap",
-    "j56_cdc_chunking",
-    "j3_knn_pq",
-    "f21_lttb_downsample",
-    "f24_holt_forecast",
-    "j64_simhash_hamming_pairs",
-    "j66_bpe_merges",
-    "j68_bpe_encode_stats",
-    "e44_mergeable_quantiles",
-    "j72_rouge_l",
-)
-
-# Round-4 window kept for the record (the docs-consistency test asserts it
-# against rounds 1–3 evidence only; it was certified 50/50 in round 4).
-_ROUND4_PRIORITY: tuple[str, ...] = (
-    # round3d third-continuation batch (18): exact-similarity/ER +
-    # incremental + statistics + tokenizer tiers.
-    "j62_ppjoin_pairs",
-    "j63_sorted_neighborhood_pairs",
-    "a24_incremental_mv_maintenance",
-    "i18_date_spine_coverage",
-    "e36_ks_drift",
-    "e37_chi2_independence",
-    "e38_bootstrap_ci",
-    "e39_kaplan_meier",
-    "e40_cuped_adjustment",
-    "e41_ols_normal_equations",
-    "e43_permutation_test",
-    "i19_edit_distance_pairs",
-    "j67_ngram_overlap_metrics",
-    "f25_linear_interpolation",
-    "a26_fixed_width_ingest",
-    "a27_codec_roundtrip",
-    "j69_embedding_decontamination",
-    "l8_pandas_iter_udf",
-    # round3b IR/analytics batch (17).
-    "j50_inverted_index",
-    "j51_bm25_scores",
-    "e22_cohort_retention",
-    "e23_weighted_median",
-    "e25_skyline",
-    "f16_interval_union",
-    "f17_twap",
-    "f18_ohlc_bars",
-    "j52_pmi_collocations",
-    "j53_column_profile",
-    "j54_dq_expectations",
-    "j55_vocab_coverage",
-    "d17_asof_nearest",
-    "i17_try_funcs",
-    "k14_dynamic_session_gap",
-    "b11_static_columns",
-    "b12_range_tombstones",
-    # round3c late depth batch (15).
-    "j57_exact_substring_dedup",
-    "d19_pit_scd2_join",
-    "e26_multitouch_attribution",
-    "j58_weighted_sample",
-    "e28_robust_mean",
-    "e29_gini_concentration",
-    "j59_reciprocal_nn",
-    "e30_equidepth_histogram",
-    "f20_mad_outliers",
-    "e31_wilson_ci",
-    "f22_peak_concurrency",
-    "j60_sparse_cosine_pairs",
-    "j61_zipf_fit",
-    "e33_benford_digits",
-    "f23_moving_median",
-)
-
-# Positions 51+ are INSURANCE: if the driver budget runs past 50, every
-# extra slot certifies a query that has never had a driver-green row.
-# SQL-oracled first (hard value evidence), rows-only last; within each
-# block, prior registry order.  Families certified in rounds 1-3 fall
-# behind this block and re-verify via the local oracle mirror every round.
-_ROUND4_TAIL: tuple[str, ...] = (
-    # round-4 additions (never-certified by construction, SQL-oracled).
-    "e30_equidepth_scalable",
-    "j70_jaro_winkler_pairs",
-    "j71_pagerank",
-    "j64_simhash_pairs_md5",
-    "e45_mann_whitney",
-    "e46_spearman_corr",
-    "f26_autocorrelation",
-    "j76_label_centroids",
-    "j77_perplexity_buckets",
-    "e47_mann_kendall",
-    "e48_market_basket",
-    "j78_nearest_centroid_eval",
-    "j79_triangle_count",
-    "sql_api_recursive_cte",
-    "d21_lateral_topk",
-    "e49_anova_f",
-    "e50_quantile_normalize",
-    "e51_theil_sen_slope",
-    "e52_welch_t",
-    "e53_cohen_kappa",
-    "f28_seasonal_decompose",
-    "j82_bloom_prefilter_dedup",
-    "e54_silhouette",
-    "f29_cusum_recursive",
-    "e55_calinski_harabasz",
-    "e56_mase_forecast_eval",
-    "j83_feature_hashing",
-    "e58_psi_drift",
-    "j84_k_anonymity",
-    "i21_builtin_levenshtein",
-    "a25_tar_shard_ingest",
-    "l9_polymorphic_udtf",
-    "j10_frame_sampling",
-    "j14_fuzzy_match",
-    "f9_running_distinct",
-    "l6_map_in_arrow",
-    "a7_text_roundtrip",
-    "b9_scd2_history",
-    "j15_contamination",
-    "j16_source_balancing",
-    "d10_nullsafe_join",
-    "h4_union_schema_evolution",
-    "a8_csv_malformed_rows",
-    "k9_stream_static_enrich",
-    "e14_conversion_funnel",
-    "e16_higher_moments",
-    "f10_monotone_runs",
-    "h5_multiset_setops",
-    "l7_udtf_table_partition",
-    "i12_variant_explode",
-    "k10_disorder_profile",
-    "g4_global_rank_scalable",
-    "f12_decay_weighted_sum",
-    "k11_session_patterns",
-    "i13_binary_encode_funcs",
-    "j17_repetition_signals",
-    "j18_mixture_weights",
-    "j19_quality_percentile_cut",
-    "d11_salted_skew_join",
-    "e15_salted_agg",
-    "a9_bucketed_join",
-    "j21_pii_redaction",
-    "j22_stratified_sample",
-    "j23_unigram_lm_score",
-    "j24_event_transitions",
-    "j25_upsample_epochs",
-    "e17_weighted_stats",
-    "j31_context_chunking",
-    "sql_api_revenue_by_nation",
-    "b10_replica_divergence",
-    "d14_asof_tolerance",
-    "d15_null_skew_join",
-    "llm_curation_funnel",
-    "a17_xml_roundtrip",
-    "j40_dedup_best_rep",
-    "d16_interval_overlap_join",
-    "i14_url_funcs",
-    "a18_json_malformed_rows",
-    "j41_bigram_lm_score",
-    "f13_ratio_windows",
-    "j42_url_canonical_dedup",
-    "j43_fixed_k_sample",
-    "j44_oov_rate",
-    "j46_tokenizer_fertility",
-    "i15_collation_funcs",
-    "e18_width_bucket_histogram",
-    "a19_csv_multiline",
-    "k12_stream_topk",
-    "f14_rolling_zscore",
-    "sql_api_priority_share",
-    "j47_containment_pairs",
-    "a20_binaryfile_ingest",
-    "k13_stream_stream_left_join",
-    "e19_bitmap_distinct",
-    "e20_pareto_cut",
-    "i16_map_hof_funcs",
-    "a21_dynamic_partition_overwrite",
-    "sql_api_parameterized",
-    "j49_unicode_nfc_normalize",
-    "a22_snapshot_retention",
-    "a23_nested_schema_pruning",
-    # rows-only (weaker driver evidence by design)
-    "j3_knn_bruteforce_arrow",
-    "f15_cusum_drift",
-    "j48_media_embedding_knn",
-    "j10_multimodal_decode",
-    "llm_curation_funnel_lsh",
-    "j20_compression_ratio",
-    "e4_approx_count_distinct",
-    "e6_percentile_approx",
-    "e21_cms_heavy_hitters",
-    "e24_hll_overlap",
-    "j56_cdc_chunking",
-    "j3_knn_pq",
-    "f21_lttb_downsample",
-    "f24_holt_forecast",
-    "j64_simhash_hamming_pairs",
-    "j66_bpe_merges",
-    "j68_bpe_encode_stats",
-)
-
 
 def _reorder(priority: tuple[str, ...]) -> None:
     missing = [n for n in priority if n not in REGISTRY]
@@ -1057,4 +170,4 @@ def _reorder(priority: tuple[str, ...]) -> None:
     REGISTRY.update(tail)
 
 
-_reorder(_ROUND11_PRIORITY + _ROUND11_TAIL)
+_reorder(_ROUND11_PRIORITY)

@@ -16,19 +16,18 @@ layouts, one reconciled relational truth, one oracle.
 
 from __future__ import annotations
 
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cassandra_snap_to_hadoop_spark.queries.layout import _staged
 from cassandra_snap_to_hadoop_spark.queries.round7 import (
     _AS_OF,
-    _LDT,
-    _ORDERS_CQL,
-    _SUPPLIER_CQL,
-    _TTL_FUTURE,
-    _TTL_PAST,
+    _ORDERS_ORACLE,
+    _SUPPLIER_ORACLE,
+    _orders_partitions,
+    _orders_scan,
+    _stage_snapshot,
+    _supplier_partitions,
+    _supplier_scan,
 )
 from cassandra_snap_to_hadoop_spark.registry import register
 from cassandra_snap_to_hadoop_spark.session import apply_runtime_confs
@@ -40,108 +39,37 @@ _REPAIR_ID = bytes(range(16))
 _HOST_ID = bytes(range(16, 32))
 
 
-def _supplier_partitions(sf_dir: str):
-    """The a33/a36 supplier fixture semantics, shared verbatim by the
-    4.x staging below: same %97/%13 partition deletions, %5 cell
-    tombstone, %7/%11 expired/surviving TTL cells — one truth, now
-    three byte layouts."""
-    import pyarrow.parquet as pq
-
-    t = pq.read_table(
-        f"{sf_dir}/supplier.parquet",
-        columns=["s_suppkey", "s_name", "s_nationkey", "s_acctbal"],
-    )
-    gens: dict[int, list] = {1: [], 2: []}
-    for k, name, nat, bal in zip(*(t.column(c).to_pylist() for c in t.column_names)):
-        base_ts = k * 1000
-        if k % 97 == 0:
-            deletion = (_LDT, base_ts + 999)
-            name_ts = base_ts
-        elif k % 13 == 0:
-            deletion = (_LDT, base_ts - 1)
-            name_ts = base_ts - 2
-        else:
-            deletion = None
-            name_ts = base_ts
-        if k % 5 == 0:
-            nat_cell = ("tombstone", base_ts, _LDT)
-        else:
-            nat_cell = ("live", base_ts, nat)
-        if k % 7 == 0:
-            bal_cell = ("expiring", base_ts, bal, 60, _TTL_PAST)
-        elif k % 11 == 0:
-            bal_cell = ("expiring", base_ts, bal, 60, _TTL_FUTURE)
-        else:
-            bal_cell = ("live", base_ts, bal)
-        gens[1 if k % 2 == 0 else 2].append(
-            {
-                "key": (k,),
-                "deletion": deletion,
-                "rows": [
-                    {
-                        "clustering": (),
-                        "marker_ts": base_ts,
-                        "cells": {
-                            "s_name": ("live", name_ts, name),
-                            "s_nationkey": nat_cell,
-                            "s_acctbal": bal_cell,
-                        },
-                    }
-                ],
-            }
-        )
-    return gens
-
-
 def _stage_supplier_na_sstables(sf_dir: str):
     """Two 4.x generations: gen 1 as ``na`` (with a pending-repair
     session id), gen 2 as ``nb`` (with an originating host id — the
     field nb added) — so one scan certifies both version tags, both
     sidecar field paths, and the digest/chunk verification."""
-    from cassandra_snap_to_hadoop_spark.sources.snapshot import parse_table_meta
     from cassandra_snap_to_hadoop_spark.sources.sstable_na import write_na_data_db
 
-    base = _staged("a40_sstable_na", sf_dir, "supplier")
-    snap = base / "ks1" / "supplier" / "snapshots" / "tag-r10"
-    if (base / "_SUCCESS").exists():
-        return base
-    shutil.rmtree(base, ignore_errors=True)
-    snap.mkdir(parents=True)
-    (snap / "schema.cql").write_text(_SUPPLIER_CQL)
-    meta = parse_table_meta(_SUPPLIER_CQL)
-    gens = _supplier_partitions(sf_dir)
-    write_na_data_db(
-        str(snap / "na-1-big-Data.db"),
-        gens[1],
-        meta,
-        version="na",
-        pending_repair=_REPAIR_ID,
-    )
-    write_na_data_db(
-        str(snap / "nb-2-big-Data.db"),
-        gens[2],
-        meta,
-        version="nb",
-        host_id=_HOST_ID,
-        is_transient=False,
-    )
-    (base / "_SUCCESS").touch()
-    return base
+    def write(snap, meta):
+        gens = _supplier_partitions(sf_dir)
+        write_na_data_db(
+            str(snap / "na-1-big-Data.db"),
+            gens[1],
+            meta,
+            version="na",
+            pending_repair=_REPAIR_ID,
+        )
+        write_na_data_db(
+            str(snap / "nb-2-big-Data.db"),
+            gens[2],
+            meta,
+            version="nb",
+            host_id=_HOST_ID,
+            is_transient=False,
+        )
+
+    return _stage_snapshot("a40_sstable_na", sf_dir, "supplier", "tag-r10", write)
 
 
 @register(
     "a40_sstable_na_roundtrip",
-    oracle="""
-    SELECT s_suppkey,
-           CASE WHEN s_suppkey % 13 = 0 THEN NULL ELSE s_name END AS v_name,
-           CASE WHEN s_suppkey % 5 = 0 THEN CAST(NULL AS INTEGER)
-                ELSE s_nationkey END AS v_nationkey,
-           CASE WHEN s_suppkey % 7 = 0 THEN CAST(NULL AS DOUBLE)
-                ELSE s_acctbal END AS v_acctbal,
-           CAST(s_suppkey * 1000 AS BIGINT) AS writetime_us,
-           CAST(CASE WHEN s_suppkey % 2 = 0 THEN 1 ELSE 2 END AS INTEGER) AS v_gen
-    FROM supplier WHERE s_suppkey % 97 <> 0
-    """,
+    oracle=_SUPPLIER_ORACLE,
     survey="A40,A2,B3,B4",
 )
 def a40_sstable_na_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -169,28 +97,12 @@ def a40_sstable_na_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-side fixture encode; the SCAN is one InputPartition per
     Data.db decoded executor-side into Arrow batches, with checksum
     verification a linear executor-side pass over bytes already read."""
-    from cassandra_snap_to_hadoop_spark.sources.snapshot import snapshot_scan
-
-    apply_runtime_confs(spark)
-    base = _stage_supplier_na_sstables(sf_dir)
-    df = snapshot_scan(
+    return _supplier_scan(
         spark,
-        str(base),
-        "ks1",
-        "supplier",
+        sf_dir,
+        _stage_supplier_na_sstables,
         "tag-r10",
-        writetime="true",
-        as_of=str(_AS_OF),
-    )
-    return df.select(
-        "s_suppkey",
-        F.col("s_name").alias("v_name"),
-        F.col("s_nationkey").alias("v_nationkey"),
-        F.col("s_acctbal").alias("v_acctbal"),
-        F.col("_writetime").alias("writetime_us"),
-        F.regexp_extract(F.col("_sstable"), r"n[ab]-(\d+)-big-Data\.db$", 1)
-        .cast("int")
-        .alias("v_gen"),
+        r"n[ab]-(\d+)-big-Data\.db$",
     )
 
 
@@ -198,76 +110,19 @@ def _stage_orders_na_sstables(sf_dir: str):
     """The a34/a37 orders subset (orderkey % 100 == 0) as 4.x SSTables:
     partition key o_custkey, clustering o_orderkey — clustering blocks
     travel on the shared 3.0 row core, wrapped in 4.x checksums."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    from cassandra_snap_to_hadoop_spark.sources.snapshot import parse_table_meta
     from cassandra_snap_to_hadoop_spark.sources.sstable_na import write_na_data_db
 
-    base = _staged("a41_sstable_na", sf_dir, "orders")
-    snap = base / "ks1" / "orders_by_cust" / "snapshots" / "tag-r10"
-    if (base / "_SUCCESS").exists():
-        return base
-    shutil.rmtree(base, ignore_errors=True)
-    snap.mkdir(parents=True)
-    (snap / "schema.cql").write_text(_ORDERS_CQL)
-    meta = parse_table_meta(_ORDERS_CQL)
-    t = pq.read_table(
-        f"{sf_dir}/orders.parquet",
-        columns=[
-            "o_custkey",
-            "o_orderkey",
-            "o_orderstatus",
-            "o_totalprice",
-            "o_orderdate",
-        ],
-    )
-    ok_col = t.column("o_orderkey")
-    t = t.filter(
-        pc.equal(pc.subtract(ok_col, pc.multiply(pc.divide(ok_col, 100), 100)), 0)
-    )
-    date_us = pc.cast(t.column("o_orderdate"), "int64").to_pylist()
-    rows = sorted(
-        zip(
-            t.column("o_custkey").to_pylist(),
-            t.column("o_orderkey").to_pylist(),
-            t.column("o_orderstatus").to_pylist(),
-            t.column("o_totalprice").to_pylist(),
-            date_us,
-        )
-    )
-    parts: dict[int, dict] = {}
-    for ck, ok, status, price, dus in rows:
-        p = parts.setdefault(ck, {"key": (ck,), "deletion": None, "rows": []})
-        ts = ok * 10
-        p["rows"].append(
-            {
-                "clustering": (ok,),
-                "marker_ts": ts,
-                "cells": {
-                    "o_orderstatus": ("live", ts, status),
-                    "o_totalprice": ("live", ts, price),
-                    "o_orderdate": ("live", ts, dus // 1000),  # micros->millis
-                },
-            }
-        )
-    gens: dict[int, list] = {1: [], 2: []}
-    for ck in sorted(parts):
-        gens[1 if ck % 2 == 0 else 2].append(parts[ck])
-    write_na_data_db(str(snap / "nb-1-big-Data.db"), gens[1], meta, version="nb")
-    write_na_data_db(str(snap / "nb-2-big-Data.db"), gens[2], meta, version="nb")
-    (base / "_SUCCESS").touch()
-    return base
+    def write(snap, meta):
+        gens = _orders_partitions(sf_dir)
+        write_na_data_db(str(snap / "nb-1-big-Data.db"), gens[1], meta, version="nb")
+        write_na_data_db(str(snap / "nb-2-big-Data.db"), gens[2], meta, version="nb")
+
+    return _stage_snapshot("a41_sstable_na", sf_dir, "orders", "tag-r10", write)
 
 
 @register(
     "a41_sstable_na_clustering_scan",
-    oracle="""
-    SELECT o_custkey, o_orderkey, o_orderstatus, o_totalprice,
-           CAST(epoch_us(o_orderdate) AS BIGINT) AS orderdate_us,
-           CAST(o_orderkey * 10 AS BIGINT) AS writetime_us
-    FROM orders WHERE o_orderkey % 100 = 0
-    """,
+    oracle=_ORDERS_ORACLE,
     survey="A41,A2,B5,D1",
 )
 def a41_sstable_na_clustering_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -281,27 +136,7 @@ def a41_sstable_na_clustering_scan(spark: SparkSession, sf_dir: str) -> DataFram
 
     Scale shape: as a34/a37 — per-file executor-side streaming decode;
     the subset is the bounded fixture, the plan is the 100 TB plan."""
-    from cassandra_snap_to_hadoop_spark.sources.snapshot import snapshot_scan
-
-    apply_runtime_confs(spark)
-    base = _stage_orders_na_sstables(sf_dir)
-    df = snapshot_scan(
-        spark,
-        str(base),
-        "ks1",
-        "orders_by_cust",
-        "tag-r10",
-        writetime="true",
-        as_of=str(_AS_OF),
-    )
-    return df.select(
-        "o_custkey",
-        "o_orderkey",
-        "o_orderstatus",
-        "o_totalprice",
-        (F.unix_micros(F.col("o_orderdate"))).alias("orderdate_us"),
-        F.col("_writetime").alias("writetime_us"),
-    )
+    return _orders_scan(spark, sf_dir, _stage_orders_na_sstables, "tag-r10")
 
 
 def _stage_supplier_mixed_sstables(sf_dir: str):
@@ -311,48 +146,42 @@ def _stage_supplier_mixed_sstables(sf_dir: str):
     cluster a real operator snapshots mid-migration."""
     import pyarrow.parquet as pq
 
-    from cassandra_snap_to_hadoop_spark.sources.snapshot import parse_table_meta
     from cassandra_snap_to_hadoop_spark.sources.sstable import write_data_db
     from cassandra_snap_to_hadoop_spark.sources.sstable_ma import write_ma_data_db
     from cassandra_snap_to_hadoop_spark.sources.sstable_na import write_na_data_db
 
-    base = _staged("a42_sstable_mixed", sf_dir, "supplier")
-    snap = base / "ks1" / "supplier" / "snapshots" / "tag-r10m"
-    if (base / "_SUCCESS").exists():
-        return base
-    shutil.rmtree(base, ignore_errors=True)
-    snap.mkdir(parents=True)
-    (snap / "schema.cql").write_text(_SUPPLIER_CQL)
-    meta = parse_table_meta(_SUPPLIER_CQL)
-    t = pq.read_table(
-        f"{sf_dir}/supplier.parquet",
-        columns=["s_suppkey", "s_name", "s_nationkey", "s_acctbal"],
-    )
-    gens: dict[int, list] = {1: [], 2: [], 3: []}
-    for k, name, nat, bal in zip(*(t.column(c).to_pylist() for c in t.column_names)):
-        ts = k * 1000
-        gens[1 + k % 3].append(
-            {
-                "key": (k,),
-                "deletion": None,
-                "rows": [
-                    {
-                        "clustering": (),
-                        "marker_ts": ts,
-                        "cells": {
-                            "s_name": ("live", ts, name),
-                            "s_nationkey": ("live", ts, nat),
-                            "s_acctbal": ("live", ts, bal),
-                        },
-                    }
-                ],
-            }
+    def write(snap, meta):
+        t = pq.read_table(
+            f"{sf_dir}/supplier.parquet",
+            columns=["s_suppkey", "s_name", "s_nationkey", "s_acctbal"],
         )
-    write_data_db(str(snap / "ks1-supplier-ka-1-Data.db"), gens[1], meta)
-    write_ma_data_db(str(snap / "ma-2-big-Data.db"), gens[2], meta)
-    write_na_data_db(str(snap / "nb-3-big-Data.db"), gens[3], meta, version="nb")
-    (base / "_SUCCESS").touch()
-    return base
+        gens: dict[int, list] = {1: [], 2: [], 3: []}
+        for k, name, nat, bal in zip(
+            *(t.column(c).to_pylist() for c in t.column_names)
+        ):
+            ts = k * 1000
+            gens[1 + k % 3].append(
+                {
+                    "key": (k,),
+                    "deletion": None,
+                    "rows": [
+                        {
+                            "clustering": (),
+                            "marker_ts": ts,
+                            "cells": {
+                                "s_name": ("live", ts, name),
+                                "s_nationkey": ("live", ts, nat),
+                                "s_acctbal": ("live", ts, bal),
+                            },
+                        }
+                    ],
+                }
+            )
+        write_data_db(str(snap / "ks1-supplier-ka-1-Data.db"), gens[1], meta)
+        write_ma_data_db(str(snap / "ma-2-big-Data.db"), gens[2], meta)
+        write_na_data_db(str(snap / "nb-3-big-Data.db"), gens[3], meta, version="nb")
+
+    return _stage_snapshot("a42_sstable_mixed", sf_dir, "supplier", "tag-r10m", write)
 
 
 @register(

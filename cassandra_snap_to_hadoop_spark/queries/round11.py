@@ -26,14 +26,16 @@ from pyspark.sql import functions as F
 from cassandra_snap_to_hadoop_spark.queries.layout import _staged
 from cassandra_snap_to_hadoop_spark.queries.round7 import (
     _AS_OF,
-    _ORDERS_CQL,
+    _ORDERS_ORACLE,
     _SUPPLIER_CQL,
-)
-from cassandra_snap_to_hadoop_spark.queries.round10 import (
-    _HOST_ID,
-    _REPAIR_ID,
+    _SUPPLIER_ORACLE,
+    _orders_partitions,
+    _orders_scan,
+    _stage_snapshot,
     _supplier_partitions,
+    _supplier_scan,
 )
+from cassandra_snap_to_hadoop_spark.queries.round10 import _HOST_ID, _REPAIR_ID
 from cassandra_snap_to_hadoop_spark.registry import register
 from cassandra_snap_to_hadoop_spark.session import apply_runtime_confs
 
@@ -51,53 +53,35 @@ def _stage_supplier_oa_sstables(sf_dir: str):
     with an originating host id — the same supplier truth as
     a33/a36/a40 (one oracle, FOUR byte layouts), with every partition
     deletion carrying the year-2100 extended deletion time."""
-    from cassandra_snap_to_hadoop_spark.sources.snapshot import parse_table_meta
     from cassandra_snap_to_hadoop_spark.sources.sstable_oa import write_oa_data_db
 
-    base = _staged("a45_sstable_oa", sf_dir, "supplier")
-    snap = base / "ks1" / "supplier" / "snapshots" / "tag-r11"
-    if (base / "_SUCCESS").exists():
-        return base
-    shutil.rmtree(base, ignore_errors=True)
-    snap.mkdir(parents=True)
-    (snap / "schema.cql").write_text(_SUPPLIER_CQL)
-    meta = parse_table_meta(_SUPPLIER_CQL)
-    gens = _supplier_partitions(sf_dir)
-    for g in gens.values():
-        for p in g:
-            if p["deletion"] is not None:
-                p["deletion"] = (_LDT_2100, p["deletion"][1])
-    write_oa_data_db(
-        str(snap / "oa-1-big-Data.db"),
-        gens[1],
-        meta,
-        pending_repair=_REPAIR_ID,
-        token_space_coverage=0.5,
-    )
-    write_oa_data_db(
-        str(snap / "oa-2-big-Data.db"),
-        gens[2],
-        meta,
-        host_id=_HOST_ID,
-        token_space_coverage=0.5,
-    )
-    (base / "_SUCCESS").touch()
-    return base
+    def write(snap, meta):
+        gens = _supplier_partitions(sf_dir)
+        for g in gens.values():
+            for p in g:
+                if p["deletion"] is not None:
+                    p["deletion"] = (_LDT_2100, p["deletion"][1])
+        write_oa_data_db(
+            str(snap / "oa-1-big-Data.db"),
+            gens[1],
+            meta,
+            pending_repair=_REPAIR_ID,
+            token_space_coverage=0.5,
+        )
+        write_oa_data_db(
+            str(snap / "oa-2-big-Data.db"),
+            gens[2],
+            meta,
+            host_id=_HOST_ID,
+            token_space_coverage=0.5,
+        )
+
+    return _stage_snapshot("a45_sstable_oa", sf_dir, "supplier", "tag-r11", write)
 
 
 @register(
     "a45_sstable_oa_roundtrip",
-    oracle="""
-    SELECT s_suppkey,
-           CASE WHEN s_suppkey % 13 = 0 THEN NULL ELSE s_name END AS v_name,
-           CASE WHEN s_suppkey % 5 = 0 THEN CAST(NULL AS INTEGER)
-                ELSE s_nationkey END AS v_nationkey,
-           CASE WHEN s_suppkey % 7 = 0 THEN CAST(NULL AS DOUBLE)
-                ELSE s_acctbal END AS v_acctbal,
-           CAST(s_suppkey * 1000 AS BIGINT) AS writetime_us,
-           CAST(CASE WHEN s_suppkey % 2 = 0 THEN 1 ELSE 2 END AS INTEGER) AS v_gen
-    FROM supplier WHERE s_suppkey % 97 <> 0
-    """,
+    oracle=_SUPPLIER_ORACLE,
     survey="A45,A2,B3,B4",
 )
 def a45_sstable_oa_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -124,28 +108,12 @@ def a45_sstable_oa_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver-side fixture encode; the SCAN is one InputPartition per
     Data.db decoded executor-side into Arrow batches; trie resolution
     is O(index bytes) per file, executor-side."""
-    from cassandra_snap_to_hadoop_spark.sources.snapshot import snapshot_scan
-
-    apply_runtime_confs(spark)
-    base = _stage_supplier_oa_sstables(sf_dir)
-    df = snapshot_scan(
+    return _supplier_scan(
         spark,
-        str(base),
-        "ks1",
-        "supplier",
+        sf_dir,
+        _stage_supplier_oa_sstables,
         "tag-r11",
-        writetime="true",
-        as_of=str(_AS_OF),
-    )
-    return df.select(
-        "s_suppkey",
-        F.col("s_name").alias("v_name"),
-        F.col("s_nationkey").alias("v_nationkey"),
-        F.col("s_acctbal").alias("v_acctbal"),
-        F.col("_writetime").alias("writetime_us"),
-        F.regexp_extract(F.col("_sstable"), r"oa-(\d+)-big-Data\.db$", 1)
-        .cast("int")
-        .alias("v_gen"),
+        r"oa-(\d+)-big-Data\.db$",
     )
 
 
@@ -156,80 +124,20 @@ def _stage_orders_oa_sstables(sf_dir: str):
     resolution + row-offset verification path on all partitions (a45's
     key-only table exercises the direct-to-Data.db path on all of
     its)."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    from cassandra_snap_to_hadoop_spark.sources.snapshot import parse_table_meta
     from cassandra_snap_to_hadoop_spark.sources.sstable_oa import write_oa_data_db
 
-    base = _staged("a46_sstable_oa", sf_dir, "orders")
-    snap = base / "ks1" / "orders_by_cust" / "snapshots" / "tag-r11"
-    if (base / "_SUCCESS").exists():
-        return base
-    shutil.rmtree(base, ignore_errors=True)
-    snap.mkdir(parents=True)
-    (snap / "schema.cql").write_text(_ORDERS_CQL)
-    meta = parse_table_meta(_ORDERS_CQL)
-    t = pq.read_table(
-        f"{sf_dir}/orders.parquet",
-        columns=[
-            "o_custkey",
-            "o_orderkey",
-            "o_orderstatus",
-            "o_totalprice",
-            "o_orderdate",
-        ],
-    )
-    ok_col = t.column("o_orderkey")
-    t = t.filter(
-        pc.equal(pc.subtract(ok_col, pc.multiply(pc.divide(ok_col, 100), 100)), 0)
-    )
-    date_us = pc.cast(t.column("o_orderdate"), "int64").to_pylist()
-    rows = sorted(
-        zip(
-            t.column("o_custkey").to_pylist(),
-            t.column("o_orderkey").to_pylist(),
-            t.column("o_orderstatus").to_pylist(),
-            t.column("o_totalprice").to_pylist(),
-            date_us,
-        )
-    )
-    parts: dict[int, dict] = {}
-    for ck, ok, status, price, dus in rows:
-        p = parts.setdefault(ck, {"key": (ck,), "deletion": None, "rows": []})
-        ts = ok * 10
-        p["rows"].append(
-            {
-                "clustering": (ok,),
-                "marker_ts": ts,
-                "cells": {
-                    "o_orderstatus": ("live", ts, status),
-                    "o_totalprice": ("live", ts, price),
-                    "o_orderdate": ("live", ts, dus // 1000),  # micros->millis
-                },
-            }
-        )
-    gens: dict[int, list] = {1: [], 2: []}
-    for ck in sorted(parts):
-        gens[1 if ck % 2 == 0 else 2].append(parts[ck])
-    write_oa_data_db(
-        str(snap / "oa-1-big-Data.db"), gens[1], meta, row_index_threshold=1
-    )
-    write_oa_data_db(
-        str(snap / "oa-2-big-Data.db"), gens[2], meta, row_index_threshold=1
-    )
-    (base / "_SUCCESS").touch()
-    return base
+    def write(snap, meta):
+        for g, plist in _orders_partitions(sf_dir).items():
+            write_oa_data_db(
+                str(snap / f"oa-{g}-big-Data.db"), plist, meta, row_index_threshold=1
+            )
+
+    return _stage_snapshot("a46_sstable_oa", sf_dir, "orders", "tag-r11", write)
 
 
 @register(
     "a46_sstable_oa_clustering_scan",
-    oracle="""
-    SELECT o_custkey, o_orderkey, o_orderstatus, o_totalprice,
-           CAST(epoch_us(o_orderdate) AS BIGINT) AS orderdate_us,
-           CAST(o_orderkey * 10 AS BIGINT) AS writetime_us
-    FROM orders WHERE o_orderkey % 100 = 0
-    """,
+    oracle=_ORDERS_ORACLE,
     survey="A46,A2,B5",
 )
 def a46_sstable_oa_clustering_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -245,27 +153,7 @@ def a46_sstable_oa_clustering_scan(spark: SparkSession, sf_dir: str) -> DataFram
     Scale shape: as a34/a37/a41 — per-file executor-side streaming
     decode; the row tries are what make single-row reads O(seek) inside
     multi-GB partitions at production scale (the BTI design's point)."""
-    from cassandra_snap_to_hadoop_spark.sources.snapshot import snapshot_scan
-
-    apply_runtime_confs(spark)
-    base = _stage_orders_oa_sstables(sf_dir)
-    df = snapshot_scan(
-        spark,
-        str(base),
-        "ks1",
-        "orders_by_cust",
-        "tag-r11",
-        writetime="true",
-        as_of=str(_AS_OF),
-    )
-    return df.select(
-        "o_custkey",
-        "o_orderkey",
-        "o_orderstatus",
-        "o_totalprice",
-        (F.unix_micros(F.col("o_orderdate"))).alias("orderdate_us"),
-        F.col("_writetime").alias("writetime_us"),
-    )
+    return _orders_scan(spark, sf_dir, _stage_orders_oa_sstables, "tag-r11")
 
 
 def _stage_supplier_quad_sstables(sf_dir: str):
@@ -275,50 +163,44 @@ def _stage_supplier_quad_sstables(sf_dir: str):
     without ever fully compacting."""
     import pyarrow.parquet as pq
 
-    from cassandra_snap_to_hadoop_spark.sources.snapshot import parse_table_meta
     from cassandra_snap_to_hadoop_spark.sources.sstable import write_data_db
     from cassandra_snap_to_hadoop_spark.sources.sstable_ma import write_ma_data_db
     from cassandra_snap_to_hadoop_spark.sources.sstable_na import write_na_data_db
     from cassandra_snap_to_hadoop_spark.sources.sstable_oa import write_oa_data_db
 
-    base = _staged("a47_sstable_quad", sf_dir, "supplier")
-    snap = base / "ks1" / "supplier" / "snapshots" / "tag-r11q"
-    if (base / "_SUCCESS").exists():
-        return base
-    shutil.rmtree(base, ignore_errors=True)
-    snap.mkdir(parents=True)
-    (snap / "schema.cql").write_text(_SUPPLIER_CQL)
-    meta = parse_table_meta(_SUPPLIER_CQL)
-    t = pq.read_table(
-        f"{sf_dir}/supplier.parquet",
-        columns=["s_suppkey", "s_name", "s_nationkey", "s_acctbal"],
-    )
-    gens: dict[int, list] = {1: [], 2: [], 3: [], 4: []}
-    for k, name, nat, bal in zip(*(t.column(c).to_pylist() for c in t.column_names)):
-        ts = k * 1000
-        gens[1 + k % 4].append(
-            {
-                "key": (k,),
-                "deletion": None,
-                "rows": [
-                    {
-                        "clustering": (),
-                        "marker_ts": ts,
-                        "cells": {
-                            "s_name": ("live", ts, name),
-                            "s_nationkey": ("live", ts, nat),
-                            "s_acctbal": ("live", ts, bal),
-                        },
-                    }
-                ],
-            }
+    def write(snap, meta):
+        t = pq.read_table(
+            f"{sf_dir}/supplier.parquet",
+            columns=["s_suppkey", "s_name", "s_nationkey", "s_acctbal"],
         )
-    write_data_db(str(snap / "ks1-supplier-ka-1-Data.db"), gens[1], meta)
-    write_ma_data_db(str(snap / "ma-2-big-Data.db"), gens[2], meta)
-    write_na_data_db(str(snap / "nb-3-big-Data.db"), gens[3], meta, version="nb")
-    write_oa_data_db(str(snap / "oa-4-big-Data.db"), gens[4], meta)
-    (base / "_SUCCESS").touch()
-    return base
+        gens: dict[int, list] = {1: [], 2: [], 3: [], 4: []}
+        for k, name, nat, bal in zip(
+            *(t.column(c).to_pylist() for c in t.column_names)
+        ):
+            ts = k * 1000
+            gens[1 + k % 4].append(
+                {
+                    "key": (k,),
+                    "deletion": None,
+                    "rows": [
+                        {
+                            "clustering": (),
+                            "marker_ts": ts,
+                            "cells": {
+                                "s_name": ("live", ts, name),
+                                "s_nationkey": ("live", ts, nat),
+                                "s_acctbal": ("live", ts, bal),
+                            },
+                        }
+                    ],
+                }
+            )
+        write_data_db(str(snap / "ks1-supplier-ka-1-Data.db"), gens[1], meta)
+        write_ma_data_db(str(snap / "ma-2-big-Data.db"), gens[2], meta)
+        write_na_data_db(str(snap / "nb-3-big-Data.db"), gens[3], meta, version="nb")
+        write_oa_data_db(str(snap / "oa-4-big-Data.db"), gens[4], meta)
+
+    return _stage_snapshot("a47_sstable_quad", sf_dir, "supplier", "tag-r11q", write)
 
 
 @register(
@@ -1632,7 +1514,6 @@ def _stage_supplier_compressed_sstables(sf_dir: str):
     describe uncompressed bytes, so the compressed leg composes with
     the ma core (matching how the real formats moved chunk checksums
     INTO the compressed stream for compressed tables)."""
-    from cassandra_snap_to_hadoop_spark.sources.snapshot import parse_table_meta
     from cassandra_snap_to_hadoop_spark.sources.sstable_compression import (
         write_compressed_data_db,
     )
@@ -1642,37 +1523,19 @@ def _stage_supplier_compressed_sstables(sf_dir: str):
         write_stats_db,
     )
 
-    base = _staged("a50_sstable_cmp", sf_dir, "supplier")
-    snap = base / "ks1" / "supplier" / "snapshots" / "tag-r11c"
-    if (base / "_SUCCESS").exists():
-        return base
-    shutil.rmtree(base, ignore_errors=True)
-    snap.mkdir(parents=True)
-    (snap / "schema.cql").write_text(_SUPPLIER_CQL)
-    meta = parse_table_meta(_SUPPLIER_CQL)
-    gens = _supplier_partitions(sf_dir)
-    for gen, parts in gens.items():
-        raw, stats = serialize_ma_partitions(parts, meta)
-        p = str(snap / f"ma-{gen}-big-Data.db")
-        write_compressed_data_db(p, raw, chunk_length=1024)
-        write_stats_db(stats_path_for(p), stats)
-    (base / "_SUCCESS").touch()
-    return base
+    def write(snap, meta):
+        for gen, parts in _supplier_partitions(sf_dir).items():
+            raw, stats = serialize_ma_partitions(parts, meta)
+            p = str(snap / f"ma-{gen}-big-Data.db")
+            write_compressed_data_db(p, raw, chunk_length=1024)
+            write_stats_db(stats_path_for(p), stats)
+
+    return _stage_snapshot("a50_sstable_cmp", sf_dir, "supplier", "tag-r11c", write)
 
 
 @register(
     "a50_sstable_compressed_roundtrip",
-    oracle="""
-    SELECT s_suppkey,
-           CASE WHEN s_suppkey % 13 = 0 THEN NULL ELSE s_name END AS v_name,
-           CASE WHEN s_suppkey % 5 = 0 THEN CAST(NULL AS INTEGER)
-                ELSE s_nationkey END AS v_nationkey,
-           CASE WHEN s_suppkey % 7 = 0 THEN CAST(NULL AS DOUBLE)
-                ELSE s_acctbal END AS v_acctbal,
-           CAST(s_suppkey * 1000 AS BIGINT) AS writetime_us,
-           CAST(CASE WHEN s_suppkey % 2 = 0 THEN 1 ELSE 2 END AS INTEGER) AS v_gen
-    FROM supplier WHERE s_suppkey % 97 <> 0
-    """,
+    oracle=_SUPPLIER_ORACLE,
     survey="A50,A2,A27,B3",
 )
 def a50_sstable_compressed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1700,28 +1563,12 @@ def a50_sstable_compressed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
     the chunk map is what a production range read seeks with, and the
     sequential full-decompress here is the Spark-ingest access
     pattern."""
-    from cassandra_snap_to_hadoop_spark.sources.snapshot import snapshot_scan
-
-    apply_runtime_confs(spark)
-    base = _stage_supplier_compressed_sstables(sf_dir)
-    df = snapshot_scan(
+    return _supplier_scan(
         spark,
-        str(base),
-        "ks1",
-        "supplier",
+        sf_dir,
+        _stage_supplier_compressed_sstables,
         "tag-r11c",
-        writetime="true",
-        as_of=str(_AS_OF),
-    )
-    return df.select(
-        "s_suppkey",
-        F.col("s_name").alias("v_name"),
-        F.col("s_nationkey").alias("v_nationkey"),
-        F.col("s_acctbal").alias("v_acctbal"),
-        F.col("_writetime").alias("writetime_us"),
-        F.regexp_extract(F.col("_sstable"), r"ma-(\d+)-big-Data\.db$", 1)
-        .cast("int")
-        .alias("v_gen"),
+        r"ma-(\d+)-big-Data\.db$",
     )
 
 
@@ -2020,41 +1867,35 @@ def _stage_supplier_evolved_sstables(sf_dir: str):
     real snapshots do."""
     import pyarrow.parquet as pq
 
-    from cassandra_snap_to_hadoop_spark.sources.snapshot import parse_table_meta
     from cassandra_snap_to_hadoop_spark.sources.sstable import write_data_db
 
-    base = _staged("a51_sstable_evo", sf_dir, "supplier")
-    snap = base / "ks1" / "supplier" / "snapshots" / "tag-r11e"
-    if (base / "_SUCCESS").exists():
-        return base
-    shutil.rmtree(base, ignore_errors=True)
-    snap.mkdir(parents=True)
-    (snap / "schema.cql").write_text(_SUPPLIER_CQL)
-    meta = parse_table_meta(_SUPPLIER_CQL)
-    t = pq.read_table(
-        f"{sf_dir}/supplier.parquet",
-        columns=["s_suppkey", "s_name", "s_nationkey", "s_acctbal"],
-    )
-    gens: dict[int, list] = {1: [], 2: []}
-    for k, name, nat, bal in zip(*(t.column(c).to_pylist() for c in t.column_names)):
-        ts = k * 1000
-        cells = {
-            "s_name": ("live", ts, name),
-            "s_nationkey": ("live", ts, nat),
-        }
-        if k % 2 == 1:
-            cells["s_acctbal"] = ("live", ts, bal)
-        gens[1 if k % 2 == 0 else 2].append(
-            {
-                "key": (k,),
-                "deletion": None,
-                "rows": [{"clustering": (), "marker_ts": ts, "cells": cells}],
-            }
+    def write(snap, meta):
+        t = pq.read_table(
+            f"{sf_dir}/supplier.parquet",
+            columns=["s_suppkey", "s_name", "s_nationkey", "s_acctbal"],
         )
-    write_data_db(str(snap / "ks1-supplier-ka-1-Data.db"), gens[1], meta)
-    write_data_db(str(snap / "ks1-supplier-ka-2-Data.db"), gens[2], meta)
-    (base / "_SUCCESS").touch()
-    return base
+        gens: dict[int, list] = {1: [], 2: []}
+        for k, name, nat, bal in zip(
+            *(t.column(c).to_pylist() for c in t.column_names)
+        ):
+            ts = k * 1000
+            cells = {
+                "s_name": ("live", ts, name),
+                "s_nationkey": ("live", ts, nat),
+            }
+            if k % 2 == 1:
+                cells["s_acctbal"] = ("live", ts, bal)
+            gens[1 if k % 2 == 0 else 2].append(
+                {
+                    "key": (k,),
+                    "deletion": None,
+                    "rows": [{"clustering": (), "marker_ts": ts, "cells": cells}],
+                }
+            )
+        write_data_db(str(snap / "ks1-supplier-ka-1-Data.db"), gens[1], meta)
+        write_data_db(str(snap / "ks1-supplier-ka-2-Data.db"), gens[2], meta)
+
+    return _stage_snapshot("a51_sstable_evo", sf_dir, "supplier", "tag-r11e", write)
 
 
 @register(
@@ -2091,28 +1932,12 @@ def a51_sstable_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the family's — one InputPartition per generation,
     executor-side decode; schema resolution is per-cell name dispatch,
     no plan-level cost."""
-    from cassandra_snap_to_hadoop_spark.sources.snapshot import snapshot_scan
-
-    apply_runtime_confs(spark)
-    base = _stage_supplier_evolved_sstables(sf_dir)
-    df = snapshot_scan(
+    return _supplier_scan(
         spark,
-        str(base),
-        "ks1",
-        "supplier",
+        sf_dir,
+        _stage_supplier_evolved_sstables,
         "tag-r11e",
-        writetime="true",
-        as_of=str(_AS_OF),
-    )
-    return df.select(
-        "s_suppkey",
-        F.col("s_name").alias("v_name"),
-        F.col("s_nationkey").alias("v_nationkey"),
-        F.col("s_acctbal").alias("v_acctbal"),
-        F.col("_writetime").alias("writetime_us"),
-        F.regexp_extract(F.col("_sstable"), r"ka-(\d+)-Data\.db$", 1)
-        .cast("int")
-        .alias("v_gen"),
+        r"ka-(\d+)-Data\.db$",
     )
 
 

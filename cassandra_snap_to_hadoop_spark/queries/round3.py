@@ -13,10 +13,10 @@
      exact-distinct, e20 Pareto cut, i16 map HOFs, a21 dynamic partition
      overwrite, f15 CUSUM drift (rows), sql_api_parameterized.
 
-Registered AFTER the round-3 certification window on purpose (see
-queries/__init__.py — they sit in the ``_ROUND3_TAIL`` insurance block):
-value-checked by the local oracle mirror at sf0.001/0.01/0.1 this round,
-rotated into the driver window in round 4.
+Registered after the round-3 certification window on purpose:
+value-checked by the local oracle mirror at sf0.001/0.01/0.1 in round 3,
+rotated into the driver window in round 4.  Today they follow the
+``_ROUND11_PRIORITY`` window in queries/__init__.py, in import order.
 """
 
 from __future__ import annotations

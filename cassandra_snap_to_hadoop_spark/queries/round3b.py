@@ -7,9 +7,10 @@ event tables —
   * e21 count-min-sketch heavy hitters (rows: mergeable sketch + reader),
   * f16 interval union length (sweep-line as shared-exchange windows).
 
-Registered behind the round-3 certification window (``_ROUND3_TAIL`` in
-queries/__init__.py): value-checked by the local oracle mirror this round,
-rotated into the driver window in round 4.
+Registered behind the round-3 certification window: value-checked by
+the local oracle mirror in round 3, rotated into the driver window in
+round 4.  Today they follow the ``_ROUND11_PRIORITY`` window in
+queries/__init__.py, in import order.
 """
 
 from __future__ import annotations

@@ -51,23 +51,41 @@ _ORDERS_CQL = """CREATE TABLE ks1.orders_by_cust (
 );"""
 
 
-def _stage_supplier_sstables(sf_dir: str):
-    """Encode the supplier table as two ka-format Data.db generations
-    (even/odd suppkeys) with the a33 deletion rules baked in as REAL
-    binary tombstone/expiry/partition-deletion records."""
-    import pyarrow.parquet as pq
+# Parquet source -> (snapshot table, schema.cql) of the staged fixtures.
+_FIXTURE_TABLES = {
+    "supplier": ("supplier", _SUPPLIER_CQL),
+    "orders": ("orders_by_cust", _ORDERS_CQL),
+}
 
+
+def _stage_snapshot(prefix: str, sf_dir: str, source: str, tag: str, write):
+    """Stage one SSTable snapshot of ``source`` (``supplier`` or
+    ``orders``) in its fingerprint-keyed scratch dir: return early if an
+    earlier run finished (``_SUCCESS``), else rebuild
+    ``ks1/<table>/snapshots/<tag>`` with its ``schema.cql`` and let
+    ``write(snap, meta)`` lay down the codec-specific files."""
     from cassandra_snap_to_hadoop_spark.sources.snapshot import parse_table_meta
-    from cassandra_snap_to_hadoop_spark.sources.sstable import write_data_db
 
-    base = _staged("a33_sstable", sf_dir, "supplier")
-    snap = base / "ks1" / "supplier" / "snapshots" / "tag-r7"
+    table, cql = _FIXTURE_TABLES[source]
+    base = _staged(prefix, sf_dir, source)
+    snap = base / "ks1" / table / "snapshots" / tag
     if (base / "_SUCCESS").exists():
         return base
     shutil.rmtree(base, ignore_errors=True)
     snap.mkdir(parents=True)
-    (snap / "schema.cql").write_text(_SUPPLIER_CQL)
-    meta = parse_table_meta(_SUPPLIER_CQL)
+    (snap / "schema.cql").write_text(cql)
+    write(snap, parse_table_meta(cql))
+    (base / "_SUCCESS").touch()
+    return base
+
+
+def _supplier_partitions(sf_dir: str):
+    """The supplier fixture truth every SSTable codec encodes: two
+    generations (even/odd suppkeys) with the a33 deletion rules as
+    partition/cell records — %97/%13 partition deletions, %5 cell
+    tombstone, %7/%11 expired/surviving TTL cells."""
+    import pyarrow.parquet as pq
+
     t = pq.read_table(
         f"{sf_dir}/supplier.parquet",
         columns=["s_suppkey", "s_name", "s_nationkey", "s_acctbal"],
@@ -75,8 +93,7 @@ def _stage_supplier_sstables(sf_dir: str):
     gens: dict[int, list] = {1: [], 2: []}
     for k, name, nat, bal in zip(*(t.column(c).to_pylist() for c in t.column_names)):
         base_ts = k * 1000
-        dropped = k % 97 == 0
-        if dropped:
+        if k % 97 == 0:
             # whole partition shadowed: every cell ts <= markedForDeleteAt
             deletion = (_LDT, base_ts + 999)
             name_ts = base_ts
@@ -114,101 +131,17 @@ def _stage_supplier_sstables(sf_dir: str):
                 ],
             }
         )
-    for g, parts in gens.items():
-        write_data_db(str(snap / f"ka-{g}-Data.db"), parts, meta)
-    (base / "_SUCCESS").touch()
-    return base
+    return gens
 
 
-@register(
-    "a33_sstable_binary_roundtrip",
-    oracle="""
-    SELECT s_suppkey,
-           CASE WHEN s_suppkey % 13 = 0 THEN NULL ELSE s_name END AS v_name,
-           CASE WHEN s_suppkey % 5 = 0 THEN CAST(NULL AS INTEGER)
-                ELSE s_nationkey END AS v_nationkey,
-           CASE WHEN s_suppkey % 7 = 0 THEN CAST(NULL AS DOUBLE)
-                ELSE s_acctbal END AS v_acctbal,
-           CAST(s_suppkey * 1000 AS BIGINT) AS writetime_us,
-           CAST(CASE WHEN s_suppkey % 2 = 0 THEN 1 ELSE 2 END AS INTEGER) AS v_gen
-    FROM supplier WHERE s_suppkey % 97 <> 0
-    """,
-    survey="A33,A2,B3,B4",
-)
-def a33_sstable_binary_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A2 with REAL SSTable bytes: the supplier table re-encoded as two
-    legacy ka-format Data.db generations (pure-Python writer,
-    sources/sstable.py), scanned back through the snapshot DataSource's
-    binary branch, and hash-matched against the parquet source under the
-    staged deletion rules:
-
-    * suppkey % 97 == 0 — partition-level deletion ABOVE every cell
-      timestamp: the whole partition disappears;
-    * suppkey % 13 == 0 — partition deletion BETWEEN the s_name cell's
-      timestamp and the others': only s_name is shadowed (certifies the
-      per-cell timestamp comparison, not just the flag);
-    * suppkey % 5 == 0 — s_nationkey cell tombstone -> NULL;
-    * suppkey % 7 == 0 — s_acctbal expiring cell already expired at the
-      pinned as_of -> NULL; % 11 == 0 writes a future-expiry cell that
-      must SURVIVE (TTL decode is read, not just skipped);
-    * writetime_us — the max surviving cell timestamp (suppkey*1000),
-      decoded from the binary cell headers, not inferred;
-    * gen — provenance via the _sstable column (even keys in gen 1).
-
-    Scale shape: staging is a bounded driver-side fixture encode (the
-    writer is the test harness; no SSTable binaries exist in this env,
-    SURVEY §0); the SCAN is the product — one InputPartition per
-    Data.db, decoded executor-side into Arrow batches, so a snapshot of
-    10k SSTables fans out to 10k tasks with zero driver involvement
-    beyond listing."""
-    from cassandra_snap_to_hadoop_spark.sources.snapshot import snapshot_scan
-
-    apply_runtime_confs(spark)
-    base = _stage_supplier_sstables(sf_dir)
-    df = snapshot_scan(
-        spark,
-        str(base),
-        "ks1",
-        "supplier",
-        "tag-r7",
-        writetime="true",
-        as_of=str(_AS_OF),
-    )
-    # NULLable value columns are prefixed v_ so the unique key
-    # (s_suppkey) is the alphabetically-FIRST output column: any
-    # order-insensitive row sort decides on it alone and never compares
-    # a NULL cell against a value (the driver's hash sorts by name).
-    return df.select(
-        "s_suppkey",
-        F.col("s_name").alias("v_name"),
-        F.col("s_nationkey").alias("v_nationkey"),
-        F.col("s_acctbal").alias("v_acctbal"),
-        F.col("_writetime").alias("writetime_us"),
-        F.regexp_extract(F.col("_sstable"), r"ka-(\d+)-Data\.db$", 1)
-        .cast("int")
-        .alias("v_gen"),
-    )
-
-
-def _stage_orders_sstables(sf_dir: str):
-    """Encode a deterministic orders subset (orderkey % 100 == 0) as
-    clustering-keyed ka-format SSTables: partition key o_custkey,
-    clustering column o_orderkey — every cell name a true CompositeType
-    blob (clustering value + column name + end-of-component bytes)."""
+def _orders_partitions(sf_dir: str):
+    """The clustered-orders fixture truth every SSTable codec encodes:
+    the orderkey % 100 == 0 subset as partition key o_custkey,
+    clustering o_orderkey, cell timestamps orderkey*10, split into two
+    generations by customer parity."""
     import pyarrow.compute as pc
     import pyarrow.parquet as pq
 
-    from cassandra_snap_to_hadoop_spark.sources.snapshot import parse_table_meta
-    from cassandra_snap_to_hadoop_spark.sources.sstable import write_data_db
-
-    base = _staged("a34_sstable", sf_dir, "orders")
-    snap = base / "ks1" / "orders_by_cust" / "snapshots" / "tag-r7"
-    if (base / "_SUCCESS").exists():
-        return base
-    shutil.rmtree(base, ignore_errors=True)
-    snap.mkdir(parents=True)
-    (snap / "schema.cql").write_text(_ORDERS_CQL)
-    meta = parse_table_meta(_ORDERS_CQL)
     t = pq.read_table(
         f"{sf_dir}/orders.parquet",
         columns=[
@@ -252,20 +185,155 @@ def _stage_orders_sstables(sf_dir: str):
     gens: dict[int, list] = {1: [], 2: []}
     for ck in sorted(parts):
         gens[1 if ck % 2 == 0 else 2].append(parts[ck])
-    for g, plist in gens.items():
-        write_data_db(str(snap / f"ka-{g}-Data.db"), plist, meta)
-    (base / "_SUCCESS").touch()
-    return base
+    return gens
 
 
-@register(
-    "a34_sstable_clustering_scan",
-    oracle="""
+# The supplier roundtrip oracle, shared by every codec's roundtrip query:
+# the visibility rules are format-independent truth.
+_SUPPLIER_ORACLE = """
+    SELECT s_suppkey,
+           CASE WHEN s_suppkey % 13 = 0 THEN NULL ELSE s_name END AS v_name,
+           CASE WHEN s_suppkey % 5 = 0 THEN CAST(NULL AS INTEGER)
+                ELSE s_nationkey END AS v_nationkey,
+           CASE WHEN s_suppkey % 7 = 0 THEN CAST(NULL AS DOUBLE)
+                ELSE s_acctbal END AS v_acctbal,
+           CAST(s_suppkey * 1000 AS BIGINT) AS writetime_us,
+           CAST(CASE WHEN s_suppkey % 2 = 0 THEN 1 ELSE 2 END AS INTEGER) AS v_gen
+    FROM supplier WHERE s_suppkey % 97 <> 0
+    """
+
+# The clustered-orders oracle, shared by every codec's clustering scan.
+_ORDERS_ORACLE = """
     SELECT o_custkey, o_orderkey, o_orderstatus, o_totalprice,
            CAST(epoch_us(o_orderdate) AS BIGINT) AS orderdate_us,
            CAST(o_orderkey * 10 AS BIGINT) AS writetime_us
     FROM orders WHERE o_orderkey % 100 = 0
-    """,
+    """
+
+
+def _supplier_scan(spark: SparkSession, sf_dir: str, stage, tag: str, gen_re: str):
+    """Stage a supplier snapshot with ``stage`` and scan it back under
+    the pinned as_of; ``gen_re`` pulls the generation out of
+    ``_sstable``."""
+    from cassandra_snap_to_hadoop_spark.sources.snapshot import snapshot_scan
+
+    apply_runtime_confs(spark)
+    base = stage(sf_dir)
+    df = snapshot_scan(
+        spark,
+        str(base),
+        "ks1",
+        "supplier",
+        tag,
+        writetime="true",
+        as_of=str(_AS_OF),
+    )
+    # NULLable value columns are prefixed v_ so the unique key
+    # (s_suppkey) is the alphabetically-FIRST output column: any
+    # order-insensitive row sort decides on it alone and never compares
+    # a NULL cell against a value (the driver's hash sorts by name).
+    return df.select(
+        "s_suppkey",
+        F.col("s_name").alias("v_name"),
+        F.col("s_nationkey").alias("v_nationkey"),
+        F.col("s_acctbal").alias("v_acctbal"),
+        F.col("_writetime").alias("writetime_us"),
+        F.regexp_extract(F.col("_sstable"), gen_re, 1).cast("int").alias("v_gen"),
+    )
+
+
+def _orders_scan(spark: SparkSession, sf_dir: str, stage, tag: str):
+    """Stage a clustered-orders snapshot with ``stage`` and scan it
+    back; timestamps leave as epoch micros (the tz-free idiom)."""
+    from cassandra_snap_to_hadoop_spark.sources.snapshot import snapshot_scan
+
+    apply_runtime_confs(spark)
+    base = stage(sf_dir)
+    df = snapshot_scan(
+        spark,
+        str(base),
+        "ks1",
+        "orders_by_cust",
+        tag,
+        writetime="true",
+        as_of=str(_AS_OF),
+    )
+    return df.select(
+        "o_custkey",
+        "o_orderkey",
+        "o_orderstatus",
+        "o_totalprice",
+        F.unix_micros(F.col("o_orderdate")).alias("orderdate_us"),
+        F.col("_writetime").alias("writetime_us"),
+    )
+
+
+def _stage_supplier_sstables(sf_dir: str):
+    """Encode the supplier table as two ka-format Data.db generations
+    (even/odd suppkeys) with the a33 deletion rules baked in as REAL
+    binary tombstone/expiry/partition-deletion records."""
+    from cassandra_snap_to_hadoop_spark.sources.sstable import write_data_db
+
+    def write(snap, meta):
+        for g, parts in _supplier_partitions(sf_dir).items():
+            write_data_db(str(snap / f"ka-{g}-Data.db"), parts, meta)
+
+    return _stage_snapshot("a33_sstable", sf_dir, "supplier", "tag-r7", write)
+
+
+@register(
+    "a33_sstable_binary_roundtrip",
+    oracle=_SUPPLIER_ORACLE,
+    survey="A33,A2,B3,B4",
+)
+def a33_sstable_binary_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """A2 with REAL SSTable bytes: the supplier table re-encoded as two
+    legacy ka-format Data.db generations (pure-Python writer,
+    sources/sstable.py), scanned back through the snapshot DataSource's
+    binary branch, and hash-matched against the parquet source under the
+    staged deletion rules:
+
+    * suppkey % 97 == 0 — partition-level deletion ABOVE every cell
+      timestamp: the whole partition disappears;
+    * suppkey % 13 == 0 — partition deletion BETWEEN the s_name cell's
+      timestamp and the others': only s_name is shadowed (certifies the
+      per-cell timestamp comparison, not just the flag);
+    * suppkey % 5 == 0 — s_nationkey cell tombstone -> NULL;
+    * suppkey % 7 == 0 — s_acctbal expiring cell already expired at the
+      pinned as_of -> NULL; % 11 == 0 writes a future-expiry cell that
+      must SURVIVE (TTL decode is read, not just skipped);
+    * writetime_us — the max surviving cell timestamp (suppkey*1000),
+      decoded from the binary cell headers, not inferred;
+    * gen — provenance via the _sstable column (even keys in gen 1).
+
+    Scale shape: staging is a bounded driver-side fixture encode (the
+    writer is the test harness; no SSTable binaries exist in this env,
+    SURVEY §0); the SCAN is the product — one InputPartition per
+    Data.db, decoded executor-side into Arrow batches, so a snapshot of
+    10k SSTables fans out to 10k tasks with zero driver involvement
+    beyond listing."""
+    return _supplier_scan(
+        spark, sf_dir, _stage_supplier_sstables, "tag-r7", r"ka-(\d+)-Data\.db$"
+    )
+
+
+def _stage_orders_sstables(sf_dir: str):
+    """Encode a deterministic orders subset (orderkey % 100 == 0) as
+    clustering-keyed ka-format SSTables: partition key o_custkey,
+    clustering column o_orderkey — every cell name a true CompositeType
+    blob (clustering value + column name + end-of-component bytes)."""
+    from cassandra_snap_to_hadoop_spark.sources.sstable import write_data_db
+
+    def write(snap, meta):
+        for g, plist in _orders_partitions(sf_dir).items():
+            write_data_db(str(snap / f"ka-{g}-Data.db"), plist, meta)
+
+    return _stage_snapshot("a34_sstable", sf_dir, "orders", "tag-r7", write)
+
+
+@register(
+    "a34_sstable_clustering_scan",
+    oracle=_ORDERS_ORACLE,
     survey="A34,A2,B5,D1",
 )
 def a34_sstable_clustering_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -284,27 +352,7 @@ def a34_sstable_clustering_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     split by customer parity.  Scale shape: same as a33 — the decode is
     per-file executor-side streaming; this subset is the bounded fixture
     (orderkey % 100), the plan is the 100 TB plan."""
-    from cassandra_snap_to_hadoop_spark.sources.snapshot import snapshot_scan
-
-    apply_runtime_confs(spark)
-    base = _stage_orders_sstables(sf_dir)
-    df = snapshot_scan(
-        spark,
-        str(base),
-        "ks1",
-        "orders_by_cust",
-        "tag-r7",
-        writetime="true",
-        as_of=str(_AS_OF),
-    )
-    return df.select(
-        "o_custkey",
-        "o_orderkey",
-        "o_orderstatus",
-        "o_totalprice",
-        F.unix_micros(F.col("o_orderdate")).alias("orderdate_us"),
-        F.col("_writetime").alias("writetime_us"),
-    )
+    return _orders_scan(spark, sf_dir, _stage_orders_sstables, "tag-r7")
 
 
 # --------------------------------------------------------------------------

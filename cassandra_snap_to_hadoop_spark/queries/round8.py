@@ -15,103 +15,37 @@ reconciled relational truth.
 
 from __future__ import annotations
 
-import shutil
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cassandra_snap_to_hadoop_spark.queries.layout import _staged
 from cassandra_snap_to_hadoop_spark.queries.round7 import (
-    _AS_OF,
-    _LDT,
-    _ORDERS_CQL,
-    _SUPPLIER_CQL,
-    _TTL_FUTURE,
-    _TTL_PAST,
+    _ORDERS_ORACLE,
+    _SUPPLIER_ORACLE,
+    _orders_partitions,
+    _orders_scan,
+    _stage_snapshot,
+    _supplier_partitions,
+    _supplier_scan,
 )
 from cassandra_snap_to_hadoop_spark.registry import register
-from cassandra_snap_to_hadoop_spark.session import apply_runtime_confs
 
 
 def _stage_supplier_ma_sstables(sf_dir: str):
     """Encode the supplier table as two ma-format generations with the
     SAME deletion rules as round 7's ka fixtures (queries/round7.py:
     _stage_supplier_sstables) — one truth, two byte layouts."""
-    import pyarrow.parquet as pq
-
-    from cassandra_snap_to_hadoop_spark.sources.snapshot import parse_table_meta
     from cassandra_snap_to_hadoop_spark.sources.sstable_ma import write_ma_data_db
 
-    base = _staged("a36_sstable_ma", sf_dir, "supplier")
-    snap = base / "ks1" / "supplier" / "snapshots" / "tag-r8"
-    if (base / "_SUCCESS").exists():
-        return base
-    shutil.rmtree(base, ignore_errors=True)
-    snap.mkdir(parents=True)
-    (snap / "schema.cql").write_text(_SUPPLIER_CQL)
-    meta = parse_table_meta(_SUPPLIER_CQL)
-    t = pq.read_table(
-        f"{sf_dir}/supplier.parquet",
-        columns=["s_suppkey", "s_name", "s_nationkey", "s_acctbal"],
-    )
-    gens: dict[int, list] = {1: [], 2: []}
-    for k, name, nat, bal in zip(*(t.column(c).to_pylist() for c in t.column_names)):
-        base_ts = k * 1000
-        if k % 97 == 0:
-            deletion = (_LDT, base_ts + 999)
-            name_ts = base_ts
-        elif k % 13 == 0:
-            deletion = (_LDT, base_ts - 1)
-            name_ts = base_ts - 2
-        else:
-            deletion = None
-            name_ts = base_ts
-        if k % 5 == 0:
-            nat_cell = ("tombstone", base_ts, _LDT)
-        else:
-            nat_cell = ("live", base_ts, nat)
-        if k % 7 == 0:
-            bal_cell = ("expiring", base_ts, bal, 60, _TTL_PAST)
-        elif k % 11 == 0:
-            bal_cell = ("expiring", base_ts, bal, 60, _TTL_FUTURE)
-        else:
-            bal_cell = ("live", base_ts, bal)
-        gens[1 if k % 2 == 0 else 2].append(
-            {
-                "key": (k,),
-                "deletion": deletion,
-                "rows": [
-                    {
-                        "clustering": (),
-                        "marker_ts": base_ts,
-                        "cells": {
-                            "s_name": ("live", name_ts, name),
-                            "s_nationkey": nat_cell,
-                            "s_acctbal": bal_cell,
-                        },
-                    }
-                ],
-            }
-        )
-    for g, parts in gens.items():
-        write_ma_data_db(str(snap / f"ma-{g}-big-Data.db"), parts, meta)
-    (base / "_SUCCESS").touch()
-    return base
+    def write(snap, meta):
+        for g, parts in _supplier_partitions(sf_dir).items():
+            write_ma_data_db(str(snap / f"ma-{g}-big-Data.db"), parts, meta)
+
+    return _stage_snapshot("a36_sstable_ma", sf_dir, "supplier", "tag-r8", write)
 
 
 @register(
     "a36_sstable_ma_roundtrip",
-    oracle="""
-    SELECT s_suppkey,
-           CASE WHEN s_suppkey % 13 = 0 THEN NULL ELSE s_name END AS v_name,
-           CASE WHEN s_suppkey % 5 = 0 THEN CAST(NULL AS INTEGER)
-                ELSE s_nationkey END AS v_nationkey,
-           CASE WHEN s_suppkey % 7 = 0 THEN CAST(NULL AS DOUBLE)
-                ELSE s_acctbal END AS v_acctbal,
-           CAST(s_suppkey * 1000 AS BIGINT) AS writetime_us,
-           CAST(CASE WHEN s_suppkey % 2 = 0 THEN 1 ELSE 2 END AS INTEGER) AS v_gen
-    FROM supplier WHERE s_suppkey % 97 <> 0
-    """,
+    oracle=_SUPPLIER_ORACLE,
     survey="A36,A2,B3,B4",
 )
 def a36_sstable_ma_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -136,28 +70,12 @@ def a36_sstable_ma_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to a33 — staging is a bounded driver-side
     fixture encode; the SCAN is one InputPartition per Data.db decoded
     executor-side into Arrow batches."""
-    from cassandra_snap_to_hadoop_spark.sources.snapshot import snapshot_scan
-
-    apply_runtime_confs(spark)
-    base = _stage_supplier_ma_sstables(sf_dir)
-    df = snapshot_scan(
+    return _supplier_scan(
         spark,
-        str(base),
-        "ks1",
-        "supplier",
+        sf_dir,
+        _stage_supplier_ma_sstables,
         "tag-r8",
-        writetime="true",
-        as_of=str(_AS_OF),
-    )
-    return df.select(
-        "s_suppkey",
-        F.col("s_name").alias("v_name"),
-        F.col("s_nationkey").alias("v_nationkey"),
-        F.col("s_acctbal").alias("v_acctbal"),
-        F.col("_writetime").alias("writetime_us"),
-        F.regexp_extract(F.col("_sstable"), r"ma-(\d+)-big-Data\.db$", 1)
-        .cast("int")
-        .alias("v_gen"),
+        r"ma-(\d+)-big-Data\.db$",
     )
 
 
@@ -166,76 +84,18 @@ def _stage_orders_ma_sstables(sf_dir: str):
     SSTables: partition key o_custkey, clustering o_orderkey — the
     clustering values travel in 3.0 clustering blocks (vint header word +
     fixed-length big-endian values), not ka's composite cell names."""
-    import pyarrow.compute as pc
-    import pyarrow.parquet as pq
-
-    from cassandra_snap_to_hadoop_spark.sources.snapshot import parse_table_meta
     from cassandra_snap_to_hadoop_spark.sources.sstable_ma import write_ma_data_db
 
-    base = _staged("a37_sstable_ma", sf_dir, "orders")
-    snap = base / "ks1" / "orders_by_cust" / "snapshots" / "tag-r8"
-    if (base / "_SUCCESS").exists():
-        return base
-    shutil.rmtree(base, ignore_errors=True)
-    snap.mkdir(parents=True)
-    (snap / "schema.cql").write_text(_ORDERS_CQL)
-    meta = parse_table_meta(_ORDERS_CQL)
-    t = pq.read_table(
-        f"{sf_dir}/orders.parquet",
-        columns=[
-            "o_custkey",
-            "o_orderkey",
-            "o_orderstatus",
-            "o_totalprice",
-            "o_orderdate",
-        ],
-    )
-    ok_col = t.column("o_orderkey")
-    t = t.filter(
-        pc.equal(pc.subtract(ok_col, pc.multiply(pc.divide(ok_col, 100), 100)), 0)
-    )
-    date_us = pc.cast(t.column("o_orderdate"), "int64").to_pylist()
-    rows = sorted(
-        zip(
-            t.column("o_custkey").to_pylist(),
-            t.column("o_orderkey").to_pylist(),
-            t.column("o_orderstatus").to_pylist(),
-            t.column("o_totalprice").to_pylist(),
-            date_us,
-        )
-    )
-    parts: dict[int, dict] = {}
-    for ck, ok, status, price, dus in rows:
-        p = parts.setdefault(ck, {"key": (ck,), "deletion": None, "rows": []})
-        ts = ok * 10
-        p["rows"].append(
-            {
-                "clustering": (ok,),
-                "marker_ts": ts,
-                "cells": {
-                    "o_orderstatus": ("live", ts, status),
-                    "o_totalprice": ("live", ts, price),
-                    "o_orderdate": ("live", ts, dus // 1000),  # micros->millis
-                },
-            }
-        )
-    gens: dict[int, list] = {1: [], 2: []}
-    for ck in sorted(parts):
-        gens[1 if ck % 2 == 0 else 2].append(parts[ck])
-    for g, plist in gens.items():
-        write_ma_data_db(str(snap / f"ma-{g}-big-Data.db"), plist, meta)
-    (base / "_SUCCESS").touch()
-    return base
+    def write(snap, meta):
+        for g, plist in _orders_partitions(sf_dir).items():
+            write_ma_data_db(str(snap / f"ma-{g}-big-Data.db"), plist, meta)
+
+    return _stage_snapshot("a37_sstable_ma", sf_dir, "orders", "tag-r8", write)
 
 
 @register(
     "a37_sstable_ma_clustering_scan",
-    oracle="""
-    SELECT o_custkey, o_orderkey, o_orderstatus, o_totalprice,
-           CAST(epoch_us(o_orderdate) AS BIGINT) AS orderdate_us,
-           CAST(o_orderkey * 10 AS BIGINT) AS writetime_us
-    FROM orders WHERE o_orderkey % 100 = 0
-    """,
+    oracle=_ORDERS_ORACLE,
     survey="A37,A2,B5,D1",
 )
 def a37_sstable_ma_clustering_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -253,27 +113,7 @@ def a37_sstable_ma_clustering_scan(spark: SparkSession, sf_dir: str) -> DataFram
     Scale shape: as a34 — per-file executor-side streaming decode; this
     subset is the bounded fixture (orderkey % 100), the plan is the
     100 TB plan."""
-    from cassandra_snap_to_hadoop_spark.sources.snapshot import snapshot_scan
-
-    apply_runtime_confs(spark)
-    base = _stage_orders_ma_sstables(sf_dir)
-    df = snapshot_scan(
-        spark,
-        str(base),
-        "ks1",
-        "orders_by_cust",
-        "tag-r8",
-        writetime="true",
-        as_of=str(_AS_OF),
-    )
-    return df.select(
-        "o_custkey",
-        "o_orderkey",
-        "o_orderstatus",
-        "o_totalprice",
-        (F.unix_micros(F.col("o_orderdate"))).alias("orderdate_us"),
-        F.col("_writetime").alias("writetime_us"),
-    )
+    return _orders_scan(spark, sf_dir, _stage_orders_ma_sstables, "tag-r8")
 
 
 # --------------------------------------------------------------------------

@@ -110,3 +110,21 @@ def apply_runtime_confs(spark: SparkSession) -> SparkSession:
         except Exception:
             pass  # static conf on a live session — keep whatever it has
     return spark
+
+
+def drop_persisted(spark: SparkSession) -> None:
+    """Unpersist every persisted RDD between queries of a sweep.
+
+    The engine's lazy ``localCheckpoint`` lineage cuts persist their
+    relation on first use; every run builds FRESH DataFrames, so the
+    previous run's persisted blocks are unreachable dead weight that
+    otherwise waits on the JVM ContextCleaner.  Dropping them at each
+    query boundary keeps session memory flat across a sweep and
+    guarantees no persisted state crosses query boundaries (the
+    no-cross-run-caching contract).  Results are unaffected; call it
+    outside any timed region."""
+    try:
+        for jrdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
+            jrdd.unpersist()
+    except Exception:
+        pass  # introspection API drift must never fail a sweep

@@ -69,47 +69,10 @@ _CQL_TO_SPARK = {
 
 def parse_schema_cql(cql: str) -> str:
     """Parse a snapshot's ``schema.cql`` CREATE TABLE into a Spark DDL
-    schema string.  Handles primitives plus list/set/map/frozen collections;
-    PRIMARY KEY clauses are layout metadata, not columns."""
-    m = re.search(r"CREATE\s+TABLE[^(]*\(", cql, re.IGNORECASE | re.DOTALL)
-    if not m:
-        raise ValueError("no CREATE TABLE found in schema.cql")
-    # scan to the matching close paren (the WITH clause may contain parens)
-    depth, start, end = 1, m.end(), None
-    for i in range(m.end(), len(cql)):
-        if cql[i] == "(":
-            depth += 1
-        elif cql[i] == ")":
-            depth -= 1
-            if depth == 0:
-                end = i
-                break
-    if end is None:
-        raise ValueError("unbalanced CREATE TABLE parentheses in schema.cql")
-    body = cql[start:end]
-    # strip trailing table-level PRIMARY KEY (...) clause (one nesting
-    # level covers composite partition keys: PRIMARY KEY ((a, b), c))
-    body = re.sub(
-        r",?\s*PRIMARY\s+KEY\s*\((?:[^()]|\([^)]*\))*\)",
-        "",
-        body,
-        flags=re.IGNORECASE,
-    )
-    fields = []
-    depth = 0
-    current = ""
-    for ch in body:
-        if ch == "(" or ch == "<":
-            depth += 1
-        elif ch == ")" or ch == ">":
-            depth -= 1
-        if ch == "," and depth == 0:
-            fields.append(current)
-            current = ""
-        else:
-            current += ch
-    if current.strip():
-        fields.append(current)
+    schema string: :func:`parse_table_meta`'s columns rendered through
+    the CQL -> Spark type mapping.  Handles primitives plus
+    list/set/map/frozen collections; PRIMARY KEY clauses are layout
+    metadata, not columns."""
 
     def cql_type_to_spark(t: str) -> str:
         t = t.strip().lower()
@@ -123,19 +86,10 @@ def parse_schema_cql(cql: str) -> str:
             return f"array<{cql_type_to_spark(inner)}>"
         return _CQL_TO_SPARK[t]
 
-    cols = []
-    for f in fields:
-        f = f.strip().rstrip(",")
-        if not f:
-            continue
-        parts = f.split(None, 1)
-        if len(parts) != 2:
-            continue
-        name, ctype = parts
-        ctype = re.sub(r"\s+(static|PRIMARY\s+KEY).*$", "", ctype, flags=re.IGNORECASE)
-        clean_name = name.strip('"')
-        cols.append(f"{clean_name} {cql_type_to_spark(ctype)}")
-    return ", ".join(cols)
+    return ", ".join(
+        f"{name} {cql_type_to_spark(ctype)}"
+        for name, ctype in parse_table_meta(cql).columns
+    )
 
 
 def parse_table_meta(cql: str):
@@ -149,6 +103,7 @@ def parse_table_meta(cql: str):
     m = re.search(r"CREATE\s+TABLE[^(]*\(", cql, re.IGNORECASE | re.DOTALL)
     if not m:
         raise ValueError("no CREATE TABLE found in schema.cql")
+    # scan to the matching close paren (the WITH clause may contain parens)
     depth, start, end = 1, m.end(), None
     for i in range(m.end(), len(cql)):
         if cql[i] == "(":

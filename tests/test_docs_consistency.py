@@ -4,10 +4,11 @@ rot), and the driver-facing ordering lists must stay duplicate-free."""
 
 from __future__ import annotations
 
+import hashlib
 import re
 from pathlib import Path
 
-from cassandra_snap_to_hadoop_spark.queries import _ROUND11_PRIORITY, _ROUND11_TAIL
+from cassandra_snap_to_hadoop_spark.queries import _ROUND11_PRIORITY
 from cassandra_snap_to_hadoop_spark.registry import load_all
 
 REPO = Path(__file__).resolve().parents[1]
@@ -54,10 +55,24 @@ def test_next_md_references_only_registered_queries():
 
 
 def test_ordering_lists_are_duplicate_free_and_registered():
-    combined = list(_ROUND11_PRIORITY) + list(_ROUND11_TAIL)
+    combined = list(_ROUND11_PRIORITY)
     assert len(combined) == len(set(combined)), "duplicate names in ordering lists"
     missing = [n for n in combined if n not in REGISTRY]
     assert not missing, missing
+
+
+# sha256 of the full registry order ("\n".join of the names).  The
+# driver's sweep walks this order, so it changes only in a commit that
+# intentionally adds or reorders queries — update the digest there.
+_REGISTRY_ORDER_SHA256 = "2aaac0a32b8cf253d8edd5cc022a6317bb042051ecda02cc1a6ed6676f27abfc"
+
+
+def test_registry_order_is_pinned():
+    assert len(REGISTRY) == 525
+    digest = hashlib.sha256("\n".join(REGISTRY).encode()).hexdigest()
+    assert digest == _REGISTRY_ORDER_SHA256, (
+        "registry order changed — if intentional, update _REGISTRY_ORDER_SHA256"
+    )
 
 
 def test_status_totals_match_registry():
@@ -160,16 +175,8 @@ def test_round11_window_clears_backlog_then_rechecks():
     )
     # Every rows-only key gets a re-check slot (budget permitting).
     rows_only = {n for n in REGISTRY if not REGISTRY[n].oracle}
-    missing_rows = sorted(rows_only - set(_ROUND11_PRIORITY) - set(_ROUND11_TAIL))
+    missing_rows = sorted(rows_only - set(_ROUND11_PRIORITY))
     assert not missing_rows, f"rows-only keys without a re-check slot: {missing_rows}"
-
-
-def test_round11_tail_is_rows_only_by_design():
-    """Any round-11 overflow must hold only rows-only keys — every
-    SQL-oracled key belongs inside the window itself this round."""
-    assert all(not REGISTRY[n].oracle for n in _ROUND11_TAIL), (
-        "SQL-oracled key found in _ROUND11_TAIL — it belongs in the window"
-    )
 
 
 def test_survey_rows_cover_every_section2_row():

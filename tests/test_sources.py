@@ -93,6 +93,53 @@ def test_parse_schema_cql():
     assert "PRIMARY" not in ddl.upper()
 
 
+# Exact DDL per CREATE TABLE shape, pinned from the standalone parser that
+# parse_schema_cql replaced with parse_table_meta's column list.
+@pytest.mark.parametrize(
+    "cql, ddl",
+    [
+        pytest.param(
+            "CREATE TABLE ks.t (id bigint PRIMARY KEY, name text, score double);",
+            "id long, name string, score double",
+            id="inline_pk",
+        ),
+        pytest.param(
+            "CREATE TABLE ks.t (a int, b text, c timestamp, v float,"
+            " PRIMARY KEY ((a, b), c));",
+            "a int, b string, c timestamp, v float",
+            id="composite_pk",
+        ),
+        pytest.param(
+            "CREATE TABLE ks.t (id uuid PRIMARY KEY, tags frozen<list<text>>,"
+            " ids set<bigint>, attrs map<text, int>);",
+            "id string, tags array<string>, ids array<long>, attrs map<string,int>",
+            id="collections",
+        ),
+        pytest.param(
+            'CREATE TABLE ks.t ("UserId" bigint, "eventTime" timestamp, v text,'
+            ' PRIMARY KEY ("UserId", "eventTime"));',
+            "UserId long, eventTime timestamp, v string",
+            id="quoted_identifier",
+        ),
+        pytest.param(
+            "CREATE TABLE ks.t (pk int, ck int, owner text static, v blob,"
+            " PRIMARY KEY (pk, ck));",
+            "pk int, ck int, owner string, v binary",
+            id="static_column",
+        ),
+        pytest.param(
+            "CREATE TABLE ks.t (pk int, ck int, v decimal, PRIMARY KEY (pk, ck))"
+            " WITH CLUSTERING ORDER BY (ck DESC)"
+            " AND compaction = {'class': 'LeveledCompactionStrategy'};",
+            "pk int, ck int, v decimal(38,18)",
+            id="with_clause_parens",
+        ),
+    ],
+)
+def test_parse_schema_cql_exact_ddl(cql, ddl):
+    assert parse_schema_cql(cql) == ddl
+
+
 def test_snapshot_scan_schema_and_rows(spark, snapshot_fixture):
     df = snapshot_scan(spark, snapshot_fixture, "ks1", "events_wide", "tag-001")
     assert df.count() == 6

@@ -41,7 +41,7 @@ def main() -> None:
         count_shuffles,
     )
     from cassandra_snap_to_hadoop_spark.registry import load_all
-    from cassandra_snap_to_hadoop_spark.session import get_spark
+    from cassandra_snap_to_hadoop_spark.session import drop_persisted, get_spark
 
     spark = get_spark("opt_measure")
     registry = load_all()
@@ -79,11 +79,7 @@ def main() -> None:
         med = runs[len(runs) // 2]
         out[name] = {"noop_median": med, "runs": runs, "exchanges": n_ex, "bcast_joins": n_bc}
         print(f"{name}: median={med}s runs={runs} exchanges={n_ex} bcast={n_bc}", flush=True)
-        try:  # r11: drop dead lazy-checkpoint persists between queries
-            for jrdd in list(spark.sparkContext._jsc.getPersistentRDDs().values()):
-                jrdd.unpersist()
-        except Exception:
-            pass
+        drop_persisted(spark)
 
     total = round(sum(v["noop_median"] for v in out.values()), 3)
     print(f"TOTAL noop median: {total}s over {len(out)} queries")
