@@ -28,8 +28,12 @@ TABLES: tuple[str, ...] = (
     "embeddings",
 )
 
-# Declared schemas (FIXTURES.md).  Parquet footers are authoritative at scan
-# time; these are used for validation and for building empty frames in tests.
+# Declared schemas (FIXTURES.md).  ``load`` hands these to the parquet reader
+# for every table except ``events`` (see ``load`` for why), so a scan needs no
+# footer-inference job and the column types are fixed here, not by the file.
+# tests/test_io.py pins them against the footers of every corpus: with
+# a declared schema a column missing from the file reads as nulls instead of
+# failing, so drift must be caught by that test, not at scan time.
 SCHEMAS: dict[str, T.StructType] = {
     "region": T.StructType(
         [
@@ -126,17 +130,28 @@ SCHEMAS: dict[str, T.StructType] = {
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Scan one table.  Plain ``spark.read.parquet`` — the declarative scan
-    is what lets Catalyst push filters/projections into the reader.
+    """Scan one table.  A plain declarative parquet scan, so Catalyst can
+    push filters and projections into the reader.
 
-    events.ts is parquet TIMESTAMP(NANOS), which Spark 4's reader refuses;
-    with ``nanosAsLong`` it arrives as int64 nanos and is converted here to
-    TimestampType at microsecond precision (the same truncation DuckDB
-    applies, so oracle comparisons see identical instants).
+    Every table but ``events`` is read with its declared ``SCHEMAS`` entry:
+    Spark then skips the footer-reading inference job, and the declared
+    ``TimestampType`` reads naive (isAdjustedToUTC=false) micros as
+    TIMESTAMP whatever ``inferTimestampNTZ`` says.
+
+    ``events`` keeps footer inference because its stored ``ts`` unit
+    varies: the corpora store micros, but a TIMESTAMP(NANOS) file is also
+    supported, and a declared ``TimestampType`` fails on it with
+    ``PARQUET_COLUMN_DATA_TYPE_MISMATCH``.  With ``nanosAsLong`` a NANOS
+    ``ts`` arrives as int64 nanos and is converted here to TimestampType at
+    microsecond precision (the same truncation DuckDB applies, so oracle
+    comparisons see identical instants).
     """
     apply_runtime_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events" and dict(df.dtypes).get("ts") == "bigint":
+    path = f"{sf_dir}/{name}.parquet"
+    if name != "events":
+        return spark.read.schema(SCHEMAS[name]).parquet(path)
+    df = spark.read.parquet(path)
+    if dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
     # Defensive twin of inferTimestampNTZ=false (session.py): if the scan
     # ran on a foreign session where that conf couldn't be applied, naive
@@ -155,7 +170,9 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 # split count of a given (application, analyzed plan, split-size conf)
 # triple is deterministic, so memoize it on the plan's semantic hash; a
 # stale/wrong entry could only mis-decide the repartition heuristic, never
-# change results.
+# change results.  Keys lead with the application id and an application's
+# entries are useless once it stops, so an insert evicts every other
+# application's entries: the cache holds one application's plans at a time.
 _FAN_OUT_CACHE: dict[tuple, int] = {}
 
 
@@ -193,6 +210,8 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     if n is None:
         n = df.rdd.getNumPartitions()
         if key is not None:
+            for stale in [k for k in _FAN_OUT_CACHE if k[0] != key[0]]:
+                del _FAN_OUT_CACHE[stale]
             _FAN_OUT_CACHE[key] = n
     if n >= floor:
         return df

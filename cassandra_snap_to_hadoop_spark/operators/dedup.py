@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cassandra_snap_to_hadoop_spark.io import fan_out
+from cassandra_snap_to_hadoop_spark.operators.layout import checkpoint_observed
 
 
 def normalize_text(col: F.Column) -> F.Column:
@@ -424,34 +425,24 @@ def dup_clusters(
             .agg(F.min("cluster_id").alias("n_min"))
         )
         # Carry the OLD label through the round output so the convergence
-        # probe is a plain filter over the checkpointed relation — the
-        # former probe re-joined new labels to old labels, paying an extra
-        # exchange + join per round (r11 optimization).  The lazy
-        # checkpoint is materialized by the probe's count job, so each
-        # round runs one job and computes new_labels once.
-        new_labels = (
-            labels.join(neighbor_min, labels.id == neighbor_min.src, "left")
-            .select(
+        # probe is a per-row predicate, not a re-join of new labels to old
+        # (r11 optimization).  The probe rides on the eager checkpoint job
+        # (checkpoint_observed), so each round runs one job, computes
+        # new_labels once and counts its changed labels in flight.
+        new_labels, probe = checkpoint_observed(
+            labels.join(neighbor_min, labels.id == neighbor_min.src, "left").select(
                 "id",
                 F.col("cluster_id").alias("__old_cid"),
                 F.least(F.col("cluster_id"), F.coalesce(F.col("n_min"), F.col("cluster_id"))).alias(
                     "cluster_id"
                 ),
-            )
-            .localCheckpoint(eager=True)
+            ),
+            F.count(F.when(F.col("cluster_id") != F.col("__old_cid"), 1)).alias("changed"),
         )
-        # Probe without a limit: a limit(1) probe runs Spark's incremental
-        # partial execution, which materializes only SOME partitions of a
-        # lazy checkpoint — doCheckpoint then launches an extra job per
-        # round to persist the missing ones (measured 2-3x on j90).  With
-        # the eager checkpoint above the probe is a cheap scan of cached
-        # blocks, and it no longer re-joins new labels to old (the old
-        # label rides along as __old_cid).
-        changed = new_labels.filter(F.col("cluster_id") != F.col("__old_cid")).count()
         labels = new_labels.select("id", "cluster_id")
         if stats is not None:
             stats["rounds"] = stats.get("rounds", 0) + 1
-        if changed == 0:
+        if probe["changed"] == 0:
             break
     return labels
 

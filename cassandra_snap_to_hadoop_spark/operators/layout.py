@@ -25,7 +25,7 @@ from __future__ import annotations
 import math
 import os
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 # Magic-mask bit spreading: 16 significant bits -> 32 bits with zeros
@@ -128,6 +128,10 @@ _RANGE_PARTITION_TARGET_BYTES = 64 * 1024 * 1024
 # the local rank, so it is asserted against the per-partition counts the
 # operator collects anyway.
 _LOCAL_RANK_LIMIT = 1 << 33
+# ...and the partition index in the high 31 bits, while repartitionByRange
+# takes the count as a JVM Int: a derived count must stay below 2^31 or
+# the range pass dies with an opaque Py4JError.
+_MAX_RANGE_PARTITIONS = (1 << 31) - 1
 
 
 def _derive_range_partitions(df: DataFrame) -> int:
@@ -138,8 +142,8 @@ def _derive_range_partitions(df: DataFrame) -> int:
     partitions (each far below the 2^33-row local-rank budget); on the
     local corpus the size estimate is tiny so the floor (defaultParallelism)
     wins and the bench-visible plan is unchanged."""
-    sc = df.sparkSession.sparkContext
-    floor = sc.defaultParallelism
+    sess = df.sparkSession
+    floor = sess.sparkContext.defaultParallelism
     try:
         # ANALYZED-plan stats, not optimizedPlan(): the size visitor walks
         # the analyzed tree without paying a full optimizer run per build
@@ -147,9 +151,17 @@ def _derive_range_partitions(df: DataFrame) -> int:
         # estimate is conservative (can only overestimate), which for a
         # partition-count heuristic errs toward MORE partitions — safe.
         size = int(df._jdf.queryExecution().analyzed().stats().sizeInBytes())
+        # A relation Spark cannot size (an RDD-backed frame) reports
+        # spark.sql.defaultSizeInBytes (Long.MaxValue by default): that is
+        # "unknown", not 8 EB, so it gets the floor.
+        unknown = int(sess._jsparkSession.sessionState().conf().defaultSizeInBytes())
     except Exception:  # internal-API drift: fall back to the core floor
         return floor
-    return max(floor, -(-size // _RANGE_PARTITION_TARGET_BYTES))
+    if size >= unknown:
+        return floor
+    # Join products multiply their inputs' estimates (a three-way crossJoin
+    # of spark.range(100000) derives ~7.6e9 partitions): clamp.
+    return min(_MAX_RANGE_PARTITIONS, max(floor, -(-size // _RANGE_PARTITION_TARGET_BYTES)))
 
 
 def _check_local_rank_budget(counts: dict[int, int], limit: int = _LOCAL_RANK_LIMIT) -> None:
@@ -163,6 +175,24 @@ def _check_local_rank_budget(counts: dict[int, int], limit: int = _LOCAL_RANK_LI
             "position would overflow. Increase num_partitions (or let it "
             "derive from input size)."
         )
+
+
+def checkpoint_observed(df: DataFrame, *metrics: Column) -> tuple[DataFrame, dict]:
+    """Eagerly ``localCheckpoint`` ``df`` and return it together with the
+    aggregate ``metrics`` (named Columns, e.g. ``F.count(...).alias("n")``)
+    computed over its rows by the checkpoint job itself, as a dict keyed
+    by metric name.
+
+    This is the fused fixpoint probe of the iterative operators: the "did
+    this round change anything?" count rides on the job that materializes
+    the round (``Dataset.observe``) instead of running as a second job over
+    the checkpoint.  An empty frame observes the aggregates of zero rows
+    (0 for a count).  Failure direction: a retried stage can report its
+    rows twice, so a count can only over-count; a loop that stops on 0
+    then runs at most one extra no-op round and never stops early.
+    """
+    obs = Observation()
+    return df.observe(obs, *metrics).localCheckpoint(eager=True), obs.get
 
 
 def global_rank(

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cassandra_snap_to_hadoop_spark.io import Tables, fan_out
+from cassandra_snap_to_hadoop_spark.operators.layout import checkpoint_observed
 from cassandra_snap_to_hadoop_spark.operators.text import tokens
 from cassandra_snap_to_hadoop_spark.registry import register
 
@@ -232,11 +233,13 @@ def j100_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # live == d_r: (node, degree within the round-r active set).  The
     # first degree relation is the plain symmetric-degree agg (== the
-    # oracle's d1, since a0 is exactly the edge-endpoint set).
-    live = (
-        sym.groupBy(F.col("src").alias("node"))
-        .agg(F.count("*").alias("deg"))
-        .localCheckpoint(eager=False)
+    # oracle's d1, since a0 is exactly the edge-endpoint set).  Each live
+    # is checkpointed with its fixpoint probe fused in: the job that
+    # materializes d_r also counts its deg < k rows (the next dropped
+    # set), so the stop test costs no job of its own.
+    n_low = F.count(F.when(F.col("deg") < _KCORE_K, 1)).alias("n")
+    live, probe = checkpoint_observed(
+        sym.groupBy(F.col("src").alias("node")).agg(F.count("*").alias("deg")), n_low
     )
     # 7 delta updates carry d_1 -> d_8 (the oracle's 8 materialized
     # degree relations); an empty dropped set is the fixpoint — every
@@ -245,27 +248,22 @@ def j100_kcore_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     # complement of the same relation), so each round is just the delta
     # join + one left join that AQE broadcasts once dropped is small.
     for _ in range(_KCORE_ROUNDS - 1):
-        dropped = live.where(F.col("deg") < _KCORE_K).select("node")
-        # r12: FULL count probe, not limit(1) — the j90/dup_clusters lesson
-        # applies here too: a limited probe over the lazy checkpoint
-        # materializes only some partitions, and the next action pays
-        # doCheckpoint extra jobs for the rest (measured 3.46 -> 2.72 s
-        # median-of-5 at sf0.1 from this one-line change).
-        if dropped.count() == 0:
+        if probe["n"] == 0:
             break
+        dropped = live.where(F.col("deg") < _KCORE_K).select("node")
         delta = (
             sym.join(dropped.withColumnRenamed("node", "dst"), "dst")
             .groupBy(F.col("src").alias("node"))
             .agg(F.count("*").alias("dd"))
         )
-        live = (
+        live, probe = checkpoint_observed(
             live.where(F.col("deg") >= _KCORE_K)
             .join(delta, "node", "left")
             .select(
                 "node",
                 (F.col("deg") - F.coalesce(F.col("dd"), F.lit(0))).alias("deg"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            n_low,
         )
     return live.where(F.col("deg") >= _KCORE_K).select(
         "node", F.col("deg").cast("long").alias("core_degree")

@@ -207,8 +207,13 @@ def test_local_rank_budget_guard_raises():
 def test_derive_range_partitions_floor_and_scaling(spark):
     """r12: the derived range-partition count uses the core count as the
     floor on small inputs (bench-comparable locally) and grows with the
-    optimizer's size estimate."""
+    optimizer's size estimate.  An RDD-backed frame reports Spark's
+    "unknown size" estimate (Long.MaxValue) and gets the floor, not 2^37
+    partitions; a join product's multiplied estimate is clamped below
+    2^31 (a JVM Int partition count) instead of reaching
+    repartitionByRange."""
     from cassandra_snap_to_hadoop_spark.operators.layout import (
+        _MAX_RANGE_PARTITIONS,
         _RANGE_PARTITION_TARGET_BYTES,
         _derive_range_partitions,
     )
@@ -219,6 +224,56 @@ def test_derive_range_partitions_floor_and_scaling(spark):
     # arithmetic form: a 1 TB estimate must yield far more partitions
     big = (1 << 40) // _RANGE_PARTITION_TARGET_BYTES
     assert big > floor  # the ceil-div branch is what global_rank would use
+    rdd_df = spark.createDataFrame(spark.sparkContext.parallelize([(1,), (2,)]), "x long")
+    assert _derive_range_partitions(rdd_df) == floor
+    r = spark.range(100000)
+    cube = r.crossJoin(r.withColumnRenamed("id", "b")).crossJoin(r.withColumnRenamed("id", "c"))
+    n = _derive_range_partitions(cube)
+    assert floor < n <= _MAX_RANGE_PARTITIONS < 1 << 31
+
+
+def test_global_rank_on_rdd_backed_frame(spark):
+    """global_rank over an RDD-backed frame (unknown size estimate) must
+    run and return exact ranks, not die in repartitionByRange."""
+    from cassandra_snap_to_hadoop_spark.operators.layout import global_rank
+
+    vals = [(i, (i * 7919) % 101) for i in range(200)]
+    df = spark.createDataFrame(spark.sparkContext.parallelize(vals), "id long, v long")
+    got = {r["id"]: r["global_rank"] for r in global_rank(df, ["v", "id"]).collect()}
+    want = {i: rank for rank, (i, _v) in enumerate(sorted(vals, key=lambda t: (t[1], t[0])), 1)}
+    assert got == want
+
+
+def test_checkpoint_observed_matches_separate_count(spark):
+    """The fused probe counts exactly what a separate filter().count()
+    over the same rows counts, and returns the checkpointed frame."""
+    from cassandra_snap_to_hadoop_spark.operators.layout import checkpoint_observed
+
+    df = spark.range(1000).select((F.col("id") * 37 % 101).alias("v"))
+    cp, metrics = checkpoint_observed(df, F.count(F.when(F.col("v") < 30, 1)).alias("n"))
+    assert metrics["n"] == df.filter(F.col("v") < 30).count() > 0
+    assert cp.count() == 1000
+
+
+def test_checkpoint_observed_empty_frame_returns_zero(spark):
+    """An empty frame observes a zero count — the fixpoint signal — and
+    the observation does not block waiting for metrics."""
+    import threading
+
+    from cassandra_snap_to_hadoop_spark.operators.layout import checkpoint_observed
+
+    out = {}
+
+    def run():
+        empty = spark.range(10).where(F.col("id") < 0)
+        cp, metrics = checkpoint_observed(empty, F.count(F.when(F.col("id") > 0, 1)).alias("n"))
+        out["n"], out["rows"] = metrics["n"], cp.count()
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(timeout=120)
+    assert not t.is_alive(), "checkpoint_observed blocked on an empty frame"
+    assert out == {"n": 0, "rows": 0}
 
 
 def test_fan_out_memoizes_split_count(spark):
@@ -235,3 +290,10 @@ def test_fan_out_memoizes_split_count(spark):
     out2 = io_mod.fan_out(load(spark, SF, "documents").select("doc_id", "text"))
     assert len(io_mod._FAN_OUT_CACHE) == 1  # same semantic hash -> cache hit
     assert out1.rdd.getNumPartitions() == out2.rdd.getNumPartitions()
+    # An insert evicts entries keyed by any other (e.g. stopped)
+    # application, so the cache cannot grow across sessions.
+    stale = ("app-stopped",) + key[1:]
+    io_mod._FAN_OUT_CACHE[stale] = cached_n
+    io_mod.fan_out(load(spark, SF, "customer").select("c_custkey", "c_name"))
+    assert stale not in io_mod._FAN_OUT_CACHE
+    assert key in io_mod._FAN_OUT_CACHE and len(io_mod._FAN_OUT_CACHE) == 2

@@ -3,6 +3,8 @@ twin) and the round-6 certified-twin conversions' cross-tier pins."""
 
 from __future__ import annotations
 
+import datetime
+
 import pytest
 
 from itertools import combinations
@@ -301,6 +303,28 @@ def test_j100_kcore_matches_python_peel(spark, sf_dir):
         for r in REGISTRY["j100_kcore_decomposition"].fn(spark, sf_dir).collect()
     }
     assert got == want
+
+
+@pytest.mark.parametrize(
+    "rows",
+    [
+        [],
+        [(1, 2, 3, 1, 30.0, 100.0, 0.05, 0.01, "N", "O", datetime.datetime(1995, 1, 2))],
+    ],
+    ids=["zero_rows", "one_row"],
+)
+def test_j100_kcore_empty_and_one_row_lineitem(spark, tmp_path, rows):
+    """Degenerate corpora: no edges, or one edge whose endpoints both have
+    degree 1 < k.  The peel must reach its fixpoint (the fused probe's
+    zero count) and return an empty core, not fail."""
+    from cassandra_snap_to_hadoop_spark.io import SCHEMAS
+
+    spark.createDataFrame(rows, SCHEMAS["lineitem"]).coalesce(1).write.parquet(
+        str(tmp_path / "lineitem.parquet")
+    )
+    out = REGISTRY["j100_kcore_decomposition"].fn(spark, str(tmp_path))
+    assert out.columns == ["node", "core_degree"]
+    assert out.collect() == []
 
 
 def test_e72_log_loss_constants_and_law(spark, sf_dir):
