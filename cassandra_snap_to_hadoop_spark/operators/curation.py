@@ -33,7 +33,6 @@ def curation_funnel(
     jaccard_threshold: float = 0.05,
     block_col: str | None = "lang",
     pairs_fn=None,
-    materialize=None,
 ) -> DataFrame:
     """Returns (stage, n_docs, retained_pct) for the 4 funnel stages.
 
@@ -53,30 +52,27 @@ def curation_funnel(
     ``lambda df: minhash_lsh_pairs(df, id_col, text_col)`` for the
     100 TB tier — identical funnel shape, bucket-bounded candidate cost.
 
-    ``materialize`` swaps the stage-boundary cut: default is
-    ``localCheckpoint`` (in-engine); pass a ``(df, stage_name) -> df``
-    that writes-and-rereads parquet for the production analogue
-    (tools/scale_probe.py measures both variants side by side).
+    The quality and exact-dedup stage boundaries are ``localCheckpoint``
+    cuts (module docstring).
     """
-    mat = materialize if materialize is not None else (lambda df, _name: df.localCheckpoint())
     # Project to the columns the downstream stages actually read BEFORE the
     # stage-boundary cut (guide §2.3 "project before the exchange"): the
     # quality gate only needs (id, text[, block]) afterwards, so the
     # unused feature columns (digit/space ratios etc.) are pruned out of
     # both the computation and the checkpointed bytes (r11 optimization).
     keep_cols = [id_col, text_col] + ([block_col] if block_col else [])
-    quality = mat(
+    quality = (
         quality_features(docs, text_col)
         .filter(F.col("quality_ok") == 1)
-        .select(*keep_cols),
-        "1_quality",
+        .select(*keep_cols)
+        .localCheckpoint()
     )
-    survivors = mat(
+    survivors = (
         quality.withColumn("__h", F.md5(normalize_text(F.col(text_col))))
         .withColumn("__keep", F.min(id_col).over(__hash_window()))
         .filter(F.col(id_col) == F.col("__keep"))
-        .drop("__h", "__keep"),
-        "2_exact_dedup",
+        .drop("__h", "__keep")
+        .localCheckpoint()
     )
     if pairs_fn is None:
         pairs = jaccard_pairs(

@@ -323,7 +323,8 @@ def dup_clusters_two_phase(
     possibly-incomplete labeling (ADVICE r6 item 1).  Equivalence
     with hash-min propagation and exact union-find is pinned on random
     AND path graphs in tests/test_round6.py; the round-count win on
-    chains is probed in SCALE.md."""
+    chains is pinned by its deep-tier
+    ``test_two_phase_cc_beats_hashmin_rounds_on_paths``."""
     edges = (
         pairs.select(F.col("id_a").alias("a"), F.col("id_b").alias("b"))
         .where(F.col("a") != F.col("b"))

@@ -31,10 +31,6 @@ def count_shuffles(df: DataFrame) -> int:
     return len(re.findall(r"\bExchange\b", plan_string(df, "simple")))
 
 
-def has_operator(df: DataFrame, op: str) -> bool:
-    return op in plan_string(df, "simple")
-
-
 def broadcast_join_count(df: DataFrame) -> int:
     return len(re.findall(r"BroadcastHashJoin|BroadcastNestedLoopJoin", plan_string(df, "simple")))
 
@@ -73,22 +69,6 @@ def uses_rowwise_python(df: DataFrame) -> bool:
     sanctioned Python boundary."""
     s = plan_string(df, "simple")
     return bool(re.search(r"\bBatchEvalPython\b", s))
-
-
-def codegen_stage_count(df: DataFrame) -> int:
-    """Whole-stage-codegen spans — wider is better (fewer pipeline breaks)."""
-    return len(set(re.findall(r"\*\((\d+)\)", plan_string(df, "simple"))))
-
-
-def plan_digest(df: DataFrame) -> dict[str, object]:
-    """Compact digest for BASELINE.md bookkeeping."""
-    return {
-        "shuffles": count_shuffles(df),
-        "broadcast_joins": broadcast_join_count(df),
-        "codegen_stages": codegen_stage_count(df),
-        "cartesian": uses_cartesian_product(df),
-        "rowwise_python": uses_rowwise_python(df),
-    }
 
 
 def unpartitioned_window_count(df: DataFrame) -> int:

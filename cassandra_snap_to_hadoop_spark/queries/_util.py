@@ -35,10 +35,6 @@ def yr(c: Column) -> Column:
     return F.year(c).cast("int")
 
 
-def mon(c: Column) -> Column:
-    return F.month(c).cast("int")
-
-
 def qsum(c: Column, scale: int = 100) -> Column:
     """Quantized exact sum: per-row round to 1/scale units -> exact long sum
     -> single division.  Engine-order-independent, bit-identical to the
@@ -68,14 +64,10 @@ def sql_qsum(expr: str, scale: int = 100) -> str:
     return f"SUM(CAST(ROUND(({expr}) * {scale}) AS BIGINT)) / {scale}.0"
 
 
-def sql_qavg(expr: str, scale: int = 100) -> str:
-    return f"SUM(CAST(ROUND(({expr}) * {scale}) AS BIGINT)) / (COUNT(*) * {scale}.0)"
-
-
 def md5_coin(key: Column, b: Column) -> Column:
     """Deterministic fair coin that Spark, DuckDB, and hashlib flip
-    IDENTICALLY (used by e38's bootstrap, e43's permutation signs, and the
-    scale probe's resample shape): first hex digit of md5("key:b") < '8'.
+    IDENTICALLY (used by e38's bootstrap and e43's permutation signs):
+    first hex digit of md5("key:b") < '8'.
     DuckDB mirror: substring(md5(CAST(k AS VARCHAR) || ':' ||
     CAST(b AS VARCHAR)), 1, 1) < '8'."""
     return (

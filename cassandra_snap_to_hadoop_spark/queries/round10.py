@@ -1462,7 +1462,7 @@ def f59_dfa_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: f54's — daily pre-agg (the volume term) →
     calendar-bounded per-(type, w, window) cells → hash aggs; windows =
-    types × days ÷ w, flat in corpus volume (the f54 probe's axis)."""
+    types × days ÷ w, flat in corpus volume (f54's series-count axis)."""
     e = Tables(spark, sf_dir).events
     daily = e.groupBy(
         "event_type", F.expr("unix_micros(ts) DIV 86400000000").alias("day")

@@ -142,8 +142,9 @@ def j90_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     large-star/small-star variant, operators/dedup.dup_clusters_two_phase
     — same join shapes, O(log n) rounds instead of O(diameter); measured
     round 6: len-6000 chain in 14 rounds vs hash-min's one-round-per-hop,
-    SCALE.md cc-chains row — near-dup components are shallow so hash-min
-    stays the registered path here).
+    the law tests/test_round6.py::test_two_phase_cc_beats_hashmin_rounds_on_paths
+    pins — near-dup components are shallow so hash-min stays the
+    registered path here).
     Driver involvement: one boolean convergence check per round
     (KB-bounded, the dup_clusters contract)."""
     from cassandra_snap_to_hadoop_spark.operators.dedup import (

@@ -6,7 +6,8 @@
 
 For each query: time the computation with the *noop sink* (forces every
 column of every row, excludes sink cost — guide §1.4), label the job
-(§1.5), count Exchanges / note join strategy from the formatted plan, and
+(§1.5), count Exchanges / note join strategy from the formatted plan, flag
+a CartesianProduct or row-at-a-time Python eval (BatchEvalPython), and
 optionally write the full ``explain("formatted")`` to
 ``plans/r11/<name>_<tag>.txt`` (the judge-facing evidence artifact).
 
@@ -25,7 +26,7 @@ import time
 from contextlib import redirect_stdout
 
 
-def main() -> None:
+def main(argv: list[str] | None = None) -> None:
     sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     ap = argparse.ArgumentParser()
     ap.add_argument("queries")
@@ -34,11 +35,13 @@ def main() -> None:
     ap.add_argument("--plans", default=None)
     ap.add_argument("--tag", default="before")
     ap.add_argument("--json", dest="json_out", default=None)
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
     from cassandra_snap_to_hadoop_spark.plans.explain import (
         broadcast_join_count,
         count_shuffles,
+        uses_cartesian_product,
+        uses_rowwise_python,
     )
     from cassandra_snap_to_hadoop_spark.registry import load_all
     from cassandra_snap_to_hadoop_spark.session import drop_persisted, get_spark
@@ -58,6 +61,7 @@ def main() -> None:
         df = q.fn(spark, args.sf)
         n_ex = count_shuffles(df)
         n_bc = broadcast_join_count(df)
+        cart, rowwise = uses_cartesian_product(df), uses_rowwise_python(df)
         if args.plans:
             os.makedirs(args.plans, exist_ok=True)
             buf = io.StringIO()
@@ -77,8 +81,10 @@ def main() -> None:
         run_once()  # warm
         runs = sorted(round(run_once(), 3) for _ in range(args.runs))
         med = runs[len(runs) // 2]
-        out[name] = {"noop_median": med, "runs": runs, "exchanges": n_ex, "bcast_joins": n_bc}
-        print(f"{name}: median={med}s runs={runs} exchanges={n_ex} bcast={n_bc}", flush=True)
+        out[name] = {"noop_median": med, "runs": runs, "exchanges": n_ex, "bcast_joins": n_bc,
+                     "cartesian": cart, "rowwise_python": rowwise}
+        print(f"{name}: median={med}s runs={runs} exchanges={n_ex} bcast={n_bc} "
+              f"cartesian={cart} rowwise_python={rowwise}", flush=True)
         drop_persisted(spark)
 
     total = round(sum(v["noop_median"] for v in out.values()), 3)

@@ -1,2092 +1,91 @@
 #!/usr/bin/env python
-"""Scale-up probe: run representative operator shapes at 1x and Nx the
-sf0.1 data (Nx built by exploding each row with a replica index so keys
-stay realistically distributed) and report wall-clock scaling.
+"""Scale-up probe: time registered queries on generated tables at a base
+scale and at N times that scale, and report the wall-clock ratio.
 
-    python tools/scale_probe.py [multiplier] [shape1,shape2]
+    python tools/scale_probe.py [multiplier] [name1,name2]
+
+The multiplier defaults to 10 and the names to ``bench.HEADLINE``.  Both
+table sets are written by ``perfbench/gen.py`` into a temp dir that is
+removed at exit.  Each key is timed at both scales with bench.py's own
+loop (one warm run, then the median of the count-timed runs).
 
 The question this answers is the 100 TB question in miniature: does each
-plan's cost grow ~linearly with data (scan/agg/join/window shapes should),
-and does anything blow up super-linearly (a pair join without blocking
-would).  Results are recorded in SCALE.md.
+plan's cost grow ~linearly with data, or does something blow up
+super-linearly (a pair join without blocking would)?  A ratio above 1.5x
+the multiplier is flagged SUPER-LINEAR.  A key that raises prints
+``name: FAIL <exception>`` (its traceback on stderr) and the probe goes
+on; the exit status is 1 if any key failed.  Results are recorded in
+SCALE.md.
 """
 
 from __future__ import annotations
 
+import importlib.util
 import os
 import sys
-import time
+import tempfile
+import traceback
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# gen.py's scale 0.1 has sf0.1's row counts (lineitem 600,000, orders
+# 150,000, events 100,000, documents 5,000), the corpus bench.py times.
+BASE_SCALE = 0.1
+# One fixed seed, so reruns and both scales draw from the same generator.
+SEED = 7
 
 
-def main() -> None:
-    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
-    from pyspark.sql import functions as F
+def _load(name: str, rel: str):
+    """Load a file of the checkout by path (``perfbench/`` is no package)."""
+    spec = importlib.util.spec_from_file_location(name, os.path.join(REPO, rel))
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
 
-    from cassandra_snap_to_hadoop_spark.io import Tables
-    from cassandra_snap_to_hadoop_spark.session import get_spark
 
-    mult = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-    sf_dir = "/root/testdata/sf0.1"
+def main(argv: list[str] | None = None) -> int:
+    argv = sys.argv[1:] if argv is None else argv
+    if REPO not in sys.path:
+        sys.path.insert(0, REPO)
+    import bench
+    from cassandra_snap_to_hadoop_spark.registry import load_all
+    from cassandra_snap_to_hadoop_spark.session import drop_persisted, get_spark
+
+    gen = _load("perfbench_gen", "perfbench/gen.py")
+    mult = int(argv[0]) if argv else 10
+    names = argv[1].split(",") if len(argv) > 1 else list(bench.HEADLINE)
     spark = get_spark("scale_probe")
-    t = Tables(spark, sf_dir)
+    registry = load_all()
 
-    # Dedicated chain probe (VERDICT r5 item 7): synthetic PATH graphs are
-    # the diameter worst case hash-min propagation cannot amortize — round
-    # count = path length — while large-star/small-star collapses the same
-    # chain in O(log n) rounds.  Invoked standalone:
-    #   python tools/scale_probe.py 30 cc-chains
-    if len(sys.argv) > 2 and sys.argv[2] == "cc-chains":
-        import time as _time
+    def median_s(name: str, sf_dir: str) -> float:
+        try:
+            return bench._median(bench._timed_runs(registry[name], spark, sf_dir, extend_fast=True))
+        finally:
+            drop_persisted(spark)  # outside the timed region
 
-        from cassandra_snap_to_hadoop_spark.operators.dedup import (
-            dup_clusters,
-            dup_clusters_two_phase,
-        )
-
-        base_len = 200
-        print(f"# cc-chains probe @ base path length {base_len}, multiplier={mult}")
-        for scale, length in (("1x", base_len), (f"{mult}x", base_len * mult)):
-            nodes = spark.range(length).select(F.col("id"))
-            pairs = spark.range(length - 1).select(
-                F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
-            )
-            s_tp: dict = {}
-            t0 = _time.perf_counter()
-            out = dup_clusters_two_phase(
-                nodes, pairs, max_iterations=40, stats=s_tp
-            )
-            n_bad = out.filter(F.col("cluster_id") != 0).count()
-            wall = _time.perf_counter() - t0
+    failed = 0
+    with tempfile.TemporaryDirectory(prefix="scale_probe_") as tmp:
+        base_dir, big_dir = os.path.join(tmp, "1x"), os.path.join(tmp, f"{mult}x")
+        gen.write_tables(SEED, BASE_SCALE, base_dir)
+        gen.write_tables(SEED, BASE_SCALE * mult, big_dir)
+        print(f"# scale probe @ perfbench/gen.py seed={SEED} scale={BASE_SCALE}, "
+              f"multiplier={mult}", flush=True)
+        for name in names:
+            try:
+                base, big = median_s(name, base_dir), median_s(name, big_dir)
+            except Exception as exc:  # report, then probe the next key
+                failed += 1
+                traceback.print_exc()  # stderr; stdout keeps one line per key
+                head = (str(exc).strip().splitlines() or [""])[0][:200]
+                print(f"{name}: FAIL {type(exc).__name__}: {head}", flush=True)
+                continue
+            ratio = big / base if base else float("inf")
             print(
-                f"two-phase {scale} (len={length}): rounds={s_tp['rounds']} "
-                f"wall={wall:.1f}s converged={'YES' if n_bad == 0 else 'NO'}"
+                f"{name}: 1x={base:.2f}s {mult}x={big:.2f}s ratio={ratio:.1f} "
+                f"({'~linear' if ratio <= mult * 1.5 else 'SUPER-LINEAR'})",
+                flush=True,
             )
-        # hash-min at base length only: one round per hop makes longer
-        # chains prohibitive — which is precisely the point.
-        nodes = spark.range(base_len).select(F.col("id"))
-        pairs = spark.range(base_len - 1).select(
-            F.col("id").alias("id_a"), (F.col("id") + 1).alias("id_b")
-        )
-        s_hm: dict = {}
-        t0 = _time.perf_counter()
-        out = dup_clusters(nodes, pairs, max_iterations=base_len + 5, stats=s_hm)
-        n_bad = out.filter(F.col("cluster_id") != 0).count()
-        wall = _time.perf_counter() - t0
-        print(
-            f"hash-min 1x (len={base_len}): rounds={s_hm['rounds']} "
-            f"wall={wall:.1f}s converged={'YES' if n_bad == 0 else 'NO'}"
-        )
-        return
-
-    def amplify(df, key_cols):
-        """Explode each row into `mult` replicas, remapping integer keys so
-        cardinalities scale too (replica r shifts keys by r * 10^9)."""
-        rep = df.withColumn(
-            "__r", F.explode(F.sequence(F.lit(0), F.lit(mult - 1)))
-        ).withColumn("__r", F.col("__r").cast("long"))
-        for k in key_cols:
-            rep = rep.withColumn(
-                k, F.col(k).cast("long") + F.col("__r") * F.lit(1_000_000_000).cast("long")
-            )
-        return rep.drop("__r")
-
-    li1 = t.lineitem
-    liN = amplify(t.lineitem, ["l_orderkey"])
-    sup1 = t.supplier
-    supN = amplify(t.supplier, ["s_suppkey"])
-    o1 = t.orders
-    oN = amplify(t.orders, ["o_orderkey"])
-    e1 = t.events
-    eN = amplify(t.events, ["event_id", "user_id"])
-
-    def agg_shape(li):
-        return (
-            li.groupBy("l_returnflag", "l_linestatus")
-            .agg(
-                F.count("*").alias("n"),
-                (F.sum(F.round(F.col("l_quantity") * 100).cast("long")) / 100.0).alias("qty"),
-            )
-        )
-
-    def join_shape(li, o):
-        return (
-            li.join(o, li.l_orderkey == o.o_orderkey)
-            .groupBy("o_orderpriority")
-            .agg(F.count("*").alias("n"))
-        )
-
-    def window_shape(e):
-        from pyspark.sql.window import Window
-
-        w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-        return (
-            e.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= 3)
-            .groupBy("event_type")
-            .agg(F.count("*").alias("n"))
-        )
-
-    # Curation funnel (quality -> exact dedup -> near-dup) at 1x and Nx,
-    # in BOTH stage-materialization variants: localCheckpoint (in-engine
-    # default) vs write-and-reread parquet (what a production 100 TB run
-    # does between bronze/silver stages).  Documents amplify as EXACT
-    # replicas (doc_id shifted, text unchanged) — the realistic dedup
-    # workload for duplicated data: quality and the exact-dedup hash agg
-    # process Nx rows, the collapse returns survivors to 1x, and the
-    # near-dup pair stage runs on the deduped set (its own scaling is
-    # probed by the j2 shapes; mutating text per replica would fabricate
-    # Jaccard~1 pairs and measure an artificial quadratic instead).
-    import shutil
-    import tempfile
-
-    from cassandra_snap_to_hadoop_spark.operators.curation import curation_funnel
-
-    def amplify_docs(df):
-        rep = df.withColumn("__r", F.explode(F.sequence(F.lit(0), F.lit(mult - 1))))
-        return rep.withColumn(
-            "doc_id",
-            F.col("doc_id").cast("long") + F.col("__r").cast("long") * F.lit(1_000_000_000),
-        ).drop("__r")
-
-    d1 = t.documents
-    dN = amplify_docs(t.documents)
-    probe_dir = tempfile.mkdtemp(prefix="probe_funnel_")
-
-    def parquet_mat(df, stage):
-        out = f"{probe_dir}/{stage}_{time.monotonic_ns()}"
-        df.write.mode("overwrite").parquet(out)
-        return spark.read.parquet(out)
-
-    # Round-3 continuation shapes: inverted index (two hash aggs with
-    # per-term posting buffers that legitimately grow with df), interval
-    # union (one-exchange window sweep), cohort retention (agg + join +
-    # distinct).  Amplified replicas keep term/user/customer distributions
-    # realistic: j50's posting lists grow ~Nx (honest — df floors scale
-    # with corpus size), f16/e22 grow in key cardinality.
-    from cassandra_snap_to_hadoop_spark.operators.text import tokens as _tokens
-
-    def inverted_index_shape(d):
-        tok = d.select(
-            F.col("doc_id").alias("doc"), F.explode(_tokens(F.col("text"))).alias("term")
-        ).filter(F.col("term") != "")
-        tfc = tok.groupBy("doc", "term").agg(F.count("*").alias("tf"))
-        postings = F.array_sort(
-            F.collect_list(
-                F.struct(
-                    F.col("doc").alias("doc"),
-                    F.concat_ws(":", F.col("doc"), F.col("tf")).alias("p"),
-                )
-            )
-        )
-        return (
-            tfc.groupBy("term")
-            .agg(
-                F.count("*").alias("df"),
-                F.md5(F.array_join(F.transform(postings, lambda x: x["p"]), ",")).alias("pm"),
-            )
-            .filter(F.col("df") >= 10)
-        )
-
-    def interval_union_shape(o):
-        from pyspark.sql.window import Window
-
-        lo = F.datediff(F.to_date("o_orderdate"), F.lit("1992-01-01").cast("date")).cast("long")
-        iv = o.select(
-            F.col("o_custkey").alias("cust"),
-            F.col("o_orderkey").alias("k"),
-            lo.alias("lo"),
-            (lo + 1 + F.col("o_orderkey") % 20).cast("long").alias("hi"),
-        )
-        w = Window.partitionBy("cust").orderBy("lo", "hi", "k")
-        prev_max = F.max("hi").over(w.rowsBetween(Window.unboundedPreceding, -1))
-        grouped = iv.withColumn(
-            "grp",
-            F.sum(
-                F.when(prev_max.isNull() | (F.col("lo") > prev_max), 1).otherwise(0)
-            ).over(w.rowsBetween(Window.unboundedPreceding, 0)),
-        )
-        return (
-            grouped.groupBy("cust", "grp")
-            .agg(F.min("lo").alias("blo"), F.max("hi").alias("bhi"), F.count("*").alias("n"))
-            .groupBy("cust")
-            .agg(F.sum(F.col("bhi") - F.col("blo") + 1).alias("covered"))
-        )
-
-    def cohort_shape(e):
-        ev = e.select(
-            "user_id",
-            F.datediff(F.to_date("ts"), F.lit("2024-01-01").cast("date")).cast("long").alias("d"),
-        )
-        firstd = ev.groupBy("user_id").agg(F.min("d").alias("c"))
-        return (
-            ev.join(firstd, "user_id")
-            .select("user_id", "c", (F.col("d") - F.col("c")).alias("off"))
-            .distinct()
-            .groupBy("c", "off")
-            .agg(F.count("*").alias("n"))
-        )
-
-    _STOP = ("the", "a", "an", "of", "and", "to", "in", "is", "")
-
-    def pmi_shape(d):
-        tok = d.select(
-            F.col("doc_id").alias("doc"), F.explode(_tokens(F.col("text"))).alias("term")
-        ).filter((F.col("term") != "") & ~F.col("term").isin(list(_STOP)))
-        dt = tok.distinct()
-        vocab = (
-            dt.groupBy("term").agg(F.count("*").alias("df"))
-            .orderBy(F.col("df").desc(), "term").limit(100).select("term")
-        )
-        dv = dt.join(F.broadcast(vocab), "term").select("doc", "term")
-        a = dv.select("doc", F.col("term").alias("ta"))
-        b = dv.select("doc", F.col("term").alias("tb"))
-        return (
-            a.join(b, "doc")
-            .filter(F.col("ta") < F.col("tb"))
-            .groupBy("ta", "tb")
-            .agg(F.count("*").alias("df_ab"))
-            .filter(F.col("df_ab") >= 5)
-        )
-
-    from cassandra_snap_to_hadoop_spark.operators.dedup import exact_substring_dedup, shingles
-
-    def sparse_cos_shape(d):
-        sh = d.select(F.col("doc_id").alias("doc"), F.explode(shingles(F.col("text"), 3)).alias("s"))
-        stats = sh.groupBy("s").agg(F.count("*").alias("df"))
-        rare = sh.join(stats.filter(F.col("df") <= 50), "s")
-        a = rare.select(F.col("doc").alias("da"), "s")
-        b = rare.select(F.col("doc").alias("db"), "s")
-        return (
-            a.join(b, "s").filter(F.col("da") < F.col("db"))
-            .groupBy("da", "db").agg(F.count("*").alias("shared"))
-        )
-
-    def attribution_shape(e):
-        from pyspark.sql.window import Window as W
-
-        vmicro = F.round(F.col("value") * 1_000_000).cast("long")
-        p = e.filter(F.col("event_type") == "purchase").select(
-            "user_id", F.col("event_id").alias("pid"), F.col("ts").alias("pts"), vmicro.alias("vm")
-        )
-        t = e.filter(F.col("event_type").isin("view", "click")).select(
-            "user_id", F.col("event_id").alias("sid"), F.col("ts").alias("sts"),
-            F.col("event_type").alias("channel")
-        )
-        pairs = p.join(t, "user_id").filter(
-            (F.col("sts") < F.col("pts"))
-            & (F.col("sts") >= F.col("pts") - F.expr("INTERVAL 24 HOURS"))
-        )
-        att = pairs.withColumn("n", F.count("*").over(W.partitionBy("pid"))).withColumn(
-            "rn", F.row_number().over(W.partitionBy("pid").orderBy("sts", "sid"))
-        )
-        micro = F.expr("vm DIV n") + F.when(F.col("rn") == 1, F.col("vm") % F.col("n")).otherwise(0)
-        return att.select("channel", micro.alias("m")).groupBy("channel").agg(F.sum("m").alias("s"))
-
-    def pit_shape(e):
-        from pyspark.sql.window import Window as W
-
-        st = e.filter(F.col("event_type") != "purchase").select(
-            "user_id", "ts", "event_id", F.col("event_type").alias("state"),
-            F.lit(None).cast("long").alias("fid")
-        )
-        fc = e.filter(F.col("event_type") == "purchase").select(
-            "user_id", "ts", "event_id", F.lit(None).cast("string").alias("state"),
-            F.col("event_id").alias("fid")
-        )
-        w = W.partitionBy("user_id").orderBy("ts", "event_id").rowsBetween(W.unboundedPreceding, 0)
-        return (
-            st.unionByName(fc)
-            .withColumn("s", F.last("state", ignorenulls=True).over(w))
-            .filter(F.col("fid").isNotNull())
-            .groupBy("s").agg(F.count("*").alias("n"))
-        )
-
-    from cassandra_snap_to_hadoop_spark.operators.dedup import ppjoin_pairs
-
-    def mark_docs(df):
-        """Weave the replica tag between every word so replicas are
-        dissimilar to each other but keep their in-replica dup structure."""
-        rep = df.withColumn("__r", F.explode(F.sequence(F.lit(0), F.lit(mult - 1))))
-        return rep.select(
-            (F.col("doc_id").cast("long") + F.col("__r").cast("long") * F.lit(1_000_000_000)).alias("doc_id"),
-            F.replace(
-                F.col("text"),
-                F.lit(" "),
-                F.concat(F.lit(" zq"), F.col("__r").cast("string"), F.lit(" ")),
-            ).alias("text"),
-        )
-
-    d1_marked = t.documents.select("doc_id", "text").withColumn(
-        "text", F.replace(F.col("text"), F.lit(" "), F.lit(" zq0 "))
-    )
-    dN_marked = mark_docs(t.documents)
-
-    def ppjoin_shape(d):
-        return ppjoin_pairs(d, "doc_id", "text", k=3, threshold=0.75)
-
-    def bootstrap_shape(o):
-        from cassandra_snap_to_hadoop_spark.queries._util import md5_coin
-
-        cents = F.round(F.col("o_totalprice") * 100).cast("long")
-        ex = o.select(
-            "o_orderkey", cents.alias("c"),
-            F.explode(F.sequence(F.lit(1), F.lit(100))).alias("b"),
-        )
-        gate = md5_coin(F.col("o_orderkey"), F.col("b"))
-        return ex.filter(gate).groupBy("b").agg(F.sum("c").alias("s"), F.count("*").alias("n"))
-
-    from cassandra_snap_to_hadoop_spark.operators.layout import (
-        global_cumsum,
-        global_rank,
-        ntile_expr,
-    )
-
-    def equidepth_shape(li):
-        """e30_equidepth_scalable: two-pass global rank + closed-form
-        ntile over the full fact table — the single-reducer-free global
-        total order (the whole point is that THIS must scale)."""
-        cents = F.round(F.col("l_extendedprice") * 100).cast("long")
-        v = li.select(cents.alias("cents"), "l_orderkey", "l_linenumber")
-        ranked, n = global_rank(
-            v,
-            [F.col("cents"), F.col("l_orderkey"), F.col("l_linenumber")],
-            out_col="__gr",
-            return_total=True,
-        )
-        return ranked.withColumn("bucket", ntile_expr("__gr", n, 16)).groupBy(
-            "bucket"
-        ).agg(F.count("*").alias("n"))
-
-    def vocab_cumsum_shape(d):
-        """j55: term hash agg -> two-pass global rank+cumsum over the term
-        relation (replicated docs keep term cardinality ~1x but counts Nx —
-        the term-relation window input is corpus-sublinear, the claim)."""
-        tc = (
-            d.select(F.explode(_tokens(F.col("text"))).alias("term"))
-            .filter(F.col("term") != "")
-            .groupBy("term")
-            .agg(F.count("*").cast("long").alias("n"))
-        )
-        return global_cumsum(tc, [F.col("n").desc(), F.col("term")], "n")
-
-    def vocab_topk_shape(d):
-        """j44: token agg -> TakeOrderedAndProject top-1000 -> broadcast
-        membership join -> per-doc re-agg (no global rank window)."""
-        toks = d.select("doc_id", F.explode(_tokens(F.col("text"))).alias("tok"))
-        counts = toks.groupBy("tok").agg(F.count("*").alias("cnt"))
-        vocab = (
-            counts.orderBy(F.col("cnt").desc(), F.col("tok"))
-            .limit(1000)
-            .select("tok", F.lit(1).alias("in_vocab"))
-        )
-        return (
-            toks.join(F.broadcast(vocab), "tok", "left")
-            .groupBy("doc_id")
-            .agg(F.sum(F.col("in_vocab").isNull().cast("long")).alias("n_oov"))
-        )
-
-    def recursive_fold_shape(o):
-        """sql_api_recursive_cte's shape: constant-depth (12) UnionLoop —
-        each iteration one distributed frontier⋈base join, so cost should
-        be ~linear in |orders| with a fixed iteration factor."""
-        o.createOrReplaceTempView("probe_orders")
-        return spark.sql(
-            """
-            WITH RECURSIVE base AS (
-                SELECT o_custkey AS ck,
-                       ROW_NUMBER() OVER (PARTITION BY o_custkey
-                                          ORDER BY o_orderdate, o_orderkey) AS rn,
-                       CAST(ROUND(o_totalprice * 100) AS BIGINT) AS amt,
-                       COUNT(*) OVER (PARTITION BY o_custkey) AS n_all
-                FROM probe_orders
-            ), capped AS (
-                SELECT ck, rn, amt, LEAST(n_all, 12) AS nc
-                FROM base WHERE rn <= 12
-            ), chain AS (
-                SELECT ck, rn, nc, amt AS bal FROM capped WHERE rn = 1
-                UNION ALL
-                SELECT b.ck, b.rn, b.nc, (c.bal * 105) DIV 100 + b.amt
-                FROM chain c JOIN capped b ON b.ck = c.ck AND b.rn = c.rn + 1
-            )
-            SELECT ck, bal FROM chain WHERE rn = nc
-            """
-        )
-
-    def bloom_prefilter_shape(d):
-        """j82's shape: history compressed to a ≤ k·m-row broadcast
-        position set (CONSTANT in corpus size), candidates exact-verified.
-        Cost should be ~linear: one scan to build positions, one scan to
-        probe, candidate-subset semi join."""
-        m = 8192
-        docs = d.select(
-            "doc_id",
-            F.md5(
-                F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
-            ).alias("k"),
-        )
-        hist = docs.where("doc_id % 2 = 0")
-        seeds = F.explode(F.array(F.lit(1), F.lit(2), F.lit(3))).alias("seed")
-        hist_pos = (
-            hist.select(seeds, "k")
-            .select("seed", F.pmod(F.xxhash64("k", "seed"), F.lit(m)).alias("pos"))
-            .distinct()
-        )
-        probe = docs.select("doc_id", "k", seeds).select(
-            "doc_id", "k", "seed",
-            F.pmod(F.xxhash64("k", "seed"), F.lit(m)).alias("pos"),
-        )
-        cand = (
-            probe.join(F.broadcast(hist_pos), ["seed", "pos"])
-            .groupBy("doc_id", "k")
-            .agg(F.count("*").alias("hits"))
-            .where("hits = 3")
-        )
-        return cand.join(hist.select("k").distinct(), "k", "left_semi")
-
-    def theil_sen_shape(li):
-        """e51's shape: the pairwise slope join runs over the MONTHLY
-        pre-agg (calendar-bounded), so N× more fact rows must not grow
-        the pair count — cost ~linear, dominated by the pre-agg scan."""
-        monthly = li.groupBy(
-            F.col("l_suppkey").alias("sk"),
-            (F.year("l_shipdate") * 12 + F.month("l_shipdate")).cast("long").alias("m"),
-        ).agg(F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias("rev"))
-        a, b = monthly.alias("a"), monthly.alias("b")
-        pairs = a.join(
-            b, (F.col("a.sk") == F.col("b.sk")) & (F.col("b.m") > F.col("a.m"))
-        ).select(
-            F.col("a.sk").alias("sk"),
-            F.expr(
-                "CASE WHEN b.rev >= a.rev"
-                " THEN ((b.rev - a.rev) * 1000000) DIV (b.m - a.m)"
-                " ELSE -(((a.rev - b.rev) * 1000000) DIV (b.m - a.m)) END"
-            ).alias("slope"),
-        )
-        return pairs.groupBy("sk").agg(F.count("*").alias("n"))
-
-    def minhash_md5_shape(d):
-        """j2_minhash_lsh_md5's shape: 16 md5 signature mins + banded
-        self-join.  Marked replicas (dissimilar across replicas, original
-        in-replica dup structure) keep candidate volume ~linear — the
-        banding claim."""
-        from cassandra_snap_to_hadoop_spark.operators.dedup import shingles
-
-        ex = d.select(
-            "doc_id", F.explode(shingles(F.col("text"), 3)).alias("sh")
-        )
-        mh = ex.groupBy("doc_id").agg(
-            *[
-                F.min(
-                    F.conv(
-                        F.substring(
-                            F.md5(F.concat(F.lit(f"{i}:"), F.col("sh"))), 1, 15
-                        ),
-                        16,
-                        10,
-                    ).cast("long")
-                ).alias(f"mh_{i}")
-                for i in range(16)
-            ]
-        )
-        band_arr = F.array(
-            *[
-                F.concat_ws(
-                    "|", *[F.col(f"mh_{b * 4 + r}") for r in range(4)]
-                )
-                for b in range(4)
-            ]
-        )
-        bands = mh.select("doc_id", F.posexplode(band_arr).alias("band", "bkey"))
-        a, b = bands.alias("a"), bands.alias("b")
-        return (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bkey") == F.col("b.bkey"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(F.col("a.doc_id"), F.col("b.doc_id"))
-            .distinct()
-        )
-
-    emb1 = t.embeddings
-    embN = amplify(t.embeddings, ["vec_id"])
-
-    def kmeans_shape(emb):
-        """j86's per-iteration shape: broadcast-centroid distance join +
-        argmin + truncating-mean update.  Centroids stay K x dims rows at
-        any corpus size — per-iteration cost must be ~linear in points."""
-        pts = emb.select(
-            "vec_id", F.posexplode("embedding").alias("dim", "v")
-        ).select(
-            "vec_id",
-            "dim",
-            F.round(F.col("v").cast("double") * 1000000.0).cast("long").alias("pv"),
-        )
-        seeds = (
-            emb.select("vec_id").orderBy("vec_id").limit(4)
-            .select(F.col("vec_id").alias("cid"))
-        )
-        cent = pts.join(F.broadcast(seeds), pts.vec_id == seeds.cid).select(
-            "cid", "dim", F.col("pv").alias("cv")
-        )
-        diff = F.col("pv") - F.col("cv")
-        dist = (
-            pts.join(F.broadcast(cent), "dim")
-            .groupBy("vec_id", "cid")
-            .agg(F.sum(diff * diff).alias("d"))
-        )
-        a = dist.groupBy("vec_id").agg(F.min(F.struct("d", "cid")).alias("m"))
-        return a.groupBy(F.col("m.cid")).agg(F.count("*").alias("n"))
-
-    def dbscan_shape(o):
-        """j87's grid probe at CONSTANT density: replicas are shifted to
-        disjoint y bands (60 > the 50-unit plane height), so per-cell load
-        stays 1x and candidate volume scales ~linearly.  (N x density in a
-        FIXED plane is inherently pair-quadratic — that regime needs a
-        smaller eps, not a better join.)"""
-        pts = o.select(
-            F.col("o_orderkey").alias("id"),
-            F.expr("unix_micros(o_orderdate) DIV 86400000000").alias("x"),
-            (
-                F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT) DIV 1000000")
-                + F.expr("o_orderkey DIV 1000000000") * 60  # replica index -> disjoint band
-            ).alias("y"),
-        ).filter(
-            (F.col("x") >= F.expr("unix_micros(TIMESTAMP '1997-01-01') DIV 86400000000"))
-            & (F.col("x") < F.expr("unix_micros(TIMESTAMP '1997-02-01') DIV 86400000000"))
-        )
-        e = 3
-        home = pts.select(
-            "id", "x", "y",
-            F.floor(F.col("x") / e).alias("cx"),
-            F.floor(F.col("y") / e).alias("cy"),
-        )
-        offsets = F.array(
-            *[
-                F.struct(F.lit(dx).alias("dx"), F.lit(dy).alias("dy"))
-                for dx in (-1, 0, 1)
-                for dy in (-1, 0, 1)
-            ]
-        )
-        probes = home.select(
-            F.col("id").alias("a_id"),
-            F.col("x").alias("ax"),
-            F.col("y").alias("ay"),
-            F.explode(offsets).alias("o"),
-            "cx",
-            "cy",
-        ).select(
-            "a_id", "ax", "ay",
-            (F.col("cx") + F.col("o.dx")).alias("pcx"),
-            (F.col("cy") + F.col("o.dy")).alias("pcy"),
-        )
-        dist2 = (F.col("ax") - F.col("x")) * (F.col("ax") - F.col("x")) + (
-            F.col("ay") - F.col("y")
-        ) * (F.col("ay") - F.col("y"))
-        return (
-            probes.join(
-                home.select("id", "x", "y", "cx", "cy"),
-                (F.col("pcx") == F.col("cx")) & (F.col("pcy") == F.col("cy")),
-            )
-            .filter(dist2 <= e * e)
-            .groupBy("a_id")
-            .agg(F.count("*").alias("n"))
-        )
-
-    def rake_shape(d):
-        """j88's shape: per-doc segmentation window + word/phrase hash
-        aggs.  Exact replicas are the heavy case (same phrase keys, Nx
-        mass per key) — must stay ~linear because every agg is
-        map-side-combinable."""
-        from pyspark.sql import Window as W
-
-        from cassandra_snap_to_hadoop_spark.operators.dedup import normalize_text
-
-        stops = ("the", "a", "of", "and", "to", "in", "is", "on", "for", "with")
-        words = d.select(
-            "doc_id",
-            F.posexplode(F.split(normalize_text(F.col("text")), " ")).alias("pos", "w"),
-        ).withColumn("stop", F.when(F.col("w").isin(*stops), 1).otherwise(0))
-        grouped = words.withColumn(
-            "grp", F.sum("stop").over(W.partitionBy("doc_id").orderBy("pos"))
-        )
-        members = grouped.filter(F.col("stop") == 0)
-        phrases = members.groupBy("doc_id", "grp").agg(F.count("*").alias("n_words"))
-        return (
-            members.join(phrases, ["doc_id", "grp"])
-            .groupBy("w")
-            .agg(F.count("*").alias("freq"), F.sum("n_words").alias("deg"))
-        )
-
-    # Round-5 shapes: CC propagation over the banded dup graph (marked
-    # replicas keep in-replica dup structure, so edges and components
-    # scale ~Nx while round count stays constant), winnowing fingerprint
-    # pair generation (marked replicas — exact replicas would measure the
-    # output-quadratic all-duplicates case j57 covers), and SRP bucketed
-    # KNN (exact replicas multiply bucket occupancy Nx — per-query
-    # candidate volume linear in occupancy is the claim).
-    from cassandra_snap_to_hadoop_spark.operators.dedup import (
-        dup_clusters,
-        md5_minhash_bands,
-    )
-
-    def cc_shape(d):
-        bands = md5_minhash_bands(d, n_hashes=16, rows_per_band=4)
-        hubs = (
-            bands.groupBy("band", "bkey")
-            .agg(F.min("doc_id").alias("hub"), F.count("*").alias("n"))
-            .filter(F.col("n") >= 2)
-            .drop("n")
-        )
-        pairs = (
-            bands.join(hubs, ["band", "bkey"])
-            .filter(F.col("doc_id") != F.col("hub"))
-            .select(F.col("hub").alias("id_a"), F.col("doc_id").alias("id_b"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        nodes = d.select(F.col("doc_id").alias("id"))
-        return (
-            dup_clusters(nodes, pairs, max_iterations=10)
-            .groupBy("cluster_id")
-            .agg(F.count("*").alias("n"))
-            .filter(F.col("n") >= 2)
-        )
-
-    def winnow_shape(d):
-        from pyspark.sql.window import Window as W
-
-        words = F.split(
-            F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " ")), " "
-        )
-        toks = d.select("doc_id", words.alias("words")).filter(F.size("words") >= 4)
-        grams = toks.select(
-            "doc_id",
-            (F.size("words") - 3).alias("n_grams"),
-            F.posexplode(
-                F.expr(
-                    "transform(sequence(1, size(words) - 3),"
-                    " i -> concat_ws(' ', slice(words, i, 4)))"
-                )
-            ).alias("pos0", "g"),
-        ).select(
-            "doc_id",
-            "n_grams",
-            (F.col("pos0") + 1).alias("pos"),
-            F.conv(F.substring(F.md5("g"), 1, 15), 16, 10).cast("long").alias("h"),
-        )
-        w = W.partitionBy("doc_id").orderBy("pos").rowsBetween(0, 3)
-        fps = (
-            grams.withColumn("fp", F.min("h").over(w))
-            .filter(F.col("pos") <= F.col("n_grams") - 3)
-            .select("doc_id", "fp")
-            .distinct()
-        )
-        freq = fps.groupBy("fp").agg(F.count("*").alias("df"))
-        kept = fps.join(freq.filter(F.col("df") <= 50), "fp")
-        a = kept.select("fp", F.col("doc_id").alias("id_a"))
-        b = kept.select(F.col("fp").alias("fp_b"), F.col("doc_id").alias("id_b"))
-        return (
-            a.join(b, (F.col("fp") == F.col("fp_b")) & (F.col("id_a") < F.col("id_b")))
-            .groupBy("id_a", "id_b")
-            .agg(F.count("*").alias("shared"))
-            .filter(F.col("shared") >= 2)
-        )
-
-    def srp_knn_shape(emb):
-        ex = emb.select(
-            "vec_id", F.posexplode("embedding").alias("dim", "x")
-        ).select(
-            "vec_id",
-            "dim",
-            F.round(F.col("x").cast("double") * 1000000).cast("long").alias("micro"),
-        )
-        dims = ex.select("dim").distinct()
-        planes = spark.range(6).select(F.col("id").cast("int").alias("p"))
-        weights = dims.crossJoin(F.broadcast(planes)).select(
-            "p",
-            "dim",
-            (
-                F.conv(
-                    F.substring(
-                        F.md5(
-                            F.concat_ws(
-                                "",
-                                F.lit("srp:"),
-                                F.col("p").cast("string"),
-                                F.lit(":"),
-                                F.col("dim").cast("string"),
-                            )
-                        ),
-                        1,
-                        15,
-                    ),
-                    16,
-                    10,
-                ).cast("long")
-                % 2000001
-                - 1000000
-            ).alias("w"),
-        )
-        dots = (
-            ex.join(F.broadcast(weights), "dim")
-            .groupBy("vec_id", "p")
-            .agg(F.sum(F.col("micro") * F.col("w")).alias("dot"))
-        )
-        buckets = dots.groupBy("vec_id").agg(
-            F.sum(
-                F.when(F.col("dot") >= 0, F.expr("shiftleft(CAST(1 AS BIGINT), p)"))
-                .otherwise(F.lit(0))
-            ).alias("bucket")
-        )
-        q = buckets.filter(F.col("vec_id") < 8).select(
-            F.col("vec_id").alias("q_id"), "bucket"
-        )
-        cand = q.join(
-            buckets.select(F.col("vec_id").alias("n_id"), F.col("bucket").alias("b2")),
-            (F.col("bucket") == F.col("b2")) & (F.col("q_id") != F.col("n_id")),
-        ).select("q_id", "n_id")
-        return cand.groupBy("q_id").agg(F.count("*").alias("n_cand"))
-
-    def dsir_shape(d):
-        """j101: bigram explode -> two <=B-row feature aggs -> broadcast
-        scoring join -> per-doc agg (round 6)."""
-        from cassandra_snap_to_hadoop_spark.registry import load_all
-
-        load_all()
-        from cassandra_snap_to_hadoop_spark.operators.text import tokens as toks
-
-        w = toks(F.col("text"))
-        bigrams = F.expr(
-            "transform(sequence(1, size(words) - 1),"
-            " i -> concat_ws(' ', slice(words, i, 2)))"
-        )
-        bg = (
-            d.select("doc_id", "lang", w.alias("words"))
-            .filter(F.size("words") >= 2)
-            .select("doc_id", "lang", F.explode(bigrams).alias("bg"))
-            .select(
-                "doc_id",
-                "lang",
-                F.pmod(
-                    F.conv(F.substring(F.md5(F.col("bg")), 1, 15), 16, 10).cast(
-                        "long"
-                    ),
-                    F.lit(4096),
-                ).alias("f"),
-            )
-        )
-        ct = bg.where(F.col("lang") == "en").groupBy("f").agg(
-            F.count("*").alias("c_t")
-        )
-        cs = bg.groupBy("f").agg(F.count("*").alias("c_s"))
-        tt = bg.where(F.col("lang") == "en").agg(F.count("*").alias("n_t"))
-        ts_ = bg.agg(F.count("*").alias("n_s"))
-        feat = (
-            cs.join(ct, "f", "left")
-            .crossJoin(F.broadcast(tt))
-            .crossJoin(F.broadcast(ts_))
-            .select(
-                "f",
-                F.expr(
-                    "CAST(FLOOR(ln(((COALESCE(c_t, 0) + 1) * (n_s + 4096)) * 1.0"
-                    " / ((c_s + 1) * (n_t + 4096))) * 1000000) AS BIGINT)"
-                ).alias("r"),
-            )
-        )
-        return (
-            bg.join(F.broadcast(feat), "f")
-            .groupBy("doc_id")
-            .agg(F.count("*").alias("n"), F.sum("r").alias("w_micro"))
-        )
-
-    def kcore_shape(li):
-        """j100: fixed-round peel over the bipartite incidence graph
-        (round 6) — edges localCheckpoint once, 8 bounded rounds."""
-        edges = (
-            li.where(F.col("l_quantity") >= 25)
-            .select(
-                F.col("l_orderkey").alias("a"),
-                (F.col("l_partkey") + F.lit(10**9).cast("long")).alias("b"),
-            )
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        active = (
-            edges.select(F.col("a").alias("node"))
-            .union(edges.select(F.col("b").alias("node")))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        deg = None
-        for _ in range(8):
-            both = edges.join(
-                active.select(F.col("node").alias("a")), "a"
-            ).join(active.select(F.col("node").alias("b")), "b")
-            deg = (
-                both.select(F.col("a").alias("node"))
-                .unionAll(both.select(F.col("b").alias("node")))
-                .groupBy("node")
-                .agg(F.count("*").alias("deg"))
-            )
-            active = (
-                deg.where(F.col("deg") >= 3)
-                .select("node")
-                .localCheckpoint(eager=True)
-            )
-        return deg.where(F.col("deg") >= 3)
-
-    def mask_overlap_shape(d):
-        """e24-exact twin: per-shingle source-set masks -> mask histogram
-        -> pair sums over the KB relation (round 6) — NO join on values."""
-        from cassandra_snap_to_hadoop_spark.operators.text import tokens as toks
-
-        w = toks(F.col("text"))
-        shingles = F.expr(
-            "transform(sequence(1, size(words) - 2),"
-            " i -> concat_ws(' ', slice(words, i, 3)))"
-        )
-        sh0 = (
-            d.select("source", w.alias("words"))
-            .filter(F.size("words") >= 3)
-            .select("source", F.explode(shingles).alias("s"))
-            .distinct()
-        )
-        mask = sh0.groupBy("s").agg(
-            F.sort_array(F.collect_set("source")).alias("m")
-        )
-        hist = mask.groupBy("m").agg(F.count("*").alias("cnt"))
-        srcs = d.select("source").distinct()
-        pairs = (
-            srcs.select(F.col("source").alias("src_a"))
-            .join(
-                srcs.select(F.col("source").alias("src_b")),
-                F.col("src_a") < F.col("src_b"),
-            )
-        )
-        return (
-            hist.crossJoin(F.broadcast(pairs))
-            .groupBy("src_a", "src_b")
-            .agg(
-                F.sum(
-                    F.when(F.array_contains("m", F.col("src_a")), F.col("cnt"))
-                    .otherwise(0)
-                ).alias("n_a")
-            )
-        )
-
-    def pav_shape(d):
-        """e75's shape (round 7): one corpus scan -> 10-row bin agg, then
-        THREE unrolled PAV merge rounds over the KB pooled relation
-        (broadcast joins + localCheckpoints).  The claim: the volume term
-        is the scan; the merge rounds are constant-cost at any corpus
-        size (every post-agg relation is <= 10 rows)."""
-        score = d.select(
-            (F.length("text") % 10).cast("long").alias("bin"),
-            (F.col("doc_id") % 2).cast("long").alias("y"),
-        )
-        bins = score.groupBy("bin").agg(
-            F.count("*").cast("long").alias("n"),
-            F.sum("y").cast("long").alias("pos"),
-        ).withColumn("p", F.col("bin")).localCheckpoint(eager=True)
-        for _ in range(3):
-            pools = bins.groupBy("p").agg(
-                F.sum("n").alias("agg_n"), F.sum("pos").alias("agg_pos")
-            )
-            px = pools.select(F.col("p").alias("xp"))
-            py = pools.select(F.col("p").alias("yp"))
-            succ = (
-                px.join(F.broadcast(py), F.col("yp") > F.col("xp"))
-                .groupBy(F.col("xp").alias("pi"))
-                .agg(F.min("yp").alias("pj"))
-            )
-            viol = (
-                succ.join(pools.select(F.col("p").alias("pi"),
-                                       F.col("agg_pos").alias("li_pos"),
-                                       F.col("agg_n").alias("li_n")), "pi")
-                .join(pools.select(F.col("p").alias("pj"),
-                                   F.col("agg_pos").alias("rj_pos"),
-                                   F.col("agg_n").alias("rj_n")), "pj")
-                .where(F.col("li_pos") * F.col("rj_n")
-                       > F.col("rj_pos") * F.col("li_n"))
-                .select(F.col("pj").alias("from_p"), F.col("pi").alias("to_p"))
-            )
-            bins = (
-                bins.withColumnRenamed("p", "bp")
-                .join(F.broadcast(viol), F.col("bp") == F.col("from_p"), "left")
-                .select("bin", "n", "pos",
-                        F.coalesce(F.col("to_p"), F.col("bp")).alias("p"))
-                .localCheckpoint(eager=True)
-            )
-        return bins.groupBy("p").agg(F.sum("n").alias("pool_n"))
-
-    # Round-7 iterative shapes (VERDICT r7 item 7) -----------------------
-
-    def ktruss_shape(li, n_blocks):
-        """j107's wedge-join peel: sparse co-occurrence edges on a vertex
-        domain of n_blocks disjoint 2048-vertex blocks (amplified rows
-        land in per-replica blocks via the shifted orderkey, so degree —
-        and with it wedge fan-out per edge — stays 1x while |E| grows
-        Nx).  THREE peel rounds of symmetrize + two hash equi joins +
-        support agg; the claim is per-round cost linear in surviving
-        wedges, never quadratic in |E|."""
-        blk = (F.col("l_orderkey").cast("long") / F.lit(1_000_000_000)).cast(
-            "long"
-        ) % n_blocks
-        base_u = F.least(F.col("l_orderkey") % 2048, F.col("l_partkey") % 2048)
-        base_v = F.greatest(F.col("l_orderkey") % 2048, F.col("l_partkey") % 2048)
-        e = (
-            li.where(F.col("l_orderkey") % 10 == 0)
-            .select(
-                (base_u + blk * 2048).alias("u"),
-                (base_v + blk * 2048).alias("v"),
-            )
-            .where(F.col("u") % 2048 != F.col("v") % 2048)
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        for _ in range(3):
-            sym = e.unionByName(
-                e.select(F.col("v").alias("u"), F.col("u").alias("v"))
-            )
-            a = sym.select(F.col("u").alias("au"), F.col("v").alias("x"))
-            b = sym.select(F.col("u").alias("bu"), F.col("v").alias("bx"))
-            sup = (
-                e.join(a, F.col("au") == F.col("u"))
-                .join(b, (F.col("bu") == F.col("v")) & (F.col("bx") == F.col("x")))
-                .groupBy("u", "v")
-                .agg(F.count("*").alias("sup"))
-            )
-            e = (
-                sup.where(F.col("sup") >= 2)
-                .select("u", "v")
-                .localCheckpoint(eager=True)
-            )
-        return e.groupBy().agg(F.count("*").alias("n_edges"))
-
-    def maxcover_step_shape(d):
-        """j109's per-step cost: doc->shingle postings anti-joined against
-        the covered set, per-doc gain agg, 1-row argmax.  Amplified docs
-        are exact replicas, so postings grow Nx while the covered set
-        (one winner's shingles) stays 1x — the claim is each greedy step
-        is one linear scan of the postings, and the driver sees ONE row
-        per step."""
-        from cassandra_snap_to_hadoop_spark.operators.text import tokens as toks
-
-        w = toks(F.col("text"))
-        shingles = F.expr(
-            "transform(sequence(1, size(words) - 2),"
-            " i -> concat_ws(' ', slice(words, i, 3)))"
-        )
-        ds = (
-            d.select("doc_id", w.alias("words"))
-            .where(F.size("words") >= 3)
-            .select("doc_id", F.explode(shingles).alias("sh"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        w0 = (
-            ds.groupBy("doc_id")
-            .agg(F.count("*").alias("gain"))
-            .orderBy(F.col("gain").desc(), "doc_id")
-            .limit(1)
-        )
-        covered = (
-            ds.join(
-                F.broadcast(w0.select("doc_id")), "doc_id"
-            ).select("sh").distinct().localCheckpoint(eager=True)
-        )
-        return (
-            ds.join(covered, "sh", "left_anti")
-            .groupBy("doc_id")
-            .agg(F.count("*").alias("gain"))
-            .orderBy(F.col("gain").desc(), "doc_id")
-            .limit(1)
-        )
-
-    def merkle_shape(li):
-        """b14's anti-entropy shape: per-row md5 version hashes reduced to
-        16 per-range Merkle digests BEFORE any comparison; the replica
-        diff joins only rows in out-of-sync ranges.  The claim: the
-        volume term is two row-hash scans + one 16-row digest agg each;
-        the repair anti-join is bounded by the out-of-sync subset."""
-        a = li.select(
-            F.col("l_orderkey").alias("k"),
-            F.col("l_linenumber").alias("ck"),
-            F.round("l_quantity").cast("long").alias("q"),
-        )
-        b = a.where(F.col("k") % 997 != 0).select(
-            "k",
-            "ck",
-            F.when(F.col("k") % 499 == 0, F.col("q") + 1)
-            .otherwise(F.col("q"))
-            .alias("q"),
-        )
-
-        def hashed(df):
-            rng = F.conv(
-                F.substring(F.md5(F.concat_ws(":", "k", "ck")), 1, 1), 16, 10
-            ).cast("long")
-            return df.select(
-                rng.alias("rng"),
-                F.md5(F.concat_ws(":", "k", "ck", "q")).alias("rh"),
-            ).distinct()
-
-        ha, hb = hashed(a), hashed(b)
-        ma = ha.groupBy("rng").agg(
-            F.md5(F.concat_ws("", F.sort_array(F.collect_list("rh")))).alias("mha")
-        )
-        mb = hb.groupBy("rng").agg(
-            F.md5(F.concat_ws("", F.sort_array(F.collect_list("rh")))).alias("mhb")
-        )
-        bad = (
-            ma.join(mb, "rng", "left")
-            .where(F.col("mhb").isNull() | (F.col("mha") != F.col("mhb")))
-            .select("rng")
-        )
-        return (
-            ha.join(hb, ["rng", "rh"], "left_anti")
-            .join(F.broadcast(bad), "rng")
-            .groupBy("rng")
-            .agg(F.count("*").alias("n_repair"))
-        )
-
-    def markov_shape(e):
-        """f41's shape: one lag window + transition-count agg is the
-        volume term; the 8-step power iteration runs on the KB
-        (src,dst,p) relation and is constant-cost at any corpus size.
-        Amplified events remap user ids per replica, so per-user density
-        (the window's sort unit) stays 1x."""
-        from pyspark.sql.window import Window
-
-        seq = e.select(
-            "event_type",
-            F.lag("event_type")
-            .over(Window.partitionBy("user_id").orderBy("ts", "event_id"))
-            .alias("prev_type"),
-        )
-        c = (
-            seq.where(F.col("prev_type").isNotNull())
-            .groupBy(F.col("prev_type").alias("src"), F.col("event_type").alias("dst"))
-            .agg(F.count("*").cast("long").alias("n"))
-        )
-        rt = c.groupBy("src").agg(F.sum("n").cast("long").alias("tot"))
-        p = (
-            c.join(rt, "src")
-            .select(
-                "src", "dst",
-                F.expr("CAST(n * 1000000 DIV tot AS BIGINT)").alias("p_micro"),
-            )
-            .localCheckpoint(eager=True)
-        )
-        types = e.select(F.col("event_type").alias("et")).distinct()
-        k = types.agg(F.count("*").cast("long").alias("nk"))
-        v = (
-            types.crossJoin(F.broadcast(k))
-            .select("et", F.expr("CAST(1000000 DIV nk AS BIGINT)").alias("m"))
-            .localCheckpoint(eager=True)
-        )
-        for _ in range(8):
-            v = (
-                v.join(p, F.col("src") == F.col("et"))
-                .groupBy(F.col("dst").alias("net"))
-                .agg(F.expr("CAST(SUM(m * p_micro) DIV 1000000 AS BIGINT)").alias("nm"))
-                .select(F.col("net").alias("et"), F.col("nm").alias("m"))
-                .localCheckpoint(eager=True)
-            )
-        return v
-
-    def cas_fold_shape(li):
-        """b17's shape: the MIN-dedup + per-key LAG window are the volume
-        terms; the 7 lockstep state⋈proposals joins stay on the SAME pk
-        key (co-partitioned, lineage truncated per round), so round cost
-        is linear in keys and the round COUNT is the constant 7 —
-        amplified orderkeys scale key cardinality while per-key ballot
-        density (the fold depth) stays 1x."""
-        from pyspark.sql.window import Window
-
-        dedup = li.groupBy(
-            F.col("l_orderkey").alias("pk"), F.col("l_linenumber").alias("ln")
-        ).agg(
-            F.min(F.col("l_quantity").cast("long")).alias("q"),
-            F.min("l_partkey").alias("pkey"),
-            F.min(F.round(F.col("l_discount") * 100).cast("long")).alias("dc"),
-        )
-        props = dedup.select(
-            "pk", "ln", F.col("q").alias("newv"),
-            F.when(F.col("ln") == 1, F.col("pkey") % 2)
-            .when(F.col("dc") >= 5, F.lit(0))
-            .otherwise(F.lag("q").over(Window.partitionBy("pk").orderBy("ln")))
-            .cast("long").alias("expected"),
-        ).localCheckpoint(eager=True)
-        state = props.select("pk").distinct().select(
-            "pk", F.lit(0).cast("long").alias("state")
-        )
-        for j in range(1, 8):
-            pj = props.where(F.col("ln") == j).select(
-                "pk", F.col("newv").alias("__nv"), F.col("expected").alias("__ex")
-            )
-            state = (
-                state.join(pj, "pk", "left")
-                .select(
-                    "pk",
-                    F.when(F.col("__ex") == F.col("state"), F.col("__nv"))
-                    .otherwise(F.col("state")).alias("state"),
-                )
-                .localCheckpoint(eager=True)
-            )
-        return state
-
-    def heaps_shape(d):
-        """j117's shape: tokenize + the (source,doc)/(source,token) hash
-        aggs are the volume terms; the cumulative windows run per source
-        over the DOC relation and the checkpoint join + OLS folds are KB.
-        Amplified docs multiply both docs and tokens linearly."""
-        from pyspark.sql.window import Window
-
-        tok = d.select(
-            "source", "doc_id",
-            F.explode(
-                F.split(F.trim(F.regexp_replace(F.lower("text"), r"\s+", " ")), " ")
-            ).alias("w"),
-        )
-        per_doc = tok.groupBy("source", "doc_id").agg(
-            F.count("*").cast("long").alias("tc")
-        )
-        first_doc = tok.groupBy("source", "w").agg(F.min("doc_id").alias("fd"))
-        new_types = first_doc.groupBy("source", F.col("fd").alias("doc_id")).agg(
-            F.count("*").cast("long").alias("nv")
-        )
-        w_cum = (
-            Window.partitionBy("source").orderBy("doc_id")
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        return (
-            per_doc.join(new_types, ["source", "doc_id"], "left")
-            .select(
-                "source",
-                F.sum("tc").over(w_cum).alias("n_cum"),
-                F.sum(F.coalesce(F.col("nv"), F.lit(0))).over(w_cum).alias("v_cum"),
-            )
-            .groupBy("source")
-            .agg(F.max("n_cum").alias("n"), F.max("v_cum").alias("v"))
-        )
-
-    def mmr_lockstep_shape(emb):
-        """j121's shape: the volume terms are ONE quantized explode and
-        the 8×|V| relevance dot join (the brute-force tier an IVF/LSH
-        preselect drops in above); everything after — pairwise candidate
-        dots, redundancy maxes, per-query argmaxes — runs in greedy
-        LOCKSTEP on the (8 queries × 12 candidates) KB relation for 3
-        rounds.  Amplified vec_ids scale the corpus while replica-0
-        keeps the 8 query vectors, so candidate pools stay top-12 per
-        query and the greedy rounds stay KB — the ratio should track the
-        relevance join, ~linear."""
-        from pyspark.sql.window import Window
-
-        ex = emb.select(
-            "vec_id", F.posexplode("embedding").alias("dim", "x")
-        ).select(
-            "vec_id", "dim",
-            F.round(F.col("x") * 1_000_000).cast("long").alias("micro"),
-        ).localCheckpoint(eager=True)
-        q = ex.where(F.col("vec_id") < 8).select(
-            F.col("vec_id").alias("qid"), F.col("dim").alias("qd"),
-            F.col("micro").alias("qm"),
-        )
-        rel = (
-            ex.join(F.broadcast(q), (F.col("qd") == F.col("dim"))
-                    & (F.col("vec_id") != F.col("qid")))
-            .groupBy("qid", "vec_id")
-            .agg(F.sum(F.col("micro") * F.col("qm")).cast("long").alias("rel"))
-        )
-        w = Window.partitionBy("qid").orderBy(F.col("rel").desc(), F.col("vec_id"))
-        cand = (
-            rel.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= 12).drop("rn")
-            .localCheckpoint(eager=True)
-        )
-        cx = cand.join(ex, "vec_id").select("qid", "vec_id", "dim", "micro")
-        a = cx.select("qid", F.col("vec_id").alias("ida"),
-                      F.col("dim").alias("da"), F.col("micro").alias("ma"))
-        b = cx.select(F.col("qid").alias("qb"), F.col("vec_id").alias("idb"),
-                      F.col("dim").alias("db"), F.col("micro").alias("mb"))
-        pd_ = (
-            a.join(b, (F.col("qb") == F.col("qid")) & (F.col("db") == F.col("da"))
-                   & (F.col("idb") != F.col("ida")))
-            .groupBy("qid", "ida", "idb")
-            .agg(F.sum(F.col("ma") * F.col("mb")).cast("long").alias("dot"))
-            .localCheckpoint(eager=True)
-        )
-        sel = (
-            cand.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") == 1).select("qid", F.col("vec_id"))
-        )
-        out = sel
-        for _ in range(3):
-            red = (
-                pd_.join(sel.select(F.col("qid").alias("qs"),
-                                    F.col("vec_id").alias("ids")),
-                         (F.col("qs") == F.col("qid"))
-                         & (F.col("ids") == F.col("idb")))
-                .groupBy(F.col("qid").alias("rqid"), F.col("ida"))
-                .agg(F.max("dot").cast("long").alias("red"))
-            )
-            rem = cand.join(sel, ["qid", "vec_id"], "left_anti")
-            scored = rem.join(
-                red, (F.col("ida") == F.col("vec_id"))
-                & (F.col("rqid") == F.col("qid"))
-            ).select("qid", "vec_id",
-                     (7 * F.col("rel") - 3 * F.col("red")).alias("score"))
-            wp = Window.partitionBy("qid").orderBy(
-                F.col("score").desc(), F.col("vec_id"))
-            pick = (
-                scored.withColumn("rn", F.row_number().over(wp))
-                .where(F.col("rn") == 1).select("qid", "vec_id")
-                .localCheckpoint(eager=True)
-            )
-            sel = sel.unionByName(pick)
-            out = out.unionByName(pick)
-        return out
-
-    def hits_shape(li):
-        """j112's shape: the initial edge distinct is the ONLY
-        volume-scaled stage (amplified orderkeys fold into the same
-        512+512 node domain, densifying edges toward the 512×512 cap);
-        each of the 6 half-steps is one |E| hash join + hash agg + a
-        1-row total broadcast on KB relations — ratio should track the
-        distinct, sub-linear once edges saturate."""
-        e = (
-            li.where(F.col("l_orderkey") % 10 == 0)
-            .select((F.col("l_orderkey") % 512).alias("u"),
-                    (F.col("l_partkey") % 512).alias("v"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        h = e.select("u").distinct().select(
-            "u", F.lit(1_000_000).cast("long").alias("s"))
-
-        def half(scores, frm, to):
-            raw = (
-                e.join(scores.withColumnRenamed(frm, "__k"),
-                       F.col("__k") == F.col(frm))
-                .groupBy(to).agg(F.sum("s").cast("long").alias("r"))
-            )
-            tot = raw.agg(F.sum("r").cast("long").alias("t"))
-            return (
-                raw.crossJoin(F.broadcast(tot))
-                .select(F.col(to),
-                        F.expr("CAST(r * 1000000 DIV t AS BIGINT)").alias("s"))
-                .localCheckpoint(eager=True)
-            )
-
-        for _ in range(3):
-            a = half(h, "u", "v").withColumnRenamed("v", "__a")
-            h = half(a.select(F.col("__a").alias("v"), "s"), "v", "u")
-        return h
-
-    def ewma_lockstep_shape(ev, n_types):
-        """f42's shape on the KEY axis: the recursion depth is
-        calendar-bounded (~30 days, constant), and amplifying the TYPE
-        cardinality widens every lockstep UnionLoop iteration instead —
-        per-iteration rows scale ×N at constant round count, so the
-        ratio should be ~flat (the per-iteration scheduling floor
-        dominates KB relations)."""
-        key = (
-            F.concat_ws("#", F.col("event_type"),
-                        (F.col("user_id") % n_types).cast("string"))
-            if n_types > 1 else F.col("event_type")
-        )
-        view = f"cs2h_probe_ewma_{n_types}"
-        ev.groupBy(
-            key.alias("event_type"),
-            F.expr("unix_micros(ts) DIV 86400000000").alias("day_idx"),
-        ).agg(
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("x")
-        ).coalesce(1).createOrReplaceTempView(view)
-        return spark.sql(f"""
-            WITH RECURSIVE numbered AS (
-                SELECT event_type, day_idx, x,
-                       ROW_NUMBER() OVER (PARTITION BY event_type
-                                          ORDER BY day_idx) AS rn,
-                       COUNT(*) OVER (PARTITION BY event_type) AS n_days,
-                       SUM(x) OVER (PARTITION BY event_type)
-                           DIV COUNT(*) OVER (PARTITION BY event_type) AS mu
-                FROM {view}
-            ), chain AS (
-                SELECT event_type, rn, n_days, mu, x AS z
-                FROM numbered WHERE rn = 1
-                UNION ALL
-                SELECT /*+ BROADCAST(b) */ b.event_type, b.rn, b.n_days,
-                       b.mu, (b.x + 7 * c.z) DIV 8
-                FROM chain c JOIN numbered b
-                  ON b.event_type = c.event_type AND b.rn = c.rn + 1
-            )
-            SELECT event_type, z FROM chain WHERE rn = n_days
-        """)
-
-    def decontam_shape(d):
-        """j127's shape: per-doc distinct 8-grams (the volume term) semi
-        joined against the eval split's gram set; amplified docs scale
-        both sides proportionally (doc_ids remapped, so the % 10 eval
-        rule keeps a 10% eval fraction)."""
-        from cassandra_snap_to_hadoop_spark.operators.text import tokens as toks
-
-        t = d.select(
-            "doc_id", "source",
-            (F.col("doc_id") % 10 == 7).alias("is_eval"),
-            toks(F.col("text")).alias("w"),
-        )
-        grams = F.expr(
-            "transform(sequence(1, size(w) - 7),"
-            " i -> concat_ws(' ', slice(w, i, 8)))"
-        )
-        sh = (
-            t.where(F.size("w") >= 8)
-            .select("doc_id", "source", "is_eval", F.explode(grams).alias("s"))
-            .distinct()
-        )
-        ev = sh.where(F.col("is_eval")).select("s").distinct()
-        return (
-            sh.where(~F.col("is_eval"))
-            .join(ev, "s")
-            .select("doc_id", "source")
-            .distinct()
-            .groupBy("source")
-            .agg(F.count("*").alias("n_cont"))
-        )
-
-    def pane_merge_shape(e):
-        """k16's shape: 1-hour pane agg (each event touched ONCE) ->
-        3-offset pane explode (calendar-bounded) -> window merge.  The
-        event-volume term is only the pane agg."""
-        panes = e.groupBy(
-            "event_type",
-            F.expr("unix_micros(ts) DIV 3600000000").alias("hour_idx"),
-        ).agg(
-            F.count("*").cast("long").alias("pn"),
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("pc"),
-        )
-        return (
-            panes.select(
-                "event_type",
-                F.explode(F.sequence(F.lit(0), F.lit(2))).alias("o"),
-                "hour_idx", "pn", "pc",
-            )
-            .groupBy("event_type", (F.col("hour_idx") - F.col("o")).alias("w"))
-            .agg(F.sum("pn").alias("n"), F.sum("pc").alias("s"))
-        )
-
-    def sliding_direct_shape(e):
-        """The UNOPTIMIZED contrast for k16: every event explodes into
-        its 3 covering windows BEFORE aggregation — the x3 event-volume
-        explode the pane optimization exists to avoid."""
-        return (
-            e.select(
-                "event_type",
-                F.explode(F.sequence(F.lit(0), F.lit(2))).alias("o"),
-                F.expr("unix_micros(ts) DIV 3600000000").alias("hour_idx"),
-                F.round(F.col("value") * 100).cast("long").alias("cents"),
-            )
-            .groupBy("event_type", (F.col("hour_idx") - F.col("o")).alias("w"))
-            .agg(F.count("*").alias("n"), F.sum("cents").alias("s"))
-        )
-
-    def bitemporal_shape(li):
-        """d27's shape (round-10 probe, VERDICT r9 item 6): versions scan
-        -> per-key span agg -> constant 3-probe explode -> ONE
-        range-predicate join carried by the EQUI key -> max_by agg.
-        Amplification remaps l_suppkey too, so KEY CARDINALITY scales Nx
-        with per-key version density 1x — the claim under test is that
-        the equi key carries the shuffle and the in-key range filter
-        never goes quadratic."""
-        versions = li.select(
-            F.col("l_suppkey").alias("k"),
-            F.expr("unix_micros(l_shipdate) DIV 86400000000").alias("valid_from"),
-            (
-                F.expr("unix_micros(l_shipdate) DIV 86400000000")
-                + F.col("l_orderkey") % 30
-            ).alias("tx_from"),
-            F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
-        )
-        spans = versions.groupBy("k").agg(
-            F.min("valid_from").alias("lo"), F.max("valid_from").alias("hi")
-        )
-        probes = spans.select(
-            "k", F.explode(F.sequence(F.lit(0), F.lit(2))).alias("p"), "lo", "hi"
-        ).select(
-            "k", F.col("p").cast("long").alias("p"),
-            F.expr("lo + (hi - lo) * (p + 1) DIV 4").alias("t"),
-            F.expr("lo + (hi - lo) * (p + 1) DIV 4 + 10 * p").alias("tx"),
-        )
-        return (
-            probes.join(
-                versions.select(F.col("k").alias("vk"), "valid_from",
-                                "tx_from", "cents"),
-                (F.col("vk") == F.col("k"))
-                & (F.col("valid_from") <= F.col("t"))
-                & (F.col("tx_from") <= F.col("tx")),
-            )
-            .groupBy("k", "p")
-            .agg(F.max(F.struct("valid_from", "tx_from", "cents")).alias("win"))
-            .groupBy("p")
-            .agg(F.count("*").alias("n"))
-        )
-
-    def hurst_fanout_shape(e, n_types):
-        """f54's shape (round-10 probe): daily lattice -> per-(type, w,
-        window) cell fan-out -> window stats + cumulative Z -> R^2/V
-        ratios.  The amplification axis is SERIES COUNT (synthetic
-        type labels user_id % n_types), not event volume — after the
-        daily agg the cost is windows = types x days / w, and types is
-        the production dial."""
-        daily = e.groupBy(
-            (F.col("user_id") % n_types).alias("etype"),
-            F.expr("unix_micros(ts) DIV 86400000000").alias("day"),
-        ).agg(
-            F.expr("SUM(CAST(ROUND(value) AS BIGINT)) DIV COUNT(*)").alias("x")
-        )
-        from pyspark.sql.window import Window as _W
-
-        rn = F.row_number().over(_W.partitionBy("etype").orderBy("day"))
-        numbered = daily.select("etype", "x", rn.alias("rn"))
-        cells = numbered.join(
-            spark.range(2).select(
-                F.when(F.col("id") == 0, 8).otherwise(24).alias("w")
-            ),
-        ).select(
-            "etype", "w",
-            F.expr("(rn - 1) DIV w").alias("wid"),
-            F.expr("((rn - 1) % w) + 1").alias("k"),
-            "x",
-        )
-        complete = cells.groupBy("etype", "w", "wid").agg(
-            F.count("*").alias("cnt")
-        ).where(F.col("cnt") == F.col("w")).drop("cnt")
-        cc = cells.join(complete, ["etype", "w", "wid"])
-        wstats = cc.groupBy("etype", "w", "wid").agg(
-            F.sum("x").alias("s"), F.sum(F.col("x") * F.col("x")).alias("q")
-        )
-        zw = _W.partitionBy("etype", "w", "wid").orderBy("k")
-        z = cc.join(wstats, ["etype", "w", "wid"]).select(
-            "etype", "w", "wid", "s", "q",
-            (F.sum(F.col("w") * F.col("x")).over(zw) - F.col("k") * F.col("s"))
-            .alias("zk"),
-        )
-        return (
-            z.groupBy("etype", "w", "wid", "s", "q")
-            .agg((F.max("zk") - F.min("zk")).alias("r"))
-            .where(F.expr("w * q - s * s > 0"))
-            .select(
-                "etype", "w",
-                F.expr("1000000 * r * r DIV (w * q - s * s)").alias("rs2"),
-            )
-            .groupBy("etype", "w")
-            .agg(F.expr("SUM(rs2) DIV COUNT(*)").alias("rs2_mean"))
-        )
-
-    def krippendorff_shape(li):
-        """e118's shape (round-10 probe): ratings scan -> per-unit
-        pairable filter -> unit x category coincidence counts -> two
-        1-row folds.  Amplification remaps l_orderkey, so UNITS scale Nx
-        at constant raters-per-unit — the coincidence lattice is
-        unit-local, never a cross-unit pair join."""
-        ratings = li.where(F.col("l_linenumber") <= 3).select(
-            F.col("l_orderkey").alias("unit"), F.col("l_returnflag").alias("c")
-        )
-        mu = ratings.groupBy("unit").agg(F.count("*").alias("m_u"))
-        pairable = ratings.join(mu.where(F.col("m_u") >= 2), "unit")
-        unit_cat = pairable.groupBy("unit", "c", "m_u").agg(
-            F.count("*").alias("n_uc")
-        )
-        do_terms = unit_cat.groupBy("unit").agg(
-            F.expr(
-                "1000000 * (MAX(m_u) * (MAX(m_u) - 1) - SUM(n_uc * (n_uc - 1)))"
-                " DIV (MAX(m_u) - 1)"
-            ).alias("do_micro")
-        )
-        marg = unit_cat.groupBy("c").agg(F.sum("n_uc").alias("n_c"))
-        de = marg.agg(
-            F.sum("n_c").alias("n_tot"),
-            (F.sum("n_c") * F.sum("n_c") - F.sum(F.col("n_c") * F.col("n_c")))
-            .alias("de_num"),
-        )
-        return do_terms.agg(F.sum("do_micro").alias("do_total")).crossJoin(
-            F.broadcast(de)
-        ).select(
-            F.expr(
-                "CASE WHEN de_num > 0 THEN 1000 - do_total * (n_tot - 1)"
-                " DIV (1000 * de_num) ELSE NULL END"
-            ).alias("alpha_milli")
-        )
-
-    def rack_placement_shape(li):
-        """b22's shape (round-10 probe): key x 12-row-ring broadcast
-        cross -> rank-1-per-rack window -> per-node aggs.  The volume
-        term is 12x the key count through a broadcast (no shuffle until
-        the token-partitioned rank)."""
-        from pyspark.sql.window import Window as _W
-
-        ring = spark.createDataFrame(
-            [(p, n, n % 3) for p, n in
-             ((0, 0), (1, 3), (2, 1), (3, 4), (4, 2), (5, 5),
-              (6, 0), (7, 1), (8, 3), (9, 2), (10, 4), (11, 5))],
-            "pos int, node int, rack int",
-        )
-        keyed = li.select(
-            (F.col("l_orderkey") % 1200).alias("token"),
-            F.round(F.col("l_extendedprice") * 100).cast("long").alias("cents"),
-        )
-        walk = keyed.crossJoin(F.broadcast(ring)).select(
-            "token", "cents", "node", "rack",
-            ((F.col("pos") - (F.col("token") / 100).cast("int") + 12) % 12)
-            .alias("dist"),
-        )
-        w = _W.partitionBy("token", "cents", "rack").orderBy("dist")
-        return (
-            walk.withColumn("rk", F.row_number().over(w))
-            .where(F.col("rk") == 1)
-            .groupBy("node")
-            .agg(F.count("*").alias("n"), F.sum("cents").alias("s"))
-        )
-
-    def minhash_audit_shape(d):
-        """j133's shape (round-10 probe): md5 signature agg -> banded
-        candidates -> per-pair 16-term match count + exact verification
-        join.  Candidate volume is bucket-bounded (j2's law); the audit
-        adds one codegen sum per candidate, so scaling tracks the j2
-        probes."""
-        from cassandra_snap_to_hadoop_spark.operators.dedup import (
-            md5_minhash_bands,
-            shingles,
-        )
-
-        ex = d.select(
-            "doc_id", F.explode(shingles(F.col("text"), 3)).alias("sh")
-        )
-        bands = md5_minhash_bands(d, n_hashes=16, rows_per_band=4)
-        a, b = bands.alias("a"), bands.alias("b")
-        cand = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.bkey") == F.col("b.bkey"))
-                & (F.col("a.doc_id") < F.col("b.doc_id")),
-            )
-            .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
-            .distinct()
-        )
-        ea = ex.distinct().select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
-        eb = ex.distinct().select(F.col("doc_id").alias("eb_id"), F.col("sh").alias("sh_b"))
-        return (
-            cand.join(ea, "id_a")
-            .join(eb, (F.col("id_b") == F.col("eb_id")) & (F.col("sh_a") == F.col("sh_b")))
-            .groupBy("id_a", "id_b")
-            .agg(F.count("*").alias("inter"))
-            .groupBy()
-            .agg(F.count("*").alias("n_pairs"), F.sum("inter").alias("s"))
-        )
-
-    def semdedup_shape(emb, remap_labels):
-        """j131's shape: within-label pair dots via the (label, dim) equi
-        self-join.  With remap_labels the amplified replicas land in NEW
-        clusters (cluster count xN, cluster size 1x) — SemDeDup's actual
-        scaling regime, candidate volume ~linear.  Without it the 8
-        clusters grow xN and candidates go quadratic — the documented
-        worst case the production k (cluster count) dial exists to
-        avoid."""
-        e = emb
-        if remap_labels:
-            e = e.withColumn(
-                "label",
-                (F.col("label") + F.expr("vec_id DIV 1000000000") * 8).cast("int"),
-            )
-        ex = e.select(
-            "vec_id", "label", F.posexplode("embedding").alias("dim", "x")
-        ).select(
-            "vec_id", "label", "dim",
-            F.round(F.col("x").cast("double") * 100).cast("long").alias("c"),
-        )
-        a = ex.select(F.col("label").alias("la"), F.col("vec_id").alias("va"),
-                      F.col("dim").alias("da"), F.col("c").alias("ca"))
-        b = ex.select(F.col("label").alias("lb"), F.col("vec_id").alias("vb"),
-                      F.col("dim").alias("db"), F.col("c").alias("cb"))
-        return (
-            a.join(b, (F.col("lb") == F.col("la")) & (F.col("db") == F.col("da"))
-                   & (F.col("vb") > F.col("va")))
-            .groupBy("la", "va", "vb")
-            .agg(F.sum(F.col("ca") * F.col("cb")).alias("dot"))
-            .groupBy("la").agg(F.count("*").alias("n_pairs"))
-        )
-
-    # d23's probe input: BOTH keys remapped so per-customer order density
-    # stays 1x — the linear-candidate-volume claim is exactly what the
-    # ratio measures (the d8/e26 argument).
-    oN_cust = amplify(t.orders, ["o_orderkey", "o_custkey"])
-    # d27's probe input: supplier key remapped too — key cardinality xN,
-    # per-key version density 1x (the equi-key-carries-the-shuffle claim).
-    liN_supp = amplify(t.lineitem, ["l_orderkey", "l_suppkey"])
-
-    def allen_shape(o):
-        """d23's shape (round 7): same-customer interval pairs via the
-        customer equi join, one codegen CASE per pair, <=13-row output."""
-        iv = o.select(
-            F.col("o_custkey").alias("cust"),
-            F.col("o_orderkey").alias("k"),
-            F.expr("unix_micros(o_orderdate) DIV 86400000000").alias("lo"),
-            F.expr("unix_micros(o_orderdate) DIV 86400000000 + 7").alias("hi"),
-        )
-        a = iv.select("cust", F.col("k").alias("ka"),
-                      F.col("lo").alias("a_lo"), F.col("hi").alias("a_hi"))
-        b = iv.select("cust", F.col("k").alias("kb"),
-                      F.col("lo").alias("b_lo"), F.col("hi").alias("b_hi"))
-        pairs = a.join(b, "cust").where(F.col("ka") < F.col("kb"))
-        rel = (
-            F.when(F.col("a_hi") < F.col("b_lo"), "before")
-            .when(F.col("a_hi") == F.col("b_lo"), "meets")
-            .when((F.col("a_lo") < F.col("b_lo")) & (F.col("a_hi") < F.col("b_hi")), "overlaps")
-            .when((F.col("a_lo") == F.col("b_lo")) & (F.col("a_hi") == F.col("b_hi")), "equal")
-            .otherwise("other")
-        )
-        return pairs.groupBy(rel.alias("relation")).agg(F.count("*").alias("n"))
-
-    def mask_sources_shape(d, n_sources):
-        """e24's mask histogram at HIGHER source counts (VERDICT r6 item
-        6): synthetic source labels doc_id % n_sources drive the mask
-        cardinality toward its 2^s worst case.  The BOUND (documented in
-        SCALE.md): the histogram holds one row per OBSERVED mask, so
-        |hist| <= min(2^s, distinct shingles) — growth in s is capped by
-        shingle cardinality, and the pair relation is s(s-1)/2 rows; the
-        crossJoin cost is |hist| * s^2 rows, all KB until s ~ 20, which
-        is where the e24 HLL tier takes over."""
-        from cassandra_snap_to_hadoop_spark.operators.text import tokens as toks
-
-        w = toks(F.col("text"))
-        shingles = F.expr(
-            "transform(sequence(1, size(words) - 2),"
-            " i -> concat_ws(' ', slice(words, i, 3)))"
-        )
-        dd = d.select((F.col("doc_id") % n_sources).cast("long").alias("src"),
-                      w.alias("words"))
-        sh0 = (
-            dd.filter(F.size("words") >= 3)
-            .select("src", F.explode(shingles).alias("s"))
-            .distinct()
-        )
-        mask = sh0.groupBy("s").agg(F.sort_array(F.collect_set("src")).alias("m"))
-        hist = mask.groupBy("m").agg(F.count("*").alias("cnt"))
-        srcs = dd.select("src").distinct()
-        pairs = srcs.select(F.col("src").alias("src_a")).join(
-            srcs.select(F.col("src").alias("src_b")),
-            F.col("src_a") < F.col("src_b"),
-        )
-        return (
-            hist.crossJoin(F.broadcast(pairs))
-            .groupBy("src_a", "src_b")
-            .agg(F.sum(F.when(F.array_contains("m", F.col("src_a")),
-                              F.col("cnt")).otherwise(0)).alias("n_a"))
-        )
-
-    def sampen_pair_shape(n_days):
-        """f61's shape (round-11 probe, VERDICT r10 item 5): per-type
-        m=2/m=3 template embedding via LEAD windows, then the
-        within-type (rnb > rna) pair join + Chebyshev match counts.
-        The amplification axis is CALENDAR LENGTH (synthetic days ×
-        mult at 5 fixed types) — the pair term is inherently days² per
-        type, and THAT is the claim under test: the registered f61
-        runs on a ≤30-day daily series where 30² pairs are constant
-        work, and a longer series must move to a bounded rolling
-        window; the probe quantifies the quadratic so the bound is a
-        measured fact, not an assertion."""
-        from pyspark.sql.window import Window as _W
-
-        base = spark.range(n_days * 5).select(
-            (F.col("id") % 5).alias("etype"),
-            F.expr("id DIV 5").alias("rn"),
-            (((F.col("id") * 2654435761) % 10007) - 5000).alias("x"),
-        )
-        w = _W.partitionBy("etype").orderBy("rn")
-        emb = base.select(
-            "etype", "rn",
-            F.col("x").alias("x0"),
-            F.lead("x", 1).over(w).alias("x1"),
-            F.lead("x", 2).over(w).alias("x2"),
-        ).where(F.col("x2").isNotNull())
-        a = emb.select(
-            "etype", F.col("rn").alias("rna"),
-            F.col("x0").alias("a0"), F.col("x1").alias("a1"),
-            F.col("x2").alias("a2"),
-        )
-        b = emb.select(
-            F.col("etype").alias("etb"), F.col("rn").alias("rnb"),
-            F.col("x0").alias("b0"), F.col("x1").alias("b1"),
-            F.col("x2").alias("b2"),
-        )
-        r_tol = 2500
-        return (
-            a.join(b, (F.col("etb") == F.col("etype")) & (F.col("rnb") > F.col("rna")))
-            .select(
-                "etype",
-                F.when(
-                    F.greatest(
-                        F.abs(F.col("a0") - F.col("b0")),
-                        F.abs(F.col("a1") - F.col("b1")),
-                    ) <= r_tol, 1,
-                ).otherwise(0).alias("m2"),
-                F.when(
-                    F.greatest(
-                        F.abs(F.col("a0") - F.col("b0")),
-                        F.abs(F.col("a1") - F.col("b1")),
-                        F.abs(F.col("a2") - F.col("b2")),
-                    ) <= r_tol, 1,
-                ).otherwise(0).alias("m3"),
-            )
-            .groupBy("etype")
-            .agg(F.sum("m2").alias("b_count"), F.sum("m3").alias("a_count"))
-        )
-
-    def bm_histogram_shape(li, vmult):
-        """e127's shape (round-11 probe, VERDICT r10 item 5): two value
-        histograms -> full-outer pooled lattice -> three doubled-rank
-        cumsum windows over the lattice -> sizes/devs folds.  The
-        amplification axis is VALUE CARDINALITY (distinct v × vmult at
-        constant row volume — the sub-unit lattice a finer quantization
-        would produce); the claim is that the window pass is linear in
-        lattice size (the unpartitioned cumsums ride the value-bounded
-        relation, allowlisted on exactly that ground)."""
-        from pyspark.sql.window import Window as _W
-
-        v = (F.col("l_quantity").cast("long") * vmult
-             + F.col("l_orderkey") % vmult)
-        hx = (
-            li.where(F.col("l_returnflag") == "R")
-            .groupBy(v.alias("v")).agg(F.count("*").alias("cx"))
-        )
-        hy = (
-            li.where(F.col("l_returnflag") == "A")
-            .groupBy(v.alias("v")).agg(F.count("*").alias("cy"))
-        )
-        pooled = (
-            hx.join(hy, "v", "full_outer")
-            .select(
-                "v",
-                F.coalesce("cx", F.lit(0)).alias("cx"),
-                F.coalesce("cy", F.lit(0)).alias("cy"),
-            )
-        )
-        wv = _W.orderBy("v").rowsBetween(_W.unboundedPreceding, 0)
-        ranked = pooled.select(
-            "cx", "cy",
-            (2 * (F.sum(F.col("cx") + F.col("cy")).over(wv)
-                  - (F.col("cx") + F.col("cy")))
-             + (F.col("cx") + F.col("cy")) + 1).alias("m2"),
-            (2 * (F.sum("cx").over(wv) - F.col("cx")) + F.col("cx") + 1).alias("w2x"),
-            (2 * (F.sum("cy").over(wv) - F.col("cy")) + F.col("cy") + 1).alias("w2y"),
-        )
-        return ranked.agg(
-            F.sum("cx").alias("n1"), F.sum("cy").alias("n2"),
-            F.sum(F.col("cx") * F.col("m2")).alias("t1"),
-            F.sum(F.col("cy") * F.col("m2")).alias("t2"),
-            F.sum(F.col("cx") * (F.col("m2") - F.col("w2x"))
-                  * (F.col("m2") - F.col("w2x"))).alias("s2x_q"),
-            F.sum(F.col("cy") * (F.col("m2") - F.col("w2y"))
-                  * (F.col("m2") - F.col("w2y"))).alias("s2y_q"),
-        )
-
-    def lcs_level_shape(li, fmult):
-        """a44's shape (round-11 probe, VERDICT r10 item 5): per-'file'
-        hash agg (metadata scale) -> newest-first unpartitioned rank ->
-        per-level lag-overlap window -> per-level aggs.  The
-        amplification axis is FILE COUNT (per-day files × fmult via a
-        synthetic shard key at constant data volume); the claim is
-        linearity in file count — the unpartitioned rank rides the
-        metadata-scale file relation, allowlisted on exactly that
-        ground, and overflowing files land in the L4 catch-all."""
-        from pyspark.sql.window import Window as _W
-
-        files = li.groupBy(
-            F.expr("unix_micros(l_shipdate) DIV 86400000000").alias("day"),
-            (F.col("l_orderkey") % fmult).alias("shard"),
-        ).agg(
-            F.count("*").alias("n_rows"),
-            F.min(F.col("l_orderkey") % 1000).alias("tok_lo"),
-            F.max(F.col("l_orderkey") % 1000).alias("tok_hi"),
-        )
-        leveled = files.withColumn(
-            "f", F.row_number().over(_W.orderBy(F.desc("day"), "shard"))
-        ).withColumn(
-            "lvl",
-            F.when(F.col("f") <= 10, 1)
-            .when(F.col("f") <= 110, 2)
-            .when(F.col("f") <= 1110, 3)
-            .otherwise(4),
-        )
-        wo = _W.partitionBy("lvl").orderBy("tok_lo", "day", "shard")
-        return (
-            leveled.withColumn("prev_hi", F.lag("tok_hi").over(wo))
-            .groupBy("lvl")
-            .agg(
-                F.count("*").alias("n_files"),
-                F.sum("n_rows").alias("rows_total"),
-                F.sum(
-                    F.when(
-                        F.col("prev_hi").isNotNull()
-                        & (F.col("prev_hi") >= F.col("tok_lo")),
-                        1,
-                    ).otherwise(0)
-                ).alias("overlap_pairs"),
-            )
-        )
-
-    def commitlog_replay_shape(s_base):
-        """a49's RELATIONAL replay shape (round-11 probe): melted base
-        cell relation ∪ synthetic mutation relation → broadcastable
-        delete join → max_by-per-(key, col) agg → per-key wide agg.
-        The amplification axis is KEY VOLUME (the supplier base ×N);
-        mutations are synthesized in-plan at the a49 staging rates —
-        the probe measures the replay joins/aggs (the per-segment parse
-        is linear file I/O by construction)."""
-        base_cells = s_base.selectExpr(
-            "s_suppkey",
-            "s_suppkey * 1000 AS ts",
-            "0 AS op",
-            """stack(3,
-                's_name', s_name, CAST(NULL AS INT), CAST(NULL AS DOUBLE),
-                's_nationkey', CAST(NULL AS STRING), CAST(s_nationkey AS INT),
-                    CAST(NULL AS DOUBLE),
-                's_acctbal', CAST(NULL AS STRING), CAST(NULL AS INT), s_acctbal
-            ) AS (col, v_str, v_int, v_dbl)""",
-        ).select("ts", "op", "s_suppkey", "col", "v_str", "v_int", "v_dbl")
-        muts = s_base.selectExpr(
-            "s_suppkey",
-            "s_suppkey * 1000 + 500 AS ts",
-            "CASE WHEN s_suppkey % 11 = 0 THEN 1"
-            " WHEN s_suppkey % 7 = 0 THEN 2 ELSE 0 END AS op",
-            "'s_acctbal' AS col",
-            "CAST(NULL AS STRING) AS v_str",
-            "CAST(NULL AS INT) AS v_int",
-            "s_acctbal + 100 AS v_dbl",
-        ).select("ts", "op", "s_suppkey", "col", "v_str", "v_int", "v_dbl")
-        cell_events = muts.filter(F.col("op") != 1).unionByName(base_cells)
-        deletes = (
-            muts.filter(F.col("op") == 1)
-            .groupBy("s_suppkey")
-            .agg(F.max("ts").alias("del_ts"))
-        )
-        live = cell_events.join(
-            F.broadcast(deletes), "s_suppkey", "left"
-        ).where(F.col("del_ts").isNull() | (F.col("ts") > F.col("del_ts")))
-        winners = live.groupBy("s_suppkey", "col").agg(
-            F.max_by(F.struct("op", "v_str", "v_int", "v_dbl"), "ts").alias("w"),
-            F.max("ts").alias("wt"),
-        )
-        return winners.groupBy("s_suppkey").agg(
-            F.max(F.when(F.col("w.op") == 0, F.col("w.v_dbl"))).alias("v"),
-            F.max("wt").alias("wt"),
-        )
-
-    def stupid_backoff_shape(d):
-        """j137's shape (round-11 probe): train-half n-gram hash aggs →
-        scoring trigrams LEFT-joined to the trigram/bigram/unigram count
-        relations (vocabulary-bounded equi joins).  Marker-mutated doc
-        amplification keeps a realistic vocab growth curve."""
-        from cassandra_snap_to_hadoop_spark.operators.text import tokens as _tokens
-
-        dd = d.select("doc_id", _tokens(F.col("text")).alias("w"))
-        train = dd.where(F.col("doc_id") % 2 == 0)
-        score = dd.where(F.col("doc_id") % 2 == 1)
-
-        def grams(df, n, keep=()):
-            cols = [F.col(c) for c in keep]
-            idx = F.explode(F.sequence(F.lit(0), F.size("w") - F.lit(n))).alias("i")
-            out = df.where(F.size("w") >= n).select(*cols, "w", idx)
-            sel = cols + [
-                F.element_at("w", F.col("i") + F.lit(k + 1)).alias(f"w{k + 1}")
-                for k in range(n)
-            ]
-            return out.select(*sel)
-
-        c_tri = grams(train, 3).groupBy("w1", "w2", "w3").agg(
-            F.count("*").alias("c123")
-        )
-        c_big = grams(train, 2).groupBy("w1", "w2").agg(F.count("*").alias("cb"))
-        tri_s = grams(score, 3, keep=("doc_id",))
-        joined = (
-            tri_s.join(c_tri, ["w1", "w2", "w3"], "left")
-            .join(
-                c_big.select("w1", "w2", F.col("cb").alias("c12")),
-                ["w1", "w2"],
-                "left",
-            )
-            .join(
-                c_big.select(
-                    F.col("w1").alias("w2"), F.col("w2").alias("w3"),
-                    F.col("cb").alias("c23"),
-                ),
-                ["w2", "w3"],
-                "left",
-            )
-        )
-        return joined.groupBy("doc_id").agg(
-            F.count("*").alias("n"),
-            F.sum(F.when(F.col("c123").isNotNull(), 1).otherwise(0)).alias("hits"),
-        )
-
-    shapes = [
-        ("scan+agg", lambda: agg_shape(li1), lambda: agg_shape(liN)),
-        ("dsir-importance", lambda: dsir_shape(d1), lambda: dsir_shape(dN)),
-        ("kcore-peel", lambda: kcore_shape(li1), lambda: kcore_shape(liN)),
-        ("mask-overlap", lambda: mask_overlap_shape(d1), lambda: mask_overlap_shape(dN)),
-        ("pav-merge-rounds", lambda: pav_shape(d1), lambda: pav_shape(dN)),
-        ("allen-interval-pairs", lambda: allen_shape(o1), lambda: allen_shape(oN_cust)),
-        # round-7 iterative shapes (VERDICT r7 item 7): vertices land in
-        # per-replica blocks (ktruss), postings exact replicas (maxcover),
-        # row hashes Nx with 16 fixed ranges (merkle), per-user density 1x
-        # with a KB power iteration (markov).
-        ("ktruss-wedge-rounds", lambda: ktruss_shape(li1, 1), lambda: ktruss_shape(liN, mult)),
-        ("maxcover-step", lambda: maxcover_step_shape(d1), lambda: maxcover_step_shape(dN)),
-        ("merkle-range-digest", lambda: merkle_shape(li1), lambda: merkle_shape(liN)),
-        ("markov-kb-joins", lambda: markov_shape(e1), lambda: markov_shape(eN)),
-        # round-8 iterative shapes: CAS fold rounds are constant (7), key
-        # volume linear; Heaps windows are per-source over the doc axis.
-        ("cas-lockstep-fold", lambda: cas_fold_shape(li1), lambda: cas_fold_shape(liN)),
-        ("heaps-vocab-growth", lambda: heaps_shape(d1), lambda: heaps_shape(dN)),
-        # round-8 iterative shapes, second batch (VERDICT r8 item 6):
-        # MMR's greedy rounds stay KB while the relevance join scales;
-        # HITS half-steps are KB with a volume-scaled initial distinct;
-        # EWMA scales the per-iteration LOCKSTEP width (types ×N) at the
-        # constant calendar depth.
-        ("mmr-lockstep-greedy", lambda: mmr_lockstep_shape(emb1), lambda: mmr_lockstep_shape(embN)),
-        ("hits-half-steps", lambda: hits_shape(li1), lambda: hits_shape(liN)),
-        ("ewma-lockstep-width", lambda: ewma_lockstep_shape(e1, 1), lambda: ewma_lockstep_shape(e1, mult)),
-        # round-9 shapes: gram semi-join decontamination; pane-merged
-        # sliding vs the unoptimized direct x3 explode (the pair of rows
-        # quantifies the panes optimization under amplification).
-        ("decontam-gram-semijoin", lambda: decontam_shape(d1), lambda: decontam_shape(dN)),
-        # round-10 shapes (VERDICT r9 item 6): d27 keys xN at 1x per-key
-        # density; f54 series-count axis (types x mult, volume fixed);
-        # e118 units xN at constant raters-per-unit.
-        ("bitemporal-probe-join", lambda: bitemporal_shape(li1), lambda: bitemporal_shape(liN_supp)),
-        # round-10 batch shapes: b22's ring cross (keys xN, ring fixed);
-        # j133's audit rides the banded candidate set (marker-mutated
-        # docs keep realistic near-dup pair counts, the j2 probe input).
-        ("rack-placement-cross", lambda: rack_placement_shape(li1), lambda: rack_placement_shape(liN)),
-        ("minhash-audit", lambda: minhash_audit_shape(d1_marked), lambda: minhash_audit_shape(dN_marked)),
-        ("hurst-window-fanout", lambda: hurst_fanout_shape(e1, 5), lambda: hurst_fanout_shape(e1, 5 * mult)),
-        ("krippendorff-coincidence", lambda: krippendorff_shape(li1), lambda: krippendorff_shape(liN)),
-        ("pane-merged-sliding", lambda: pane_merge_shape(e1), lambda: pane_merge_shape(eN)),
-        ("sliding-direct-explode", lambda: sliding_direct_shape(e1), lambda: sliding_direct_shape(eN)),
-        # j131: amplified replicas land in NEW clusters (count xN, size
-        # 1x) — SemDeDup's scaling regime; the fixed-cluster quadratic
-        # contrast is the documented worst case the k dial avoids.
-        ("semdedup-cluster-bounded", lambda: semdedup_shape(emb1, False), lambda: semdedup_shape(embN, True)),
-        # 1x = 8 synthetic sources, Nx = 16: measures the 2^s mask-growth
-        # axis (not volume); the SCALE.md row documents the |hist| bound.
-        ("mask-sources-2x", lambda: mask_sources_shape(d1, 8), lambda: mask_sources_shape(d1, 16)),
-        ("cc-propagation", lambda: cc_shape(d1_marked), lambda: cc_shape(dN_marked)),
-        # round-11 shapes (VERDICT r10 item 5): f61's pair join on the
-        # CALENDAR axis (days x mult — deliberately measures the days²
-        # pair term the 30-day bound caps); e127's lattice windows on the
-        # VALUE-CARDINALITY axis (distinct v x mult, volume 1x); a44's
-        # level audit on the FILE-COUNT axis (files x mult, volume 1x).
-        ("sampen-pair-days", lambda: sampen_pair_shape(30), lambda: sampen_pair_shape(30 * mult)),
-        ("bm-lattice-windows", lambda: bm_histogram_shape(li1, 1), lambda: bm_histogram_shape(li1, mult)),
-        ("lcs-level-files", lambda: lcs_level_shape(li1, 1), lambda: lcs_level_shape(li1, mult)),
-        # a49's relational replay on the KEY-VOLUME axis; j137's n-gram
-        # LEFT joins on the marker-mutated corpus axis.
-        ("commitlog-replay", lambda: commitlog_replay_shape(sup1), lambda: commitlog_replay_shape(supN)),
-        ("stupid-backoff-joins", lambda: stupid_backoff_shape(d1_marked), lambda: stupid_backoff_shape(dN_marked)),
-        ("winnowing-pairs", lambda: winnow_shape(d1_marked), lambda: winnow_shape(dN_marked)),
-        ("srp-bucket-knn", lambda: srp_knn_shape(emb1), lambda: srp_knn_shape(embN)),
-        ("minhash-md5-bands", lambda: minhash_md5_shape(d1_marked), lambda: minhash_md5_shape(dN_marked)),
-        ("kmeans-lloyd-iter", lambda: kmeans_shape(emb1), lambda: kmeans_shape(embN)),
-        ("dbscan-grid-probe", lambda: dbscan_shape(o1), lambda: dbscan_shape(oN)),
-        ("rake-phrase-aggs", lambda: rake_shape(d1), lambda: rake_shape(dN)),
-        ("recursive-cte-fold", lambda: recursive_fold_shape(o1), lambda: recursive_fold_shape(oN)),
-        ("bloom-prefilter", lambda: bloom_prefilter_shape(d1), lambda: bloom_prefilter_shape(dN)),
-        # lineitem amplification keeps l_suppkey unmapped: N x more fact
-        # rows per supplier, SAME monthly pair count — the bounded-pair
-        # claim is exactly what the ratio measures.
-        ("theil-sen-monthly-pairs", lambda: theil_sen_shape(li1), lambda: theil_sen_shape(liN)),
-        ("equidepth-twopass", lambda: equidepth_shape(li1), lambda: equidepth_shape(liN)),
-        ("vocab-cumsum-twopass", lambda: vocab_cumsum_shape(d1), lambda: vocab_cumsum_shape(dN)),
-        ("vocab-topk", lambda: vocab_topk_shape(d1), lambda: vocab_topk_shape(dN)),
-        # Exact replicas are j57's WORST case: every gram becomes duplicated,
-        # so the coverage explode + distinct + anti join touch every token.
-        (
-            "exact-substring-dedup",
-            lambda: exact_substring_dedup(d1, "doc_id", "text", 5),
-            lambda: exact_substring_dedup(dN, "doc_id", "text", 5),
-        ),
-        ("pmi-pairs", lambda: pmi_shape(d1), lambda: pmi_shape(dN)),
-        (
-            "inverted-index",
-            lambda: inverted_index_shape(d1),
-            lambda: inverted_index_shape(dN),
-        ),
-        (
-            "interval-union",
-            lambda: interval_union_shape(o1),
-            lambda: interval_union_shape(oN),
-        ),
-        ("cohort-retention", lambda: cohort_shape(e1), lambda: cohort_shape(eN)),
-        # NOTE: amplified replicas multiply PER-USER event counts (user ids
-        # are remapped per replica, so per-user density stays 1x and the
-        # touch-window candidate volume stays linear — the claim at stake).
-        ("attribution-window-join", lambda: attribution_shape(e1), lambda: attribution_shape(eN)),
-        # df cap fixed at 50 while replica df scales Nx: the blocked set
-        # SHRINKS as the corpus grows, the per-key pair bound is the claim.
-        ("sparse-cosine-pairs", lambda: sparse_cos_shape(d1), lambda: sparse_cos_shape(dN)),
-        # PPJoin amplification weaves a per-replica marker token between
-        # every word: shingles differ ACROSS replicas (no fabricated
-        # cross-replica J~1 pairs) while each replica keeps the original
-        # in-replica dup structure — corpus xN at a CONSTANT duplication
-        # rate, so candidate volume and output should both scale ~linearly
-        # (exact replicas would instead measure the output-quadratic
-        # all-duplicates worst case, which j57's row already covers).
-        ("ppjoin-prefix-filter", lambda: ppjoin_shape(d1_marked), lambda: ppjoin_shape(dN_marked)),
-        # Hash-gated resampling (e38/e43 shape): the B=100 bounded explode
-        # partial-aggregates immediately, so the shuffle carries B rows per
-        # partition regardless of input volume — cost should be ~linear in
-        # rows with a constant B factor.
-        ("bootstrap-resample-fanout", lambda: bootstrap_shape(o1), lambda: bootstrap_shape(oN)),
-        ("pit-merged-stream", lambda: pit_shape(e1), lambda: pit_shape(eN)),
-        ("fact join", lambda: join_shape(li1, o1), lambda: join_shape(liN, oN)),
-        ("window", lambda: window_shape(e1), lambda: window_shape(eN)),
-        (
-            "funnel/localCheckpoint",
-            lambda: curation_funnel(d1),
-            lambda: curation_funnel(dN),
-        ),
-        (
-            "funnel/parquet-stages",
-            lambda: curation_funnel(d1, materialize=parquet_mat),
-            lambda: curation_funnel(dN, materialize=parquet_mat),
-        ),
-    ]
-
-    only = set(sys.argv[2].split(",")) if len(sys.argv) > 2 else None
-    if only:
-        shapes = [s for s in shapes if s[0] in only]
-
-    print(f"# scale probe @ {sf_dir}, multiplier={mult}")
-    for name, f1, fN in shapes:
-        f1().count()  # warm
-        t0 = time.perf_counter()
-        f1().count()
-        base = time.perf_counter() - t0
-        fN().count()  # warm
-        t0 = time.perf_counter()
-        fN().count()
-        big = time.perf_counter() - t0
-        ratio = big / base if base else float("inf")
-        print(
-            f"{name}: 1x={base:.2f}s {mult}x={big:.2f}s ratio={ratio:.1f} "
-            f"({'~linear' if ratio <= mult * 1.5 else 'SUPER-LINEAR'})"
-        )
-    shutil.rmtree(probe_dir, ignore_errors=True)
+    return 1 if failed else 0
 
 
 if __name__ == "__main__":
-    main()
+    sys.exit(main())
