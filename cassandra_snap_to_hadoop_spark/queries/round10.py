@@ -77,7 +77,7 @@ def a40_sstable_na_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     table re-encoded as one ``na`` and one ``nb`` generation
     (``sources/sstable_na.py`` — the 3.0 row core plus the 4.x
     integrity components) and scanned back through the snapshot
-    DataSource's ``na-``/``nb-`` filename dispatch, which VERIFIES the
+    scan's ``na-``/``nb-`` filename dispatch, which VERIFIES the
     full-file digest and every 64 KiB chunk checksum before decoding
     (the feature 4.x added for uncompressed tables) and CRC-checks the
     stats sidecar carrying the pending-repair / isTransient /
@@ -94,7 +94,7 @@ def a40_sstable_na_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     it on na).
 
     Scale shape: identical to a33/a36 — staging is a bounded
-    driver-side fixture encode; the SCAN is one InputPartition per
+    driver-side fixture encode; the SCAN is one scan task per
     Data.db decoded executor-side into Arrow batches, with checksum
     verification a linear executor-side pass over bytes already read."""
     return _supplier_scan(
@@ -213,7 +213,7 @@ def a42_sstable_mixed_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
     wrapper share NOTHING on disk but the logical rows; the oracle
     recomputes every group from the parquet truth.
 
-    Scale shape: listing assigns one InputPartition per generation
+    Scale shape: listing assigns one scan task per generation
     file; a real mixed snapshot with thousands of generations spreads
     across executors with per-file format dispatch — no global format
     assumption anywhere in the plan."""

@@ -89,7 +89,7 @@ def a45_sstable_oa_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     table re-encoded as two ``oa`` generations (``sources/sstable_oa.py``
     — the shared 3.0 row core wrapped in 5.0's extended-deletion
     headers, key-range stats metadata and BTI trie index) and scanned
-    back through the snapshot DataSource's ``oa-`` filename dispatch.
+    back through the snapshot scan's ``oa-`` filename dispatch.
     The oracle is IDENTICAL to a33/a36/a40's: the visibility rules are
     format-independent truth, so a hash match across all FOUR codecs
     certifies the decoders agree with the relational semantics AND each
@@ -105,7 +105,7 @@ def a45_sstable_oa_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     key-range bounds, partition-deletion marker, token coverage).
 
     Scale shape: identical to a33/a36/a40 — staging is a bounded
-    driver-side fixture encode; the SCAN is one InputPartition per
+    driver-side fixture encode; the SCAN is one scan task per
     Data.db decoded executor-side into Arrow batches; trie resolution
     is O(index bytes) per file, executor-side."""
     return _supplier_scan(
@@ -229,7 +229,7 @@ def a47_sstable_quad_formats(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves each codec contributed exactly its share — four unrelated
     byte layouts, one relational truth, one oracle hash.
 
-    Scale shape: listing assigns one InputPartition per generation
+    Scale shape: listing assigns one scan task per generation
     file; per-file format dispatch means a real mixed snapshot with
     thousands of generations spreads across executors with no global
     format assumption anywhere in the plan."""
@@ -1558,7 +1558,7 @@ def a50_sstable_compressed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFr
     consistency and the reassembled length before decoding a row —
     corruption tests in tests/test_sstable_compression.py.
 
-    Scale shape: as every roundtrip in the family — one InputPartition
+    Scale shape: as every roundtrip in the family — one scan task
     per Data.db, executor-side decompress + decode into Arrow batches;
     the chunk map is what a production range read seeks with, and the
     sequential full-decompress here is the Spark-ingest access
@@ -1929,7 +1929,7 @@ def a51_sstable_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics — the first fixture to exercise MISSING cells rather than
     tombstoned ones.
 
-    Scale shape: the family's — one InputPartition per generation,
+    Scale shape: the family's — one scan task per generation,
     executor-side decode; schema resolution is per-cell name dispatch,
     no plan-level cost."""
     return _supplier_scan(

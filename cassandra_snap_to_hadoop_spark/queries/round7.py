@@ -6,7 +6,7 @@ a33/a34 certify the legacy ``ka``-format Data.db decoder
 the parquet source tables is re-encoded as REAL binary SSTable record
 streams by the paired pure-Python writer (driver-side fixture staging,
 fingerprint-keyed like every other staged layout), then read back
-through the snapshot DataSource's binary branch — partition keys,
+through the snapshot scan's binary branch — partition keys,
 composite cell names, clustering columns, per-cell writetimes, cell
 tombstones, expiring cells, and partition-level deletions all decoded
 executor-side — and the reconciled rows hash-match the DuckDB oracle
@@ -289,7 +289,7 @@ def _stage_supplier_sstables(sf_dir: str):
 def a33_sstable_binary_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A2 with REAL SSTable bytes: the supplier table re-encoded as two
     legacy ka-format Data.db generations (pure-Python writer,
-    sources/sstable.py), scanned back through the snapshot DataSource's
+    sources/sstable.py), scanned back through the snapshot scan's
     binary branch, and hash-matched against the parquet source under the
     staged deletion rules:
 
@@ -308,7 +308,7 @@ def a33_sstable_binary_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: staging is a bounded driver-side fixture encode (the
     writer is the test harness; no SSTable binaries exist in this env,
-    SURVEY §0); the SCAN is the product — one InputPartition per
+    SURVEY §0); the SCAN is the product — one scan task per
     Data.db, decoded executor-side into Arrow batches, so a snapshot of
     10k SSTables fans out to 10k tasks with zero driver involvement
     beyond listing."""

@@ -7,7 +7,7 @@ certified the 2.x ``ka`` codec in round 7: the same bounded supplier /
 clustered-orders subsets, the same deletion/TTL visibility rules, the
 same oracles — but the bytes on disk are the row-oriented 3.0 layout
 (flags bytes, Cassandra vints, delta-encoded timestamps against the
-stats sidecar) and the scan goes through the snapshot DataSource's
+stats sidecar) and the scan goes through the snapshot scan's
 ``ma-*`` filename dispatch.  Matching oracles across BOTH formats is
 itself the strongest cross-format law: two unrelated byte layouts, one
 reconciled relational truth.
@@ -53,7 +53,7 @@ def a36_sstable_ma_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-encoded as two Cassandra 3.x ma-format generations
     (``sources/sstable_ma.py`` — flags bytes, Cassandra vints, timestamps
     delta-encoded against the stats sidecar) and scanned back through the
-    snapshot DataSource's ``ma-*`` filename dispatch.  The oracle is
+    snapshot scan's ``ma-*`` filename dispatch.  The oracle is
     IDENTICAL to a33's: the visibility rules (partition deletion above /
     between cell timestamps, cell tombstones, expired vs surviving TTL
     cells, max-surviving-writetime) are format-independent truth, so a
@@ -68,7 +68,7 @@ def a36_sstable_ma_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     deltas span 1..3 vint bytes at sf0.1).
 
     Scale shape: identical to a33 — staging is a bounded driver-side
-    fixture encode; the SCAN is one InputPartition per Data.db decoded
+    fixture encode; the SCAN is one scan task per Data.db decoded
     executor-side into Arrow batches."""
     return _supplier_scan(
         spark,

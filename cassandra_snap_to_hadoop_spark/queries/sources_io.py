@@ -3,7 +3,7 @@
 Each query stages a deterministic artifact under the repo-local scratch dir
 (built once per sf_dir from the driver's own tables), drives the engine's
 source/sink through it, and reduces the result to aggregates whose oracle is
-plain SQL over the ORIGINAL table — so the custom DataSource, the parquet
+plain SQL over the ORIGINAL table — so the snapshot scan, the parquet
 sink, and incremental ingest are value-checked end-to-end, not just unit-
 tested.
 """
@@ -88,9 +88,10 @@ def _stage_snapshots(spark: SparkSession, sf_dir: str) -> Path:
 )
 def a2_snapshot_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events staged as a Cassandra snapshot layout (schema.cql + one
-    parquet 'SSTable' per generation), read back through the
-    ``cassandra_snapshot`` DataSource, aggregated — must equal SQL over the
-    original table, proving schema parse + partition-per-file reads."""
+    parquet 'SSTable' per generation), read back through ``snapshot_scan``
+    (one ``cassandra_snapshot`` Arrow-map task per file), aggregated —
+    must equal SQL over the original table, proving schema parse +
+    partition-per-file reads."""
     root = _stage_snapshots(spark, sf_dir)
     df = snapshot_scan(spark, str(root), "harness", "events", "tag-001")
     return df.groupBy("event_type").agg(

@@ -52,7 +52,7 @@ ENGINE_CONFS: dict[str, str] = {
     # comparisons agree wall-clock-for-wall-clock.
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
     # Write timestamps as INT64 micros (INT96 is deprecated and breaks
-    # Arrow-based readers, including the Python DataSource API).
+    # Arrow-based readers).
     "spark.sql.parquet.outputTimestampType": "TIMESTAMP_MICROS",
 }
 
@@ -83,12 +83,18 @@ def get_spark(app_name: str = "cs2h_spark", cpus: str | None = None) -> SparkSes
     # local[32] constant at cluster scale.  AQE still right-sizes upward-
     # skewed stages; on a cluster, size this to total executor cores.
     shuffle_parts = cpus if cpus.isdigit() else str(os.cpu_count() or 32)
+    # Python workers import this package by name (the snapshot decode,
+    # every Python UDF); put its parent dir first on their path so a
+    # session started from any cwd finds it.
+    pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    worker_path = os.pathsep.join(p for p in (pkg_parent, os.environ.get("PYTHONPATH")) if p)
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", shuffle_parts)
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.executorEnv.PYTHONPATH", worker_path)
     )
     for k, v in ENGINE_CONFS.items():
         builder = builder.config(k, v)

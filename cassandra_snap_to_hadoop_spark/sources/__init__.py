@@ -1,2 +1,2 @@
 """Sources & sinks: Cassandra snapshot ingestion (the reference's surface,
-re-expressed as a Spark custom data source) and the Hadoop-side parquet sink."""
+re-expressed as a Spark scan) and the Hadoop-side parquet sink."""

@@ -1,7 +1,7 @@
 """Legacy Cassandra SSTable ``ka``-format Data.db codec (SURVEY §2-A2).
 
 This fills the documented seam in ``sources/snapshot.py`` (VERDICT r6
-item 4): the snapshot DataSource can now read real ``*-Data.db`` record
+item 4): the snapshot scan can now read real ``*-Data.db`` record
 streams, not just parquet stand-ins.  The format implemented is the
 public Cassandra 2.x (“ka”/“la”) uncompressed row-oriented layout — the
 on-disk format the reference's era of ``nodetool snapshot`` produced:
@@ -37,8 +37,8 @@ Semantics applied at read (the same reconciliation Cassandra performs):
 The paired ``write_data_db`` encoder exists so tests and the registered
 roundtrip queries (a33/a34) can synthesize fixtures offline — no real
 SSTable binaries exist in this environment (SURVEY §0).  The PARSER is
-the distributed component: the snapshot DataSource hands each Data.db
-file to one ``InputPartition`` and decodes it executor-side into Arrow
+the distributed component: the snapshot scan hands each Data.db
+file to one scan task and decodes it executor-side into Arrow
 batches, so a 1000-executor cluster ingests 1000 SSTables concurrently.
 
 Scale note: one SSTable is decoded by one task, streaming partition by
@@ -49,7 +49,7 @@ reaching a snapshot.
 
 Format boundary (VERDICT r7 item 8): THIS module is the Cassandra 2.x
 ``ka``/``la`` decoder; the 3.x row-oriented ``ma`` format lives in
-``sources/sstable_ma.py`` (same DataSource seam, filename-dispatched);
+``sources/sstable_ma.py`` (same snapshot-scan seam, filename-dispatched);
 4.x+ formats (``na``/``nb``/``oa``) are out of scope offline — see the
 sstable_ma docstring for the full boundary statement.
 """

@@ -32,7 +32,7 @@ the Data.db means compressed), exactly how real readers decide.
 Readers verify the CompressionInfo CRC, every chunk's CRC, and the
 reassembled length against the recorded data_length before a single
 row is decoded.  Decompression happens executor-side inside the
-snapshot DataSource's per-file InputPartition — at production scale
+snapshot scan's per-file scan task — at production scale
 the chunk map is also what a range reader uses to seek; the full-scan
 path here decompresses sequentially, which is the Spark-ingest access
 pattern.

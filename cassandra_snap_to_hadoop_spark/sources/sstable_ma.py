@@ -57,8 +57,8 @@ requires it, exactly like Cassandra requires the real component (the
 full Statistics.db also carries validation/compaction metadata this
 engine does not need).
 
-The PARSER is the distributed component: the snapshot DataSource hands
-each ``ma-*-big-Data.db`` to one ``InputPartition`` and decodes it
+The PARSER is the distributed component: the snapshot scan hands
+each ``ma-*-big-Data.db`` to one scan task and decodes it
 executor-side into Arrow batches (same seam as the ka branch), so a
 1000-executor cluster ingests 1000 SSTables concurrently.  Reconciliation
 semantics at read match the ka codec: partition deletions shadow by
@@ -528,7 +528,7 @@ def parse_ma_data_db(
 ) -> Iterator[dict]:
     """Decode one ma-format Data.db byte stream into reconciled row dicts
     (columns in ``meta`` order plus ``_writetime``) — the same output
-    contract as the ka codec's ``parse_data_db``, so the DataSource's
+    contract as the ka codec's ``parse_data_db``, so the snapshot scan's
     Arrow bridge is shared.  ``stats`` comes from the sidecar
     Statistics.db (``read_stats_db(stats_path_for(path))``).  This is
     the sequential scan; an index-driven scan calls

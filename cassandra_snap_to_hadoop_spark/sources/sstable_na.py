@@ -54,8 +54,8 @@ Subset boundary: identical to the ma codec (regular rows only, full
 regular-column set, no markers/complex columns) — the row core is
 shared, so the subset is too.
 
-The PARSER is the distributed component: the snapshot DataSource hands
-each ``na-*``/``nb-*-big-Data.db`` to one ``InputPartition`` and decodes
+The PARSER is the distributed component: the snapshot scan hands
+each ``na-*``/``nb-*-big-Data.db`` to one scan task and decodes
 it executor-side into Arrow batches (the same seam as the ka and ma
 branches), so a 1000-executor cluster ingests 1000 SSTables
 concurrently; checksum verification is a linear scan of bytes already
@@ -233,5 +233,5 @@ def parse_na_data_db(
 ) -> Iterator[dict[str, Any]]:
     """Decode one verified na/nb Data.db byte stream — the row core is
     3.0's, so this IS the ma parser; callers must run
-    ``verify_na_integrity`` first (the DataSource branch does)."""
+    ``verify_na_integrity`` first (the snapshot scan does)."""
     return parse_ma_data_db(raw, meta, stats, as_of=as_of)

@@ -74,8 +74,8 @@ partition missing).  Point lookups (``oa_point_lookup``) read ONLY the
 covering chunk range of the target partition and verify exactly those
 chunk CRCs — the seek path stays O(partition), not O(file).
 
-The PARSER is the distributed component: the snapshot DataSource hands
-each ``oa-*-big-Data.db`` to one ``InputPartition`` and decodes it
+The PARSER is the distributed component: the snapshot scan hands
+each ``oa-*-big-Data.db`` to one scan task and decodes it
 executor-side into Arrow batches (same seam as ka/ma/na), so a
 1000-executor cluster ingests 1000 SSTables concurrently; at 100 TB the
 trie index is what makes single-partition restore reads O(seek) instead

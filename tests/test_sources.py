@@ -8,6 +8,7 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from cassandra_snap_to_hadoop_spark.operators.cassandra import apply_tombstones, lww_merge
 from cassandra_snap_to_hadoop_spark.sources.sinks import (
@@ -148,6 +149,81 @@ def test_snapshot_scan_schema_and_rows(spark, snapshot_fixture):
     assert dict(df.dtypes)["tags"] == "array<string>"
     # one input partition per sstable file
     assert df.select("_sstable").distinct().count() == 2
+
+
+def test_snapshot_scan_contract(spark, snapshot_fixture):
+    """The scan's planning contract: one partition per data file, a size
+    the planner treats as unknown (so a join with a large table shuffles
+    rather than broadcasts the snapshot), and the decode visible in the
+    executed plan as the ``cassandra_snapshot`` Arrow map."""
+    df = snapshot_scan(spark, snapshot_fixture, "ks1", "events_wide", "tag-002")
+    assert df.rdd.getNumPartitions() == 3
+    default_size = spark._jsparkSession.sessionState().conf().defaultSizeInBytes()
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    assert size >= default_size
+    joined = df.join(spark.range(3_000_000).withColumnRenamed("id", "pk"), "pk")
+    assert "BroadcastExchange" not in joined._jdf.queryExecution().executedPlan().toString()
+    assert "cassandra_snapshot" in df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_empty_snapshot_scans_and_exports(spark, tmp_path):
+    """A tag with ``schema.cql`` and no data files is an empty frame of
+    the declared schema, and both export modes land and verify 0 rows."""
+    from cassandra_snap_to_hadoop_spark.export import export_snapshot
+
+    snap = tmp_path / "ks1" / "events_wide" / "snapshots" / "tag-0"
+    snap.mkdir(parents=True)
+    (snap / "schema.cql").write_text(SCHEMA_CQL)
+    df = snapshot_scan(spark, str(tmp_path), "ks1", "events_wide", "tag-0")
+    assert df.count() == 0
+    assert df.schema == StructType.fromDDL(f"{CELLS_DDL}, _sstable string")
+    for merge in (False, True):
+        out = str(tmp_path / f"out-{merge}")
+        res = export_snapshot(
+            spark, str(tmp_path), "ks1", "events_wide", "tag-0", out,
+            merge=merge, key_cols=["pk", "ck"],
+        )
+        assert res["rows_exported"] == 0 and res["verified"] is True, res
+
+
+def test_scan_from_any_cwd(tmp_path):
+    """A session started outside the repo, with no PYTHONPATH, still
+    decodes a binary snapshot: its Python workers must import the
+    package without help from the environment."""
+    import subprocess
+    import sys
+
+    import cassandra_snap_to_hadoop_spark
+    from cassandra_snap_to_hadoop_spark.sources.snapshot import parse_table_meta
+    from cassandra_snap_to_hadoop_spark.sources.sstable_na import write_na_data_db
+
+    cql = "CREATE TABLE ks.flat (pk bigint PRIMARY KEY, name text);"
+    snap = tmp_path / "data" / "ks" / "flat" / "snapshots" / "t"
+    snap.mkdir(parents=True)
+    (snap / "schema.cql").write_text(cql)
+    parts = [
+        {"key": (pk,), "deletion": None, "rows": [
+            {"clustering": (), "marker_ts": 100, "cells": {"name": ("live", 100, f"n{pk}")}}]}
+        for pk in (1, 2, 3)
+    ]
+    write_na_data_db(str(snap / "nb-1-big-Data.db"), parts, parse_table_meta(cql), version="nb")
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(cassandra_snap_to_hadoop_spark.__file__)))
+    script = (
+        f"import sys; sys.path.insert(0, {repo!r})\n"
+        "from cassandra_snap_to_hadoop_spark.session import get_spark\n"
+        "from cassandra_snap_to_hadoop_spark.sources.snapshot import snapshot_scan\n"
+        "spark = get_spark('any-cwd', cpus='1')\n"
+        f"print('rows', snapshot_scan(spark, {str(tmp_path / 'data')!r}, 'ks', 'flat', 't').count())\n"
+        "spark.stop()\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_DRIVER_MEM"] = "1g"
+    proc = subprocess.run(
+        [sys.executable, "-c", script], cwd=tmp_path, env=env,
+        capture_output=True, text=True, timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    assert "rows 3" in proc.stdout.splitlines()
 
 
 def test_snapshot_to_silver_pipeline(spark, snapshot_fixture):

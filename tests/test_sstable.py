@@ -1,5 +1,5 @@
 """Unit tests for the legacy ka-format SSTable codec
-(cassandra_snap_to_hadoop_spark/sources/sstable.py) and its DataSource
+(cassandra_snap_to_hadoop_spark/sources/sstable.py) and its snapshot-scan
 integration — the binary seam VERDICT r6 item 4 asked for.
 
 The GOLDEN test pins exact bytes computed by hand from the public format
@@ -273,5 +273,5 @@ def test_datasource_reads_binary_sstables(spark, binary_snapshot):
     ).replace(tzinfo=None) or rows[1].at is not None
     assert rows[1]._sstable.endswith("ka-1-Data.db")
     assert rows[3]._sstable.endswith("ka-2-Data.db")
-    # one InputPartition per Data.db file
+    # one scan partition per Data.db file
     assert df.rdd.getNumPartitions() == 2

@@ -1,7 +1,7 @@
 """Unit tests for the compressed-SSTable leg
 (cassandra_snap_to_hadoop_spark/sources/sstable_compression.py):
 chunking golden pins, every corruption surface, component-presence
-dispatch through the DataSource, and the multi-chunk law."""
+dispatch through the snapshot scan, and the multi-chunk law."""
 
 from __future__ import annotations
 

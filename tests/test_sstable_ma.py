@@ -1,11 +1,11 @@
 """Unit tests for the modern ma-format SSTable codec
-(cassandra_snap_to_hadoop_spark/sources/sstable_ma.py) and its DataSource
+(cassandra_snap_to_hadoop_spark/sources/sstable_ma.py) and its snapshot-scan
 integration — the 3.x half of the format boundary (VERDICT r7 item 8).
 
 Mirrors tests/test_sstable.py's strategy: a GOLDEN test pins exact bytes
 computed by hand from the public 3.0 serialization (so writer and parser
 cannot drift together), roundtrips cover every cell kind and the
-shadowing rules, and the DataSource test drives the ``ma-*`` filename
+shadowing rules, and the snapshot-scan test drives the ``ma-*`` filename
 dispatch end-to-end — including a MIXED snapshot where one generation is
 ka and one is ma, decoding to one coherent relation.
 """
@@ -261,6 +261,6 @@ def test_datasource_mixed_ka_and_ma_generations(spark, mixed_snapshot):
     assert rows[2].name == "two" and rows[2]._sstable.endswith("ma-2-big-Data.db")
     assert rows[3].score == 1.5 and rows[3].n == 30
     assert rows[2]._writetime == 200 and rows[3]._writetime == 300
-    # one InputPartition per Data.db file; the Statistics.db sidecar is
+    # one scan partition per Data.db file; the Statistics.db sidecar is
     # a companion, never a partition
     assert df.rdd.getNumPartitions() == 2

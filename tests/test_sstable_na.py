@@ -1,6 +1,6 @@
 """Unit tests for the Cassandra 4.x na/nb SSTable codec
 (cassandra_snap_to_hadoop_spark/sources/sstable_na.py) and its
-DataSource integration — the 4.x leg of the format family (VERDICT r9
+snapshot-scan integration — the 4.x leg of the format family (VERDICT r9
 item 2).
 
 The row core is the ma codec's (already golden-pinned in
@@ -9,7 +9,7 @@ adds: the integrity components (Digest.crc32 / CRC.db / checksummed
 Statistics.db) as golden bytes, the corruption paths (every surface must
 raise BEFORE any row is yielded — integrity-on-read is the format's
 feature), the na-vs-nb version gates, and the three-format mixed
-snapshot through the DataSource dispatch.
+snapshot through the snapshot scan's dispatch.
 """
 
 from __future__ import annotations
@@ -227,7 +227,7 @@ def test_datasource_three_format_generations(spark, tri_format_snapshot):
     assert rows[3]._sstable.endswith("nb-3-big-Data.db")
     assert rows[4].name == "four" and rows[4].score == 2.0 and rows[4].n == 40
     assert [rows[k]._writetime for k in (1, 2, 3, 4)] == [100, 200, 300, 400]
-    # one InputPartition per Data.db; integrity sidecars never become
+    # one scan partition per Data.db; integrity sidecars never become
     # partitions
     assert df.rdd.getNumPartitions() == 3
 

@@ -1,6 +1,6 @@
 """Unit tests for the Cassandra 5.0 ``oa`` SSTable codec with BTI trie
 index (cassandra_snap_to_hadoop_spark/sources/sstable_oa.py +
-sources/bti.py) and its DataSource integration — the 5.0 leg of the
+sources/bti.py) and its snapshot-scan integration — the 5.0 leg of the
 format family (VERDICT r10 item 2).
 
 The row core is the ma codec's (golden-pinned in tests/test_sstable_ma)
@@ -11,7 +11,7 @@ represent), the widened + extended stats sidecar (key-range bounds,
 partition-deletion marker, token coverage), the serialized trie itself
 (every node type, prefix keys, point lookups), the index-driven scan's
 cross-checks (trie-vs-data key mismatch, row-index-vs-parsed offsets,
-file tiling), and the four-format mixed snapshot through the DataSource
+file tiling), and the four-format mixed snapshot through the snapshot scan
 dispatch including the explicit unknown-version error.
 """
 
