@@ -59,14 +59,14 @@ def export_snapshot(
     """Run the export; returns a summary dict: mode, rows exported and
     their in-flight checksum (as the write job observed them), whether
     the sink verified (``None`` when ``verify`` is off), and the sink."""
-    df: DataFrame = snapshot_scan(spark, data_dir, keyspace, table, tag)
+    # A merge needs _writetime: the scan keeps a declared _writetime
+    # data column and otherwise appends the cells' write timestamp.
+    df: DataFrame = snapshot_scan(
+        spark, data_dir, keyspace, table, tag, writetime=str(merge).lower()
+    )
     mode = "raw"
     if merge:
         mode = "merged"
-        if "_writetime" not in df.columns:
-            # binary SSTables: ask the scan for the synthetic cell
-            # timestamp; a stand-in's _writetime data column is kept
-            df = snapshot_scan(spark, data_dir, keyspace, table, tag, writetime="true")
         keys = key_cols or ["pk", "ck"]
         seq = "_seq" if "_seq" in df.columns else None
         df = lww_merge(df.drop("_sstable"), keys, "_writetime", seq)

@@ -173,6 +173,30 @@ def _fold_d2_matrix(sub: np.ndarray, cents: np.ndarray) -> np.ndarray:
     return acc
 
 
+def _list_matrix(col, name: str, width: int, dtype) -> np.ndarray:
+    """An Arrow list column as an (n, width) matrix.  ``flatten()``
+    honours a sliced array's offset, which ``.values`` does not; a null
+    row has no vector to flatten and is refused by column name."""
+    if col.null_count:
+        raise ValueError(
+            f"column {name!r} has {col.null_count} null row(s); the PQ "
+            f"kernels need a length-{width} vector in every row"
+        )
+    flat = col.flatten().to_numpy(zero_copy_only=False)
+    return np.asarray(flat, dtype=dtype).reshape(len(col), width)
+
+
+def _encode_column(col, name: str, books: list[np.ndarray]) -> np.ndarray:
+    """(n, M) PQ codes for one Arrow batch's vector column."""
+    dsub = books[0].shape[1]
+    mat = _list_matrix(col, name, len(books) * dsub, np.float64)
+    codes = np.empty((len(col), len(books)), dtype=np.int32)
+    for j, book in enumerate(books):
+        d2 = _fold_d2_matrix(mat[:, j * dsub : (j + 1) * dsub], book)
+        codes[:, j] = d2.argmin(axis=1)
+    return codes
+
+
 def encode(
     corpus: DataFrame, codebooks: list[np.ndarray], vec_col: str = "embedding"
 ) -> DataFrame:
@@ -191,24 +215,11 @@ def encode(
 
     m = len(codebooks)
     books = [np.ascontiguousarray(b, dtype=np.float64) for b in codebooks]
-    dsub = books[0].shape[1]
-    dim = m * dsub
 
     def encode_batches(batches):
         for batch in batches:
-            col = batch.column(vec_col)
-            n = len(col)
-            try:
-                mat = np.asarray(
-                    col.values.to_numpy(zero_copy_only=False), dtype=np.float64
-                ).reshape(n, dim)
-            except Exception:  # non-contiguous / null-bearing fallback
-                mat = np.array(col.to_pylist(), dtype=np.float64)
-            codes = np.empty((n, m), dtype=np.int32)
-            for j in range(m):
-                d2 = _fold_d2_matrix(mat[:, j * dsub : (j + 1) * dsub], books[j])
-                codes[:, j] = d2.argmin(axis=1)
-            offsets = pa.array(np.arange(n + 1, dtype=np.int32) * m)
+            codes = _encode_column(batch.column(vec_col), vec_col, books)
+            offsets = pa.array(np.arange(len(codes) + 1, dtype=np.int32) * m)
             codes_arr = pa.ListArray.from_arrays(offsets, pa.array(codes.ravel()))
             yield batch.append_column("codes", codes_arr)
 
@@ -259,14 +270,8 @@ def adc_topk(
     def adc_batches(batches):
         for batch in batches:
             ids = batch.column(id_col).to_numpy(zero_copy_only=False)
-            col = batch.column("codes")
             n = len(ids)
-            try:
-                codes = np.asarray(
-                    col.values.to_numpy(zero_copy_only=False), dtype=np.int64
-                ).reshape(n, m)
-            except Exception:
-                codes = np.array(col.to_pylist(), dtype=np.int64)
+            codes = _list_matrix(batch.column("codes"), "codes", m, np.int64)
             # (n, nq) ADC sums, one lookup-add per subspace in j order —
             # the fold's exact add sequence.
             acc = np.zeros((n, nq), dtype=np.float64)

@@ -9,20 +9,10 @@ decoders slot in exactly at the per-file read seam, ``_read_file``):
     <data_dir>/<keyspace>/<table>/snapshots/<tag>/gen-*.parquet
     <data_dir>/<keyspace>/<table>/snapshots/<tag>/*-Data.db
 
-SSTable format boundary (VERDICT r7 item 8, closed through 5.0 in
-round 11): the legacy Cassandra 2.x ``ka``/``la`` cell-oriented format
-is decoded by ``sources/sstable.py`` (era-correct for the reference),
-the Cassandra 3.x ``ma`` row-oriented format (vints, flags, delta
-timestamps) by ``sources/sstable_ma.py``, the Cassandra 4.x
-``na``/``nb`` format (same row core + digest/chunk checksums verified
-on read + checksummed stats metadata) by ``sources/sstable_na.py``,
-and the Cassandra 5.0 ``oa`` format (extended deletion times, key-range
-stats metadata, BTI trie-indexed Partitions.db/Rows.db driving the
-scan) by ``sources/sstable_oa.py`` — dispatch is by the generation
-filename (``oa-``/``na-``/``nb-``/``ma-<gen>-big-Data.db`` vs
-``<ks>-<table>-ka-<gen>-Data.db``).  An unrecognized
-``<xx>-<gen>-big-Data.db`` version raises an explicit
-unsupported-format error rather than silently misreading.
+Binary SSTables are dispatched by the filename's format version through
+``_READERS`` (the family table sits beside it); an unrecognized
+``<xx>-<gen>-big-Data.db`` version raises an explicit unsupported-format
+error rather than silently misreading.
 
 Design for scale: the driver lists the snapshot's files and parses
 ``schema.cql`` (Cassandra ships it inside every snapshot since 3.0; the
@@ -31,7 +21,8 @@ schema never comes from file inference).  The scan is then one Arrow map
 index of one row and one partition per file — the SSTable is the
 natural parallelism unit of a snapshot, so a 1000-executor cluster
 decodes 1000 SSTables concurrently, each task streaming Arrow batches,
-with the driver holding only the file list.  It is an Arrow map rather
+with the driver holding only the file list; rows become Arrow batches
+of at most ``_BATCH_ROWS`` as they decode.  It is an Arrow map rather
 than a Python DataSource because that API makes two Python planner
 round trips per scan (schema, then reader and partitions) before a task
 starts.  The index is RDD-backed so that the planner reports the scan's
@@ -44,10 +35,20 @@ from __future__ import annotations
 
 import os
 import re
+from itertools import islice
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from cassandra_snap_to_hadoop_spark.sources.sstable import read_ka_sstable
+from cassandra_snap_to_hadoop_spark.sources.sstable_compression import (
+    compression_info_path_for,
+    decompress_data_db,
+)
+from cassandra_snap_to_hadoop_spark.sources.sstable_ma import read_ma_sstable
+from cassandra_snap_to_hadoop_spark.sources.sstable_na import read_na_sstable
+from cassandra_snap_to_hadoop_spark.sources.sstable_oa import scan_oa_sstable
 
 # CQL -> Spark DDL type mapping (SURVEY §1.1 table).
 _CQL_TO_SPARK = {
@@ -192,12 +193,37 @@ def _list_snapshot_files(snap_dir: str) -> list[str]:
     )
 
 
+_BATCH_ROWS = 8192
+
+# The SSTable format family.  Each rung keeps the row core below it and
+# adds integrity or index components around it:
+#
+#   version  Cassandra  module           reader checks, in order
+#   ka/la    2.x        sstable.py       none (cell-oriented layout)
+#   ma       3.0+       sstable_ma.py    Statistics.db stats sidecar
+#   na/nb    4.x        sstable_na.py    Digest.crc32, CRC.db chunk CRCs,
+#                                        checksummed Statistics.db
+#   oa       5.0        sstable_oa.py    as na, plus the BTI index
+#                                        (Partitions.db/Rows.db) that
+#                                        drives the decode
+#
+# A CompressionInfo.db beside any Data.db (sstable_compression.py) means
+# chunked-compressed bytes, verified and decompressed before the reader
+# runs.  Every reader takes (path, meta, as_of, raw) and yields row dicts
+# (``meta`` columns plus ``_writetime``).
+_READERS = {
+    "ma": read_ma_sstable,
+    "na": read_na_sstable,
+    "nb": read_na_sstable,
+    "oa": scan_oa_sstable,
+}
+
+
 def _read_file(path: str, schema, meta, as_of: int, want_wt: bool):
     """Decode one snapshot file into Arrow batches of the scan's schema.
-    ``_writetime`` is SYNTHETIC only when ``want_wt`` (the writetime
-    option) asked for it; a source table may legitimately carry a
-    _writetime DATA column (the parquet stand-in fixtures do) and must
-    keep it."""
+    ``want_wt`` asks for the SYNTHETIC ``_writetime`` column, which the
+    scan only appends when ``schema.cql`` declares no ``_writetime``
+    data column of its own (the parquet stand-in fixtures do)."""
     if path.endswith("-Data.db"):
         yield from _read_sstable(path, schema, meta, as_of, want_wt)
         return
@@ -222,110 +248,47 @@ def _read_file(path: str, schema, meta, as_of: int, want_wt: bool):
         table = table.append_column(
             "_writetime", pa.array([None] * table.num_rows, type=pa.int64())
         )
-    yield from table.to_batches(max_chunksize=8192)
+    yield from table.to_batches(max_chunksize=_BATCH_ROWS)
 
 
 def _read_sstable(path: str, schema, meta, as_of: int, want_wt: bool):
-    """Decode one Data.db file executor-side (the binary seam VERDICT
-    r1-r6 tracked).  Format dispatch is by the SSTable filename's
-    version component, exactly how Cassandra names generations:
-
-    * ``oa-<gen>-big-Data.db`` — Cassandra 5.0 format
-      (``sources/sstable_oa.py``; digest + chunk checksums AND both
-      BTI index sidecars verified, decode driven by the
-      Partitions.db trie);
-    * ``na-``/``nb-<gen>-big-Data.db`` — Cassandra 4.x format
-      (``sources/sstable_na.py``; digest + chunk checksums VERIFIED
-      before decode, checksummed stats sidecar required);
-    * ``ma-<gen>-big-Data.db`` — Cassandra 3.x row-oriented format
-      (``sources/sstable_ma.py``; requires the stats sidecar);
-    * any OTHER ``<xx>-<gen>-big-Data.db`` — an explicit
-      unsupported-version error (a future 5.x/6.x format must never
-      fall through to the 2.x cell parser and fail with a decode
-      error three rows in);
-    * anything else ``*-Data.db`` (``<ks>-<table>-ka-<gen>-Data.db``)
-      — the legacy 2.x cell-oriented ``ka`` format
-      (``sources/sstable.py``)."""
+    """Decode one Data.db file executor-side: read it, decompress it
+    when a CompressionInfo.db sits beside it, pick the reader by the
+    filename's version (``<xx>-<gen>-big-Data.db``; anything else is the
+    legacy ``<ks>-<table>-ka-<gen>-Data.db``), and stream its rows into
+    Arrow batches."""
     import pyarrow as pa
-
-    from cassandra_snap_to_hadoop_spark.sources.sstable import parse_data_db
 
     with open(path, "rb") as fh:
         raw = fh.read()
-    # Compression is orthogonal to the row format and signalled BY
-    # COMPONENT PRESENCE (exactly how real readers decide): a
-    # CompressionInfo.db beside the Data.db means chunked-compressed
-    # bytes — verify + decompress executor-side, then dispatch the
-    # row core as usual.
-    from cassandra_snap_to_hadoop_spark.sources.sstable_compression import (
-        compression_info_path_for,
-        decompress_data_db,
-    )
-
     if os.path.exists(compression_info_path_for(path)):
         raw = decompress_data_db(path, raw)
     base = os.path.basename(path)
-    if base.startswith("oa-"):
-        from cassandra_snap_to_hadoop_spark.sources.sstable_oa import (
-            scan_oa_sstable,
+    version = base.partition("-")[0]
+    if version not in _READERS and re.match(r"^[a-z]{2}-\d+-big-Data\.db$", base):
+        # a future format must never fall through to the 2.x parser
+        raise ValueError(
+            f"unsupported SSTable format version {version!r} in "
+            f"{base} — this source decodes ka/la (2.x), ma (3.x), "
+            f"na/nb (4.x) and oa (5.0)"
         )
-
-        row_iter = scan_oa_sstable(path, meta, as_of=as_of, raw=raw)
-    elif base.startswith(("na-", "nb-")):
-        from cassandra_snap_to_hadoop_spark.sources.sstable_na import (
-            parse_na_data_db,
-            read_na_stats_db,
-            stats_path_for,
-            verify_na_integrity,
-        )
-
-        verify_na_integrity(path, raw)
-        stats, _na_meta = read_na_stats_db(stats_path_for(path))
-        row_iter = parse_na_data_db(raw, meta, stats, as_of=as_of)
-    elif base.startswith("ma-"):
-        from cassandra_snap_to_hadoop_spark.sources.sstable_ma import (
-            parse_ma_data_db,
-            read_stats_db,
-            stats_path_for,
-        )
-
-        stats = read_stats_db(stats_path_for(path))
-        row_iter = parse_ma_data_db(raw, meta, stats, as_of=as_of)
-    else:
-        m = re.match(r"^([a-z]{2})-\d+-big-Data\.db$", base)
-        if m:
-            raise ValueError(
-                f"unsupported SSTable format version {m.group(1)!r} in "
-                f"{base} — this source decodes ka/la (2.x), ma (3.x), "
-                f"na/nb (4.x) and oa (5.0)"
-            )
-        row_iter = parse_data_db(raw, meta, as_of=as_of)
-    cols: dict[str, list] = {name: [] for name, _ in meta.columns}
-    wts: list = []
-    n_rows = 0
-    for row in row_iter:
-        n_rows += 1
+    rows = iter(_READERS.get(version, read_ka_sstable)(path, meta, as_of, raw))
+    arrow = pa.schema(
+        [pa.field(f.name, _arrow_type(f.dataType.simpleString())) for f in schema.fields]
+    )
+    while chunk := list(islice(rows, _BATCH_ROWS)):
+        cols = []
         for name, ctype in meta.columns:
-            v = row.get(name)
-            if v is not None and ctype == "timestamp":
-                v = v * 1000  # Cassandra millis -> micros
-            cols[name].append(v)
-        wts.append(row["_writetime"])
-    arrays, fields = [], []
-    spark_by_name = {f.name: f for f in schema.fields}
-    for name, _ in meta.columns:
-        if name not in spark_by_name:
-            continue
-        at = _arrow_type(spark_by_name[name].dataType.simpleString())
-        arrays.append(pa.array(cols[name], type=at))
-        fields.append(pa.field(name, at))
-    arrays.append(pa.array([path] * n_rows, type=pa.string()))
-    fields.append(pa.field("_sstable", pa.string()))
-    if want_wt:
-        arrays.append(pa.array(wts, type=pa.int64()))
-        fields.append(pa.field("_writetime", pa.int64()))
-    table = pa.Table.from_arrays(arrays, schema=pa.schema(fields))
-    yield from table.to_batches(max_chunksize=8192)
+            col = [r.get(name) for r in chunk]
+            if ctype == "timestamp":  # Cassandra millis -> micros
+                col = [None if v is None else v * 1000 for v in col]
+            cols.append(col)
+        cols.append([path] * len(chunk))
+        if want_wt:
+            cols.append([r["_writetime"] for r in chunk])
+        yield pa.RecordBatch.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+        )
 
 
 _ARROW_BY_SPARK = {
@@ -366,8 +329,9 @@ def snapshot_scan(
     LWW merges can audit which generation won).  Extra options:
     ``writetime="true"`` appends the per-row ``_writetime`` column (max
     surviving cell timestamp — binary SSTables only; parquet stand-ins
-    yield NULL), ``as_of=<epoch s>`` pins the TTL-expiry reference
-    instant for deterministic reads.
+    yield NULL) unless ``schema.cql`` already declares one, which is
+    then kept as the only ``_writetime``; ``as_of=<epoch s>`` pins the
+    TTL-expiry reference instant for deterministic reads.
 
     The driver lists the files and parses ``schema.cql``; each file is
     then decoded by one task of the ``cassandra_snapshot`` Arrow map,
@@ -379,7 +343,11 @@ def snapshot_scan(
     with open(os.path.join(snap, "schema.cql")) as fh:
         cql = fh.read()
     as_of = int(options.get("as_of", 2**31 - 1))
-    want_wt = str(options.get("writetime", "false")).lower() == "true"
+    meta = parse_table_meta(cql)
+    want_wt = (
+        str(options.get("writetime", "false")).lower() == "true"
+        and "_writetime" not in meta.types
+    )
     ddl = parse_schema_cql(cql) + ", _sstable string"
     if want_wt:
         ddl += ", _writetime long"
@@ -387,7 +355,6 @@ def snapshot_scan(
     files = _list_snapshot_files(snap)
     if not files:
         return spark.createDataFrame([], schema)
-    meta = parse_table_meta(cql)
 
     def cassandra_snapshot(batches):
         for batch in batches:

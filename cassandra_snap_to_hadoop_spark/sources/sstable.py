@@ -41,22 +41,22 @@ the distributed component: the snapshot scan hands each Data.db
 file to one scan task and decodes it executor-side into Arrow
 batches, so a 1000-executor cluster ingests 1000 SSTables concurrently.
 
-Scale note: one SSTable is decoded by one task, streaming partition by
-partition (the generator never materializes the file's rows).  SSTables
-are bounded by compaction policy (the a29/a31 audits); a pathological
-multi-GB single file would be split by Cassandra itself before ever
-reaching a snapshot.
+Scale note: one SSTable is decoded by one task.  The parser yields
+partition by partition and the snapshot scan turns rows into Arrow
+batches of at most 8192 rows as they decode, so the scan never
+materializes the file's rows; the file's bytes are still read whole.
 
-Format boundary (VERDICT r7 item 8): THIS module is the Cassandra 2.x
-``ka``/``la`` decoder; the 3.x row-oriented ``ma`` format lives in
-``sources/sstable_ma.py`` (same snapshot-scan seam, filename-dispatched);
-4.x+ formats (``na``/``nb``/``oa``) are out of scope offline — see the
-sstable_ma docstring for the full boundary statement.
+Format boundary: this module is the Cassandra 2.x ``ka``/``la``
+decoder and the family's shared base (values, ``TableMeta``, component
+paths, checked sidecars).  The family table (ka/ma/na/nb/oa) sits next
+to the scan's version→reader table in ``sources/snapshot.py``.
 """
 
 from __future__ import annotations
 
 import struct
+import zlib
+from functools import partial
 from typing import Any, Iterator
 
 LIVE_LDT = 0x7FFFFFFF  # localDeletionTime sentinel for "not deleted"
@@ -65,6 +65,45 @@ LIVE_MFDA = -(2**63)  # markedForDeleteAt sentinel for "not deleted"
 DELETION_MASK = 0x01
 EXPIRATION_MASK = 0x02
 COUNTER_MASK = 0x04
+
+
+# ------------------------------------------------------------ components
+#
+# Every component of an SSTable sits beside its Data.db under the same
+# descriptor prefix.  The checked sidecars are
+# <magic> <payload> <u32 crc32(payload)>.
+
+def component_path(data_path: str, component: str) -> str:
+    """``<descriptor>-Data.db`` -> ``<descriptor>-<component>``."""
+    if not data_path.endswith("-Data.db"):
+        raise ValueError(f"not a Data.db path: {data_path}")
+    return data_path[: -len("Data.db")] + component
+
+
+stats_path_for = partial(component_path, component="Statistics.db")
+
+
+def write_checked(path: str, magic: bytes, payload: bytes) -> None:
+    with open(path, "wb") as fh:
+        fh.write(magic + payload + struct.pack(">I", zlib.crc32(payload)))
+
+
+def read_checked(path: str, magic: bytes) -> bytes:
+    """The payload of a checked sidecar; raises ValueError on a wrong
+    magic or a CRC32 mismatch, naming the component."""
+    with open(path, "rb") as fh:
+        raw = fh.read()
+    if raw[: len(magic)] != magic:
+        raise ValueError(f"not a {magic!r} component: {path}")
+    payload, tail = raw[len(magic) : -4], raw[-4:]
+    (want,) = struct.unpack(">I", tail)
+    got = zlib.crc32(payload)
+    if got != want:
+        raise ValueError(
+            f"{path.rsplit('-', 1)[-1]} checksum mismatch at {path}: "
+            f"crc32 {got} != recorded {want} (component corrupt)"
+        )
+    return payload
 
 
 # ---------------------------------------------------------------- values
@@ -290,6 +329,13 @@ def parse_data_db(
                 out[col] = None if cell is None else cell[1]
             out["_writetime"] = row["_writetime"]
             yield out
+
+
+def read_ka_sstable(
+    path: str, meta: TableMeta, as_of: int, raw: bytes
+) -> Iterator[dict]:
+    """The scan's ka reader: a ka SSTable has no sidecars to check."""
+    return parse_data_db(raw, meta, as_of=as_of)
 
 
 def _decode_key(key: bytes, meta: TableMeta) -> tuple:

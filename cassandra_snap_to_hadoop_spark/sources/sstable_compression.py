@@ -42,15 +42,21 @@ from __future__ import annotations
 
 import struct
 import zlib
+from functools import partial
+
+from cassandra_snap_to_hadoop_spark.sources.sstable import (
+    component_path,
+    read_checked,
+    write_checked,
+)
 
 _MAGIC = b"CSTH-CMP"
 DEFLATE = "DeflateCompressor"
+# after the compressor name: chunk_length, data_length, chunk_count
+_HEAD = struct.Struct(">iqI")
 
 
-def compression_info_path_for(data_path: str) -> str:
-    if not data_path.endswith("-Data.db"):
-        raise ValueError(f"not a Data.db path: {data_path}")
-    return data_path[: -len("-Data.db")] + "-CompressionInfo.db"
+compression_info_path_for = partial(component_path, component="CompressionInfo.db")
 
 
 def write_compressed_data_db(
@@ -70,39 +76,21 @@ def write_compressed_data_db(
     with open(path, "wb") as fh:
         fh.write(bytes(out))
     name = DEFLATE.encode("utf-8")
-    payload = bytearray()
-    payload += struct.pack(">H", len(name)) + name
-    payload += struct.pack(">iq", chunk_length, len(raw))
-    payload += struct.pack(">I", len(offsets))
-    for o in offsets:
-        payload += struct.pack(">Q", o)
-    with open(compression_info_path_for(path), "wb") as fh:
-        fh.write(_MAGIC + bytes(payload) + struct.pack(">I", zlib.crc32(bytes(payload))))
+    payload = struct.pack(">H", len(name)) + name
+    payload += _HEAD.pack(chunk_length, len(raw), len(offsets))
+    payload += struct.pack(f">{len(offsets)}Q", *offsets)
+    write_checked(compression_info_path_for(path), _MAGIC, payload)
 
 
 def read_compression_info(path: str) -> tuple[str, int, int, list[int]]:
     """CRC-verify and decode CompressionInfo.db → (compressor,
     chunk_length, data_length, chunk offsets)."""
-    with open(path, "rb") as fh:
-        raw = fh.read()
-    if raw[: len(_MAGIC)] != _MAGIC:
-        raise ValueError(f"not a {_MAGIC!r} component: {path}")
-    payload, tail = raw[len(_MAGIC) : -4], raw[-4:]
-    (want,) = struct.unpack(">I", tail)
-    got = zlib.crc32(payload)
-    if got != want:
-        raise ValueError(
-            f"CompressionInfo.db checksum mismatch at {path}: "
-            f"crc32 {got} != recorded {want}"
-        )
+    payload = read_checked(path, _MAGIC)
     (nlen,) = struct.unpack_from(">H", payload, 0)
     name = payload[2 : 2 + nlen].decode("utf-8")
     i = 2 + nlen
-    chunk_length, data_length = struct.unpack_from(">iq", payload, i)
-    i += 12
-    (n,) = struct.unpack_from(">I", payload, i)
-    i += 4
-    offsets = [struct.unpack_from(">Q", payload, i + 8 * k)[0] for k in range(n)]
+    chunk_length, data_length, n = _HEAD.unpack_from(payload, i)
+    offsets = list(struct.unpack_from(f">{n}Q", payload, i + _HEAD.size))
     return name, chunk_length, data_length, offsets
 
 

@@ -1,24 +1,11 @@
 """Modern Cassandra SSTable ``ma``-format Data.db codec (SURVEY §2-A36).
 
-Companion to the legacy ``ka`` codec in ``sources/sstable.py`` and the
-second half of the format boundary VERDICT r7 item 8 asked to document:
-
-* **ka / la (Cassandra 2.x)** — implemented in ``sources/sstable.py``:
-  cell-oriented layout, CompositeType cell names, plain big-endian
-  integers.  Era-correct for the reference (a 2013-2014 ETL tool).
-* **ma (Cassandra 3.0+, CASSANDRA-8099 storage engine)** — implemented
-  HERE: row-oriented layout, flags bytes, Cassandra vint coding, and
-  delta-encoded timestamps/TTLs/deletion-times against per-SSTable
-  ``EncodingStats`` minimums.
-* **na / nb (Cassandra 4.x)** — implemented in
-  ``sources/sstable_na.py`` on THIS module's row core (the 4.x Data.db
-  serialization is unchanged from 3.0; 4.x adds digest/chunk checksums
-  and checksummed repair metadata around it).
-* **oa (Cassandra 5.0)** — implemented in ``sources/sstable_oa.py``,
-  also on this row core via the pluggable partition-deletion header
-  codec below (5.0 widened deletion times past 2038) plus the BTI trie
-  index; ``parse_partition_at`` is the seam its index-driven reader
-  calls.
+The Cassandra 3.0+ row-oriented format (CASSANDRA-8099 storage engine):
+flags bytes, Cassandra vint coding, and delta-encoded
+timestamps/TTLs/deletion-times against per-SSTable ``EncodingStats``
+minimums.  This is the family's shared row core: ``na``/``nb`` and
+``oa`` reuse it (the family table is in ``sources/snapshot.py``), and
+``parse_partition_at`` is the seam the ``oa`` index-driven reader calls.
 
 Byte layout implemented (the public 3.0 BIG-format serialization):
 
@@ -78,6 +65,7 @@ from cassandra_snap_to_hadoop_spark.sources.sstable import (
     TableMeta,
     decode_value,
     encode_value,
+    stats_path_for,
 )
 
 # unfiltered flags (public UnfilteredSerializer constants)
@@ -183,12 +171,6 @@ def read_stats_db(path: str) -> EncodingStats:
     return EncodingStats(ts, ldt, ttl)
 
 
-def stats_path_for(data_path: str) -> str:
-    if not data_path.endswith("-Data.db"):
-        raise ValueError(f"not a Data.db path: {data_path}")
-    return data_path[: -len("-Data.db")] + "-Statistics.db"
-
-
 # ------------------------------------------------------------- clustering
 
 def _encode_clustering(cvals: tuple, meta: TableMeta) -> bytes:
@@ -207,10 +189,7 @@ def _encode_clustering(cvals: tuple, meta: TableMeta) -> bytes:
             if len(b) == 0:
                 header |= 1 << (j * 2 + 1)
                 continue
-            if meta.types[col].lower() in _FIXED_LEN:
-                bodies.append(b)
-            else:
-                bodies.append(encode_uvint(len(b)) + b)
+            bodies.append(_frame_value(meta.types[col], b))
         out += encode_uvint(header)
         for b in bodies:
             out += b
@@ -242,8 +221,9 @@ def _decode_clustering(raw: bytes, i: int, meta: TableMeta) -> tuple[tuple, int]
     return tuple(vals), i
 
 
-def _encode_cell_value(cql_type: str, v: Any) -> bytes:
-    b = encode_value(cql_type, v)
+def _frame_value(cql_type: str, b: bytes) -> bytes:
+    """An encoded value as serialized: raw when the type's length is
+    fixed, ``<uvint len>``-prefixed otherwise."""
     if cql_type.lower() in _FIXED_LEN:
         return b
     return encode_uvint(len(b)) + b
@@ -359,18 +339,12 @@ def serialize_ma_partitions(
                 if ts == row_ts:
                     flags |= CELL_USE_ROW_TIMESTAMP
                 vb = b""
-                if kind == "live":
+                if kind in ("live", "expiring"):
                     raw_v = encode_value(meta.types[col], spec[2])
                     if len(raw_v) == 0:
                         flags |= CELL_HAS_EMPTY_VALUE
                     else:
-                        vb = _encode_cell_value(meta.types[col], spec[2])
-                elif kind == "expiring":
-                    raw_v = encode_value(meta.types[col], spec[2])
-                    if len(raw_v) == 0:
-                        flags |= CELL_HAS_EMPTY_VALUE
-                    else:
-                        vb = _encode_cell_value(meta.types[col], spec[2])
+                        vb = _frame_value(meta.types[col], raw_v)
                 body += bytes((flags,))
                 if not flags & CELL_USE_ROW_TIMESTAMP:
                     body += encode_uvint(ts - stats.min_timestamp)
@@ -537,3 +511,10 @@ def parse_ma_data_db(
     while i < n:
         rows, i = parse_partition_at(raw, i, meta, stats, as_of=as_of)
         yield from rows
+
+
+def read_ma_sstable(
+    path: str, meta: TableMeta, as_of: int, raw: bytes
+) -> Iterator[dict]:
+    """The scan's ma reader: the stats sidecar, then the row core."""
+    return parse_ma_data_db(raw, meta, read_stats_db(stats_path_for(path)), as_of=as_of)

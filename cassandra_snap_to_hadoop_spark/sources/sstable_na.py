@@ -1,33 +1,22 @@
 """Cassandra 4.x SSTable ``na``/``nb``-format codec (SURVEY §2-A40).
 
-Third member of the format family, closing the boundary VERDICT r9
-item 2 named:
+Per the public 4.0 BigFormat version notes, the Data.db ROW
+SERIALIZATION IS UNCHANGED from 3.0; what 4.x adds is integrity +
+repair metadata around it (the family table is in
+``sources/snapshot.py``):
 
-* **ka / la (Cassandra 2.x)** — ``sources/sstable.py``: cell-oriented
-  layout, CompositeType cell names.
-* **ma (Cassandra 3.0+, CASSANDRA-8099)** — ``sources/sstable_ma.py``:
-  row-oriented layout, flags bytes, vints, delta-encoded timestamps.
-* **na (4.0) / nb (4.0.0+)** — HERE.  Per the public 4.0 BigFormat
-  version notes, the Data.db ROW SERIALIZATION IS UNCHANGED from 3.0;
-  what 4.x adds is integrity + repair metadata around it:
-
-  - ``na``: uncompressed-chunk checksums (a ``CRC.db`` component with a
-    CRC32 per fixed-size chunk of Data.db, plus a ``Digest.crc32``
-    full-file CRC32 — 2.x/3.x only wrote digests for compressed
-    tables), a pending-repair session id and the ``isTransient`` flag
-    in the stats metadata, and a CHECKSUMMED metadata file (the 3.x
-    Statistics.db had no integrity protection at all).
-  - ``nb``: adds the originating host id to the stats metadata.
-
-* **oa (Cassandra 5.0)** — ``sources/sstable_oa.py``: same row core,
-  keeps this module's digest/chunk-checksum components, adds extended
-  (post-2038) deletion times, key-range/partition-deletion/token-
-  coverage stats metadata, and the BTI trie index
-  (Partitions.db/Rows.db) that drives its reader.
+* ``na``: uncompressed-chunk checksums (a ``CRC.db`` component with a
+  CRC32 per fixed-size chunk of Data.db, plus a ``Digest.crc32``
+  full-file CRC32 — 2.x/3.x only wrote digests for compressed tables),
+  a pending-repair session id and the ``isTransient`` flag in the stats
+  metadata, and a CHECKSUMMED metadata file (the 3.x Statistics.db had
+  no integrity protection at all).
+* ``nb``: adds the originating host id to the stats metadata.
 
 This module therefore REUSES the ma row codec verbatim
-(``serialize_ma_partitions`` / ``parse_ma_data_db``) and implements the
-4.x deltas faithfully in miniature:
+(``serialize_ma_partitions`` / ``parse_ma_data_db``), owns the
+digest/chunk-checksum components the ``oa`` codec shares, and
+implements the 4.x deltas faithfully in miniature:
 
     Digest.crc32   := ASCII decimal CRC32 of the whole Data.db
                       (Cassandra writes String.valueOf(crc))
@@ -54,12 +43,9 @@ Subset boundary: identical to the ma codec (regular rows only, full
 regular-column set, no markers/complex columns) — the row core is
 shared, so the subset is too.
 
-The PARSER is the distributed component: the snapshot scan hands
-each ``na-*``/``nb-*-big-Data.db`` to one scan task and decodes
-it executor-side into Arrow batches (the same seam as the ka and ma
-branches), so a 1000-executor cluster ingests 1000 SSTables
-concurrently; checksum verification is a linear scan of bytes already
-in memory and happens executor-side too.
+The snapshot scan hands each ``na-*``/``nb-*-big-Data.db`` to one scan
+task (``read_na_sstable``); checksum verification is a linear scan of
+bytes already in memory and happens executor-side too.
 """
 
 from __future__ import annotations
@@ -67,9 +53,16 @@ from __future__ import annotations
 import struct
 import zlib
 from dataclasses import dataclass
-from typing import Any, Iterator
+from functools import partial
+from typing import Iterator
 
-from cassandra_snap_to_hadoop_spark.sources.sstable import TableMeta
+from cassandra_snap_to_hadoop_spark.sources.sstable import (
+    TableMeta,
+    component_path,
+    read_checked,
+    stats_path_for,
+    write_checked,
+)
 from cassandra_snap_to_hadoop_spark.sources.sstable_ma import (
     EncodingStats,
     parse_ma_data_db,
@@ -77,6 +70,8 @@ from cassandra_snap_to_hadoop_spark.sources.sstable_ma import (
 )
 
 _STATS_MAGIC = b"CSTH-NA1"
+# version, minTimestamp, minLDT, minTTL, pending_repair, is_transient, host_id
+_STATS = struct.Struct(">2sqii16s?16s")
 _CHUNK_SIZE = 65536  # uncompressed-chunk checksum granularity (64 KiB)
 _NO_ID = b"\x00" * 16
 
@@ -91,22 +86,8 @@ class NaMetadata:
     host_id: bytes | None  # 16-byte originating host id (nb)
 
 
-def _component_path(data_path: str, suffix: str) -> str:
-    if not data_path.endswith("-Data.db"):
-        raise ValueError(f"not a Data.db path: {data_path}")
-    return data_path[: -len("-Data.db")] + f"-{suffix}"
-
-
-def stats_path_for(data_path: str) -> str:
-    return _component_path(data_path, "Statistics.db")
-
-
-def digest_path_for(data_path: str) -> str:
-    return _component_path(data_path, "Digest.crc32")
-
-
-def crc_path_for(data_path: str) -> str:
-    return _component_path(data_path, "CRC.db")
+digest_path_for = partial(component_path, component="Digest.crc32")
+crc_path_for = partial(component_path, component="CRC.db")
 
 
 # ----------------------------------------------------------------- write
@@ -136,6 +117,21 @@ def write_na_data_db(
         if blob is not None and len(blob) != 16:
             raise ValueError(f"{name} must be a 16-byte id")
     raw, stats = serialize_ma_partitions(partitions, meta)
+    write_data_with_checksums(path, raw)
+    payload = _STATS.pack(
+        version.encode("ascii"),
+        stats.min_timestamp,
+        stats.min_ldt,
+        stats.min_ttl,
+        pending_repair or _NO_ID,
+        is_transient,
+        host_id or _NO_ID,
+    )
+    write_checked(stats_path_for(path), _STATS_MAGIC, payload)
+
+
+def write_data_with_checksums(path: str, raw: bytes) -> None:
+    """Write Data.db plus its Digest.crc32 and CRC.db (na/nb and oa)."""
     with open(path, "wb") as fh:
         fh.write(raw)
     with open(digest_path_for(path), "wb") as fh:
@@ -145,15 +141,6 @@ def write_na_data_db(
         crc += struct.pack(">I", zlib.crc32(raw[off : off + _CHUNK_SIZE]))
     with open(crc_path_for(path), "wb") as fh:
         fh.write(bytes(crc))
-    payload = bytearray()
-    payload += version.encode("ascii")
-    payload += struct.pack(">qii", stats.min_timestamp, stats.min_ldt, stats.min_ttl)
-    payload += pending_repair if pending_repair is not None else _NO_ID
-    payload += bytes((1 if is_transient else 0,))
-    payload += host_id if host_id is not None else _NO_ID
-    payload += struct.pack(">I", zlib.crc32(bytes(payload)))
-    with open(stats_path_for(path), "wb") as fh:
-        fh.write(_STATS_MAGIC + bytes(payload))
 
 
 # ------------------------------------------------------------------ read
@@ -162,25 +149,11 @@ def read_na_stats_db(path: str) -> tuple[EncodingStats, NaMetadata]:
     """Read + CRC-verify the checksummed stats sidecar (the 4.x
     'checksummed sstable metadata' feature: a 3.x Statistics.db could
     rot silently; an na one cannot)."""
-    with open(path, "rb") as fh:
-        raw = fh.read()
-    if raw[: len(_STATS_MAGIC)] != _STATS_MAGIC:
-        raise ValueError(f"not a {_STATS_MAGIC!r} stats sidecar: {path}")
-    payload, tail = raw[len(_STATS_MAGIC) : -4], raw[-4:]
-    (want,) = struct.unpack(">I", tail)
-    got = zlib.crc32(payload)
-    if got != want:
-        raise ValueError(
-            f"Statistics.db checksum mismatch at {path}: "
-            f"crc32 {got} != recorded {want} (metadata corrupt)"
-        )
-    version = payload[:2].decode("ascii")
+    payload = read_checked(path, _STATS_MAGIC)
+    version, ts, ldt, ttl, pr, is_transient, hid = _STATS.unpack_from(payload)
+    version = version.decode("ascii")
     if version not in ("na", "nb"):
         raise ValueError(f"unknown 4.x version in stats sidecar: {version!r}")
-    ts, ldt, ttl = struct.unpack_from(">qii", payload, 2)
-    pr = payload[18:34]
-    is_transient = bool(payload[34])
-    hid = payload[35:51]
     return (
         EncodingStats(ts, ldt, ttl),
         NaMetadata(
@@ -218,9 +191,20 @@ def verify_na_integrity(data_path: str, raw: bytes) -> None:
             f"CRC.db for {data_path} carries {n_chunks} chunk checksums, "
             f"expected {want_chunks} for {len(raw)} bytes @ {chunk_size}"
         )
-    for c in range(n_chunks):
+    check_chunk_crcs(data_path, crc_raw, raw)
+
+
+def check_chunk_crcs(
+    data_path: str, crc_raw: bytes, window: bytes, first_chunk: int = 0
+) -> None:
+    """Check each chunk of ``window`` (Data.db bytes from chunk
+    ``first_chunk`` on) against its CRC.db entry; raises ValueError
+    naming the first failing chunk."""
+    (chunk_size,) = struct.unpack_from(">i", crc_raw, 0)
+    for k, off in enumerate(range(0, max(len(window), 1), chunk_size)):
+        c = first_chunk + k
         (want,) = struct.unpack_from(">I", crc_raw, 4 + 4 * c)
-        got = zlib.crc32(raw[c * chunk_size : (c + 1) * chunk_size])
+        got = zlib.crc32(window[off : off + chunk_size])
         if got != want:
             raise ValueError(
                 f"CRC.db chunk {c} mismatch for {data_path}: "
@@ -228,10 +212,11 @@ def verify_na_integrity(data_path: str, raw: bytes) -> None:
             )
 
 
-def parse_na_data_db(
-    raw: bytes, meta: TableMeta, stats: EncodingStats, as_of: int = 2**31 - 1
-) -> Iterator[dict[str, Any]]:
-    """Decode one verified na/nb Data.db byte stream — the row core is
-    3.0's, so this IS the ma parser; callers must run
-    ``verify_na_integrity`` first (the snapshot scan does)."""
+def read_na_sstable(
+    path: str, meta: TableMeta, as_of: int, raw: bytes
+) -> Iterator[dict]:
+    """The scan's na/nb reader: digest and chunk CRCs, then the
+    checksummed stats sidecar, then the shared 3.0 row core."""
+    verify_na_integrity(path, raw)
+    stats, _na_meta = read_na_stats_db(stats_path_for(path))
     return parse_ma_data_db(raw, meta, stats, as_of=as_of)

@@ -2,17 +2,10 @@
 primary index (SURVEY §2-A45; VERDICT r10 item 2 — the last open rung
 of the format family).
 
-Family recap (each rung reuses the one below it, exactly like the real
-formats do):
-
-* **ka / la (2.x)** — ``sources/sstable.py``: cell-oriented layout.
-* **ma (3.0, CASSANDRA-8099)** — ``sources/sstable_ma.py``: row-oriented
-  layout, vints, delta-encoded timestamps.  THE shared row core.
-* **na / nb (4.x)** — ``sources/sstable_na.py``: same row core + full-file
-  digest, 64 KiB chunk checksums, checksummed stats metadata.
-* **oa (5.0)** — HERE.  Per the public 5.0 release notes and format
-  code, ``oa`` keeps the row serialization and the 4.x integrity
-  components and adds:
+Per the public 5.0 release notes and format code, ``oa`` keeps the
+shared row core (``sources/sstable_ma.py``) and the 4.x integrity
+components (``sources/sstable_na.py``) and adds (the family table is in
+``sources/snapshot.py``):
 
   - **extended deletion times** (the CASSANDRA-14227 class of changes:
     expiration/deletion survive past 2038) — the partition-header
@@ -74,12 +67,9 @@ partition missing).  Point lookups (``oa_point_lookup``) read ONLY the
 covering chunk range of the target partition and verify exactly those
 chunk CRCs — the seek path stays O(partition), not O(file).
 
-The PARSER is the distributed component: the snapshot scan hands
-each ``oa-*-big-Data.db`` to one scan task and decodes it
-executor-side into Arrow batches (same seam as ka/ma/na), so a
-1000-executor cluster ingests 1000 SSTables concurrently; at 100 TB the
-trie index is what makes single-partition restore reads O(seek) instead
-of O(scan).
+The snapshot scan hands each ``oa-*-big-Data.db`` to one scan task
+(``scan_oa_sstable``); at 100 TB the trie index is what makes
+single-partition restore reads O(seek) instead of O(scan).
 
 Subset boundary: identical to the ma codec (regular rows, full regular
 column set, no markers/static/complex columns) — the row core is
@@ -90,12 +80,21 @@ from __future__ import annotations
 
 import os
 import struct
-import zlib
 from dataclasses import dataclass
+from functools import partial
 from typing import Any, Iterator
 
 from cassandra_snap_to_hadoop_spark.sources import bti
-from cassandra_snap_to_hadoop_spark.sources.sstable import LIVE_LDT, TableMeta, encode_value
+from cassandra_snap_to_hadoop_spark.sources.sstable import (
+    LIVE_LDT,
+    TableMeta,
+    _encode_key,
+    component_path,
+    encode_value,
+    read_checked,
+    stats_path_for,
+    write_checked,
+)
 from cassandra_snap_to_hadoop_spark.sources.sstable_ma import (
     EncodingStats,
     decode_uvint,
@@ -104,35 +103,25 @@ from cassandra_snap_to_hadoop_spark.sources.sstable_ma import (
     serialize_ma_partitions,
 )
 from cassandra_snap_to_hadoop_spark.sources.sstable_na import (
-    _CHUNK_SIZE,
     _NO_ID,
+    check_chunk_crcs,
     crc_path_for,
-    digest_path_for,
     verify_na_integrity,
+    write_data_with_checksums,
 )
 
 _STATS_MAGIC = b"CSTH-OA1"
+# version, minTimestamp, minLDT (i64), minTTL, pending_repair,
+# is_transient, host_id; the key bounds and the rest follow
+_STATS_HEAD = struct.Struct(">2sqqi16s?16s")
 _PARTITIONS_MAGIC = b"CSTH-BTI"
 _ROWS_MAGIC = b"CSTH-RWI"
+_ROWS_ENTRY = struct.Struct(">HII")  # after <uvint data_offset>: n_rows, root, trie_len
 _LIVE_LDT_U32 = 0xFFFFFFFF  # oa on-disk "no partition deletion" sentinel
 
 
-def _component_path(data_path: str, suffix: str) -> str:
-    if not data_path.endswith("-Data.db"):
-        raise ValueError(f"not a Data.db path: {data_path}")
-    return data_path[: -len("-Data.db")] + f"-{suffix}"
-
-
-def stats_path_for(data_path: str) -> str:
-    return _component_path(data_path, "Statistics.db")
-
-
-def partitions_path_for(data_path: str) -> str:
-    return _component_path(data_path, "Partitions.db")
-
-
-def rows_path_for(data_path: str) -> str:
-    return _component_path(data_path, "Rows.db")
+partitions_path_for = partial(component_path, component="Partitions.db")
+rows_path_for = partial(component_path, component="Rows.db")
 
 
 # -------------------------------------------------- oa deletion header codec
@@ -150,29 +139,6 @@ def _pack_deletion_oa(ldt: int, mfda: int) -> bytes:
 def _unpack_deletion_oa(raw: bytes, i: int) -> tuple[tuple[int, int], int]:
     u, mfda = struct.unpack_from(">Iq", raw, i)
     return (LIVE_LDT if u == _LIVE_LDT_U32 else u, mfda), i + 12
-
-
-# ------------------------------------------------------------ checked files
-
-def _write_checked(path: str, magic: bytes, payload: bytes) -> None:
-    with open(path, "wb") as fh:
-        fh.write(magic + payload + struct.pack(">I", zlib.crc32(payload)))
-
-
-def _read_checked(path: str, magic: bytes) -> bytes:
-    with open(path, "rb") as fh:
-        raw = fh.read()
-    if raw[: len(magic)] != magic:
-        raise ValueError(f"not a {magic!r} component: {path}")
-    payload, tail = raw[len(magic) : -4], raw[-4:]
-    (want,) = struct.unpack(">I", tail)
-    got = zlib.crc32(payload)
-    if got != want:
-        raise ValueError(
-            f"{magic!r} checksum mismatch at {path}: "
-            f"crc32 {got} != recorded {want} (component corrupt)"
-        )
-    return payload
 
 
 # ------------------------------------------------------------ stats sidecar
@@ -194,43 +160,35 @@ class OaMetadata:
 def write_oa_stats_db(
     path: str, stats: EncodingStats, meta: OaMetadata
 ) -> None:
-    payload = bytearray()
-    payload += meta.version.encode("ascii")
-    payload += struct.pack(">qqi", stats.min_timestamp, stats.min_ldt, stats.min_ttl)
-    payload += meta.pending_repair if meta.pending_repair is not None else _NO_ID
-    payload += bytes((1 if meta.is_transient else 0,))
-    payload += meta.host_id if meta.host_id is not None else _NO_ID
+    payload = _STATS_HEAD.pack(
+        meta.version.encode("ascii"),
+        stats.min_timestamp,
+        stats.min_ldt,
+        stats.min_ttl,
+        meta.pending_repair or _NO_ID,
+        meta.is_transient,
+        meta.host_id or _NO_ID,
+    )
     payload += struct.pack(">H", len(meta.min_key)) + meta.min_key
     payload += struct.pack(">H", len(meta.max_key)) + meta.max_key
-    payload += bytes((1 if meta.has_partition_deletions else 0,))
-    payload += struct.pack(">d", meta.token_space_coverage)
-    _write_checked(path, _STATS_MAGIC, bytes(payload))
+    payload += struct.pack(">?d", meta.has_partition_deletions, meta.token_space_coverage)
+    write_checked(path, _STATS_MAGIC, payload)
 
 
 def read_oa_stats_db(path: str) -> tuple[EncodingStats, OaMetadata]:
-    payload = _read_checked(path, _STATS_MAGIC)
-    version = payload[:2].decode("ascii")
+    payload = read_checked(path, _STATS_MAGIC)
+    version, ts, ldt, ttl, pr, is_transient, hid = _STATS_HEAD.unpack_from(payload)
+    version = version.decode("ascii")
     if version != "oa":
         raise ValueError(f"unknown 5.x version in stats sidecar: {version!r}")
-    ts, ldt, ttl = struct.unpack_from(">qqi", payload, 2)
-    i = 2 + 20
-    pr = payload[i : i + 16]
-    i += 16
-    is_transient = bool(payload[i])
-    i += 1
-    hid = payload[i : i + 16]
-    i += 16
-    (n,) = struct.unpack_from(">H", payload, i)
-    i += 2
-    min_key = payload[i : i + n]
-    i += n
-    (n,) = struct.unpack_from(">H", payload, i)
-    i += 2
-    max_key = payload[i : i + n]
-    i += n
-    has_del = bool(payload[i])
-    i += 1
-    (coverage,) = struct.unpack_from(">d", payload, i)
+    i = _STATS_HEAD.size
+    keys = []
+    for _ in range(2):  # min_key, max_key
+        (n,) = struct.unpack_from(">H", payload, i)
+        keys.append(payload[i + 2 : i + 2 + n])
+        i += 2 + n
+    min_key, max_key = keys
+    has_del, coverage = struct.unpack_from(">?d", payload, i)
     return (
         EncodingStats(ts, ldt, ttl),
         OaMetadata(
@@ -288,24 +246,14 @@ def write_oa_data_db(
     )
     if not index:
         raise ValueError("oa writer requires at least one partition")
-    with open(path, "wb") as fh:
-        fh.write(raw)
-    with open(digest_path_for(path), "wb") as fh:
-        fh.write(str(zlib.crc32(raw)).encode("ascii"))
-    crc = bytearray(struct.pack(">i", _CHUNK_SIZE))
-    for off in range(0, max(len(raw), 1), _CHUNK_SIZE):
-        crc += struct.pack(">I", zlib.crc32(raw[off : off + _CHUNK_SIZE]))
-    with open(crc_path_for(path), "wb") as fh:
-        fh.write(bytes(crc))
+    write_data_with_checksums(path, raw)
 
     # Rows.db: one entry per row-indexed partition, then Partitions.db
     # payloads pointing either straight at Data.db or at the entry.
     rows_payload = bytearray()
     trie_items: dict[bytes, int] = {}
-    any_rows_db = False
     for ent, part in zip(index, partitions):
         if len(ent["row_offsets"]) >= row_index_threshold and meta.clustering:
-            any_rows_db = True
             entry_off = len(rows_payload)
             row_items = {
                 _clustering_trie_key(tuple(r.get("clustering", ())), meta): off
@@ -314,17 +262,16 @@ def write_oa_data_db(
             }
             blob, root = bti.serialize_trie(row_items)
             rows_payload += encode_uvint(ent["offset"])
-            rows_payload += struct.pack(">H", len(ent["row_offsets"]))
-            rows_payload += struct.pack(">II", root, len(blob))
+            rows_payload += _ROWS_ENTRY.pack(len(ent["row_offsets"]), root, len(blob))
             rows_payload += blob
             trie_items[ent["key"]] = (entry_off << 1) | 1
         else:
             trie_items[ent["key"]] = ent["offset"] << 1
-    if any_rows_db:
-        _write_checked(rows_path_for(path), _ROWS_MAGIC, bytes(rows_payload))
+    if rows_payload:
+        write_checked(rows_path_for(path), _ROWS_MAGIC, bytes(rows_payload))
     pblob, proot = bti.serialize_trie(trie_items)
     ppayload = struct.pack(">III", len(index), proot, len(pblob)) + pblob
-    _write_checked(partitions_path_for(path), _PARTITIONS_MAGIC, ppayload)
+    write_checked(partitions_path_for(path), _PARTITIONS_MAGIC, ppayload)
 
     keys = [ent["key"] for ent in index]
     write_oa_stats_db(
@@ -351,7 +298,7 @@ def read_partitions_db(path: str) -> dict[bytes, int]:
     """CRC-verify and walk Partitions.db; returns encoded partition key
     → raw trie payload ((offset << 1) | kind).  Count consistency is
     checked here (trie walk must surface exactly n_partitions keys)."""
-    payload = _read_checked(path, _PARTITIONS_MAGIC)
+    payload = read_checked(path, _PARTITIONS_MAGIC)
     n, root, blob_len = struct.unpack_from(">III", payload, 0)
     blob = payload[12 : 12 + blob_len]
     mapping = bti.walk_trie(blob, root)
@@ -369,10 +316,8 @@ def _read_rows_entry(
     """Decode one Rows.db entry: (data_offset, n_rows, clustering-key →
     relative row offset)."""
     data_off, i = decode_uvint(rows_payload, entry_off)
-    (n_rows,) = struct.unpack_from(">H", rows_payload, i)
-    i += 2
-    root, blob_len = struct.unpack_from(">II", rows_payload, i)
-    i += 8
+    n_rows, root, blob_len = _ROWS_ENTRY.unpack_from(rows_payload, i)
+    i += _ROWS_ENTRY.size
     blob = rows_payload[i : i + blob_len]
     row_map = bti.walk_trie(blob, root)
     if len(row_map) != n_rows:
@@ -383,6 +328,23 @@ def _read_rows_entry(
     return data_off, n_rows, row_map
 
 
+def _resolve_index(data_path: str) -> list[tuple[int, bytes, dict | None]]:
+    """Every Partitions.db entry as (Data.db offset, partition key,
+    Rows.db clustering-key map or None), in file order."""
+    mapping = read_partitions_db(partitions_path_for(data_path))
+    rows_payload: bytes | None = None
+    if any(p & 1 for p in mapping.values()):
+        rows_payload = read_checked(rows_path_for(data_path), _ROWS_MAGIC)
+    resolved: list[tuple[int, bytes, dict | None]] = []
+    for key, payload in mapping.items():
+        if payload & 1:
+            data_off, _n_rows, row_map = _read_rows_entry(rows_payload, payload >> 1)
+            resolved.append((data_off, key, row_map))
+        else:
+            resolved.append((payload >> 1, key, None))
+    return sorted(resolved)
+
+
 def scan_oa_sstable(
     data_path: str,
     meta: TableMeta,
@@ -390,40 +352,23 @@ def scan_oa_sstable(
     raw: bytes | None = None,
 ) -> Iterator[dict[str, Any]]:
     """Index-driven verified scan of one oa SSTable (see module
-    docstring for everything this checks).  Yields reconciled row dicts
-    in index order — the same output contract as the ka/ma/na parsers."""
+    docstring for everything this checks) — the scan's oa reader.
+    Yields reconciled row dicts in index order, the same output
+    contract as the ka/ma/na readers."""
     if raw is None:
         with open(data_path, "rb") as fh:
             raw = fh.read()
     verify_na_integrity(data_path, raw)  # digest + every chunk CRC (as na)
     stats, oa_meta = read_oa_stats_db(stats_path_for(data_path))
-    mapping = read_partitions_db(partitions_path_for(data_path))
-    rows_payload: bytes | None = None
-    if any(p & 1 for p in mapping.values()):
-        rows_payload = _read_checked(rows_path_for(data_path), _ROWS_MAGIC)
-
-    # Resolve every trie payload to its Data.db offset up front so the
-    # scan can verify the index tiles the file.
-    resolved: list[tuple[int, bytes, dict[bytes, int] | None]] = []
-    for key, payload in mapping.items():
-        if payload & 1:
-            data_off, _n_rows, row_map = _read_rows_entry(rows_payload, payload >> 1)
-            resolved.append((data_off, key, row_map))
-        else:
-            resolved.append((payload >> 1, key, None))
-    resolved.sort()
-    if resolved and resolved[0][0] != 0:
-        raise ValueError(
-            f"Partitions.db for {data_path}: first partition offset "
-            f"{resolved[0][0]} != 0 — leading bytes unreachable from the index"
-        )
+    # Every trie payload is resolved up front, so the scan can verify
+    # that the index tiles the file.
     prev_end = 0
-    for data_off, key, row_map in resolved:
+    for data_off, key, row_map in _resolve_index(data_path):
         if data_off != prev_end:
             raise ValueError(
                 f"Partitions.db for {data_path}: partition at {data_off} does "
-                f"not abut the previous partition end {prev_end} — index and "
-                f"data disagree"
+                f"not abut the previous partition end {prev_end} — bytes "
+                f"unreachable from the index, or index and data disagree"
             )
         (klen,) = struct.unpack_from(">H", raw, data_off)
         actual_key = raw[data_off + 2 : data_off + 2 + klen]
@@ -476,34 +421,14 @@ def oa_point_lookup(
     reads ONLY the covering chunk range of Data.db, verifies exactly
     those chunk CRCs, and parses the one partition.  Returns [] when the
     key is absent (the trie proves absence without touching Data.db)."""
-    from cassandra_snap_to_hadoop_spark.sources.sstable import _encode_key
-
-    payload = _read_checked(partitions_path_for(data_path), _PARTITIONS_MAGIC)
-    _n, root, blob_len = struct.unpack_from(">III", payload, 0)
-    blob = payload[12 : 12 + blob_len]
+    index = _resolve_index(data_path)
     key = _encode_key(key_vals, meta)
-    hit = bti.lookup(blob, root, key)
-    if hit is None:
+    data_off = next((off for off, k, _ in index if k == key), None)
+    if data_off is None:
         return []
-    if hit & 1:
-        rows_payload = _read_checked(rows_path_for(data_path), _ROWS_MAGIC)
-        data_off, _n_rows, _row_map = _read_rows_entry(rows_payload, hit >> 1)
-    else:
-        data_off = hit >> 1
-    # Partition end = next partition's offset (trie walk) or EOF.
-    mapping = read_partitions_db(partitions_path_for(data_path))
-    rows_payload = None
-    offs = []
-    for p in mapping.values():
-        if p & 1:
-            if rows_payload is None:
-                rows_payload = _read_checked(rows_path_for(data_path), _ROWS_MAGIC)
-            d, _, _ = _read_rows_entry(rows_payload, p >> 1)
-            offs.append(d)
-        else:
-            offs.append(p >> 1)
+    # Partition end = next partition's offset or EOF.
     file_size = os.path.getsize(data_path)
-    end = min((o for o in offs if o > data_off), default=file_size)
+    end = min((off for off, _, _ in index if off > data_off), default=file_size)
 
     # Read + verify only the covering chunks.
     with open(crc_path_for(data_path), "rb") as fh:
@@ -516,16 +441,7 @@ def oa_point_lookup(
     with open(data_path, "rb") as fh:
         fh.seek(lo_byte)
         window = fh.read(hi_byte - lo_byte)
-    for c in range(lo_chunk, hi_chunk + 1):
-        (want,) = struct.unpack_from(">I", crc_raw, 4 + 4 * c)
-        got = zlib.crc32(
-            window[(c - lo_chunk) * chunk_size : (c - lo_chunk + 1) * chunk_size]
-        )
-        if got != want:
-            raise ValueError(
-                f"CRC.db chunk {c} mismatch for {data_path}: "
-                f"crc32 {got} != recorded {want} (chunk corrupt)"
-            )
+    check_chunk_crcs(data_path, crc_raw, window, lo_chunk)
     stats, _oa_meta = read_oa_stats_db(stats_path_for(data_path))
     rows, _end = parse_partition_at(
         window,

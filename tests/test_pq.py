@@ -156,3 +156,38 @@ def test_codes_are_compact_ints(spark, sf_dir, books):
         .collect()[0]
     )
     assert 0 <= stats.lo and stats.hi <= 31
+
+
+def _small_books(seed: int = 3) -> list[np.ndarray]:
+    rng = np.random.default_rng(seed)
+    return [rng.random((4, 2)) for _ in range(3)]  # m=3, ksub=4, dsub=2
+
+
+def test_encode_kernel_is_offset_safe():
+    """A sliced column (non-zero offset into its list values, as a sliced
+    Arrow batch has) encodes to the same codes as the matching rows of
+    the unsliced column."""
+    import pyarrow as pa
+
+    books = _small_books()
+    x = np.random.default_rng(4).random((10, 6))
+    col = pa.array(x.tolist(), type=pa.list_(pa.float64()))
+    full = pq._encode_column(col, "embedding", books)
+    np.testing.assert_array_equal(full, _np_encode(x, books))
+    sliced = col.slice(4, 5)
+    assert sliced.offset == 4
+    np.testing.assert_array_equal(pq._encode_column(sliced, "embedding", books), full[4:9])
+
+
+def test_encode_null_embedding_names_the_column(spark):
+    import pyarrow as pa
+
+    books = _small_books()
+    col = pa.array([[0.1] * 6, None], type=pa.list_(pa.float64()))
+    with pytest.raises(ValueError, match="column 'embedding' has 1 null row"):
+        pq._encode_column(col, "embedding", books)
+    df = spark.createDataFrame(
+        [(1, [0.1] * 6), (2, None)], "vec_id long, embedding array<double>"
+    )
+    with pytest.raises(Exception, match="column 'embedding' has 1 null row"):
+        pq.encode(df, books).collect()

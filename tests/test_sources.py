@@ -166,6 +166,18 @@ def test_snapshot_scan_contract(spark, snapshot_fixture):
     assert "cassandra_snapshot" in df._jdf.queryExecution().executedPlan().toString()
 
 
+def test_scan_keeps_declared_writetime(spark, snapshot_fixture):
+    """A stand-in whose ``schema.cql`` declares ``_writetime`` keeps that
+    one column, with its stored values, when write times are asked for."""
+    df = snapshot_scan(
+        spark, snapshot_fixture, "ks1", "events_wide", "tag-001", writetime="true"
+    )
+    assert df.columns.count("_writetime") == 1
+    assert sorted((r._seq, r._writetime) for r in df.collect()) == [
+        (1, 10), (2, 10), (3, 10), (4, 20), (5, 30), (6, 20)
+    ]
+
+
 def test_empty_snapshot_scans_and_exports(spark, tmp_path):
     """A tag with ``schema.cql`` and no data files is an empty frame of
     the declared schema, and both export modes land and verify 0 rows."""

@@ -18,6 +18,7 @@ import struct
 import zlib
 
 import pytest
+from pyspark.sql import functions as F
 
 from cassandra_snap_to_hadoop_spark.sources.snapshot import (
     parse_table_meta,
@@ -278,3 +279,64 @@ def test_merged_export_of_binary_sstables(spark, tmp_path):
     assert res["mode"] == "merged" and res["verified"] is True and res["rows_exported"] == 3
     back = {r.pk: (r.name, r._writetime) for r in spark.read.parquet(out).collect()}
     assert back == {1: ("uno", 300), 2: ("two", 200), 3: ("three", 300)}
+
+
+# ------------------------------------------------------- streaming bridge
+
+def test_first_batch_arrives_before_the_file_is_decoded(spark, tmp_path, monkeypatch):
+    """The scan turns rows into Arrow batches of 8,192 as they decode: a
+    reader that fails after its 8,193rd row has already delivered the
+    first batch."""
+    from pyspark.sql.types import StructType
+
+    from cassandra_snap_to_hadoop_spark.sources import snapshot
+
+    def stub_reader(path, meta, as_of, raw):
+        for pk in range(8193):
+            yield {"pk": pk, "name": "x", "score": 0.5, "n": 1, "_writetime": pk}
+        raise RuntimeError("decode failed after the first batch")
+
+    monkeypatch.setitem(snapshot._READERS, "nb", stub_reader)
+    p = tmp_path / "nb-1-big-Data.db"
+    p.write_bytes(b"")
+    schema = StructType.fromDDL(snapshot.parse_schema_cql(FLAT_CQL) + ", _sstable string")
+    batches = snapshot._read_file(str(p), schema, _meta(), 2**31 - 1, False)
+    first = next(batches)
+    assert first.num_rows == 8192
+    assert first.column("pk").to_pylist() == list(range(8192))
+    with pytest.raises(RuntimeError, match="after the first batch"):
+        next(batches)
+
+
+def _nb_snapshot(tmp_path, sizes):
+    snap = tmp_path / "ks" / "flat" / "snapshots" / "tag-b"
+    snap.mkdir(parents=True)
+    (snap / "schema.cql").write_text(FLAT_CQL)
+    for gen, n in enumerate(sizes, 1):
+        write_na_data_db(
+            str(snap / f"nb-{gen}-big-Data.db"),
+            [_mk(pk, 100 + pk, f"r{pk}") for pk in range(n)],
+            _meta(),
+            version="nb",
+        )
+    return str(tmp_path)
+
+
+def _counts_by_file(spark, data_dir):
+    df = snapshot_scan(spark, data_dir, "ks", "flat", "tag-b")
+    return {
+        r._sstable.rsplit("/", 1)[-1]: (r.rows, r.keys)
+        for r in df.groupBy("_sstable")
+        .agg(F.count("*").alias("rows"), F.countDistinct("pk").alias("keys"))
+        .collect()
+    }
+
+
+def test_empty_nb_file_beside_a_full_one(spark, tmp_path):
+    data_dir = _nb_snapshot(tmp_path, [0, 3])
+    assert _counts_by_file(spark, data_dir) == {"nb-2-big-Data.db": (3, 3)}
+
+
+def test_nb_file_one_row_past_a_batch(spark, tmp_path):
+    data_dir = _nb_snapshot(tmp_path, [8193])
+    assert _counts_by_file(spark, data_dir) == {"nb-1-big-Data.db": (8193, 8193)}
