@@ -97,6 +97,17 @@ def verify_export_observed(
     spark: SparkSession, path: str, expected: tuple[int, int], cols: list[str]
 ) -> bool:
     """Sink-side half of the observed verification: one scan of the export,
-    same commutative fingerprint, compared to the in-flight metrics."""
-    row = spark.read.parquet(path).select(*_fingerprint(cols)).collect()[0]
-    return (row.n, row.checksum) == tuple(expected)
+    same commutative fingerprint, compared to the in-flight metrics.
+
+    The fingerprint is observed on a ``noop`` write of the scan rather
+    than aggregated, so the check is one scan job with no exchange (an
+    aggregate adds a shuffle and a second job).  Failure direction: the
+    only stage is the result stage, whose accumulator updates (the
+    observed metrics) Spark applies once per partition, so a retried
+    task cannot double-count; a sink that lost, gained or changed rows
+    can only fail."""
+    obs = Observation("sink_metrics")
+    scan = spark.read.parquet(path).observe(obs, *_fingerprint(cols))
+    scan.write.format("noop").mode("overwrite").save()
+    got = obs.get
+    return (int(got["n"]), int(got["checksum"])) == tuple(expected)

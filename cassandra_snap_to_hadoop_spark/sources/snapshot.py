@@ -75,29 +75,31 @@ _CQL_TO_SPARK = {
 }
 
 
+def _cql_type_to_spark(t: str) -> str:
+    """One CQL column type as a Spark DDL type: primitives through
+    ``_CQL_TO_SPARK``, frozen/list/set/map collections recursively."""
+    t = re.sub(r"^frozen\s*<(.*)>$", r"\1", t.strip().lower())
+    coll = re.match(r"(list|set|map)\s*<(.*)>$", t)
+    if coll:
+        kind, inner = coll.group(1), coll.group(2)
+        if kind == "map":
+            k, v = [s.strip() for s in inner.split(",", 1)]
+            return f"map<{_cql_type_to_spark(k)},{_cql_type_to_spark(v)}>"
+        return f"array<{_cql_type_to_spark(inner)}>"
+    return _CQL_TO_SPARK[t]
+
+
+def _spark_ddl(columns) -> str:
+    return ", ".join(f"{name} {_cql_type_to_spark(ctype)}" for name, ctype in columns)
+
+
 def parse_schema_cql(cql: str) -> str:
     """Parse a snapshot's ``schema.cql`` CREATE TABLE into a Spark DDL
     schema string: :func:`parse_table_meta`'s columns rendered through
     the CQL -> Spark type mapping.  Handles primitives plus
     list/set/map/frozen collections; PRIMARY KEY clauses are layout
     metadata, not columns."""
-
-    def cql_type_to_spark(t: str) -> str:
-        t = t.strip().lower()
-        t = re.sub(r"^frozen\s*<(.*)>$", r"\1", t)
-        coll = re.match(r"(list|set|map)\s*<(.*)>$", t)
-        if coll:
-            kind, inner = coll.group(1), coll.group(2)
-            if kind == "map":
-                k, v = [s.strip() for s in inner.split(",", 1)]
-                return f"map<{cql_type_to_spark(k)},{cql_type_to_spark(v)}>"
-            return f"array<{cql_type_to_spark(inner)}>"
-        return _CQL_TO_SPARK[t]
-
-    return ", ".join(
-        f"{name} {cql_type_to_spark(ctype)}"
-        for name, ctype in parse_table_meta(cql).columns
-    )
+    return _spark_ddl(parse_table_meta(cql).columns)
 
 
 def parse_table_meta(cql: str):
@@ -348,7 +350,7 @@ def snapshot_scan(
         str(options.get("writetime", "false")).lower() == "true"
         and "_writetime" not in meta.types
     )
-    ddl = parse_schema_cql(cql) + ", _sstable string"
+    ddl = _spark_ddl(meta.columns) + ", _sstable string"
     if want_wt:
         ddl += ", _writetime long"
     schema = StructType.fromDDL(ddl)
