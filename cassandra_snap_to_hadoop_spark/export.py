@@ -75,7 +75,7 @@ def export_snapshot(
         if asof_micros is not None and "_ttl" in df.columns:
             df = apply_ttl(df, asof_micros)
     n, checksum = export_parquet_observed(df, out, partition_by=partition_by, mode="overwrite")
-    ok = verify_export_observed(spark, out, (n, checksum), df.columns) if verify else None
+    ok = verify_export_observed(spark, out, (n, checksum), df.schema) if verify else None
     return {
         "mode": mode,
         "rows_exported": n,

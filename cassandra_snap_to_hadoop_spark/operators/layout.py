@@ -22,9 +22,11 @@ is how the data is *laid out*, not how the query is written.
 
 from __future__ import annotations
 
+import itertools
 import math
 import os
 
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -195,6 +197,55 @@ def checkpoint_observed(df: DataFrame, *metrics: Column) -> tuple[DataFrame, dic
     return df.observe(obs, *metrics).localCheckpoint(eager=True), obs.get
 
 
+def _range_pass(
+    df: DataFrame,
+    order_cols: list,
+    num_partitions: int | None,
+    val_col: str | None = None,
+    limit: int = _LOCAL_RANK_LIMIT,
+) -> tuple[DataFrame, DataFrame, int]:
+    """First pass of the global-order operators: range-partition ``df`` on
+    the order key, tag each row with its partition id ``__pid``, pin that
+    layout, and collect ONE row per partition: its count (and the sum of
+    ``val_col`` when given).  Returns ``(keyed, offsets, total)``:
+    ``offsets`` holds each partition's exclusive prefix of the counts
+    (``__ro``) and of the sums (``__so``) as a broadcast-hinted local
+    relation, to be joined on ``__pid`` after the local rank or window.
+
+    The offsets reach the rows as data, not as code.  A
+    ``coalesce(when(__pid = p, lit(offset)), ...)`` chain grows the plan,
+    its codegen and its Py4J calls with the partition count (at 2,000
+    partitions whole-stage codegen fails with "Code grows beyond 64 KB"),
+    and the derived count reaches ~1.6 M at 100 TB.  A prefix-sum window
+    over the counts would be an unpartitioned window.  The relation is a
+    ``LocalRelation`` (built from Arrow: no job to broadcast it); Spark
+    sizes it at 20 bytes a row (28 with sums), 32 MB (45 MB) at 1.6 M
+    partitions, over the 10 MB auto-broadcast threshold, hence the hint.
+    """
+    if num_partitions is None:
+        num_partitions = _derive_range_partitions(df)
+    # localCheckpoint is CORRECTNESS here, not an optimization:
+    # repartitionByRange samples its boundaries per execution, and the
+    # counts job and the ranking job are separate executions — without
+    # pinning the materialized partitioning they can disagree on where
+    # ranges split, corrupting the offsets (caught by the sf0.01 oracle
+    # gate; sf0.001's single-digit partitions masked it).
+    keyed = (
+        df.repartitionByRange(num_partitions, *order_cols)
+        .withColumn("__pid", F.spark_partition_id())
+        .localCheckpoint()
+    )
+    aggs = [F.count("*")] + ([F.sum(val_col)] if val_col else [])
+    stats = sorted(tuple(r) for r in keyed.groupBy("__pid").agg(*aggs).collect())
+    _check_local_rank_budget({s[0]: s[1] for s in stats}, limit)
+    cols = {"__pid": pa.array([s[0] for s in stats], pa.int32())}
+    for i, name in enumerate(("__ro", "__so")[: len(aggs)], 1):
+        starts = list(itertools.accumulate((s[i] for s in stats), initial=0))
+        cols[name] = pa.array(starts[:-1], pa.int64())
+    offsets = F.broadcast(df.sparkSession.createDataFrame(pa.table(cols)))
+    return keyed, offsets, sum(s[1] for s in stats)
+
+
 def global_rank(
     df: DataFrame,
     order_cols: list,
@@ -208,44 +259,20 @@ def global_rank(
     global ordering.  The two-pass alternative: range-partition on the
     order key (boundaries from a sample), rank locally within each sorted
     partition, then add per-partition offsets (cumulative counts of the
-    preceding partitions — a |partitions|-sized driver list, KB-scale at
-    any data size).  Rank = offset + local rank, bit-identical to the
-    naive window given a total order.
+    preceding partitions).  Rank = offset + local rank, bit-identical to
+    the naive window given a total order.
 
-    The one collect() here is |partitions| integers — the documented
-    exception class (driver-side metadata, like AQE's own stats), not a
-    data collect.
+    The offsets are a broadcast local relation of |partitions| rows,
+    joined on the partition id (see :func:`_range_pass` for why data and
+    not a literal chain or a window).  The one collect() behind it is
+    |partitions| rows — the documented exception class (driver-side
+    metadata, like AQE's own stats), not a data collect.
 
     ``return_total=True`` additionally returns the exact total row count
     (the sum of the per-partition counts — already collected, no extra
     job), which :func:`ntile_expr` needs for closed-form bucketing.
     """
-    # localCheckpoint is CORRECTNESS here, not an optimization:
-    # repartitionByRange samples its boundaries per execution, and the
-    # counts job and the ranking job are separate executions — without
-    # pinning the materialized partitioning they can disagree on where
-    # ranges split, corrupting the offsets (caught by the sf0.01 oracle
-    # gate; sf0.001's single-digit partitions masked it).
-    if num_partitions is None:
-        num_partitions = _derive_range_partitions(df)
-    keyed = (
-        df.repartitionByRange(num_partitions, *order_cols)
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint()
-    )
-    counts = {
-        r["__pid"]: r["n"]
-        for r in keyed.groupBy("__pid").agg(F.count("*").alias("n")).collect()
-    }
-    _check_local_rank_budget(counts)
-    offsets = {}
-    acc = 0
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-    offset_col = F.coalesce(
-        *[F.when(F.col("__pid") == p, F.lit(o)) for p, o in offsets.items()]
-    ) if offsets else F.lit(0)
+    keyed, offsets, total = _range_pass(df, order_cols, num_partitions)
     # r11 (guide §2.4 "remove shuffles outright"): the local rank used to
     # be a ``row_number() OVER (PARTITION BY __pid ...)`` window — but the
     # checkpointed RDD reports UnknownPartitioning, so Spark inserted a
@@ -257,16 +284,20 @@ def global_rank(
     # 33 — yields the identical local rank as pure codegen arithmetic.
     # Bit-identical: the sort order and partition boundaries are pinned
     # by the checkpoint, so offset + low-bits + 1 == offset + row_number.
+    # The id is taken BEFORE the join; the broadcast hash join streams
+    # the sorted partitions through in order.
     local = (
         F.monotonically_increasing_id().bitwiseAND(F.lit((1 << 33) - 1)) + 1
     )
     ranked = (
         keyed.sortWithinPartitions(*order_cols)
-        .withColumn(out_col, (offset_col + local).cast("long"))
-        .drop("__pid")
+        .withColumn(out_col, local)
+        .join(offsets, "__pid")
+        .withColumn(out_col, (F.col("__ro") + F.col(out_col)).cast("long"))
+        .drop(*offsets.columns)
     )
     if return_total:
-        return ranked, acc
+        return ranked, total
     return ranked
 
 
@@ -282,60 +313,29 @@ def global_cumsum(
     cumulative-distribution building block (coverage curves, Lorenz/Gini
     inputs, CDF crossings) without the single-reducer window.
 
-    Same two-pass shape as :func:`global_rank`: range-partition on the
-    order key, pin the partitioning (localCheckpoint — boundary sampling
-    must agree between the stats job and the window job), collect ONE
-    (count, sum) pair per partition (KB-scale driver metadata at any data
-    size), then local windows inside each sorted partition plus the
-    per-partition offsets reconstruct the exact global ``row_number`` and
-    ``SUM ... ROWS UNBOUNDED PRECEDING`` — bit-identical to the naive
-    unpartitioned window because integer addition reassociates freely.
+    Same two-pass shape as :func:`global_rank` (:func:`_range_pass`):
+    range-partition on the order key, pin the partitioning, collect ONE
+    (count, sum) pair per partition, then local windows inside each
+    sorted partition plus the per-partition offsets — a broadcast local
+    relation of |partitions| rows joined on the partition id — rebuild
+    the exact global ``row_number`` and ``SUM ... ROWS UNBOUNDED
+    PRECEDING``: bit-identical to the naive unpartitioned window because
+    integer addition reassociates freely.
     """
     from pyspark.sql.window import Window
 
-    if num_partitions is None:
-        num_partitions = _derive_range_partitions(df)
-    keyed = (
-        df.repartitionByRange(num_partitions, *order_cols)
-        .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint()
-    )
-    stats = {
-        r["__pid"]: (r["n"], r["s"])
-        for r in keyed.groupBy("__pid")
-        .agg(F.count("*").alias("n"), F.sum(val_col).alias("s"))
-        .collect()
-    }
     # row_number() here is an INT window: the tighter 2^31 budget applies.
-    _check_local_rank_budget({p: n for p, (n, _s) in stats.items()}, limit=1 << 31)
-    rank_off: dict[int, int] = {}
-    sum_off: dict[int, int] = {}
-    racc = sacc = 0
-    for pid in sorted(stats):
-        rank_off[pid] = racc
-        sum_off[pid] = sacc
-        n, s = stats[pid]
-        racc += n
-        sacc += s
-    ro = (
-        F.coalesce(*[F.when(F.col("__pid") == p, F.lit(o)) for p, o in rank_off.items()])
-        if rank_off
-        else F.lit(0)
-    )
-    so = (
-        F.coalesce(*[F.when(F.col("__pid") == p, F.lit(o)) for p, o in sum_off.items()])
-        if sum_off
-        else F.lit(0)
-    )
+    keyed, offsets, _ = _range_pass(df, order_cols, num_partitions, val_col, limit=1 << 31)
     w = Window.partitionBy("__pid").orderBy(*order_cols)
     return (
-        keyed.withColumn("__lr", F.row_number().over(w))
-        .withColumn(
-            "__lc", F.sum(val_col).over(w.rowsBetween(Window.unboundedPreceding, 0))
-        )
-        .withColumn(rank_col, (ro + F.col("__lr")).cast("long"))
-        .withColumn(cum_col, (so + F.col("__lc")).cast("long"))
-        .drop("__pid", "__lr", "__lc")
+        keyed.withColumn(rank_col, F.row_number().over(w))
+        .withColumn(cum_col, F.sum(val_col).over(w.rowsBetween(Window.unboundedPreceding, 0)))
+        .join(offsets, "__pid")
+        .withColumns({
+            rank_col: (F.col("__ro") + F.col(rank_col)).cast("long"),
+            cum_col: (F.col("__so") + F.col(cum_col)).cast("long"),
+        })
+        .drop(*offsets.columns)
     )
 
 

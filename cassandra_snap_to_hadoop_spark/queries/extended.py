@@ -1282,8 +1282,9 @@ def g4_global_rank_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole dataset through one reducer (the canonical global-sort
     trap); operators/layout.py global_rank instead range-partitions on
     the order key, ranks locally per sorted partition, and adds
-    per-partition offsets (a KB-scale driver list — the documented
-    metadata-collect exception).  The oracle is the naive global window,
+    per-partition offsets (one row per partition, collected once — the
+    documented metadata-collect exception — and joined back as a
+    broadcast relation).  The oracle is the naive global window,
     so the certification is exactly 'the two-pass trick equals the
     single-reducer semantics' on every row.  (value, event_id) is a
     total order, so ranks are engine-unique."""

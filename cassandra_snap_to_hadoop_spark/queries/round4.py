@@ -54,8 +54,8 @@ def e30_equidepth_scalable(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Mechanics: operators/layout.py global_rank range-partitions on the
     total order (cents, l_orderkey, l_linenumber), ranks locally inside
-    each sorted partition, and adds per-partition offsets (a
-    |partitions|-sized driver list); ntile_expr then reproduces the
+    each sorted partition, and adds per-partition offsets (a broadcast
+    |partitions|-row relation); ntile_expr then reproduces the
     SQL-standard ntile(16) rule — first ``n mod 16`` buckets take
     ``ceil(n/16)`` rows — in closed-form integer arithmetic from that
     rank.  Bucket assignment is therefore BIT-IDENTICAL to the native

@@ -128,7 +128,7 @@ def sql_api_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (c.n_chain) and the per-iteration broadcast rebuild ships 3 columns
     # instead of 4 (guide §2.3 "project before the exchange"; UnionLoop
     # rebuilds the build side every iteration, so the narrowing pays 12x).
-    return spark.sql(
+    chain = spark.sql(
         f"""
         WITH RECURSIVE capped AS (
             SELECT custkey, rn, amt_cents, n_chain FROM cs2h_rec_capped
@@ -143,10 +143,29 @@ def sql_api_recursive_cte(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM chain c
             JOIN step b ON b.custkey = c.custkey AND b.rn = c.rn + 1
         )
-        SELECT custkey, CAST(n_chain AS BIGINT) AS n_orders,
-               bal_cents AS final_bal_cents
-        FROM chain WHERE rn = n_chain
+        SELECT * FROM chain
         """
+    )
+    # Row bound from the input: Spark fails a recursive CTE past
+    # spark.sql.cteRecursionRowLimit (1,000,000 rows; SF1's chain is
+    # larger) unless a limit reaches its UnionLoop, which then stops at
+    # the limit instead.  The chain holds exactly one row per capped order,
+    # so n_capped never drops a row.  The limit is a per-partition
+    # LocalLimit, which the optimizer moves into the UnionLoop: SQL's LIMIT
+    # would also plan a GlobalLimit above it, a single-partition exchange
+    # of every chain row (2.5x slower at sf0.01).  UnionLoop limits are Ints.
+    if n_capped > (1 << 31) - 1:
+        raise ValueError(f"sql_api_recursive_cte: {n_capped} chain rows exceed an Int row limit")
+    jvm = spark._jvm
+    limit = jvm.org.apache.spark.sql.catalyst.expressions.Literal(
+        n_capped, jvm.org.apache.spark.sql.types.DataTypes.IntegerType
+    )
+    plan = jvm.org.apache.spark.sql.catalyst.plans.logical.LocalLimit(
+        limit, chain._jdf.queryExecution().logical()
+    )
+    chain = DataFrame(jvm.org.apache.spark.sql.classic.Dataset.ofRows(spark._jsparkSession, plan), spark)
+    return chain.where("rn = n_chain").selectExpr(
+        "custkey", "CAST(n_chain AS BIGINT) AS n_orders", "bal_cents AS final_bal_cents"
     )
 
 

@@ -170,9 +170,10 @@ def walk_trie(blob: bytes, root_off: int) -> dict[bytes, int]:
 
 
 def lookup(blob: bytes, root_off: int, key: bytes) -> int | None:
-    """Point lookup: descend the serialized trie byte-by-byte — the
-    O(|key|) seek path a single-partition read uses (never materializes
-    the mapping)."""
+    """Point lookup: descend the serialized trie byte-by-byte — an
+    O(|key|) seek that never materializes the mapping.  The payload is
+    the partition's start only, so ``sstable_oa.oa_point_lookup``, which
+    also needs its end, resolves the whole index instead."""
     off = root_off
     pos = 0
     while True:

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 def export_parquet(
@@ -53,7 +54,7 @@ def verify_export(spark: SparkSession, df: DataFrame, path: str, key_cols: list[
     pays that second source pass; it writes through
     ``export_parquet_observed`` instead."""
     row = df.select(*_fingerprint(df.columns)).collect()[0]
-    return verify_export_observed(spark, path, (row.n, row.checksum), df.columns)
+    return verify_export_observed(spark, path, (row.n, row.checksum), df.schema)
 
 
 def read_csv(spark: SparkSession, path: str, schema_ddl: str, **options) -> DataFrame:
@@ -94,20 +95,23 @@ def export_parquet_observed(
 
 
 def verify_export_observed(
-    spark: SparkSession, path: str, expected: tuple[int, int], cols: list[str]
+    spark: SparkSession, path: str, expected: tuple[int, int], schema: StructType
 ) -> bool:
     """Sink-side half of the observed verification: one scan of the export,
-    same commutative fingerprint, compared to the in-flight metrics.
+    same commutative fingerprint over ``schema.names``, compared to the
+    in-flight metrics.
 
-    The fingerprint is observed on a ``noop`` write of the scan rather
-    than aggregated, so the check is one scan job with no exchange (an
-    aggregate adds a shuffle and a second job).  Failure direction: the
-    only stage is the result stage, whose accumulator updates (the
-    observed metrics) Spark applies once per partition, so a retried
-    task cannot double-count; a sink that lost, gained or changed rows
-    can only fail."""
+    ``schema`` is the written frame's schema: the scan reads with it
+    instead of inferring it from the footers (a job of its own), and the
+    fingerprint is observed on a ``noop`` write of the scan rather than
+    aggregated (an aggregate adds a shuffle and a job), so the check is
+    one job with no exchange.  Failure direction: the only stage is the
+    result stage, whose accumulator updates (the observed metrics) Spark
+    applies once per partition, so a retried task cannot double-count; a
+    sink that lost, gained or changed rows (a column it lacks reads as
+    null) can only fail."""
     obs = Observation("sink_metrics")
-    scan = spark.read.parquet(path).observe(obs, *_fingerprint(cols))
+    scan = spark.read.schema(schema).parquet(path).observe(obs, *_fingerprint(schema.names))
     scan.write.format("noop").mode("overwrite").save()
     got = obs.get
     return (int(got["n"]), int(got["checksum"])) == tuple(expected)

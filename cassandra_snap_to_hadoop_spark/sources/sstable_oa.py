@@ -64,12 +64,12 @@ against the key bytes actually at that offset, the Rows.db row offsets
 against the offsets the parser actually visits, and finally that the
 index tiles the whole file (no byte unreachable from the index, no
 partition missing).  Point lookups (``oa_point_lookup``) read ONLY the
-covering chunk range of the target partition and verify exactly those
-chunk CRCs — the seek path stays O(partition), not O(file).
+covering chunk range of the target partition's Data.db and verify
+exactly those chunk CRCs — O(partition) of Data.db, not O(file) — but
+they still resolve the whole index first (see ``oa_point_lookup``).
 
 The snapshot scan hands each ``oa-*-big-Data.db`` to one scan task
-(``scan_oa_sstable``); at 100 TB the trie index is what makes
-single-partition restore reads O(seek) instead of O(scan).
+(``scan_oa_sstable``).
 
 Subset boundary: identical to the ma codec (regular rows, full regular
 column set, no markers/static/complex columns) — the row core is
@@ -416,11 +416,15 @@ def oa_point_lookup(
     meta: TableMeta,
     as_of: int = 2**31 - 1,
 ) -> list[dict[str, Any]]:
-    """Single-partition seek read — the access path the BTI index exists
-    for.  Walks the Partitions.db trie to the partition's byte range,
-    reads ONLY the covering chunk range of Data.db, verifies exactly
-    those chunk CRCs, and parses the one partition.  Returns [] when the
-    key is absent (the trie proves absence without touching Data.db)."""
+    """Single-partition read: reads ONLY the covering chunk range of
+    Data.db, verifies exactly those chunk CRCs, and parses the one
+    partition.  Returns [] when the key is absent, without touching
+    Data.db.
+
+    It is not a seek.  To find the partition's end (the next partition's
+    offset) it resolves the whole index through ``_resolve_index``: it
+    walks every Partitions.db trie entry and decodes every Rows.db entry,
+    so a lookup costs O(index) before its O(partition) Data.db read."""
     index = _resolve_index(data_path)
     key = _encode_key(key_vals, meta)
     data_off = next((off for off, k, _ in index if k == key), None)

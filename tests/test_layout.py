@@ -180,12 +180,56 @@ def test_global_rank_invariant_to_partition_count(spark):
     e = load(spark, SF, "events").select("event_id", "value")
     n = e.count()
     by_part = {}
-    for parts in (4, 32):
+    for parts in (4, 32, 512):
         ranked = global_rank(e, [F.col("value").desc(), F.col("event_id")], num_partitions=parts)
         rows = {r["event_id"]: r["global_rank"] for r in ranked.collect()}
         assert sorted(rows.values()) == list(range(1, n + 1))
         by_part[parts] = rows
-    assert by_part[4] == by_part[32]
+    assert by_part[4] == by_part[32] == by_part[512]
+
+
+def test_global_order_plans_do_not_grow_with_partition_count(spark):
+    """The per-partition offsets reach the rows as a joined relation, not
+    as one CASE branch per partition: the analyzed plans of global_rank
+    and global_cumsum name ``__pid`` as often at 512 partitions as at 4."""
+    from cassandra_snap_to_hadoop_spark.operators.layout import global_cumsum, global_rank
+
+    e = load(spark, SF, "events").select("event_id", "value", F.lit(1).alias("one"))
+
+    def pid_refs(df):
+        return df._jdf.queryExecution().analyzed().toString().count("__pid")
+
+    for build in (
+        lambda parts: global_rank(e, ["value", "event_id"], num_partitions=parts),
+        lambda parts: global_cumsum(e, ["value", "event_id"], "one", num_partitions=parts),
+    ):
+        assert pid_refs(build(4)) == pid_refs(build(512))
+
+
+@pytest.mark.parametrize("n_rows", [0, 1, 3000])
+def test_global_cumsum_matches_native_window(spark, n_rows):
+    """global_cumsum equals the native unpartitioned ``row_number()`` and
+    running ``SUM`` at any partition count, on empty and one-row inputs
+    too (duplicate keys broken by id; negative values in the sum)."""
+    from pyspark.sql import Window
+
+    from cassandra_snap_to_hadoop_spark.operators.layout import global_cumsum
+
+    df = spark.range(n_rows).select(
+        "id", (F.col("id") * 7919 % 101).alias("k"), (F.col("id") * 31 % 17 - 5).alias("v")
+    )
+    w = Window.orderBy("k", "id")
+    native = df.select(
+        "id",
+        F.row_number().over(w).alias("rnk"),
+        F.sum("v").over(w.rowsBetween(Window.unboundedPreceding, 0)).alias("cum"),
+    )
+    want = {r["id"]: (r["rnk"], r["cum"]) for r in native.collect()}
+    assert len(want) == n_rows
+    for parts in (4, 32, 512):
+        got = global_cumsum(df, ["k", "id"], "v", num_partitions=parts)
+        assert got.columns == ["id", "k", "v", "rnk", "cum"]
+        assert {r["id"]: (r["rnk"], r["cum"]) for r in got.collect()} == want, parts
 
 
 def test_local_rank_budget_guard_raises():

@@ -57,6 +57,26 @@ def test_recursive_cte_depth_is_capped(spark):
     assert df.agg({"n_orders": "max"}).collect()[0][0] <= 12
 
 
+def test_recursive_cte_rows_bounded_by_input(spark):
+    """The chain's UnionLoop takes the capped-order count as its row
+    limit, so it runs past Spark's recursion row limit (lowered here
+    below the chain's rows, as SF1 passes the 1,000,000 default) with
+    unchanged results, and without a GlobalLimit's single-partition
+    exchange."""
+    key = "spark.sql.cteRecursionRowLimit"
+    want = sorted(REGISTRY["sql_api_recursive_cte"].fn(spark, SF).collect())
+    n_capped = spark.table("cs2h_rec_capped").count()
+    spark.conf.set(key, "100")
+    try:
+        df = REGISTRY["sql_api_recursive_cte"].fn(spark, SF)
+        assert sorted(df.collect()) == want
+    finally:
+        spark.conf.unset(key)
+    p = plan_string(df, "simple")
+    assert f"], {n_capped}" in p and len(want) < n_capped, p
+    assert "GlobalLimit" not in p and "SinglePartition" not in p, p
+
+
 def test_lateral_topk_decorrelates_to_partitioned_window(spark):
     """Catalyst must rewrite the correlated LATERAL LIMIT into a window/
     filter over ONE shuffle of orders — never a per-customer nested loop."""

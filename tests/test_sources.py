@@ -369,12 +369,12 @@ def test_export_observed_metrics_roundtrip(spark, sf_dir, tmp_path):
     out = str(tmp_path / "orders_obs")
     metrics = export_parquet_observed(o, out, partition_by=["order_year"], max_files_per_partition=2)
     assert metrics[0] == o.count()
-    assert verify_export_observed(spark, out, metrics, o.columns)
+    assert verify_export_observed(spark, out, metrics, o.schema)
     # partition pruning layout exists
     years = [d for d in os.listdir(out) if d.startswith("order_year=")]
     assert len(years) >= 5
     # tampered expectation fails closed
-    assert not verify_export_observed(spark, out, (metrics[0] - 1, metrics[1]), o.columns)
+    assert not verify_export_observed(spark, out, (metrics[0] - 1, metrics[1]), o.schema)
 
     part_dir = os.path.join(out, sorted(years)[0])
     part = os.path.join(part_dir, next(f for f in os.listdir(part_dir) if f.endswith(".parquet")))
@@ -389,12 +389,12 @@ def test_export_observed_metrics_roundtrip(spark, sf_dir, tmp_path):
     cells = table.column(i).to_pylist()
     cells[0] += "!"
     pq.write_table(table.set_column(i, "o_orderpriority", pa.array(cells, pa.string())), part)
-    assert not verify_export_observed(spark, out, metrics, o.columns)
+    assert not verify_export_observed(spark, out, metrics, o.schema)
     shutil.copyfile(saved, part)
-    assert verify_export_observed(spark, out, metrics, o.columns)
+    assert verify_export_observed(spark, out, metrics, o.schema)
     # one part file lost
     os.remove(part)
-    assert not verify_export_observed(spark, out, metrics, o.columns)
+    assert not verify_export_observed(spark, out, metrics, o.schema)
 
 
 def test_export_observed_empty_frame(spark, tmp_path):
@@ -408,4 +408,4 @@ def test_export_observed_empty_frame(spark, tmp_path):
     empty = spark.createDataFrame([], "pk long, v string")
     out = str(tmp_path / "empty")
     assert export_parquet_observed(empty, out) == (0, 0)
-    assert verify_export_observed(spark, out, (0, 0), empty.columns)
+    assert verify_export_observed(spark, out, (0, 0), empty.schema)
