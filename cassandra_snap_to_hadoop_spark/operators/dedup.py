@@ -12,6 +12,15 @@ Three tiers, all shuffle-bounded and driver-free:
 
 Exact-Jaccard verification (used as the LSH oracle at small scale) blocks on
 a cheap key before the pair join so the quadratic term is bounded per block.
+
+The ``id_a < id_b`` block self-joins of the J2/J3 families (here, in
+``similarity`` and in the queries) are one of two blocked shapes:
+:func:`blocked_pairs` (the per-block clique) for similarity candidates,
+:func:`blocked_star` (one edge per member to the block minimum) for
+connected components.  Not on them: sorted-neighbourhood pairs (rank
+offsets, ``round3d._snm_candidate_pairs``), the streaming near-dup band
+semi-join (``a.id > b.id``, one side kept) and j89's directed cell edges
+(``!=``, both directions).
 """
 
 from __future__ import annotations
@@ -66,21 +75,74 @@ def shingles(col: F.Column, k: int = 3) -> F.Column:
     return F.when(n >= 1, built).otherwise(F.array().cast("array<string>"))
 
 
-def jaccard_pairs(
+def blocked_pairs(
+    df: DataFrame, id_col: str, keys: list[str], carry: tuple[str, ...] = ()
+) -> DataFrame:
+    """Every pair of distinct ids that share all ``keys`` — the blocked
+    self-join under the J2/J3 similarity joins: emit (block key, id),
+    join each block with itself on ``id_a < id_b``, verify.
+
+    Returns ``(id_a, id_b, *keys, <c>_a, <c>_b for c in carry)`` with
+    ``id_a < id_b``, ONE ROW PER SHARED BLOCK: two ids that meet in three
+    blocks give three rows.  No ``distinct`` — the shingle-intersection
+    counters count exactly those duplicates; LSH callers that want each
+    pair once add their own ``distinct`` after projecting.  A null key
+    never matches (SQL equality), so a null-keyed row pairs with nothing.
+
+    Cost is Σ|block|² per key: the block-size distribution, not n,
+    decides whether the join is linear or quadratic — callers bound it by
+    their key choice (band width, prefix length, block column)."""
+    a, b = df.alias("a"), df.alias("b")
+    cond = F.col(f"a.{id_col}") < F.col(f"b.{id_col}")
+    for key in keys:
+        cond = cond & (F.col(f"a.{key}") == F.col(f"b.{key}"))
+    return a.join(b, cond).select(
+        F.col(f"a.{id_col}").alias("id_a"),
+        F.col(f"b.{id_col}").alias("id_b"),
+        *[F.col(f"a.{key}").alias(key) for key in keys],
+        *[F.col(f"{side}.{c}").alias(f"{c}_{side}") for c in carry for side in "ab"],
+    )
+
+
+def blocked_star(df: DataFrame, id_col: str, keys: list[str]) -> DataFrame:
+    """Distinct star edges ``(id_a = block minimum, id_b)`` of every block
+    of ``df`` (rows sharing all ``keys``) with at least two members:
+    |b| − 1 edges per block instead of :func:`blocked_pairs`' clique.
+
+    The star connects the same components as the clique, so connected-
+    component callers (j90 and its cluster consumers) pay linear edges in
+    block occupancy.  The hub is the block minimum, so hub < id on every
+    surviving row: the edges are already in (id_a < id_b) order for
+    :func:`dup_clusters`.  A null key never matches the hub join."""
+    hubs = (
+        df.groupBy(*keys)
+        .agg(F.min(id_col).alias("hub"), F.count("*").alias("n"))
+        .filter(F.col("n") >= 2)
+        .drop("n")
+    )
+    return (
+        df.join(hubs, list(keys))
+        .filter(F.col(id_col) != F.col("hub"))
+        .select(F.col("hub").alias("id_a"), F.col(id_col).alias("id_b"))
+        .distinct()
+    )
+
+
+def _shingle_overlap_pairs(
     df: DataFrame,
     id_col: str,
     text_col: str,
-    k: int = 3,
-    threshold: float = 0.5,
-    block_col: str | None = None,
+    k: int,
+    block_col: str | None,
+    score_name: str,
+    score: F.Column,
+    threshold: float,
 ) -> DataFrame:
-    """J2 (exact tier): doc pairs with shingle-Jaccard >= threshold.
-
-    explode(shingles) -> self-join on shingle [+ block key] -> per-pair
-    intersection count vs sizes.  ``block_col`` bounds the candidate space;
-    at scale the MinHash tier below replaces the raw shingle join.
-    Output: (id_a < id_b, jaccard) rounded to 4dp.
-    """
+    """Shared body of :func:`jaccard_pairs` and :func:`containment_pairs`:
+    explode(shingles) -> :func:`blocked_pairs` on shingle [+ block key]
+    -> per-pair intersection count (one row per shared shingle) next to
+    both set sizes -> ``score`` (over ``inter``, ``sz_a``, ``sz_b``)
+    rounded to 4dp, kept at ``>= threshold``."""
     ex = fan_out(df).select(
         F.col(id_col).alias("id"),
         *( [F.col(block_col).alias("blk")] if block_col else [] ),
@@ -96,23 +158,38 @@ def jaccard_pairs(
     sizes = fan_out(df).select(
         F.col(id_col).alias("id"), F.size(shingles(F.col(text_col), k)).alias("sz")
     )
-    join_keys = ["sh"] + (["blk"] if block_col else [])
-    a = ex.alias("a")
-    b = ex.alias("b")
-    cond = (F.col("a.id") < F.col("b.id"))
-    for kcol in join_keys:
-        cond = cond & (F.col(f"a.{kcol}") == F.col(f"b.{kcol}"))
     inter = (
-        a.join(b, cond)
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        blocked_pairs(ex, "id", ["sh"] + (["blk"] if block_col else []))
+        .groupBy("id_a", "id_b")
         .agg(F.count("*").alias("inter"))
     )
     return (
         inter.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
         .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
-        .withColumn("jaccard", F.round(F.col("inter") / (F.col("sz_a") + F.col("sz_b") - F.col("inter")), 4))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+        .withColumn(score_name, F.round(score, 4))
+        .filter(F.col(score_name) >= threshold)
+        .select("id_a", "id_b", score_name)
+    )
+
+
+def jaccard_pairs(
+    df: DataFrame,
+    id_col: str,
+    text_col: str,
+    k: int = 3,
+    threshold: float = 0.5,
+    block_col: str | None = None,
+) -> DataFrame:
+    """J2 (exact tier): doc pairs with shingle-Jaccard >= threshold.
+
+    :func:`blocked_pairs` on shingle [+ ``block_col``] -> per-pair
+    intersection count vs sizes.  ``block_col`` bounds the candidate
+    space; at scale the MinHash tier below replaces the raw shingle join.
+    Output: (id_a < id_b, jaccard) rounded to 4dp.
+    """
+    inter, sz_a, sz_b = F.col("inter"), F.col("sz_a"), F.col("sz_b")
+    return _shingle_overlap_pairs(
+        df, id_col, text_col, k, block_col, "jaccard", inter / (sz_a + sz_b - inter), threshold
     )
 
 
@@ -129,41 +206,15 @@ def containment_pairs(
     Jaccard under-scores subset duplication (a paragraph quoted inside a
     10x longer page has tiny Jaccard but containment ~1), so corpus
     pipelines run BOTH: Jaccard for same-size near-dups, containment for
-    wrapper/boilerplate-absorbed copies.  Same blocked shingle self-join
-    shape as ``jaccard_pairs`` (equi join on shingle [+ block], never
-    all-pairs); the score divides the same integers on any engine, so the
-    threshold cannot drift cross-engine.  Output: (id_a < id_b,
-    containment) rounded to 4dp.
+    wrapper/boilerplate-absorbed copies.  Same :func:`blocked_pairs`
+    shingle join as ``jaccard_pairs`` (equi join on shingle [+ block],
+    never all-pairs); only the score differs, and it divides the same
+    integers on any engine, so the threshold cannot drift cross-engine.
+    Output: (id_a < id_b, containment) rounded to 4dp.
     """
-    ex = fan_out(df).select(
-        F.col(id_col).alias("id"),
-        *( [F.col(block_col).alias("blk")] if block_col else [] ),
-        F.explode(shingles(F.col(text_col), k)).alias("sh"),
-    )
-    # r12: map-only size derivation — see the jaccard_pairs note above.
-    sizes = fan_out(df).select(
-        F.col(id_col).alias("id"), F.size(shingles(F.col(text_col), k)).alias("sz")
-    )
-    join_keys = ["sh"] + (["blk"] if block_col else [])
-    a = ex.alias("a")
-    b = ex.alias("b")
-    cond = (F.col("a.id") < F.col("b.id"))
-    for kcol in join_keys:
-        cond = cond & (F.col(f"a.{kcol}") == F.col(f"b.{kcol}"))
-    inter = (
-        a.join(b, cond)
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .agg(F.count("*").alias("inter"))
-    )
-    return (
-        inter.join(sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "sz_a"), "id_a")
-        .join(sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "sz_b"), "id_b")
-        .withColumn(
-            "containment",
-            F.round(F.col("inter") / F.least(F.col("sz_a"), F.col("sz_b")), 4),
-        )
-        .filter(F.col("containment") >= threshold)
-        .select("id_a", "id_b", "containment")
+    inter, sz_a, sz_b = F.col("inter"), F.col("sz_a"), F.col("sz_b")
+    return _shingle_overlap_pairs(
+        df, id_col, text_col, k, block_col, "containment", inter / F.least(sz_a, sz_b), threshold
     )
 
 
@@ -221,23 +272,13 @@ def minhash_lsh_pairs(
     """J2 (scale tier): banded-LSH candidate pairs, deduplicated.
 
     Signature -> ``bands`` band-keys (xxhash64 of each row of the signature
-    matrix) -> explode -> self-join per band bucket -> distinct pairs.
-    Candidates within a bucket share a full band of minhashes, so bucket
-    sizes stay tiny and the join never goes quadratic in n.
+    matrix) -> explode -> :func:`blocked_pairs` per (band, bkey) bucket ->
+    distinct pairs.  Candidates within a bucket share a full band of
+    minhashes, so bucket sizes stay tiny and the join never goes
+    quadratic in n.
     """
     bucketed = minhash_band_keys(df, id_col, text_col, k, n_hashes, bands)
-    a = bucketed.alias("a")
-    b = bucketed.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    return blocked_pairs(bucketed, "id", ["band", "bkey"]).select("id_a", "id_b").distinct()
 
 
 def md5_minhash_bands(
@@ -408,6 +449,9 @@ def dup_clusters(
     iterations (convergence ≤ graph diameter, bounded by max_iterations;
     near-dup components are tiny by construction so this is 2-3 rounds).
     Returns (id, cluster_id) where cluster_id = smallest id in the component.
+    ``stats`` (when given) gets ``rounds`` and ``converged``: False when
+    ``max_iterations`` ran out while labels were still changing, i.e. the
+    labels may split a component.
     """
     # Lazy checkpoint: the first round's job materializes the symmetrized
     # distinct edge relation once; every later round reuses it instead of
@@ -419,6 +463,7 @@ def dup_clusters(
         .localCheckpoint(eager=False)
     )
     labels = nodes.select(F.col("id"), F.col("id").alias("cluster_id"))
+    converged = False
     for _ in range(max_iterations):
         neighbor_min = (
             edges.join(labels, edges.dst == labels.id)
@@ -444,7 +489,10 @@ def dup_clusters(
         if stats is not None:
             stats["rounds"] = stats.get("rounds", 0) + 1
         if probe["changed"] == 0:
+            converged = True
             break
+    if stats is not None:
+        stats["converged"] = converged
     return labels
 
 
@@ -584,8 +632,9 @@ def ppjoin_pairs(
 
     Distributed shape: df(shingle) is one hash aggregate; the prefix rank
     is a window partitioned BY DOCUMENT (never global); the candidate
-    join is equi on the prefix shingle with the size prune applied inside
-    the join; verification touches candidate pairs only.
+    join is :func:`blocked_pairs` on the prefix shingle with the size
+    prune applied inside the join; verification touches candidate pairs
+    only.
 
     Arithmetic exactness (completeness is the operator's contract, so the
     prunes must never overshoot): when ``t`` is a small exact rational
@@ -677,9 +726,8 @@ def ppjoin_pairs(
     #     (7 * overlap_bound >= 3 * (sz_a + sz_b) avoids any float ulp).
     # Grouping by pair replaces the plain distinct() — same shuffle, and
     # the positional prune shrinks the verification set for free.
-    a, b = prefix.alias("a"), prefix.alias("b")
     bound = F.lit(1) + F.least(
-        F.col("a.sz") - F.col("a.pos"), F.col("b.sz") - F.col("b.pos")
+        F.col("sz_a") - F.col("pos_a"), F.col("sz_b") - F.col("pos_b")
     )
     if t_den <= 10**6:
         # exact rational compare (t = num/den):  bound*(num+den) >= num*(sa+sb)
@@ -692,21 +740,21 @@ def ppjoin_pairs(
         pos_keep = F.col("max_bound").cast("double") >= F.lit(
             threshold / (1.0 + threshold)
         ) * (F.col("_sa") + F.col("_sb")) - F.lit(1e-9)
+    # The size prune is a filter over the join output that Catalyst
+    # pushes into the join condition, as if written there.
     cand = (
-        a.join(
-            b,
-            (F.col("a.sh") == F.col("b.sh"))
-            & (F.col("a.id") < F.col("b.id"))
-            & size_keep_expr(
-                F.least(F.col("a.sz"), F.col("b.sz")),
-                F.greatest(F.col("a.sz"), F.col("b.sz")),
-            ),
+        blocked_pairs(prefix, "id", ["sh"], carry=("sz", "pos"))
+        .filter(
+            size_keep_expr(
+                F.least(F.col("sz_a"), F.col("sz_b")),
+                F.greatest(F.col("sz_a"), F.col("sz_b")),
+            )
         )
-        .groupBy(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .groupBy("id_a", "id_b")
         .agg(
             F.max(bound).alias("max_bound"),
-            F.max(F.col("a.sz")).alias("_sa"),
-            F.max(F.col("b.sz")).alias("_sb"),
+            F.max(F.col("sz_a")).alias("_sa"),
+            F.max(F.col("sz_b")).alias("_sb"),
         )
         .filter(pos_keep)
         .select("id_a", "id_b")
@@ -748,8 +796,9 @@ def simhash_hamming_pairs(
     Pigeonhole principle: split 64 bits into ``n_bands`` contiguous
     blocks; any two fingerprints within Hamming distance ``n_bands - 1``
     agree EXACTLY on at least one whole block.  So candidates are pairs
-    colliding on (band index, band value) — an equi join on a 16-bit
-    bucket — and each candidate verifies with one ``bit_count(xor)``.
+    colliding on (band index, band value) — :func:`blocked_pairs` on a
+    16-bit bucket — and each candidate verifies with one
+    ``bit_count(xor)``.
     For the guarantee to be lossless ``max_hamming <= n_bands - 1``.
 
     Returns (id_a < id_b, hamming).  Rows-only at the driver (simhash is
@@ -786,19 +835,13 @@ def simhash_hamming_pairs(
             )
         ).alias("b"),
     ).select("id", "simhash", F.col("b.bi").alias("bi"), F.col("b.bv").alias("bv"))
-    a, b = bands.alias("a"), bands.alias("b")
     cand = (
-        a.join(
-            b,
-            (F.col("a.bi") == F.col("b.bi"))
-            & (F.col("a.bv") == F.col("b.bv"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
+        blocked_pairs(bands, "id", ["bi", "bv"], carry=("simhash",))
         .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.simhash").alias("fp_a"),
-            F.col("b.simhash").alias("fp_b"),
+            "id_a",
+            "id_b",
+            F.col("simhash_a").alias("fp_a"),
+            F.col("simhash_b").alias("fp_b"),
         )
         .distinct()
     )

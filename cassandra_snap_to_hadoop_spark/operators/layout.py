@@ -131,8 +131,9 @@ _RANGE_PARTITION_TARGET_BYTES = 64 * 1024 * 1024
 # operator collects anyway.
 _LOCAL_RANK_LIMIT = 1 << 33
 # ...and the partition index in the high 31 bits, while repartitionByRange
-# takes the count as a JVM Int: a derived count must stay below 2^31 or
-# the range pass dies with an opaque Py4JError.
+# takes the count as a JVM Int: a count must stay below 2^31 or the range
+# pass dies with an opaque Py4JError (a derived count is clamped, a passed
+# one is refused).
 _MAX_RANGE_PARTITIONS = (1 << 31) - 1
 
 
@@ -224,6 +225,12 @@ def _range_pass(
     """
     if num_partitions is None:
         num_partitions = _derive_range_partitions(df)
+    elif not 1 <= num_partitions <= _MAX_RANGE_PARTITIONS:
+        # repartitionByRange would die in the JVM instead: "requirement
+        # failed" for < 1, an opaque Py4JError past Int.MaxValue.
+        raise ValueError(
+            f"num_partitions must be in 1..{_MAX_RANGE_PARTITIONS}, got {num_partitions}"
+        )
     # localCheckpoint is CORRECTNESS here, not an optimization:
     # repartitionByRange samples its boundaries per execution, and the
     # counts job and the ranking job are separate executions — without

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from cassandra_snap_to_hadoop_spark.io import fan_out
+from cassandra_snap_to_hadoop_spark.operators.dedup import blocked_pairs
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -220,7 +221,8 @@ def similarity_join_lsh(
     bands: int = 4,
 ) -> DataFrame:
     """All-pairs similarity self-join above ``threshold`` via SRP-LSH:
-    bucket on band keys, exact cosine re-rank inside buckets only.
+    bucket on band keys (:func:`blocked_pairs`), exact cosine
+    re-rank inside buckets only.
     6 sign bits per band => 64 buckets/band; candidate volume per band is
     Σ bucket² — the bits-per-band knob trades recall for that quadratic
     term and is the thing to raise first when the corpus grows."""
@@ -230,7 +232,6 @@ def similarity_join_lsh(
         l2_normalize(F.col(vec_col)).alias("vec"),
         F.explode(srp_bucket_keys(F.col(vec_col), planes, bands)).alias("bkey"),
     )
-    a, b = keyed.alias("a"), keyed.alias("b")
     # r11 (guide §2.3 "shuffle fewer bytes"): cosine is computed INSIDE
     # the band join and the threshold filter runs before the dedup, so
     # the distinct exchange carries (id, id, cos) instead of two
@@ -239,11 +240,11 @@ def similarity_join_lsh(
     # operands, so the duplicates are bit-identical rows and
     # distinct-after-filter ≡ filter-after-distinct: same output rows.
     return (
-        a.join(b, (F.col("a.bkey") == F.col("b.bkey")) & (F.col("a.id") < F.col("b.id")))
+        blocked_pairs(keyed, "id", ["bkey"], carry=("vec",))
         .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.round(dot(F.col("a.vec"), F.col("b.vec")), 4).alias("cos"),
+            "id_a",
+            "id_b",
+            F.round(dot(F.col("vec_a"), F.col("vec_b")), 4).alias("cos"),
         )
         .filter(F.col("cos") >= threshold)
         .distinct()

@@ -347,21 +347,11 @@ def j14_fuzzy_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("c_mktsegment").alias("seg"),
         F.explode(variants).alias("v"),
     )
-    a, b = keyed.alias("a"), keyed.alias("b")
+    from cassandra_snap_to_hadoop_spark.operators.dedup import blocked_pairs
+
     cand = (
-        a.join(
-            b,
-            (F.col("a.nk") == F.col("b.nk"))
-            & (F.col("a.seg") == F.col("b.seg"))
-            & (F.col("a.v") == F.col("b.v"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.nm").alias("name_a"),
-            F.col("b.nm").alias("name_b"),
-        )
+        blocked_pairs(keyed, "id", ["nk", "seg", "v"], carry=("nm",))
+        .select("id_a", "id_b", F.col("nm_a").alias("name_a"), F.col("nm_b").alias("name_b"))
         .distinct()
     )
     return (

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from cassandra_snap_to_hadoop_spark.io import Tables, fan_out
 from cassandra_snap_to_hadoop_spark.operators import similarity as sim
+from cassandra_snap_to_hadoop_spark.operators.dedup import blocked_pairs
 from cassandra_snap_to_hadoop_spark.operators.text import tokens
 from cassandra_snap_to_hadoop_spark.registry import register
 
@@ -105,11 +106,9 @@ def j26_source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # operators/curation.py's stage boundaries.
     sh = sh0.join(keep, "s", "left_semi").localCheckpoint()
     sizes = sh.groupBy("source").agg(F.count("*").alias("sz"))
-    a = sh.alias("a")
-    b = sh.alias("b")
     pairs = (
-        a.join(b, (F.col("a.s") == F.col("b.s")) & (F.col("a.source") < F.col("b.source")))
-        .groupBy(F.col("a.source").alias("src_a"), F.col("b.source").alias("src_b"))
+        blocked_pairs(sh, "source", ["s"])
+        .groupBy(F.col("id_a").alias("src_a"), F.col("id_b").alias("src_b"))
         .agg(F.count("*").alias("n_shared"))
     )
     return (
@@ -465,11 +464,10 @@ def j33_semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     v = e.select(
         "vec_id", bucket.alias("bucket"), sim.l2_normalize(emb).alias("nv")
     )
-    a, b = v.alias("a"), v.alias("b")
     dropped = (
-        a.join(b, (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.vec_id") < F.col("b.vec_id")))
-        .filter(sim.dot(F.col("a.nv"), F.col("b.nv")) >= 0.2)
-        .select(F.col("b.vec_id").alias("vec_id"))
+        blocked_pairs(v, "vec_id", ["bucket"], carry=("nv",))
+        .filter(sim.dot(F.col("nv_a"), F.col("nv_b")) >= 0.2)
+        .select(F.col("id_b").alias("vec_id"))
         .distinct()
         .withColumn("dropped", F.lit(1))
     )

@@ -15,6 +15,7 @@ from cassandra_snap_to_hadoop_spark.io import Tables, fan_out
 from cassandra_snap_to_hadoop_spark.operators import similarity as sim
 from cassandra_snap_to_hadoop_spark.operators import text as tx
 from cassandra_snap_to_hadoop_spark.operators.dedup import (
+    blocked_pairs,
     dup_clusters,
     exact_dedup,
     jaccard_pairs,
@@ -163,14 +164,9 @@ def j2_embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = fan_out(e).select(
         "vec_id", "label", sim.l2_normalize(F.col("embedding")).alias("nv")
     )
-    a, b = n.alias("a"), n.alias("b")
     return (
-        a.join(b, (F.col("a.label") == F.col("b.label")) & (F.col("a.vec_id") < F.col("b.vec_id")))
-        .select(
-            F.col("a.vec_id").alias("id_a"),
-            F.col("b.vec_id").alias("id_b"),
-            sim.dot(F.col("a.nv"), F.col("b.nv")).alias("raw_cos"),
-        )
+        blocked_pairs(n, "vec_id", ["label"], carry=("nv",))
+        .select("id_a", "id_b", sim.dot(F.col("nv_a"), F.col("nv_b")).alias("raw_cos"))
         .filter(F.col("raw_cos") >= 0.35)
         .select("id_a", "id_b", F.round("raw_cos", 4).alias("cos"))
     )
@@ -291,12 +287,8 @@ def j4_pairwise_block(spark: SparkSession, sf_dir: str) -> DataFrame:
     n = fan_out(e).select(
         "vec_id", "label", sim.l2_normalize(F.col("embedding")).alias("nv")
     )
-    a, b = n.alias("a"), n.alias("b")
-    pairs = a.join(
-        b, (F.col("a.label") == F.col("b.label")) & (F.col("a.vec_id") < F.col("b.vec_id"))
-    ).select(
-        F.col("a.label").alias("label"),
-        sim.dot(F.col("a.nv"), F.col("b.nv")).alias("cos"),
+    pairs = blocked_pairs(n, "vec_id", ["label"], carry=("nv",)).select(
+        "label", sim.dot(F.col("nv_a"), F.col("nv_b")).alias("cos")
     )
     return pairs.groupBy("label").agg(
         F.count("*").alias("n_pairs"),

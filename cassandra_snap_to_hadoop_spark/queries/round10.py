@@ -1849,6 +1849,7 @@ def j133_minhash_error_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     join (never all-pairs), verification join on candidates only; the
     audit adds one 16-term codegen sum per candidate."""
     from cassandra_snap_to_hadoop_spark.operators.dedup import (
+        blocked_pairs,
         md5_minhash_bands,
         shingles,
     )
@@ -1876,15 +1877,9 @@ def j133_minhash_error_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands = md5_minhash_bands(d, n_hashes=_MH_N, rows_per_band=_MH_ROWS).localCheckpoint(
         eager=False
     )
-    a, b = bands.alias("a"), bands.alias("b")
     cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
+        blocked_pairs(bands, "doc_id", ["band", "bkey"])
+        .select("id_a", "id_b")
         .distinct()
         .localCheckpoint(eager=False)
     )

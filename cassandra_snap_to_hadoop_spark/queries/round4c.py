@@ -106,10 +106,12 @@ def j2_minhash_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     4 signature rows — string equality, no further hashing to diverge.
 
     Scale: identical shape to the xxhash64 tier — candidates are
-    generated per (band, bkey) bucket (never all-pairs), verification
-    joins only the candidate set back to the shingle relation."""
+    ``dedup.blocked_pairs`` per (band, bkey) bucket (never all-pairs),
+    verification joins only the candidate set back to the shingle
+    relation."""
     d = Tables(spark, sf_dir).documents
     from cassandra_snap_to_hadoop_spark.operators.dedup import (
+        blocked_pairs,
         md5_minhash_bands,
         shingles,
     )
@@ -125,15 +127,9 @@ def j2_minhash_lsh_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands = md5_minhash_bands(
         d, n_hashes=_MH_N, rows_per_band=_MH_ROWS
     ).localCheckpoint(eager=False)
-    a, b = bands.alias("a"), bands.alias("b")
     cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("id_a"), F.col("b.doc_id").alias("id_b"))
+        blocked_pairs(bands, "doc_id", ["band", "bkey"])
+        .select("id_a", "id_b")
         .distinct()
         # r11: ``cand`` feeds the verification join AND the final left
         # join — cut once.
@@ -449,8 +445,8 @@ def j85_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything else is exact integers.
 
     Scale: u-stats are value-count aggregates (one scan each); candidate
-    pairs are generated per balance-band bucket; the pattern aggregation
-    is map-side combinable to 8 rows."""
+    pairs are ``dedup.blocked_pairs`` per balance-band bucket; the
+    pattern aggregation is map-side combinable to 8 rows."""
     c = Tables(spark, sf_dir).customer
     o = Tables(spark, sf_dir).orders
     cust = c.select(
@@ -482,13 +478,14 @@ def j85_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(u_num("seg")))
         .crossJoin(F.broadcast(u_num("act")))
     )
-    a, b = rec.alias("a"), rec.alias("b")
-    pairs = a.join(
-        b, (F.col("a.blk") == F.col("b.blk")) & (F.col("a.id") < F.col("b.id"))
-    ).select(
-        F.when(F.col("a.nation") == F.col("b.nation"), 1).otherwise(0).alias("agree_nation"),
-        F.when(F.col("a.seg") == F.col("b.seg"), 1).otherwise(0).alias("agree_seg"),
-        F.when(F.col("a.act") == F.col("b.act"), 1).otherwise(0).alias("agree_act"),
+    from cassandra_snap_to_hadoop_spark.operators.dedup import blocked_pairs
+
+    fields = ("nation", "seg", "act")
+    pairs = blocked_pairs(rec, "id", ["blk"], carry=fields).select(
+        *[
+            F.when(F.col(f"{f}_a") == F.col(f"{f}_b"), 1).otherwise(0).alias(f"agree_{f}")
+            for f in fields
+        ]
     )
     classes = pairs.groupBy("agree_nation", "agree_seg", "agree_act").agg(
         F.count("*").alias("n_pairs")

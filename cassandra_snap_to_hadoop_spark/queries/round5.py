@@ -134,10 +134,10 @@ def j90_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     {_CC_ITERS} identical steps.  Equal either way.  The fixpoint itself
     (iteration {_CC_ITERS} == {_CC_ITERS - 1}) is test-pinned.
 
-    Scale shape: edges are generated per (band, bkey) bucket as a STAR
-    around the bucket minimum — |bucket| - 1 edges instead of the
-    quadratic clique, which is what keeps a 100 TB dup graph linear in
-    bucket occupancy; propagation is |V|+|E| hash joins per round
+    Scale shape: edges are ``dedup.blocked_star`` per (band, bkey)
+    bucket — a STAR around the bucket minimum, |bucket| - 1 edges instead
+    of the quadratic clique, which is what keeps a 100 TB dup graph
+    linear in bucket occupancy; propagation is |V|+|E| hash joins per round
     (hash-min CC; a 1000-executor deployment switches to the implemented
     large-star/small-star variant, operators/dedup.dup_clusters_two_phase
     — same join shapes, O(log n) rounds instead of O(diameter); measured
@@ -148,6 +148,7 @@ def j90_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     Driver involvement: one boolean convergence check per round
     (KB-bounded, the dup_clusters contract)."""
     from cassandra_snap_to_hadoop_spark.operators.dedup import (
+        blocked_star,
         dup_clusters,
         md5_minhash_bands,
     )
@@ -158,21 +159,8 @@ def j90_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands = md5_minhash_bands(d, n_hashes=_MH_N, rows_per_band=_MH_ROWS).localCheckpoint(
         eager=False
     )
-    hubs = (
-        bands.groupBy("band", "bkey")
-        .agg(F.min("doc_id").alias("hub"), F.count("*").alias("n"))
-        .filter(F.col("n") >= 2)
-        .drop("n")
-    )
-    # hub = bucket min, so hub < doc_id on every surviving row: the star
-    # edges are already in (id_a < id_b) order for dup_clusters.
-    pairs = (
-        bands.join(hubs, ["band", "bkey"])
-        .filter(F.col("doc_id") != F.col("hub"))
-        .select(F.col("hub").alias("id_a"), F.col("doc_id").alias("id_b"))
-        .distinct()
-        .localCheckpoint(eager=True)  # computed once, reused every round
-    )
+    # computed once, reused every round
+    pairs = blocked_star(bands, "doc_id", ["band", "bkey"]).localCheckpoint(eager=True)
     nodes = d.select(F.col("doc_id").alias("id"))
     labels = dup_clusters(nodes, pairs, max_iterations=_CC_ITERS)
     return (
@@ -1964,11 +1952,13 @@ def j94_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     every rule resolves ties deterministically, so both engines elect
     identical records.
 
-    Scale shape: the j90 propagation (star edges, hash-min rounds) plus
+    Scale shape: the j90 propagation (``dedup.blocked_star`` edges,
+    hash-min rounds) plus
     per-component hash aggs and one broadcast-scale join of the
     ≥2-member component list; membership never leaves its component's
     hash bucket."""
     from cassandra_snap_to_hadoop_spark.operators.dedup import (
+        blocked_star,
         dup_clusters,
         md5_minhash_bands,
     )
@@ -1979,19 +1969,7 @@ def j94_golden_record(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands = md5_minhash_bands(d, n_hashes=_MH_N, rows_per_band=_MH_ROWS).localCheckpoint(
         eager=False
     )
-    hubs = (
-        bands.groupBy("band", "bkey")
-        .agg(F.min("doc_id").alias("hub"), F.count("*").alias("n"))
-        .filter(F.col("n") >= 2)
-        .drop("n")
-    )
-    pairs = (
-        bands.join(hubs, ["band", "bkey"])
-        .filter(F.col("doc_id") != F.col("hub"))
-        .select(F.col("hub").alias("id_a"), F.col("doc_id").alias("id_b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    pairs = blocked_star(bands, "doc_id", ["band", "bkey"]).localCheckpoint(eager=True)
     nodes = d.select(F.col("doc_id").alias("id"))
     comp = dup_clusters(nodes, pairs, max_iterations=_CC_ITERS).select(
         F.col("id").alias("doc_id"), F.col("cluster_id").alias("component_id")
@@ -2496,6 +2474,7 @@ def j97_lsh_s_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     comparison is one broadcast-scale left join of two pair relations +
     a 4-row agg."""
     from cassandra_snap_to_hadoop_spark.operators.dedup import (
+        blocked_pairs,
         jaccard_pairs,
         md5_minhash_bands,
     )
@@ -2507,17 +2486,9 @@ def j97_lsh_s_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the same shingle explode, and cutting bands breaks the runtime
     # stage sharing between the two pipelines.  Left uncut deliberately.
     bands = md5_minhash_bands(d, n_hashes=_MH_N, rows_per_band=_MH_ROWS)
-    a, b = bands.alias("a"), bands.alias("b")
     cand = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bkey") == F.col("b.bkey"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("c_a"), F.col("b.doc_id").alias("c_b")
-        )
+        blocked_pairs(bands, "doc_id", ["band", "bkey"])
+        .select(F.col("id_a").alias("c_a"), F.col("id_b").alias("c_b"))
         .distinct()
     )
     scored = truth.join(
@@ -3050,9 +3021,11 @@ def j99_dedup_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exactness: pure counting over exact integers on top of two certified
     pipelines (md5 groups, the CC chain).
 
-    Scale shape: the j1 hash agg + the j90 propagation, then KB
-    summaries — nothing new beyond the certified components it audits."""
+    Scale shape: the j1 hash agg + the j90 propagation
+    (``dedup.blocked_star`` edges), then KB summaries — nothing new
+    beyond the certified components it audits."""
     from cassandra_snap_to_hadoop_spark.operators.dedup import (
+        blocked_star,
         dup_clusters,
         md5_minhash_bands,
         normalize_text,
@@ -3081,19 +3054,7 @@ def j99_dedup_savings(spark: SparkSession, sf_dir: str) -> DataFrame:
     bands = md5_minhash_bands(d, n_hashes=_MH_N, rows_per_band=_MH_ROWS).localCheckpoint(
         eager=False
     )
-    hubs = (
-        bands.groupBy("band", "bkey")
-        .agg(F.min("doc_id").alias("hub"), F.count("*").alias("nb"))
-        .filter(F.col("nb") >= 2)
-        .drop("nb")
-    )
-    pairs = (
-        bands.join(hubs, ["band", "bkey"])
-        .filter(F.col("doc_id") != F.col("hub"))
-        .select(F.col("hub").alias("id_a"), F.col("doc_id").alias("id_b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
+    pairs = blocked_star(bands, "doc_id", ["band", "bkey"]).localCheckpoint(eager=True)
     comp = dup_clusters(
         d.select(F.col("doc_id").alias("id")), pairs, max_iterations=_CC_ITERS
     ).select(F.col("id").alias("doc_id"), "cluster_id")

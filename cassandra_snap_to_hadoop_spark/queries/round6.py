@@ -1616,11 +1616,15 @@ def _register_j105() -> None:
         shingle relation the bands are built from.
 
         Scale shape: intra-component pair volume is Σ|C|² — bounded by
-        band-bucket occupancy (components are star-joined buckets), the
-        same bound the candidate join already pays; the Jaccard join
-        touches only member docs' shingles (inner-join pushdown), never
-        the corpus; `direct` reuses the existing bucket equi-join."""
+        band-bucket occupancy (components join ``dedup.blocked_star``
+        buckets), the same bound the candidate join already pays; the
+        intra-component pairs are ``dedup.blocked_pairs`` per component;
+        the Jaccard join touches only member docs' shingles (inner-join
+        pushdown), never the corpus; `direct` is ``dedup.blocked_pairs`` on
+        the band buckets, once per pair."""
         from cassandra_snap_to_hadoop_spark.operators.dedup import (
+            blocked_pairs,
+            blocked_star,
             dup_clusters,
             md5_minhash_bands,
             shingles,
@@ -1630,19 +1634,7 @@ def _register_j105() -> None:
         bands = md5_minhash_bands(
             d, n_hashes=_MH_N, rows_per_band=_MH_ROWS
         ).localCheckpoint(eager=True)
-        hubs = (
-            bands.groupBy("band", "bkey")
-            .agg(F.min("doc_id").alias("hub"), F.count("*").alias("n"))
-            .filter(F.col("n") >= 2)
-            .drop("n")
-        )
-        pairs = (
-            bands.join(hubs, ["band", "bkey"])
-            .filter(F.col("doc_id") != F.col("hub"))
-            .select(F.col("hub").alias("id_a"), F.col("doc_id").alias("id_b"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
+        pairs = blocked_star(bands, "doc_id", ["band", "bkey"]).localCheckpoint(eager=True)
         nodes = d.select(F.col("doc_id").alias("id"))
         labels = dup_clusters(nodes, pairs, max_iterations=_CC_ITERS)
         comp = (
@@ -1654,30 +1646,9 @@ def _register_j105() -> None:
         members = labels.join(comp, "cluster_id").select(
             F.col("id").alias("doc_id"), F.col("cluster_id").alias("lbl")
         )
-        ma = members.select(
-            F.col("doc_id").alias("id_a"), F.col("lbl").alias("lbl_a")
-        )
-        mb = members.select(
-            F.col("doc_id").alias("id_b"), F.col("lbl").alias("lbl_b")
-        )
-        cpairs = (
-            ma.join(mb, (F.col("lbl_a") == F.col("lbl_b")) & (F.col("id_a") < F.col("id_b")))
-            .select("id_a", "id_b", F.col("lbl_a").alias("lbl"))
-            .localCheckpoint(eager=True)
-        )
-        ba = bands.select(
-            F.col("doc_id").alias("id_a"), "band", "bkey"
-        )
-        bb = bands.select(
-            F.col("doc_id").alias("id_b"), F.col("band").alias("band2"), F.col("bkey").alias("bkey2")
-        )
+        cpairs = blocked_pairs(members, "doc_id", ["lbl"]).localCheckpoint(eager=True)
         direct = (
-            ba.join(
-                bb,
-                (F.col("band") == F.col("band2"))
-                & (F.col("bkey") == F.col("bkey2"))
-                & (F.col("id_a") < F.col("id_b")),
-            )
+            blocked_pairs(bands, "doc_id", ["band", "bkey"])
             .select("id_a", "id_b")
             .distinct()
             .withColumn("is_direct_f", F.lit(1))

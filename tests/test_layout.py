@@ -276,6 +276,19 @@ def test_derive_range_partitions_floor_and_scaling(spark):
     assert floor < n <= _MAX_RANGE_PARTITIONS < 1 << 31
 
 
+@pytest.mark.parametrize("parts", [0, -1, 1 << 31])
+def test_range_pass_refuses_out_of_range_partition_count(spark, parts):
+    """A hand-passed count outside 1..2^31-1 is refused by name instead of
+    reaching repartitionByRange ("requirement failed" / Py4JError)."""
+    from cassandra_snap_to_hadoop_spark.operators.layout import global_cumsum, global_rank
+
+    df = spark.range(10).withColumn("v", F.col("id") % 3)
+    with pytest.raises(ValueError, match="num_partitions"):
+        global_rank(df, ["id"], num_partitions=parts)
+    with pytest.raises(ValueError, match="num_partitions"):
+        global_cumsum(df, ["id"], "v", num_partitions=parts)
+
+
 def test_global_rank_on_rdd_backed_frame(spark):
     """global_rank over an RDD-backed frame (unknown size estimate) must
     run and return exact ranks, not die in repartitionByRange."""

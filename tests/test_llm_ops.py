@@ -122,6 +122,86 @@ def test_dup_clusters_long_chain_converges(spark):
     assert got == {i: 0 for i in range(n)}
 
 
+def test_dup_clusters_reports_convergence(spark):
+    """A 6-node path needs 5 label hops: 2 rounds leave labels changing
+    (not converged), the default budget reaches the fixpoint."""
+    from cassandra_snap_to_hadoop_spark.operators.dedup import dup_clusters
+
+    nodes = spark.createDataFrame([(i,) for i in range(6)], "id long")
+    pairs = spark.createDataFrame([(i, i + 1) for i in range(5)], "id_a long, id_b long")
+    cut: dict = {}
+    dup_clusters(nodes, pairs, max_iterations=2, stats=cut)
+    assert cut == {"rounds": 2, "converged": False}
+    full: dict = {}
+    got = {r.id: r.cluster_id for r in dup_clusters(nodes, pairs, stats=full).collect()}
+    assert got == {i: 0 for i in range(6)}
+    assert full["converged"] is True
+
+
+BLOCKS = "id long, k string, v long"
+
+
+def _blocks(spark, rows):
+    return spark.createDataFrame(rows, BLOCKS)
+
+
+def test_blocked_pairs_contract(spark):
+    """Blocks of 1, 2 and 4 rows plus two null-keyed rows: C(n,2) pairs
+    per block, id_a < id_b everywhere, carried columns from each side,
+    and the null key pairs with nothing."""
+    from itertools import combinations
+
+    from cassandra_snap_to_hadoop_spark.operators.dedup import blocked_pairs
+
+    rows = [(1, "a", 10), (2, "b", 20), (3, "b", 30)]
+    rows += [(i, "c", i * 10) for i in (4, 5, 6, 7)]
+    rows += [(8, None, 80), (9, None, 90)]
+    got = blocked_pairs(_blocks(spark, rows), "id", ["k"], carry=("v",))
+    assert got.columns == ["id_a", "id_b", "k", "v_a", "v_b"]
+    out = got.collect()
+    assert len(out) == 0 + 1 + 6
+    assert all(r.id_a < r.id_b for r in out)
+    assert all((r.v_a, r.v_b) == (r.id_a * 10, r.id_b * 10) for r in out)
+    want = {(2, 3, "b")} | {(a, b, "c") for a, b in combinations((4, 5, 6, 7), 2)}
+    assert {(r.id_a, r.id_b, r.k) for r in out} == want
+
+
+def test_blocked_pairs_edge_inputs(spark):
+    """Empty and one-row inputs give no pairs; two ids sharing two blocks
+    give one row per shared block (no distinct: the intersection counters
+    count these rows)."""
+    from cassandra_snap_to_hadoop_spark.operators.dedup import blocked_pairs
+
+    assert blocked_pairs(_blocks(spark, []), "id", ["k"]).count() == 0
+    assert blocked_pairs(_blocks(spark, [(1, "a", 0)]), "id", ["k"]).count() == 0
+    two = _blocks(spark, [(1, "p", 0), (1, "q", 0), (2, "p", 0), (2, "q", 0)])
+    got = sorted(tuple(r) for r in blocked_pairs(two, "id", ["k"]).collect())
+    assert got == [(1, 2, "p"), (1, 2, "q")]
+    # both keys must match: (k, v) blocks split the shared "p"
+    two_keys = _blocks(spark, [(1, "p", 0), (2, "p", 1), (3, "p", 1)])
+    assert [tuple(r) for r in blocked_pairs(two_keys, "id", ["k", "v"]).collect()] == [
+        (2, 3, "p", 1)
+    ]
+
+
+def test_blocked_star_contract(spark):
+    """n - 1 distinct edges per block, all rooted at the block minimum;
+    singleton blocks, null keys and empty input give none; two ids
+    sharing two blocks give one edge."""
+    from cassandra_snap_to_hadoop_spark.operators.dedup import blocked_star
+
+    rows = [(1, "a", 0), (2, "b", 0), (3, "b", 0)]
+    rows += [(i, "c", 0) for i in (7, 4, 6, 5)]
+    rows += [(8, None, 0), (9, None, 0)]
+    got = blocked_star(_blocks(spark, rows), "id", ["k"])
+    assert got.columns == ["id_a", "id_b"]
+    assert sorted(tuple(r) for r in got.collect()) == [(2, 3), (4, 5), (4, 6), (4, 7)]
+    assert blocked_star(_blocks(spark, []), "id", ["k"]).count() == 0
+    assert blocked_star(_blocks(spark, [(1, "a", 0)]), "id", ["k"]).count() == 0
+    two = _blocks(spark, [(1, "p", 0), (1, "q", 0), (2, "p", 0), (2, "q", 0)])
+    assert [tuple(r) for r in blocked_star(two, "id", ["k"]).collect()] == [(1, 2)]
+
+
 def test_simhash_identical_docs_same_fingerprint(spark):
     df = spark.createDataFrame(
         [(1, "one two three four"), (2, "one two three four"), (3, "five six seven eight")],

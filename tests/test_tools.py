@@ -1,6 +1,7 @@
 """The measurement tools run in-process on the suite's session: the scale
-probe times registered queries on generated tables at two scales, and
-opt_measure reports the plan flags next to its timings."""
+probe times registered queries on generated tables at two scales,
+opt_measure reports the plan flags next to its timings, and dump_plans
+prints the listed keys' physical plans."""
 
 from __future__ import annotations
 
@@ -59,3 +60,12 @@ def test_opt_measure_reports_plan_flags(spark, sf_dir, tmp_path, capsys, monkeyp
     assert line.endswith("cartesian=False rowwise_python=False"), line
     rec = json.loads(out.read_text())["e2_groupby_pricing_summary"]
     assert rec["cartesian"] is False and rec["rowwise_python"] is False
+
+
+def test_dump_plans_prints_one_section_per_key(spark, sf_dir, capsys, monkeypatch):
+    dump = _load("dump_plans_mod", "tools/dump_plans.py")
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "8")
+    assert dump.main([sf_dir, "e2_groupby_pricing_summary"]) == 0
+    out = capsys.readouterr().out
+    assert re.findall(r"^## .*$", out, re.M) == ["## e2_groupby_pricing_summary"]
+    assert "== Physical Plan ==" in out
